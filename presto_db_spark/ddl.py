@@ -30,6 +30,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .functions.compat import ensure_functions, referenced_functions
+from .functions.presto import register_presto_functions
+
 # Presto session property -> setter(spark, value). Reference:
 # pm/SystemSessionProperties.java (property names at :66-:127).
 # _SESSION_PROPERTY_CONFS: the Spark conf keys a property touches, so
@@ -76,6 +79,12 @@ class DdlMixin:
 
     spark: SparkSession
 
+    def _spark_sql(self, text: str) -> DataFrame:
+        """``spark.sql`` for caller SQL: first registers the compat
+        functions the text references (:mod:`.functions.compat`)."""
+        ensure_functions(self.spark, referenced_functions(text))
+        return self.spark.sql(text)
+
     # -- writes ---------------------------------------------------------------
 
     def create_table_as(
@@ -93,7 +102,7 @@ class DdlMixin:
         100 TB lever for partition-pruned scans later (Presto equivalent:
         ``WITH (partitioned_by = ARRAY[...])`` on the Hive connector).
         """
-        df = self.spark.sql(source) if isinstance(source, str) else source
+        df = self._spark_sql(source) if isinstance(source, str) else source
         writer = df.write.format(format).mode(mode)
         if partition_by:
             writer = writer.partitionBy(*partition_by)
@@ -102,7 +111,7 @@ class DdlMixin:
 
     def insert_into(self, name: str, source: str | DataFrame, *, overwrite: bool = False) -> None:
         """INSERT INTO (append) / INSERT OVERWRITE, by-name column resolution."""
-        df = self.spark.sql(source) if isinstance(source, str) else source
+        df = self._spark_sql(source) if isinstance(source, str) else source
         df.write.mode("overwrite" if overwrite else "append").insertInto(name)
 
     def delete_where(self, name: str, condition: str) -> int:
@@ -131,6 +140,7 @@ class DdlMixin:
         # drop NULL-predicate rows). Staging name is uuid-suffixed so
         # concurrent deletes of different tables can't collide.
         staging = f"{name}_delete_staging_{_uuid.uuid4().hex[:12]}"
+        ensure_functions(self.spark, referenced_functions(condition))
         tbl.filter(f"NOT coalesce(({condition}), false)").write.mode("overwrite").saveAsTable(
             staging
         )
@@ -144,9 +154,11 @@ class DdlMixin:
     # -- views ----------------------------------------------------------------
 
     def create_view(self, name: str, sql: str, *, replace: bool = True) -> None:
-        self.spark.sql(sql).createOrReplaceTempView(name) if replace else self.spark.sql(
-            sql
-        ).createTempView(name)
+        df = self._spark_sql(sql)
+        if replace:
+            df.createOrReplaceTempView(name)
+        else:
+            df.createTempView(name)
 
     def drop_view(self, name: str) -> None:
         self.spark.catalog.dropTempView(name)
@@ -215,7 +227,7 @@ class DdlMixin:
 
     def explain(self, sql: str, mode: str = "formatted") -> str:
         """EXPLAIN passthrough. Modes: simple|extended|codegen|cost|formatted."""
-        df = self.spark.sql(sql)
+        df = self._spark_sql(sql)
         return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
             df._jdf.queryExecution(), mode
         )
@@ -305,7 +317,7 @@ class DdlMixin:
     def explain_analyze(self, sql: str) -> str:
         """EXPLAIN ANALYZE: execute, then render the plan with runtime metrics
         (rows, data size per operator) — ``ExplainAnalyzeOperator`` parity."""
-        df = self.spark.sql(sql)
+        df = self._spark_sql(sql)
         df.write.format("noop").mode("overwrite").save()  # run fully, discard
         return df._jdf.queryExecution().executedPlan().toString()
 
@@ -338,6 +350,7 @@ class DdlMixin:
         ``BuiltInFunctionNamespaceManager``). The pattern uses SQL LIKE
         semantics — ``%`` any run, ``_`` one char, anchored full match —
         as the reference's ShowFunctions rewrite does."""
+        register_presto_functions(self.spark)
         names = sorted({f.name.lower() for f in self.spark.catalog.listFunctions()})
         if like is not None:
             import re as _re

@@ -6,8 +6,10 @@ plan → execute; ``presto-main/.../dispatcher/DispatchManager.java:142``,
 ``Engine.sql()`` IS the whole pipeline. What we add on top:
 
 * catalog bootstrap over the driver's parquet tables (:mod:`catalog`),
-* the Presto-compat function layer (:mod:`functions.presto`) registered
-  into the session's function registry, so Presto-flavored SQL runs as-is,
+* the Presto-compat function layer (:mod:`functions.compat`), so
+  Presto-flavored SQL runs as-is: each compat function is registered into
+  the session's function registry the first time a statement references
+  it, once per session,
 * the extension operators (dedup / similarity / text / multimodal) exposed
   as DataFrame→DataFrame transformers.
 """
@@ -45,11 +47,11 @@ _EXPLAIN_RE = re.compile(
 
 class Engine(DdlMixin):
     def __init__(self, spark: SparkSession | None = None, sf_dir: str | None = None):
+        """Bind to ``spark`` (default :func:`session.get_spark`) and attach
+        the driver tables under ``sf_dir`` if given. No compat function is
+        registered here: :meth:`sql` registers each one the first time a
+        statement references it, once per session."""
         self.spark = spark or get_spark()
-        register_presto_functions(self.spark)
-        from .functions.geosql import register_geo_functions
-
-        register_geo_functions(self.spark)
         self.tables: dict[str, DataFrame] = {}
         # Catalog names stripped from three-part table references by the
         # dialect rewriter (Presto catalog.schema.table → flat temp view).
@@ -131,7 +133,7 @@ class Engine(DdlMixin):
             ):
                 self.catalogs.add(m.group(1).lower())
             query = rewrite_presto_sql(query, catalogs=frozenset(self.catalogs))
-        df = self.spark.sql(query)
+        df = self._spark_sql(query)
         # remember view definitions so SHOW CREATE VIEW can return the
         # original view text (ShowQueriesRewrite emits the stored SQL)
         m = re.match(
@@ -295,6 +297,7 @@ class Engine(DdlMixin):
                 "regr_slope", "regr_intercept", "regr_r2", "regr_count",
                 "regr_avgx", "regr_avgy",
             }
+            register_presto_functions(self.spark)
             rows = []
             for f in self.spark.catalog.listFunctions():
                 name = f.name.lower()
@@ -504,14 +507,14 @@ class Engine(DdlMixin):
             if analyze:
                 text = self.explain_analyze(body)
             elif etype and etype.upper() == "VALIDATE":
-                self.spark.sql(body).schema  # analyze; raises on invalid
+                self._spark_sql(body).schema  # analyze; raises on invalid
                 return self.spark.createDataFrame([(True,)], "valid: boolean")
             elif etype and etype.upper() == "IO":
                 # IOPlanPrinter.java: JSON of tables read + pruned columns
                 # + per-scan pushed filters (columnConstraints analog)
                 text = self.explain_io(body)
             elif efmt == "JSON":
-                jqe = self.spark.sql(body)._jdf.queryExecution()
+                jqe = self._spark_sql(body)._jdf.queryExecution()
                 plan = (
                     jqe.optimizedPlan()
                     if etype and etype.upper() == "LOGICAL"

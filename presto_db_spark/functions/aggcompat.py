@@ -27,8 +27,8 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
+
+from .compat import pandas_udf
 
 
 def _numeric_histogram_impl(n: pd.Series, v: pd.Series) -> dict:
@@ -99,16 +99,10 @@ def _evaluate_classifier_predictions_impl(truth: pd.Series, pred: pd.Series) -> 
     return "\n".join(lines) + "\n"
 
 
-def register_agg_compat(spark: SparkSession) -> None:
-    spark.udf.register(
-        "numeric_histogram",
-        F.pandas_udf(_numeric_histogram_impl, "map<double,double>"),
-    )
-    spark.udf.register(
-        "differential_entropy",
-        F.pandas_udf(_differential_entropy_impl, "double"),
-    )
-    spark.udf.register(
-        "evaluate_classifier_predictions",
-        F.pandas_udf(_evaluate_classifier_predictions_impl, "string"),
-    )
+FUNCTIONS = {
+    "numeric_histogram": pandas_udf(_numeric_histogram_impl, "map<double,double>"),
+    "differential_entropy": pandas_udf(_differential_entropy_impl, "double"),
+    "evaluate_classifier_predictions": pandas_udf(
+        _evaluate_classifier_predictions_impl, "string"
+    ),
+}

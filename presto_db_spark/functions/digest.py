@@ -32,10 +32,9 @@ import struct
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.tdigest import COMPRESSION, build_digest, digest_quantile
+from .compat import pandas_udf
 
 
 def serialize_digest(means: np.ndarray, weights: np.ndarray) -> bytes:
@@ -163,9 +162,8 @@ def _quantile_at_value_impl(d: pd.Series, x: pd.Series) -> pd.Series:
     return pd.Series(out, dtype="float64")
 
 
-def register_tdigest_functions(spark: SparkSession) -> None:
-    """Register the digest SQL surface in the session function registry."""
-    spark.udf.register("tdigest_agg", F.pandas_udf(_tdigest_agg_impl, "binary"))
+FUNCTIONS = {
+    "tdigest_agg": pandas_udf(_tdigest_agg_impl, "binary"),
     # qdigest surface (QuantileDigestFunctions.java /
     # QuantileDigestAggregationFunction.java): both Presto quantile
     # sketches serve the same accessors here — the value IS a t-digest
@@ -173,26 +171,16 @@ def register_tdigest_functions(spark: SparkSession) -> None:
     # value-error bound; same mergeable-sketch lifecycle). The weighted
     # 2-arg form is qdigest_agg_w via a dialect arity template; the
     # 3-arg accuracy parameter maps to the fixed compression.
-    spark.udf.register("qdigest_agg", F.pandas_udf(_tdigest_agg_impl, "binary"))
-    spark.udf.register("qdigest_agg_w", F.pandas_udf(_qdigest_agg_w_impl, "binary"))
-    spark.udf.register("merge_tdigest", F.pandas_udf(_merge_impl, "binary"))
+    "qdigest_agg": pandas_udf(_tdigest_agg_impl, "binary"),
+    "qdigest_agg_w": pandas_udf(_qdigest_agg_w_impl, "binary"),
+    "merge_tdigest": pandas_udf(_merge_impl, "binary"),
     # Presto spells the digest-merging aggregation just `merge` (dispatch
     # on the tdigest argument type); Spark has no overload-by-type for
     # UDFs, so `merge` maps to the tdigest merge directly.
-    spark.udf.register("merge", F.pandas_udf(_merge_impl, "binary"))
-    spark.udf.register(
-        "value_at_quantile", F.pandas_udf(_value_at_quantile_impl, "double")
-    )
-    spark.udf.register(
-        "values_at_quantiles", F.pandas_udf(_values_at_quantiles_impl, "array<double>")
-    )
-    spark.udf.register(
-        "quantile_at_value", F.pandas_udf(_quantile_at_value_impl, "double")
-    )
-    spark.udf.register(
-        "quantiles_at_values",
-        F.pandas_udf(_quantiles_at_values_impl, "array<double>"),
-    )
-    spark.udf.register(
-        "scale_qdigest", F.pandas_udf(_scale_qdigest_impl, "binary")
-    )
+    "merge": pandas_udf(_merge_impl, "binary"),
+    "value_at_quantile": pandas_udf(_value_at_quantile_impl, "double"),
+    "values_at_quantiles": pandas_udf(_values_at_quantiles_impl, "array<double>"),
+    "quantile_at_value": pandas_udf(_quantile_at_value_impl, "double"),
+    "quantiles_at_values": pandas_udf(_quantiles_at_values_impl, "array<double>"),
+    "scale_qdigest": pandas_udf(_scale_qdigest_impl, "binary"),
+}

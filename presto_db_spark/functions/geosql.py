@@ -28,8 +28,11 @@ Documented deviations (same model as the operator modules):
 
 from __future__ import annotations
 
+import struct
+
 import pandas as pd
-from pyspark.sql import SparkSession
+
+from .compat import pandas_udf, sql_functions
 
 # -- shared body fragments (inlined into each function's RETURN) ------------
 
@@ -299,79 +302,74 @@ _GEO_FUNCTIONS += [
 ]
 
 
-def _register_wkb_codecs(spark: SparkSession) -> None:
-    """``ST_AsBinary`` / ``ST_GeomFromBinary`` (GeoFunctions.java:261,245)
-    for ARBITRARY doubles: Arrow-batched pandas UDFs over ``struct`` —
-    a serialization codec (the same exception class as the BMP/WAV
-    multimodal codecs), never a relational hot path.  The exact-integer
-    pure-SQL encoding lives in ``operators/wkt6.py``."""
-    import struct as _struct
-
-    from pyspark.sql.functions import pandas_udf
-
-    _TYPES = {"POINT": 1, "LINESTRING": 2}
-
-    def _coords(w: str) -> list[tuple[float, float]]:
-        body = w[w.index("(") + 1 :].rstrip(") \t")
-        return [
-            (float(p.split()[0]), float(p.split()[1]))
-            for p in body.replace("(", "").replace(")", "").split(",")
-        ]
-
-    @pandas_udf("binary")
-    def st_asbinary(col: pd.Series) -> pd.Series:
-        out = []
-        for w in col:
-            if w is None:
-                out.append(None)
-                continue
-            head = w.split()[0].split("(")[0].strip().upper()
-            code = _TYPES.get(head)
-            if code is None:
-                raise ValueError(f"ST_AsBinary: unsupported geometry {head}")
-            pts = _coords(w)
-            if code == 1:
-                out.append(_struct.pack("<BI2d", 1, 1, *pts[0]))
-            else:
-                buf = _struct.pack("<BII", 1, 2, len(pts))
-                for x, y in pts:
-                    buf += _struct.pack("<2d", x, y)
-                out.append(buf)
-        return pd.Series(out)
-
-    def _num(v: float) -> str:
-        return str(int(v)) if v == int(v) else repr(v)
-
-    @pandas_udf("string")
-    def st_geomfrombinary(col: pd.Series) -> pd.Series:
-        out = []
-        for b in col:
-            if b is None:
-                out.append(None)
-                continue
-            b = bytes(b)
-            (order,) = _struct.unpack_from("<B", b, 0)
-            fmt = "<" if order == 1 else ">"
-            (code,) = _struct.unpack_from(fmt + "I", b, 1)
-            if code == 1:
-                x, y = _struct.unpack_from(fmt + "2d", b, 5)
-                out.append(f"POINT ({_num(x)} {_num(y)})")
-            elif code == 2:
-                (n,) = _struct.unpack_from(fmt + "I", b, 5)
-                pts = _struct.unpack_from(fmt + f"{2 * n}d", b, 9)
-                body = ", ".join(
-                    f"{_num(pts[2 * i])} {_num(pts[2 * i + 1])}" for i in range(n)
-                )
-                out.append(f"LINESTRING ({body})")
-            else:
-                raise ValueError(f"ST_GeomFromBinary: unsupported type {code}")
-        return pd.Series(out)
-
-    spark.udf.register("st_asbinary", st_asbinary)
-    spark.udf.register("st_geomfrombinary", st_geomfrombinary)
+# ``ST_AsBinary`` / ``ST_GeomFromBinary`` (GeoFunctions.java:261,245) for
+# ARBITRARY doubles: Arrow-batched pandas UDFs over ``struct`` — a
+# serialization codec (the same exception class as the BMP/WAV multimodal
+# codecs), never a relational hot path. The exact-integer pure-SQL encoding
+# lives in ``operators/wkt6.py``.
+_WKB_TYPES = {"POINT": 1, "LINESTRING": 2}
 
 
-def register_geo_functions(spark: SparkSession) -> None:
-    for stmt in _GEO_FUNCTIONS:
-        spark.sql(stmt)
-    _register_wkb_codecs(spark)
+def _wkt_coords(w: str) -> list[tuple[float, float]]:
+    body = w[w.index("(") + 1 :].rstrip(") \t")
+    return [
+        (float(p.split()[0]), float(p.split()[1]))
+        for p in body.replace("(", "").replace(")", "").split(",")
+    ]
+
+
+def _st_asbinary(col: pd.Series) -> pd.Series:
+    out = []
+    for w in col:
+        if w is None:
+            out.append(None)
+            continue
+        head = w.split()[0].split("(")[0].strip().upper()
+        code = _WKB_TYPES.get(head)
+        if code is None:
+            raise ValueError(f"ST_AsBinary: unsupported geometry {head}")
+        pts = _wkt_coords(w)
+        if code == 1:
+            out.append(struct.pack("<BI2d", 1, 1, *pts[0]))
+        else:
+            buf = struct.pack("<BII", 1, 2, len(pts))
+            for x, y in pts:
+                buf += struct.pack("<2d", x, y)
+            out.append(buf)
+    return pd.Series(out)
+
+
+def _wkt_num(v: float) -> str:
+    return str(int(v)) if v == int(v) else repr(v)
+
+
+def _st_geomfrombinary(col: pd.Series) -> pd.Series:
+    out = []
+    for b in col:
+        if b is None:
+            out.append(None)
+            continue
+        b = bytes(b)
+        (order,) = struct.unpack_from("<B", b, 0)
+        fmt = "<" if order == 1 else ">"
+        (code,) = struct.unpack_from(fmt + "I", b, 1)
+        if code == 1:
+            x, y = struct.unpack_from(fmt + "2d", b, 5)
+            out.append(f"POINT ({_wkt_num(x)} {_wkt_num(y)})")
+        elif code == 2:
+            (n,) = struct.unpack_from(fmt + "I", b, 5)
+            pts = struct.unpack_from(fmt + f"{2 * n}d", b, 9)
+            body = ", ".join(
+                f"{_wkt_num(pts[2 * i])} {_wkt_num(pts[2 * i + 1])}" for i in range(n)
+            )
+            out.append(f"LINESTRING ({body})")
+        else:
+            raise ValueError(f"ST_GeomFromBinary: unsupported type {code}")
+    return pd.Series(out)
+
+
+FUNCTIONS = {
+    **sql_functions(_GEO_FUNCTIONS),
+    "st_asbinary": pandas_udf(_st_asbinary, "binary"),
+    "st_geomfrombinary": pandas_udf(_st_geomfrombinary, "string"),
+}

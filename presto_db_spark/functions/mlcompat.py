@@ -43,8 +43,9 @@ from __future__ import annotations
 import json
 import math
 
-from pyspark.sql import SparkSession
 from pyspark.sql import types as T
+
+from .compat import pandas_udf, python_udf
 
 
 def _feat_vec(f: dict | None, dims: list[str]) -> list[float]:
@@ -235,28 +236,14 @@ def _ml_regress_batch(fs, models):
     return pd.Series(out, dtype=object)
 
 
-def register_ml_functions(spark: SparkSession) -> None:
-    struct = T.ArrayType(
-        T.StructType(
-            [
-                T.StructField("l", T.StringType()),
-                T.StructField(
-                    "f", T.MapType(T.LongType(), T.DoubleType())
-                ),
-            ]
-        )
-    )
-    del struct  # schema is inferred from the rewritten SQL; kept for docs
-    from pyspark.sql import functions as F
-
-    spark.udf.register("ml_learn_classifier", ml_learn_classifier, T.StringType())
-    spark.udf.register("ml_learn_regressor", ml_learn_regressor, T.StringType())
+# The learn aggregates' input is inferred from the rewritten SQL:
+# array<struct<l: string, f: map<bigint, double>>>.
+FUNCTIONS = {
+    "ml_learn_classifier": python_udf(ml_learn_classifier, T.StringType()),
+    "ml_learn_regressor": python_udf(ml_learn_regressor, T.StringType()),
     # Arrow-batched apply path: a pasted classify()/regress() over a fact
     # table runs vectorized (ArrowEvalPython), never row-at-a-time
     # BatchEvalPython — plan-asserted in tests/test_ml.py.
-    spark.udf.register(
-        "ml_classify_apply", F.pandas_udf(_ml_classify_batch, T.StringType())
-    )
-    spark.udf.register(
-        "ml_regress_apply", F.pandas_udf(_ml_regress_batch, T.DoubleType())
-    )
+    "ml_classify_apply": pandas_udf(_ml_classify_batch, T.StringType()),
+    "ml_regress_apply": pandas_udf(_ml_regress_batch, T.DoubleType()),
+}

@@ -16,6 +16,9 @@ almost all of it natively (SURVEY.md §2.8); this module closes the gaps:
   (``word_stem``, MySQL-pattern ``date_parse``) — never used by the
   built-in operators' hot paths.
 
+The SQL functions and UDFs are definitions in :data:`FUNCTIONS`; the
+table in :mod:`.compat` registers each into a session on first reference.
+
 Presto semantic quirks handled deliberately:
   - ``strpos`` is 1-based, 0 = not found (``pm/operator/scalar/StringFunctions.java``)
   - ``to_unixtime`` returns DOUBLE seconds (``DateTimeFunctions.java``)
@@ -30,6 +33,17 @@ import math
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .color import (
+    RENDERED_FALSE,
+    RENDERED_TRUE,
+    bar_py,
+    color_interp,
+    parse_color,
+    render_py,
+    rgb_int,
+)
+from .compat import ensure_functions, functions, python_udf, sql_functions
 
 # ---------------------------------------------------------------------------
 # Column helpers (JVM-side expressions)
@@ -46,32 +60,6 @@ def to_unixtime(ts: Column) -> Column:
     double — ``pm/operator/scalar/DateTimeFunctions.java`` to_unixtime).
     unix_micros keeps microsecond precision; unix_timestamp would truncate."""
     return F.unix_micros(ts).cast("double") / 1e6
-
-
-def cosine_similarity_arrays(a: Column, b: Column) -> Column:
-    """Cosine similarity of two float arrays — JVM-side ``aggregate``/``zip_with``.
-
-    Presto's ``cosine_similarity`` takes sparse maps
-    (``pm/operator/scalar/MathFunctions.java``); dense-array form is the
-    100 TB-pipeline variant (embedding columns). Pure expression: stays in
-    whole-stage codegen, no Python.
-    """
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v)
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda s, v: s + v * v))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda s, v: s + v * v))
-    return dot / (na * nb)
-
-
-def ngrams_words(col: Column, n: int) -> Column:
-    """Word n-grams as array<string> (Presto ``ngrams(array, n)`` over words).
-
-    Expression-only: sequence + transform + slice; no Python.
-    """
-    words = F.split(col, r"\s+")
-    return F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(words) - (n - 1), F.lit(0))),
-        lambda i: F.array_join(F.slice(words, i, n), " "),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -231,13 +219,6 @@ _SQL_FUNCTIONS = [
     # Presto truncate(double) -> integer part toward zero (MathFunctions.java).
     "CREATE OR REPLACE TEMPORARY FUNCTION presto_truncate(x DOUBLE) "
     "RETURNS DOUBLE RETURN cast(cast(x as long) as double)",
-    # Presto infinity()/nan()/is_finite/is_infinite.
-    "CREATE OR REPLACE TEMPORARY FUNCTION infinity() RETURNS DOUBLE RETURN double('inf')",
-    "CREATE OR REPLACE TEMPORARY FUNCTION nan() RETURNS DOUBLE RETURN double('nan')",
-    "CREATE OR REPLACE TEMPORARY FUNCTION is_finite(x DOUBLE) RETURNS BOOLEAN "
-    "RETURN NOT (isnan(x) OR abs(x) = double('inf'))",
-    "CREATE OR REPLACE TEMPORARY FUNCTION is_infinite(x DOUBLE) RETURNS BOOLEAN "
-    "RETURN abs(x) = double('inf')",
     # Presto index/cardinality-style helpers already native in Spark.
     # url_extract_* family over parse_url (UrlFunctions.java).
     "CREATE OR REPLACE TEMPORARY FUNCTION url_extract_protocol(u STRING) "
@@ -684,69 +665,55 @@ def _parse_presto_data_size(s: str | None):
     return decimal.Decimal(int(value * factor))
 
 
+# ColorFunctions.java surface — paste-compat SQL names with the reference's
+# overloads (ColorFunctions.java:85-186). The color type is its bigint
+# encoding (rgb >= 0, system colors negative), matching the reference's
+# ColorType long representation.
+def _color(a, b=None, c=None, d=None, e=None):
+    if b is None:
+        return parse_color(a)
+    if d is None:  # color(fraction, lowColor, highColor)
+        return color_interp(float(a), int(b), int(c))
+    # color(value, low, high, lowColor, highColor)
+    return color_interp(
+        (float(a) - float(b)) / (float(c) - float(b)), int(d), int(e)
+    )
+
+
+def _render(v, c=None):
+    if c is None:
+        return RENDERED_TRUE if v else RENDERED_FALSE
+    if isinstance(v, float):  # Java Double.toString: always a decimal point
+        v = repr(v)
+    return render_py(str(v), int(c))
+
+
+def _bar(p, w, lo=0xFF0000, hi=0x00FF00):
+    return bar_py(p, int(w), int(lo), int(hi))
+
+
+FUNCTIONS = {
+    **sql_functions(_SQL_FUNCTIONS),
+    "word_stem": python_udf(_word_stem, T.StringType()),
+    "normal_cdf": python_udf(_normal_cdf, T.DoubleType()),
+    "hamming_distance": python_udf(_hamming_distance, T.LongType()),
+    "date_parse": python_udf(_date_parse_py, T.TimestampType()),
+    "date_format_mysql": python_udf(_date_format_py, T.StringType()),
+    "to_char_td": python_udf(_td_to_char, T.StringType()),
+    "to_timestamp_td": python_udf(_td_to_timestamp, T.TimestampType()),
+    "to_date_td": python_udf(_td_to_date, T.DateType()),
+    "parse_datetime": python_udf(_parse_datetime_py, T.TimestampType()),
+    "format_datetime": python_udf(_format_datetime_py, T.StringType()),
+    "parse_presto_data_size": python_udf(_parse_presto_data_size, T.DecimalType(38, 0)),
+    "color": python_udf(_color, T.LongType()),
+    "rgb": python_udf(rgb_int, T.LongType()),
+    "render": python_udf(_render, T.StringType()),
+    "bar": python_udf(_bar, T.StringType()),
+}
+
+
 def register_presto_functions(spark: SparkSession) -> None:
-    """Install the compat layer into the session's function registry."""
-    from .aggcompat import register_agg_compat
-    from .mlcompat import register_ml_functions
-    from .scalars2 import register_scalar_stragglers
-
-    for stmt in _SQL_FUNCTIONS:
-        spark.sql(stmt)
-    register_ml_functions(spark)
-    register_scalar_stragglers(spark)
-    register_agg_compat(spark)
-    spark.udf.register("word_stem", _word_stem, T.StringType())
-    spark.udf.register("normal_cdf", _normal_cdf, T.DoubleType())
-    spark.udf.register("hamming_distance", _hamming_distance, T.LongType())
-    spark.udf.register("date_parse", _date_parse_py, T.TimestampType())
-    spark.udf.register("date_format_mysql", _date_format_py, T.StringType())
-    spark.udf.register("to_char_td", _td_to_char, T.StringType())
-    spark.udf.register("to_timestamp_td", _td_to_timestamp, T.TimestampType())
-    spark.udf.register("to_date_td", _td_to_date, T.DateType())
-    spark.udf.register("parse_datetime", _parse_datetime_py, T.TimestampType())
-    spark.udf.register("format_datetime", _format_datetime_py, T.StringType())
-    spark.udf.register(
-        "parse_presto_data_size", _parse_presto_data_size, T.DecimalType(38, 0)
-    )
-    from .color import (
-        RENDERED_FALSE,
-        RENDERED_TRUE,
-        bar_py,
-        color_interp,
-        parse_color,
-        render_py,
-        rgb_int,
-    )
-
-    # ColorFunctions.java surface — paste-compat SQL names with the
-    # reference's overloads (ColorFunctions.java:85-186). The color type
-    # is its bigint encoding (rgb >= 0, system colors negative), matching
-    # the reference's ColorType long representation.
-    def _color(a, b=None, c=None, d=None, e=None):
-        if b is None:
-            return parse_color(a)
-        if d is None:  # color(fraction, lowColor, highColor)
-            return color_interp(float(a), int(b), int(c))
-        # color(value, low, high, lowColor, highColor)
-        return color_interp(
-            (float(a) - float(b)) / (float(c) - float(b)), int(d), int(e)
-        )
-
-    def _render(v, c=None):
-        if c is None:
-            return RENDERED_TRUE if v else RENDERED_FALSE
-        if isinstance(v, float):  # Java Double.toString: always a decimal point
-            v = repr(v)
-        return render_py(str(v), int(c))
-
-    spark.udf.register("color", _color, T.LongType())
-    spark.udf.register("rgb", lambda r, g, b: rgb_int(r, g, b), T.LongType())
-    spark.udf.register("render", _render, T.StringType())
-    spark.udf.register(
-        "bar",
-        lambda p, w, lo=0xFF0000, hi=0x00FF00: bar_py(p, int(w), int(lo), int(hi)),
-        T.StringType(),
-    )
-    from .digest import register_tdigest_functions
-
-    register_tdigest_functions(spark)
+    """Register the whole compat table (every module's functions) into the
+    session — for listings such as SHOW FUNCTIONS. Queries need not call
+    it: the engine registers the names a statement references."""
+    ensure_functions(spark, functions())

@@ -42,8 +42,9 @@ import math
 import struct
 import unicodedata
 
-from pyspark.sql import SparkSession
 from pyspark.sql import types as T
+
+from .compat import python_udf, sql_functions
 
 _B = bytes  # UDF binary params arrive as bytearray; normalize with bytes()
 
@@ -329,37 +330,41 @@ def _is_subnet_of(prefix, ip_or_prefix):
     return ipaddress.ip_address(ip_or_prefix) in net
 
 
-def register_scalar_stragglers(spark: SparkSession) -> None:
-    for stmt in SQL_FUNCTIONS_2:
-        spark.sql(stmt)
-    reg = spark.udf.register
-    reg("combine_hash", _combine_hash, T.LongType())
-    reg("fnv1_32", lambda b: _fnv(b, 0x811C9DC5, 0x01000193, 32, False), T.LongType())
-    reg("fnv1_64", lambda b: _fnv(b, 0xCBF29CE484222325, 0x100000001B3, 64, False),
-        T.LongType())
-    reg("fnv1a_32", lambda b: _fnv(b, 0x811C9DC5, 0x01000193, 32, True), T.LongType())
-    reg("fnv1a_64", lambda b: _fnv(b, 0xCBF29CE484222325, 0x100000001B3, 64, True),
-        T.LongType())
-    reg("from_ieee754_64", _ieee754_from_64, T.DoubleType())
-    reg("to_ieee754_64", _ieee754_to_64, T.BinaryType())
-    reg("from_ieee754_32", _ieee754_from_32, T.DoubleType())
-    reg("to_ieee754_32", lambda x: _ieee754_to_32(x), T.BinaryType())
-    fb64, tb64 = _big_endian(">q")
-    fb32, tb32 = _big_endian(">i")
-    reg("from_big_endian_64", fb64, T.LongType())
-    reg("to_big_endian_64", tb64, T.BinaryType())
-    reg("from_big_endian_32", fb32, T.LongType())
-    reg("to_big_endian_32", tb32, T.BinaryType())
-    for algo in ("md5", "sha1", "sha256", "sha512"):
-        reg(f"hmac_{algo}", _hmac_fn(algo), T.BinaryType())
-    reg("normalize_form", _normalize_form, T.StringType())
-    reg("split_to_multimap", _split_to_multimap,
-        T.MapType(T.StringType(), T.ArrayType(T.StringType())))
-    reg("beta_cdf", _beta_cdf, T.DoubleType())
-    reg("inverse_beta_cdf", _inverse_beta_cdf, T.DoubleType())
-    reg("inverse_normal_cdf", _inverse_normal_cdf, T.DoubleType())
-    reg("ip_prefix", _ip_prefix, T.StringType())
-    reg("ip_subnet_min", _ip_subnet_min, T.StringType())
-    reg("ip_subnet_max", _ip_subnet_max, T.StringType())
-    reg("ip_subnet_range", _ip_subnet_range, T.ArrayType(T.StringType()))
-    reg("is_subnet_of", _is_subnet_of, T.BooleanType())
+_FB64, _TB64 = _big_endian(">q")
+_FB32, _TB32 = _big_endian(">i")
+
+FUNCTIONS = {
+    **sql_functions(SQL_FUNCTIONS_2),
+    "combine_hash": python_udf(_combine_hash, T.LongType()),
+    "fnv1_32": python_udf(
+        lambda b: _fnv(b, 0x811C9DC5, 0x01000193, 32, False), T.LongType()),
+    "fnv1_64": python_udf(
+        lambda b: _fnv(b, 0xCBF29CE484222325, 0x100000001B3, 64, False), T.LongType()),
+    "fnv1a_32": python_udf(
+        lambda b: _fnv(b, 0x811C9DC5, 0x01000193, 32, True), T.LongType()),
+    "fnv1a_64": python_udf(
+        lambda b: _fnv(b, 0xCBF29CE484222325, 0x100000001B3, 64, True), T.LongType()),
+    "from_ieee754_64": python_udf(_ieee754_from_64, T.DoubleType()),
+    "to_ieee754_64": python_udf(_ieee754_to_64, T.BinaryType()),
+    "from_ieee754_32": python_udf(_ieee754_from_32, T.DoubleType()),
+    "to_ieee754_32": python_udf(_ieee754_to_32, T.BinaryType()),
+    "from_big_endian_64": python_udf(_FB64, T.LongType()),
+    "to_big_endian_64": python_udf(_TB64, T.BinaryType()),
+    "from_big_endian_32": python_udf(_FB32, T.LongType()),
+    "to_big_endian_32": python_udf(_TB32, T.BinaryType()),
+    **{
+        f"hmac_{algo}": python_udf(_hmac_fn(algo), T.BinaryType())
+        for algo in ("md5", "sha1", "sha256", "sha512")
+    },
+    "normalize_form": python_udf(_normalize_form, T.StringType()),
+    "split_to_multimap": python_udf(
+        _split_to_multimap, T.MapType(T.StringType(), T.ArrayType(T.StringType()))),
+    "beta_cdf": python_udf(_beta_cdf, T.DoubleType()),
+    "inverse_beta_cdf": python_udf(_inverse_beta_cdf, T.DoubleType()),
+    "inverse_normal_cdf": python_udf(_inverse_normal_cdf, T.DoubleType()),
+    "ip_prefix": python_udf(_ip_prefix, T.StringType()),
+    "ip_subnet_min": python_udf(_ip_subnet_min, T.StringType()),
+    "ip_subnet_max": python_udf(_ip_subnet_max, T.StringType()),
+    "ip_subnet_range": python_udf(_ip_subnet_range, T.ArrayType(T.StringType())),
+    "is_subnet_of": python_udf(_is_subnet_of, T.BooleanType()),
+}

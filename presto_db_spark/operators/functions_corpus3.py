@@ -585,10 +585,10 @@ def func_data_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark but float64 from the oracle's pandas path — the same hash-kind
     mismatch class as the r06 HUGEINT bug (the DECIMAL return type itself
     is covered by the golden-pair scalar tests)."""
-    from ..functions.presto import register_presto_functions
+    from ..functions.compat import ensure_functions
 
     (cust,) = _t(spark, sf_dir, "customer")
-    register_presto_functions(spark)
+    ensure_functions(spark, {"parse_presto_data_size"})
     cust.filter(F.col("c_custkey") < 2000).createOrReplaceTempView("_ds_cust")
     return spark.sql("""
         SELECT c_custkey AS id,

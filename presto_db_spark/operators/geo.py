@@ -414,21 +414,6 @@ def geo_polygon_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # quadkey bit-interleave BingTile.java). mapSize = 256·2^zoom; shifts are
 # spelled as DIV-by-power-of-2 so Spark and DuckDB evaluate identically.
 
-def _bing_sql(lat: str, lon: str, zoom: str) -> dict[str, str]:
-    """DuckDB/ANSI spellings of the tile pipeline (also valid Spark SQL
-    except list_* / generate_series, swapped below)."""
-    map_size = f"(256 * CAST(pow(2, {zoom}) AS BIGINT))"
-    xaxis = f"(({lon} + 180) / 360)"
-    sinlat = f"sin({lat} * pi() / 180)"
-    yaxis = f"(0.5 - ln((1 + {sinlat}) / (1 - {sinlat})) / (4 * pi()))"
-    tx = (
-        f"CAST(least(greatest({xaxis} * {map_size}, 0), {map_size} - 1) AS BIGINT) // 256"
-    )
-    ty = (
-        f"CAST(least(greatest({yaxis} * {map_size}, 0), {map_size} - 1) AS BIGINT) // 256"
-    )
-    return {"tx": tx, "ty": ty}
-
 
 @_q(
     "geo_bing_tiles",

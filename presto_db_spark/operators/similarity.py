@@ -203,21 +203,6 @@ def _srp_bucket_impl(e):
     return pd.Series(["".join(out[:, r]) for r in range(n)])
 
 
-def _plane_sign(e: Column, p: int) -> Column:
-    # Kept as the single-plane expression form for composition/tests; the
-    # operators use _srp_bucket_pd (one batch pass for all planes).
-    return F.aggregate(
-        F.zip_with(
-            e,
-            F.sequence(F.lit(1), F.lit(DIM)),
-            lambda x, i: x.cast("double")
-            * F.when((i * 2654435761 + p * 40503) % 97 % 2 == 0, 1.0).otherwise(-1.0),
-        ),
-        F.lit(0.0),
-        lambda s, v: s + v,
-    )
-
-
 # --- brute-force exact top-k -----------------------------------------------
 
 _BRUTE_SQL = f"""

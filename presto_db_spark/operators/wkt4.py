@@ -209,13 +209,6 @@ def st_hull_ccw(hull: Column) -> Column:
     )
 
 
-def st_convex_hull_pts(pts: Column) -> Column:
-    """Hull vertices of a point set, in CCW angular order around the hull
-    centroid (single-expression form — see geo_convex_hull for the staged
-    form that keeps the Catalyst tree linear)."""
-    return st_hull_ccw(st_hull_vertices(pts))
-
-
 # --- oracle SQL building blocks (identical formula text) --------------------
 
 def _sql_ring_pts(key: str, sx: str = "0", sy: str = "0") -> str:

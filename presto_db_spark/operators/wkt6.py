@@ -10,8 +10,8 @@ Reference surface (``presto-geospatial/.../GeoFunctions.java``):
   is exact in 64-bit integers) — so the full hex string is pure JVM
   expression code on the Spark side and bit-identical DuckDB SQL on the
   oracle side.  The decode path inverts the same math.  General
-  (non-integer) doubles go through the Arrow codec UDFs registered by
-  :func:`presto_db_spark.functions.geosql.register_geo_functions`
+  (non-integer) doubles go through the Arrow codec UDFs defined in
+  :mod:`presto_db_spark.functions.geosql`
   (``st_asbinary`` / ``st_geomfrombinary`` — a serialization codec, the
   same exception class as the BMP/WAV multimodal codecs).
 * ``ST_Points`` (:793), ``ST_EnvelopeAsPts`` (:880), ``ST_Geometries``

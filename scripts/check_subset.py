@@ -3,6 +3,8 @@
 same dtype-faithful oracle gate the full sweep uses.
 
 Usage: python scripts/check_subset.py name1 name2 ...  [--sf DIR]
+
+The session is the engine's own (``session.get_spark``).
 """
 
 from __future__ import annotations
@@ -14,9 +16,8 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from pyspark.sql import SparkSession  # noqa: E402
-
 from presto_db_spark.registry import all_oracle_sql, all_queries  # noqa: E402
+from presto_db_spark.session import get_spark  # noqa: E402
 from tests.oracle_utils import check_query  # noqa: E402
 
 
@@ -44,15 +45,7 @@ def main() -> int:
             args.append(a)
         i += 1
     qs, os_ = all_queries(), all_oracle_sql()
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .appName("subset-check")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    spark = get_spark("subset-check")
     spark.sparkContext.setLogLevel("ERROR")
     fails = 0
     for name in args:

@@ -24,8 +24,9 @@ Usage::
 
     python scripts/full_correctness.py [round_number]   # default 7
 
-Env: SPARK_GRAFT_SF_DIR_CORRECT (default /root/testdata/sf0.01),
-SPARK_GRAFT_CPUS (default 32).
+Env: SPARK_GRAFT_SF_DIR_CORRECT (default ``SF_DIR`` below, sf0.01). The
+session is the engine's own (``session.get_spark``: SPARK_GRAFT_CPUS,
+default 32), so the sweep checks the plans the engine runs.
 """
 
 from __future__ import annotations
@@ -39,9 +40,8 @@ import traceback
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from pyspark.sql import SparkSession  # noqa: E402
-
 from presto_db_spark.registry import all_oracle_sql, all_queries  # noqa: E402
+from presto_db_spark.session import get_spark  # noqa: E402
 from tests.oracle_utils import (  # noqa: E402
     compare,
     driver_canon,
@@ -50,26 +50,12 @@ from tests.oracle_utils import (  # noqa: E402
 )
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_CORRECT", "/root/testdata/sf0.01")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
-
-def build_session() -> SparkSession:
-    return (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("full-correctness-sweep")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
 
 
 def main() -> int:
     rnd = int(sys.argv[1]) if len(sys.argv) > 1 else 7
     out_path = os.path.join(REPO, f"CORRECTNESS_FULL_r{rnd:02d}.json")
-    spark = build_session()
+    spark = get_spark("full-correctness-sweep")
     queries = all_queries()
     oracles = all_oracle_sql()
     t0 = time.time()

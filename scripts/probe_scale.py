@@ -1,6 +1,7 @@
 #!/usr/bin/env python
 """Ad-hoc 1×→10× scaling probe for SCALING.md rows: time each named
-registry query at sf0.01 and sf0.1 (median of 3 after 1 prewarm)."""
+registry query at sf0.01 and sf0.1 (median of 3 after 1 prewarm) in the
+engine's own session (``session.get_spark``)."""
 
 from __future__ import annotations
 
@@ -12,22 +13,13 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from pyspark.sql import SparkSession  # noqa: E402
-
 from presto_db_spark.registry import all_queries  # noqa: E402
+from presto_db_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
     names = sys.argv[1:]
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("probe-scale")
     queries = all_queries()
     # PROBE_SFS=0.001,0.01,0.1 widens the decade span: VERDICT r12 #4 —
     # a 100x (sf0.001→sf0.1) triple catches superlinearity a single

@@ -1,69 +1,20 @@
 #!/usr/bin/env python
-"""Benchmark harness — mirrors the reference's benchto methodology
+"""Benchmark harness — the reference's benchto methodology
 (presto-benchto-benchmarks/.../benchmarks/presto/tpch.yaml: prewarm then
 measured steady-state runs) on the driver testdata.
 
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1) on
-local[$SPARK_GRAFT_CPUS], AQE on, and prints ONE JSON line:
-{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
+local[$SPARK_GRAFT_CPUS], AQE on, in one shared session. Per query:
+PREWARM_RUNS unmeasured + RUNS measured runs to the noop sink, raw median
+reported. Prints two lines: ``BENCH_DETAIL {"spread": ...}`` with each
+query's samples, min/median/max, per-run JVM GC and JIT deltas and final
+plan hashes, then ONE JSON line
+{"metric", "value": total_sec, "unit", "queries", "sf", "runs", "prewarm"}.
 
-Per query: PREWARM_RUNS unmeasured + RUNS measured, median reported.
-
-r10 canonical number (VERDICT r09 directive #1): the artifact carries
-exactly ONE comparable normalized total — ``value_core17_canonical``,
-the sum over CORE17 of each query's median divided by its OWN adjacent
-probe's max(ALU, scan) ratio. The r09 calibration data showed suite-wide
-factors are wrong in both directions (the endpoint factor under-corrects
-because contention varies within the 25-minute run; the during-suite
-median scatters 0.79-1.65x per query), so per-query-adjacent is the
-grain that works. Raw medians stay in "value"/"queries"; the old
-endpoint/during suite-wide factors are demoted to debug_factors in the
-detail line. Every run also emits r06_epoch_median_ratio — the median
-canonical/epoch ratio against the pinned r06 quiet-box per-query medians
-(_R06_EPOCH) — as a standing validation that the normalization
-reproduces the epoch regardless of box state.
-
-events_sessionize r06 note (VERDICT r06 directive #6): the 0.242 → 0.264
-in-suite drift was NOISE — solo BENCH_ONLY runs at quiet ambient sit at
-0.31-0.33 median with 0.26-0.40 spread (cold events scan; in-suite runs
-inherit a warmed scan from events_range_join), so a ±0.02 in-suite delta
-is inside the query's own band. Taken anyway as a prompt to remove real
-work: r07 rewrote the query from two window passes to one (n_sessions =
-max(running sum of new_session) == plain sum(new_session); the running
-sum was algebraically dead), leaving one exchange + one sort + one lag
-Window + a partial/final agg that reuses the window's partitioning — the
-oracle keeps the literal two-window form, value-proving the equivalence.
-
-r08 A/B (VERDICT r07 directive #1 closure): HEAD vs the r06 checkout
-c3f2e08, same box, back-to-back within the hour, both contended (numpy
-probe 3.2-3.5x idle ref): r06-code CORE17 total 11.35 s raw vs HEAD
-11.78 s raw — per-query ratios scatter 0.73x-1.25x in BOTH directions
-(agg_hll 0.73, sim_topk 1.25), no plan-shaped drift. The r07-recorded
-11.14 s vs r06-recorded 8.02 s is therefore HOST STATE, not code: the
-r06 code itself reads ~11.3 s on today's box. The factor now includes a
-scan-bound probe so this regime is corrected, and "contended": true
-tags it.
-
-dedup_minhash_lsh target — CLOSED r10 (VERDICT r09 directive #2), in
-RAW terms: the committed full-run artifact BENCH_TRIAL_r10.json records
-dedup_minhash_lsh raw 1.1327 / canonical 0.9404 s — the raw median is
-under the 1.2 s target outright (the query's window ran calm even
-though the suite endpoints read ALU 1.17x / scan 1.23x). An earlier r10
-full run on a worse window (scan 1.30x, during ~1.5x) read raw 1.551 /
-canonical 1.137 — also under target in the canonical terms the
-directive's fallback allows. History: the r09 ~14% code win was
-A/B-proven same-box (pre-opt 1.944 -> 1.68 raw); judge-quiet r08
-measured 1.223 raw PRE-opt — all consistent with a true quiet-box value
-around ~1.1 s.
-
-Isolation: BENCH_SUBPROCESS=1 runs every query in a FRESH SUBPROCESS (its
-own JVM). Measured r4 result of that mode: it does NOT remove the sim_ivf
-tail (1.4-5.1 s spread INSIDE one fresh JVM — the variance is intra-query,
-not suite-position pollution) and it costs every short query its share of
-the amortized JIT warmup (+25-100% on sub-second medians), so the default
-stays the shared session with per-query clearCache+GC. The per-query
-min/median/max spread in the output is the noise-visibility mechanism
-either way: a wide band = session noise, not a regression.
+A wide min/max band with identical plan hashes and flat GC/JIT is session
+or host noise, not a regression. For an A/B between two commits, run
+``BENCH_ONLY=<query> python bench.py`` in a checkout of each, or
+``perfbench/run.py`` on both.
 """
 
 from __future__ import annotations
@@ -74,7 +25,6 @@ import json
 import os
 import re
 import statistics
-import subprocess
 import sys
 import time
 
@@ -82,278 +32,17 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# --- ambient calibration -----------------------------------------------
-# r05 post-mortem: the suite total moved +27% vs r04 with ZERO code diff on
-# the slowed queries — the uniform shift was (almost certainly) hypervisor
-# vCPU stealing, but the artifact had no way to prove it.  Fixed-cost
-# probes run before and after the suite and are recorded in the JSON:
-#   * numpy: pinned 1024x1024 matmul (BLAS / memory-bandwidth sensitive)
-#   * spark: pinned JVM-only codegen aggregation over range(400M), no I/O
-#   * scan:  pinned JVM parquet column-aggregate over the sf0.1 lineitem
-#            (page-cache-resident after warmup → memory bandwidth +
-#            parquet decode, i.e. EXACTLY the work the suite does)
-#   * arrow: pinned pandas-UDF pass (python-worker + Arrow serialization +
-#            numpy batch math — the Arrow-heavy queries' resource mix;
-#            r09 diagnostic, not yet in the factor)
-#
-# r07 post-mortem (VERDICT r07 "what's wrong" #1): the factor used the
-# ALU spark probe ALONE, which is blind to memory-bandwidth contention —
-# the r07 artifact shows numpy at 3-4x its idle ref while the ALU probe
-# read its best-ever, and the judge reproduced an ~1.4x suite slowdown
-# the factor never saw.  The factor is now max(1.0, alu_ratio,
-# scan_ratio): the scan probe tracks the bandwidth-bound work the suite
-# actually does.  numpy deliberately stays OUT of the factor — its 3-9x
-# contended swings overstate the suite impact (r07: suite 1.4x while
-# numpy read 3-4x; a max() over it would normalize an 11s suite to ~3.5s,
-# flattering and wrong) — but any probe beyond 1.5x its ref sets
-# "contended": true in the artifact so cross-round comparisons know the
-# regime.
-#
-# Refs live in ambient_refs.json (scripts/pin_ambient_refs.py ratchets
-# them DOWN whenever a quieter box is observed — a ref can only ever be
-# too high, which makes the factor under-correct: normalized stays close
-# to raw, the honest direction).  The r08 pin was taken on a box whose
-# numpy probe read 3.2x the r06 idle ref, so the scan ref is conservative.
-AMBIENT_REFS_FILE = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "ambient_refs.json"
-)
-_DEFAULT_REFS = {"numpy_ms": 2.7, "spark_sec": 0.104, "scan_sec": 0.16}
-
-
-def _ambient_refs() -> dict[str, float]:
-    try:
-        with open(AMBIENT_REFS_FILE) as f:
-            refs = json.load(f)
-        merged = {**_DEFAULT_REFS, **refs}
-        return {k: v for k, v in merged.items() if not k.startswith("_")}
-    except (OSError, ValueError):
-        return dict(_DEFAULT_REFS)
-
-
-# The scan probe is pinned to the sf0.1 lineitem REGARDLESS of SF_DIR so
-# the ref stays comparable when the driver benches a different SF.
-SCAN_PROBE_PATH = "/root/testdata/sf0.1/lineitem.parquet"
-
-
-def _ratchet_refs(
-    before: dict,
-    after: dict,
-    probe_bytes: int | None,
-    ref_bytes,
-    probe_rows: int | None = None,
-    ref_rows=None,
-) -> list[str]:
-    """Two-phase ratchet for probe refs (the refs are the box's best-ever
-    idle values — see scripts/pin_ambient_refs.py, which shares this rule).
-
-    ADVICE r09: a single anomalously low reading must not permanently
-    lower a ref (that would monotonically inflate every future ambient
-    factor). A below-ref observation is therefore STAGED (under the
-    ``_staged`` key, invisible to _ambient_refs) and only persisted as
-    the live ref when a SECOND independent run reproduces it within 10%
-    — and then the MAX of the two confirmed readings is taken, the
-    conservative direction (a higher ref keeps normalized closer to
-    raw). A staged candidate that the next run does NOT confirm is
-    replaced by the newer observation, so a one-off fluke ages out.
-
-    The scan-fixture re-pin stays immediate: when the probe dataset's
-    fingerprint changed, the old ref is incomparable by construction and
-    holding it staged would compare apples to oranges for a whole round.
-    """
-    try:
-        with open(AMBIENT_REFS_FILE) as f:
-            refs = json.load(f)
-    except (OSError, ValueError):
-        return []
-    changed = []
-    staged = refs.get("_staged", {})
-    for key in ("numpy_ms", "spark_sec", "scan_sec", "arrow_sec"):
-        vals = [d.get(key) for d in (before, after) if d.get(key) is not None]
-        if not vals:
-            continue
-        val = min(vals)
-        old = refs.get(key)
-        if key == "scan_sec":
-            # fixture-comparability (r10 review finding: the rows gate
-            # must apply HERE too, or a same-bytes/different-rows
-            # regeneration stages scan readings against an incomparable
-            # fixture and the rows fingerprint never re-pins): any
-            # fingerprint mismatch re-pins ref + BOTH fingerprints.
-            bytes_mismatch = (
-                ref_bytes is not None
-                and probe_bytes is not None
-                and int(ref_bytes) != probe_bytes
-            )
-            rows_mismatch = (
-                ref_rows is not None
-                and probe_rows is not None
-                and int(ref_rows) != probe_rows
-            )
-            if bytes_mismatch or rows_mismatch:
-                refs[key] = val
-                if probe_bytes is not None:
-                    refs["scan_probe_bytes"] = probe_bytes
-                if probe_rows is not None:
-                    refs["scan_probe_rows"] = probe_rows
-                staged.pop(key, None)
-                changed.append(f"{key}: re-pinned {old} -> {val} (new fixture)")
-                continue
-        if old is None:
-            refs[key] = val
-            changed.append(f"{key}: None -> {val} (first observation)")
-            continue
-        if val >= old:
-            continue
-        cand = staged.get(key)
-        if cand is not None and abs(val - cand) <= 0.10 * cand:
-            # clamp to the CURRENT ref (r10 review finding: a stale
-            # staged candidate taken before an explicit pin lowered the
-            # ref must never RAISE it back — the ratchet is documented
-            # monotonic-down).
-            confirmed = round(min(old, max(val, cand)), 4)
-            refs[key] = confirmed
-            staged.pop(key, None)
-            changed.append(
-                f"{key}: {old} -> {confirmed} (confirmed: staged {cand}, run {val})"
-            )
-        else:
-            staged[key] = val
-            changed.append(f"{key}: staged {val} (ref {old} unchanged; awaiting confirmation)")
-    refs["_staged"] = staged
-    if changed:
-        with open(AMBIENT_REFS_FILE, "w") as f:
-            json.dump(refs, f, indent=2)
-            f.write("\n")
-    return changed
-
-
-def _scan_probe_bytes() -> int | None:
-    """On-disk size of the scan-probe dataset (file or parquet dir).
-
-    ADVICE r08: if the fixture is absent or regenerated at a different
-    size, the pinned scan_sec ref is incomparable — the caller records
-    this fingerprint next to the ref and DROPS the scan ratio (with a
-    note in the artifact) on mismatch rather than silently comparing
-    apples to oranges."""
-    if not os.path.exists(SCAN_PROBE_PATH):
-        return None
-    if os.path.isfile(SCAN_PROBE_PATH):
-        return os.path.getsize(SCAN_PROBE_PATH)
-    return sum(
-        os.path.getsize(os.path.join(root, f))
-        for root, _, files in os.walk(SCAN_PROBE_PATH)
-        for f in files
-        if not f.startswith(("_", "."))
-    )
-
-
-def _scan_probe_rows() -> int | None:
-    """Row count of the scan-probe dataset from parquet footers (VERDICT
-    r09 #6: the byte fingerprint alone misses a same-size regeneration
-    with different row counts — e.g. a compression-level change masking
-    a content change). Footer metadata only; no data read."""
-    if not os.path.exists(SCAN_PROBE_PATH):
-        return None
-    try:
-        import pyarrow.parquet as pq
-
-        if os.path.isfile(SCAN_PROBE_PATH):
-            return pq.ParquetFile(SCAN_PROBE_PATH).metadata.num_rows
-        return sum(
-            pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-            for root, _, files in os.walk(SCAN_PROBE_PATH)
-            for f in files
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
-    except Exception:
-        return None
-
-
-def _ambient_probe(spark) -> dict[str, float]:
-    import numpy as np
-
-    rs = np.random.RandomState(0)
-    a = rs.rand(1024, 1024)
-    best_np = float("inf")
-    for _ in range(7):
-        t0 = time.perf_counter()
-        a @ a
-        best_np = min(best_np, time.perf_counter() - t0)
-    # the codegen probe is JIT-sensitive (measured r06: 0.25 cold → 0.14
-    # after ~10 executions), so warm it PAST the C2 tier before timing,
-    # and take the MIN — scheduler steal only ever inflates a sample.
-    q = lambda: spark.range(0, 400_000_000, 1, 32).selectExpr(  # noqa: E731
-        "sum(id % 7) AS s"
-    ).collect()
-    for _ in range(10):
-        q()
-    best = float("inf")
-    for _ in range(5):
-        t0 = time.perf_counter()
-        q()
-        best = min(best, time.perf_counter() - t0)
-    out = {
-        "numpy_ms": round(best_np * 1000, 3),
-        "spark_sec": round(best, 4),
-    }
-    if os.path.exists(SCAN_PROBE_PATH):
-        sq = lambda: spark.read.parquet(SCAN_PROBE_PATH).selectExpr(  # noqa: E731
-            "sum(l_extendedprice) s", "sum(l_quantity) q", "count(*) c"
-        ).collect()
-        for _ in range(6):
-            sq()
-        best_scan = float("inf")
-        for _ in range(5):
-            t0 = time.perf_counter()
-            sq()
-            best_scan = min(best_scan, time.perf_counter() - t0)
-        out["scan_sec"] = round(best_scan, 4)
-    # Arrow probe (r09): pinned pandas-UDF pass — python-worker spawn +
-    # Arrow (de)serialization + numpy batch math, i.e. EXACTLY the
-    # resource mix of the Arrow-heavy queries (minhash signature, IVF
-    # assignment) that the ALU/scan probes are blind to (r09: numpy read
-    # 3-5x while ALU/scan read ~1.0 and dedup_minhash_lsh ran 1.3x its
-    # quiet-box number). Ratio is DIAGNOSTIC this round — not in the
-    # factor until a round of cross-checks exists (the numpy lesson:
-    # an over-reactive probe flatters normalized numbers).
-    from pyspark.sql import functions as SF
-
-    pudf = SF.pandas_udf(_arrow_probe_impl, "double")
-    aq = lambda: spark.range(0, 4_000_000, 1, 32).select(  # noqa: E731
-        SF.sum(pudf(SF.col("id"))).alias("s")
-    ).collect()
-    for _ in range(3):
-        aq()
-    best_arrow = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        aq()
-        best_arrow = min(best_arrow, time.perf_counter() - t0)
-    out["arrow_sec"] = round(best_arrow, 4)
-    return out
-
-
-def _arrow_probe_impl(x):
-    """Pinned per-batch numpy work for the Arrow probe (module-level so
-    subprocess pickling works)."""
-    import numpy as np
-
-    v = x.to_numpy(dtype=np.float64)
-    return __import__("pandas").Series(np.sqrt(v * 1.000001) + np.log1p(v))
 # Mirror the reference methodology (tpch.yaml: runs: 6, prewarm-runs: 2) —
 # r2 showed runs=3/prewarm=1 admits ±2x session-GC noise into the medians.
 PREWARM_RUNS = int(os.environ.get("BENCH_PREWARM", "2"))
 RUNS = int(os.environ.get("BENCH_RUNS", "6"))
-SUBPROCESS = os.environ.get("BENCH_SUBPROCESS", "0") == "1"
 
 # Headline set: the TPC-H spine (scan-agg, multi-join, semi-join, having,
-# top-k) + the extension operators (dedup, ANN, sessionization, fingerprint).
-# CORE17 is the r01-r07 suite — cross-round totals compare on this subset
-# (emitted as value_core17); r08 adds the two hardest TPC-DS join shapes
-# (q64 cross-sales self-join, q72 fact-to-fact inventory — VERDICT r07
-# directive #5, mirroring the reference's benchto TPC-DS config
+# top-k) + the extension operators (dedup, ANN, sessionization, fingerprint),
+# then the two hardest TPC-DS join shapes (q64 cross-sales self-join, q72
+# fact-to-fact inventory — mirroring the reference's benchto TPC-DS config
 # presto-benchto-benchmarks/src/main/resources/benchmarks/presto/tpcds.yaml).
-CORE17 = [
+HEADLINE = [
     "tpch_q01",
     "tpch_q03",
     "tpch_q05",
@@ -371,84 +60,6 @@ CORE17 = [
     "sim_ivf",
     "agg_hll_sketch",
     "text_fingerprint",
-]
-# r06 quiet-box epoch per-query medians (BENCH_r06.json tail: the run's
-# ambient factor was 1.0 — numpy 8.9ms/contended but ALU 0.99x its ref —
-# so queries_normalized there IS the raw medians). Used by the canonical
-# per-query normalization's standing cross-check: canonical/epoch ratios
-# near 1.0 mean the normalization reproduces the epoch box; a uniform
-# shift means a hardware-epoch change, per-query scatter means noise.
-_R06_EPOCH = {
-    "tpch_q01": 0.7199,
-    "tpch_q03": 0.5932,
-    "tpch_q05": 0.8215,
-    "tpch_q06": 0.1546,
-    "tpch_q08": 0.6555,
-    "tpch_q09": 0.5261,
-    "tpch_q13": 0.3072,
-    "tpch_q18": 0.4053,
-    "tpch_q21": 0.6329,
-    "win_topn_per_group": 0.1215,
-    "events_sessionize": 0.264,
-    "events_range_join": 0.2695,
-    "dedup_minhash_lsh": 0.9081,
-    "sim_topk_bruteforce": 0.3979,
-    "sim_ivf": 0.6656,
-    "agg_hll_sketch": 0.2045,
-    "text_fingerprint": 0.3722,
-}
-
-# Solo plausibility pins (r11, VERDICT r10 directive #2): quiet-box solo
-# medians at sf0.1 for the non-core17 headline ops — BENCH_TRIAL_r10 raw
-# medians for the r09/r10a additions (that run's windows were calm for
-# these queries), the committed SCALING.md solo probes for the r10b/r10c
-# additions, and the r11 rebuild measurement for dedup_fuzzy_del1. The
-# canonical normalization cross-checks every canonical value against its
-# pin (core17 uses _R06_EPOCH) and flags >2x disagreement in EITHER
-# direction in the artifact — the r10 failure mode was an adjacent probe
-# catching a spike the query itself never experienced, deflating
-# text_ngram_novelty's canonical value ~5x below any recorded solo.
-# r12: sim_bq_hamming / dedup_cluster_bigstar / graph_hits re-pinned
-# from fresh scripts/probe_scale.py quiet-box solos (VERDICT r11 #2 +
-# ADVICE r11 — the latter two were in-suite medians, which made the
-# guard self-referential), and implausibly-fast canonicals are now
-# SUBSTITUTED by their pin instead of merely flagged (see below).
-_SOLO_PINS = {
-    "tpcds_q64": 1.59,  # re-pinned r13-opt quiet-box solo after the part-key semi-join fact prune (runs [1.7, 1.59, 1.58]; was 1.94 post-cross_sales-pin, 2.06 pre-pin on the same box)
-    "tpcds_q72": 1.19,
-    "tpcds_q04": 1.28,
-    "sim_ivfpq": 1.22,
-    "sort_distributed_sample": 0.89,
-    "events_rfm_scores_scalable": 1.12,
-    "part_abc_scalable": 1.04,
-    "sim_bq_hamming": 1.02,  # re-pinned r12 quiet-box solo (VERDICT r11 #2: the 1.33 pin disagreed 2x with the r11 canonical; fresh solo sits between them)
-    "text_segment_dedup": 0.58,
-    "layout_hilbert": 1.68,  # re-pinned r11 quiet-box solo (2.44 was a contended-session probe)
-    "dedup_fuzzy_del1": 1.6,
-    "text_ngram_novelty": 1.10,  # re-pinned r14 after the explode fan-out (3.6 -> 1.3 s A/B): min-of-medians over 3 BENCH_ONLY windows [1.24, 1.48, 1.10], all contention-flagged (no quiet window was available this round), so the pin is conservative-high; the stale 3.7 pin would have clamped the genuinely ~1.0-1.3 s canonical via the <pin/2 guard
-    "events_interval_overlap": 0.60,  # re-pinned r11 quiet-box solo
-    "text_lm_likelihood": 1.59,
-    "ml_logistic_regression": 1.31,  # r11d quiet-box solo (scripts/probe_scale.py)
-    "graph_bfs_distances": 1.87,  # re-pinned r14 after the co-partitioned substrate (-21% query-level A/B): min-of-medians over 3 contention-flagged BENCH_ONLY windows [2.20, 2.07, 1.87]
-    "dedup_cluster_bigstar": 3.42,  # re-pinned r13 quiet-box solo (VERDICT r12 #2: the canonical needed pin intervention two rounds running; fresh solo runs [2.88, 3.42, 3.94])
-    "graph_modularity": 2.64,  # r11j quiet-box solo. r14 note: the op rides the co-partitioned substrate (~0.6 s faster), but all six r14 re-pin windows were contention-flagged (3.0-5.9 s) — a pin is never RAISED on contended evidence, and no quiet window was available to lower it; expect the true quiet value near ~2.0
-    "graph_hits": 2.47,  # re-pinned r13 quiet-box solo (VERDICT r12 #3). Root-cause capture, r13: a 10-run BENCH_ONLY session caught a 15.6 s outlier (others 2.4-2.9 s) with the IDENTICAL normalized plan hash as the fast runs, gc_ms 41 (flat), jit_ms 2675 (inside the 1.0-3.0 s band every run shows) — the burst is NOT an AQE plan flip, NOT a GC pause, NOT a JIT recompilation storm; by elimination it is a host-level scheduling/IO stall. Two DIFFERENT plan hashes did appear across the 10 runs (an AQE variation) — both on FAST runs, so the variation is benign. Every future artifact ships samples/gc_ms/jit_ms/plan_hashes per query, so the next outlier self-classifies.
-    "multimodal_flac_roundtrip": 0.94,  # re-pinned r13-opt quiet-box solo after the codec vectorization (runs [0.93, 0.94, 0.94]; was 1.32 — the stale pin would have clamped a genuinely 10x-encode-faster canonical via the <pin/2 substitution guard)
-    "sim_knn_graph": 1.13,  # re-pinned r14 after the per-cell matrix kernel (2.85 -> 1.49 s warm; rows collect-compared identical): min-of-medians over 3 BENCH_ONLY windows [1.13, 1.29, 1.20], contention-flagged so conservative-high; the stale 3.27 pin was clamping the genuine 2.3x win
-    "graph_ppr": 2.76,  # r12 quiet-box solo
-    "sim_mmr_diversify": 1.65,  # r13 quiet-box solo (scripts/probe_scale.py, the round it shipped)
-    "graph_random_walks": 2.21,  # r13 quiet-box solo (the round it shipped)
-    "graph_ktruss": 2.68,  # re-pinned r14 after the co-partitioned substrate (-26% query-level A/B): min-of-medians over 6 contention-flagged BENCH_ONLY windows [5.66, 3.24, 2.68, 8.07, 4.91, 4.11] on a stormy box — conservative-high
-}
-
-# Pins recorded from an in-suite raw median instead of an independent
-# quiet-box solo (ADVICE r11: such pins make the >2x cross-check
-# self-referential for their ops). They flag but never substitute.
-# Empty since r12 — every current pin is an independent solo — but the
-# mechanism stays so a future suite-derived pin degrades gracefully.
-_SUITE_DERIVED_PINS: set[str] = set()
-
-HEADLINE = CORE17 + [
     "tpcds_q64",
     "tpcds_q72",
     # r09 (VERDICT r08 directive #5): the CTE-materialization path under
@@ -538,59 +149,6 @@ if os.environ.get("BENCH_ONLY"):
     HEADLINE = [q for q in HEADLINE if q in _only] or _only
 
 
-def _quick_probe(spark) -> dict[str, float]:
-    """One-shot ALU + scan probe (no warmup loops — callers run it after
-    the suite-start probe has already taken the JVM past C2, so a single
-    sample is representative). Used to record PER-QUERY ambient context:
-    the before/after endpoint probes can luck into quiet moments while
-    the 20+ minutes between them run contended, and the endpoint `min`
-    then under-represents what the queries actually experienced. These
-    samples are DIAGNOSTIC (emitted in the detail artifact) — the factor
-    keeps its endpoint-min definition for cross-round continuity.
-
-    First measurement (r09 final full run): endpoint ratios ALU 1.02 /
-    scan 1.17 while the during-suite MEDIANS read ALU 1.37 / scan 1.45 —
-    i.e. the endpoints under-state intra-suite contention by ~1.2-1.4x
-    on this host. Normalizing core17 by the during-median instead of the
-    endpoint factor would read ~8.7 s vs r06's 8.02 (inside the 1.1x
-    band). Left as data for r10 to decide whether the factor should
-    switch to the during-median.
-
-    Second measurement (r09, instrumented run): endpoints read 0.94x
-    (BELOW refs — all three refs ratcheted down) while during-medians
-    read ALU 1.66 / scan 1.58 and raw core17 sat at 15.2 s; the
-    during-median normalizes it to 9.19. Per-query validation against
-    the r06 quiet-box medians shows the suite-wide during-median is
-    directionally right but coarse: ratios scatter 0.79-1.65x (q01/q03
-    over-corrected, q18 under-corrected) because contention varied
-    WITHIN the 25-minute run. The r10 upgrade this data motivates is a
-    PER-QUERY factor from each query's own adjacent probe (already in
-    the detail artifact), not the suite-wide median.
-
-    r10 (these probes became the CANONICAL normalization's input): each
-    probe is the MIN of 2 samples — a one-shot sample is noisy in both
-    directions, and a noisy-HIGH probe would over-correct a query that
-    actually ran quiet; min keeps the endpoint probes' steal-only-
-    inflates logic, so residual noise under-corrects (the honest
-    direction)."""
-    alu = []
-    for _ in range(2):
-        t0 = time.perf_counter()
-        spark.range(0, 400_000_000, 1, 32).selectExpr("sum(id % 7) AS s").collect()
-        alu.append(time.perf_counter() - t0)
-    out = {"spark_sec": round(min(alu), 4)}
-    if os.path.exists(SCAN_PROBE_PATH):
-        scan = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            spark.read.parquet(SCAN_PROBE_PATH).selectExpr(
-                "sum(l_extendedprice) s", "sum(l_quantity) q", "count(*) c"
-            ).collect()
-            scan.append(time.perf_counter() - t0)
-        out["scan_sec"] = round(min(scan), 4)
-    return out
-
-
 def _jvm_gc_ms(spark) -> int:
     """Cumulative JVM garbage-collection time (ms) across all collectors —
     per-run deltas distinguish a GC burst from a genuinely slower plan."""
@@ -603,9 +161,7 @@ def _jvm_gc_ms(spark) -> int:
 
 def _jvm_jit_ms(spark) -> int:
     """Cumulative JIT compilation time (ms) — a per-run spike with an
-    UNCHANGED plan hash and flat GC is a C2 recompilation/deopt burst
-    (the r12 graph_hits 28 s outlier class: judge-confirmed identical
-    plan, this metric is the remaining discriminator)."""
+    UNCHANGED plan hash and flat GC is a C2 recompilation/deopt burst."""
     cb = (
         spark.sparkContext._jvm.java.lang.management.ManagementFactory
         .getCompilationMXBean()
@@ -617,8 +173,7 @@ def _last_plan_hash(spark) -> str | None:
     """md5 (12 hex) of the most recent execution's physical-plan
     description from the SQL status store — post-AQE ("== Final Plan =="
     included), so a run whose hash differs from its siblings is an AQE
-    plan flip, not ambient noise (VERDICT r12 #2: the graph_hits 28 s
-    outlier needs evidence distinguishing JIT/GC burst from a plan flip)."""
+    plan flip, not a JIT/GC burst or host noise."""
     try:
         ss = (
             spark._jvm.org.apache.spark.sql.SparkSession.getActiveSession()
@@ -631,11 +186,8 @@ def _last_plan_hash(spark) -> str | None:
         desc = lst.apply(n - 1).physicalPlanDescription()
         # normalize run-varying identifiers so structure-identical plans
         # hash equal: exprIds (#338L), checkpoint RDD ids, AQE statistics,
-        # and lambda-variable names (r13 opt: `lambda x_1#` vs `lambda
-        # x_2#` — a session-global counter, NOT a plan change; it made
-        # dedup_fuzzy_del1 show six "different" hashes for six
-        # structurally identical runs and mislabeled a host burst as an
-        # AQE flip)
+        # and lambda-variable names (`lambda x_1#` vs `lambda x_2#` is a
+        # session-global counter, NOT a plan change)
         desc = re.sub(r"lambda [A-Za-z_]+_\d+", "lambda x_", desc)
         desc = re.sub(r"#\d+", "#", desc)
         desc = re.sub(r"RDD\[\d+\]", "RDD[]", desc)
@@ -685,376 +237,38 @@ def _measure(name: str) -> dict:
     }
 
 
-def _child(name: str) -> None:
-    print("BENCH_CHILD " + json.dumps({"query": name, **_measure(name)}))
-
-
 def main() -> None:
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     times: dict[str, float] = {}
-    spread: dict[str, dict[str, float]] = {}
-
-    from presto_db_spark.session import get_spark
-
-    probe_spark = get_spark("presto_db_spark_bench")
-    per_query_probe: dict[str, dict[str, float]] = {}
-    ambient_before = _ambient_probe(probe_spark)
-    if SUBPROCESS:
-        env = dict(os.environ)
-        for name in HEADLINE:
-            proc = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--child", name],
-                capture_output=True, text=True, env=env, timeout=600,
-            )
-            line = next(
-                (ln for ln in proc.stdout.splitlines() if ln.startswith("BENCH_CHILD ")),
-                None,
-            )
-            if line is None:
-                raise RuntimeError(
-                    f"bench child for {name} produced no result "
-                    f"(rc={proc.returncode}): {proc.stderr[-500:]}"
-                )
-            res = json.loads(line[len("BENCH_CHILD "):])
-            samples = res["samples"]
-            times[name] = round(statistics.median(samples), 4)
-            spread[name] = {
-                "min": round(min(samples), 4),
-                "median": times[name],
-                "max": round(max(samples), 4),
-                "samples": res.get("samples"),
-                "gc_ms": res.get("gc_ms"),
-                "jit_ms": res.get("jit_ms"),
-                "plan_hashes": res.get("plan_hashes"),
-            }
-    else:
-        from presto_db_spark.registry import all_queries  # noqa: F401 (session mode)
-
-        for name in HEADLINE:
-            res = _measure(name)
-            samples = res["samples"]
-            times[name] = round(statistics.median(samples), 4)
-            spread[name] = {
-                "min": round(min(samples), 4),
-                "median": times[name],
-                "max": round(max(samples), 4),
-                "samples": res["samples"],
-                "gc_ms": res["gc_ms"],
-                "jit_ms": res["jit_ms"],
-                "plan_hashes": res["plan_hashes"],
-            }
-            per_query_probe[name] = _quick_probe(probe_spark)
-
-    ambient_after = _ambient_probe(probe_spark)
-    refs = _ambient_refs()
-    # Each probe uses the MIN of the before/after measurements: the
-    # before-probe on a fresh JVM can still carry JIT warmup (measured
-    # 0.22 vs 0.13 after the suite), and steal/JIT only ever inflate —
-    # a genuinely slow host inflates the min too.  The refs are the box's
-    # BEST observed idle values (the box cannot beat them for real), so
-    # ratios are clamped at 1.0: quiet runs report raw == normalized and
-    # only genuinely-slow hosts get corrected.
-    # scan-ref comparability gate (ADVICE r08): the scan_sec ref was
-    # pinned against a specific probe dataset; if that fixture changed
-    # size (regenerated) or vanished, drop the scan ratio with a note
-    # instead of feeding an incomparable ratio into the factor.
-    probe_bytes = _scan_probe_bytes()
-    probe_rows = _scan_probe_rows()
-    ref_bytes = refs.pop("scan_probe_bytes", None)
-    ref_rows = refs.pop("scan_probe_rows", None)
-    scan_note = None
-    if probe_bytes is None:
-        scan_note = "scan probe dataset missing; factor is ALU-only"
-    elif ref_bytes is not None and int(ref_bytes) != probe_bytes:
-        scan_note = (
-            f"scan probe dataset size {probe_bytes} != pinned {int(ref_bytes)}; "
-            "scan ratio dropped, factor is ALU-only"
-        )
-    elif (
-        ref_rows is not None
-        and probe_rows is not None
-        and int(ref_rows) != probe_rows
-    ):
-        scan_note = (
-            f"scan probe dataset rows {probe_rows} != pinned {int(ref_rows)}; "
-            "scan ratio dropped, factor is ALU-only"
-        )
-    if scan_note is not None:
-        refs.pop("scan_sec", None)
-    ratios = {}
-    for key, ref in refs.items():
-        vals = [d.get(key) for d in (ambient_before, ambient_after)]
-        vals = [v for v in vals if v is not None]
-        if vals:
-            ratios[key] = round(min(vals) / ref, 4)
-    # Auto-ratchet (r09): every bench run IS a probe observation — when the
-    # suite happens to land on a quiet window, persist the lower refs for
-    # future factors instead of waiting for a separate pin run to catch the
-    # same window (r09 measured scan 0.76x its ref mid-bench, then the
-    # manual pin 5 minutes later read 1.24x — the window had closed).
-    # THIS run's ratios/factor still use the refs as loaded above.
-    ratcheted = _ratchet_refs(
-        ambient_before, ambient_after, probe_bytes, ref_bytes, probe_rows, ref_rows
-    )
-    # factor: ALU + scan probes only (see the calibration comment above —
-    # numpy's contended swings overstate suite impact and would flatter
-    # the normalized number).
-    factor = round(
-        max(1.0, ratios.get("spark_sec", 1.0), ratios.get("scan_sec", 1.0)), 4
-    )
-    contended = any(r > 1.5 for r in ratios.values())
-    # during-median factor (r09, diagnostic): same max(ALU, scan) rule but
-    # over the per-query probes' MEDIANS — what the box looked like WHILE
-    # the suite ran, not at its endpoints. Emitted alongside the endpoint
-    # factor so cross-round series stay comparable while the judge sees
-    # both normalizations.
-    factor_during = None
-    if per_query_probe:
-        med = {
-            k: statistics.median(
-                p[k] for p in per_query_probe.values() if k in p
-            )
-            for k in ("spark_sec", "scan_sec")
-            if any(k in p for p in per_query_probe.values())
+    spread: dict[str, dict] = {}
+    for name in HEADLINE:
+        res = _measure(name)
+        samples = res["samples"]
+        times[name] = round(statistics.median(samples), 4)
+        spread[name] = {
+            "min": round(min(samples), 4),
+            "median": times[name],
+            "max": round(max(samples), 4),
+            **res,
         }
-        # ADVICE r09: compute during-median ratios from the POST-GATE refs
-        # only (the comparability gate above may have popped scan_sec on a
-        # fixture mismatch; merging _DEFAULT_REFS back in would resurrect
-        # an incomparable reference). Keys absent from refs are skipped —
-        # same rule queries_normalized_perq and during_median_ratios use.
-        during_ratios = [med[k] / refs[k] for k in med if refs.get(k)]
-        factor_during = round(max(1.0, *during_ratios), 4) if during_ratios else None
-    total = round(sum(times.values()), 4)
-    core17_total = round(sum(times[q] for q in CORE17 if q in times), 4)
-    # ---- canonical normalization (r10, VERDICT r09 directive #1) ----
-    # Each query is divided by its OWN adjacent probe's max(ALU, scan)
-    # ratio — the grain the r09 calibration data motivated (suite-wide
-    # medians scatter 0.79-1.65x per query because contention varies
-    # WITHIN a 25-minute run; endpoints under-correct it entirely).
-    # This per-query normalization is THE cross-round headline number;
-    # raw stays alongside, and the old endpoint/during suite-wide
-    # factors are demoted to debug_factors in the detail line.
-    def _perq_factor_raw(q: str) -> float:
-        p = per_query_probe.get(q)
-        if not p:
-            return factor  # no adjacent probe (subprocess mode): endpoint
-        rs = [p[k] / refs[k] for k in ("spark_sec", "scan_sec") if k in p and refs.get(k)]
-        return max(1.0, *rs) if rs else factor
-
-    # r11 (VERDICT r10 directive #2): the per-query factor is CAPPED at
-    # suite-median x 1.5.  The r10 artifact recorded text_ngram_novelty
-    # at 0.78 s canonical against 4.1-4.6 s in every solo measurement —
-    # the adjacent probe caught a ~5.8x ambient spike the query itself
-    # never experienced, and the unbounded factor divided it away.  A
-    # probe ratio far above the suite median is evidence about the PROBE
-    # WINDOW, not the query's run; capping keeps the correction bounded
-    # by what the suite as a whole experienced (under-correcting — the
-    # honest direction, same rule the ratchet follows).
-    _factors_raw = {q: _perq_factor_raw(q) for q in times}
-    _factor_med = (
-        statistics.median(_factors_raw.values()) if _factors_raw else 1.0
-    )
-    _factor_cap = max(1.0, round(_factor_med * 1.5, 4))
-    perq_factors = {q: min(f, _factor_cap) for q, f in _factors_raw.items()}
-    capped_factors = sorted(
-        q for q, f in _factors_raw.items() if f > _factor_cap
-    )
-
-    queries_canonical = {
-        q: round(t / perq_factors[q], 4) for q, t in times.items()
-    }
-    # Plausibility cross-check (same directive): every canonical value is
-    # compared against a pinned quiet-box solo number — _R06_EPOCH for
-    # core17, _SOLO_PINS for the rest — and >2x disagreement in either
-    # direction is handled per VERDICT r11 #2:
-    #   * canonical < pin/2 (implausibly FAST — the per-query factor
-    #     over-corrected despite the cap, the r11 sim_bq_hamming case):
-    #     the canonical value is SUBSTITUTED by the pin. A number the
-    #     guard itself calls implausible must not ship as the cross-round
-    #     evidence; the pin is the best defensible value. Substitution is
-    #     recorded in canonical_pin_substitutions (detail line) and the
-    #     headline's canonical_flags stays EMPTY for these.
-    #   * canonical > 2*pin (implausibly SLOW): flagged, never
-    #     substituted — a slow canonical may be a genuine regression and
-    #     masking it with the old pin would hide exactly what the
-    #     cross-round number exists to catch.
-    #   * suite-derived pins (_SUITE_DERIVED_PINS — pins recorded from an
-    #     in-suite raw median, not an independent quiet-box solo; ADVICE
-    #     r11) are WEAKER evidence: they flag but never substitute, and
-    #     the detail line carries their provenance.
-    _pins = {**_SOLO_PINS, **_R06_EPOCH}
-    canonical_flags = {}
-    canonical_pin_substitutions = {}
-    for q, c in list(queries_canonical.items()):
-        pin = _pins.get(q)
-        if not pin or (c <= 2 * pin and c >= pin / 2):
-            continue
-        suite_derived = q in _SUITE_DERIVED_PINS
-        if c < pin / 2 and not suite_derived:
-            canonical_pin_substitutions[q] = {
-                "canonical_raw": c,
-                "solo_pin": pin,
-                "ratio": round(c / pin, 4),
-            }
-            queries_canonical[q] = pin
-        else:
-            canonical_flags[q] = {
-                "canonical": c,
-                "solo_pin": pin,
-                "pin_provenance": "suite-derived" if suite_derived else "solo",
-                "ratio": round(c / pin, 4),
-                # root-cause evidence (VERDICT r12 #2): identical
-                # plan_hashes + a gc_ms spike on the slow run = GC/JIT
-                # burst; a differing plan_hash = AQE plan flip
-                "run_evidence": spread.get(q),
-            }
-    core17_canonical = round(
-        sum(queries_canonical[q] for q in CORE17 if q in queries_canonical), 4
-    )
-    # r06-epoch cross-check: the r06 run was the quiet-box epoch (factor
-    # 1.0 — BENCH_r06.json tail, queries_normalized == raw medians). Every
-    # artifact now carries per-query canonical/epoch ratios so the judge
-    # can see in one place whether the normalization reproduces the epoch
-    # regardless of this round's box state.
-    epoch_ratios = {
-        q: round(queries_canonical[q] / _R06_EPOCH[q], 4)
-        for q in _R06_EPOCH
-        if q in queries_canonical
-    }
-    epoch_median = (
-        round(statistics.median(epoch_ratios.values()), 4) if epoch_ratios else None
-    )
-    # r06 post-mortem: the single JSON line outgrew the driver's stdout tail
-    # buffer once spread+ambient landed, truncating the HEAD of the line
-    # (including "value") -> BENCH_r06 recorded "parsed": null.  The bulky
-    # diagnostics (per-query spread, raw ambient probes, normalized per-query
-    # map) now go on their OWN earlier line; the driver-facing final line is
-    # the compact headline object only.
-    print(
-        "BENCH_DETAIL "
-        + json.dumps(
-            {
-                "spread": spread,
-                "ambient": {
-                    "before": ambient_before,
-                    "after": ambient_after,
-                    "refs": refs,
-                    "ratios": ratios,
-                    "scan_probe_bytes": probe_bytes,
-                    **({"scan_note": scan_note} if scan_note else {}),
-                    **({"ratcheted": ratcheted} if ratcheted else {}),
-                    # per-query one-shot probes: what the box looked like
-                    # RIGHT AFTER each query ran. These feed the CANONICAL
-                    # per-query normalization in the headline (r10); the
-                    # raw probe samples stay here for archaeology.
-                    **(
-                        {
-                            "during": per_query_probe,
-                            "during_median_ratios": {
-                                k: round(
-                                    statistics.median(
-                                        p[k] for p in per_query_probe.values() if k in p
-                                    )
-                                    / refs[k],
-                                    4,
-                                )
-                                for k in ("spark_sec", "scan_sec")
-                                if k in refs
-                                and any(k in p for p in per_query_probe.values())
-                            },
-                        }
-                        if per_query_probe
-                        else {}
-                    ),
-                },
-                # demoted suite-wide factors (VERDICT r09 #1: the headline
-                # carries exactly ONE comparable normalized total — the
-                # per-query canonical one; these stay here as debug for
-                # cross-round archaeology against r07-r09 artifacts).
-                "debug_factors": {
-                    "endpoint_factor": factor,
-                    "value_core17_endpoint_normalized": round(
-                        core17_total / factor, 4
-                    ),
-                    **(
-                        {
-                            "during_factor": factor_during,
-                            "value_core17_during_normalized": round(
-                                core17_total / factor_during, 4
-                            ),
-                        }
-                        if factor_during
-                        else {}
-                    ),
-                },
-                "r06_epoch_check": {
-                    "per_query_ratio": epoch_ratios,
-                    "median_ratio": epoch_median,
-                },
-                # per-query canonical values live HERE, not on the final
-                # headline line (r06 post-mortem: a second per-query map
-                # on the final line risks the driver's stdout-tail
-                # truncating the head of the line, losing "value").
-                "queries_canonical": queries_canonical,
-                # r11: per-query factors (post-cap), which queries hit the
-                # cap, and the full plausibility-flag records (headline
-                # carries names only).
-                "perq_factors": {
-                    q: round(f, 4) for q, f in perq_factors.items()
-                },
-                "perq_factor_cap": _factor_cap,
-                "perq_factor_capped_queries": capped_factors,
-                "canonical_flags_detail": canonical_flags,
-                # r12 (VERDICT r11 #2): canonical values the guard found
-                # implausibly FAST (<pin/2) are replaced by their solo
-                # pin; the raw canonical and the ratio are recorded here.
-                "canonical_pin_substitutions": canonical_pin_substitutions,
-            }
-        )
-    )
+    # The bulky per-query spread goes on its OWN earlier line: once it rode
+    # on the final line, the driver's stdout-tail buffer truncated the head
+    # of that line (including "value").
+    print("BENCH_DETAIL " + json.dumps({"spread": spread}))
     print(
         json.dumps(
             {
                 "metric": "headline_suite_median_total",
-                "value": total,
+                "value": round(sum(times.values()), 4),
                 "unit": "sec",
                 "queries": times,
                 "sf": float(sf),
                 "runs": RUNS,
                 "prewarm": PREWARM_RUNS,
-                "isolation": "subprocess" if SUBPROCESS else "session",
-                "contended": contended,
-                # r11 (VERDICT r10 directive #3): when the contention gate
-                # trips, the RAW totals are not cross-round comparable —
-                # compare via value_core17_canonical instead. The raw
-                # numbers keep printing either way.
-                "raw_comparable": not contended,
-                **({"calibration_note": scan_note} if scan_note else {}),
-                "value_core17": core17_total,
-                # THE canonical cross-round number (r10): each query
-                # normalized by its own adjacent probe's max(ALU, scan)
-                # ratio, summed over the CORE17 subset. Raw medians stay
-                # in "queries"/"value"; suite-wide endpoint/during factors
-                # are debug-only (detail line).
-                "canonical": "value_core17_canonical",
-                "value_core17_canonical": core17_canonical,
-                # r11: queries whose canonical value disagrees >2x with
-                # its pinned quiet-box solo (detail line has the numbers).
-                # Empty list = every canonical value is plausible.
-                "canonical_flags": sorted(canonical_flags),
-                # per-query canonical map is on the BENCH_DETAIL line
-                # (keeps this line inside the driver's stdout tail).
-                # standing epoch cross-check: median canonical/r06-epoch
-                # ratio over the shared core17 (1.0 = reproduces the
-                # quiet-box epoch exactly).
-                "r06_epoch_median_ratio": epoch_median,
             }
         )
     )
 
 
 if __name__ == "__main__":
-    if len(sys.argv) == 3 and sys.argv[1] == "--child":
-        _child(sys.argv[2])
-    else:
-        main()
+    main()

@@ -15,7 +15,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
 
 def get_spark(app_name: str = "presto_db_spark", cpus: str | None = None) -> SparkSession:

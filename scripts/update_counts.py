@@ -64,7 +64,7 @@ def bench_total(round_no: int) -> float | None:
 def trial_value(key: str) -> float | None:
     """Numbers quoted from the committed builder-run trial artifact
     (BENCH_TRIAL_r10.json) — the VERDICT r09 #1/#2 closure evidence.
-    Machine-owned so README/bench.py prose can never drift from the
+    Machine-owned so README prose can never drift from the
     artifact they cite."""
     path = os.path.join(ROOT, "BENCH_TRIAL_r10.json")
     if not os.path.exists(path):
@@ -105,8 +105,6 @@ RULES: list[tuple[str, str, str]] = [
     ("README.md", r"\*\*canonical ([\d.]+) s\*\* \(adjacent", "trial:minhash_canon:.3f"),
     ("README.md", r"canonical core17 ([\d.]+) s vs the r06", "trial:core17_canon:.2f"),
     ("README.md", r"`r06_epoch_median_ratio` \*\*([\d.]+)\*\*", "trial:epoch:.3f"),
-    ("bench.py", r"records\ndedup_minhash_lsh raw ([\d.]+) /", "trial:minhash_raw:.4f"),
-    ("bench.py", r"raw [\d.]+ / canonical ([\d.]+) s — the raw median", "trial:minhash_canon:.4f"),
 ]
 
 

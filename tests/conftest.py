@@ -15,7 +15,7 @@ SF_DIR_CORRECTNESS = os.environ.get("SPARK_GRAFT_T2_SF_DIR", "/root/testdata/sf0
 def spark():
     from presto_db_spark.session import get_spark
 
-    s = get_spark("presto_db_spark_tests", cpus="8")
+    s = get_spark("presto_db_spark_tests")
     yield s
 
 

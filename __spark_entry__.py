@@ -18,9 +18,9 @@ SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    from presto_db_spark.operators.tpch import q05
+    from presto_db_spark.operators.tpch import QUERIES
 
-    return q05(spark, SMOKE_SF_DIR)
+    return QUERIES["tpch_q05"](spark, SMOKE_SF_DIR)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

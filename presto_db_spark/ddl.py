@@ -74,16 +74,18 @@ _SESSION_PROPERTY_MAP = {
 }
 
 
+def spark_sql(spark: SparkSession, text: str, **frames: DataFrame) -> DataFrame:
+    """``spark.sql`` for caller SQL: first registers the compat functions
+    the text references (:mod:`.functions.compat`). ``frames`` fill the
+    text's ``{name}`` placeholders, as in ``spark.sql``."""
+    ensure_functions(spark, referenced_functions(text))
+    return spark.sql(text, **frames)
+
+
 class DdlMixin:
     """Mixed into :class:`presto_db_spark.engine.Engine` (needs ``self.spark``)."""
 
     spark: SparkSession
-
-    def _spark_sql(self, text: str) -> DataFrame:
-        """``spark.sql`` for caller SQL: first registers the compat
-        functions the text references (:mod:`.functions.compat`)."""
-        ensure_functions(self.spark, referenced_functions(text))
-        return self.spark.sql(text)
 
     # -- writes ---------------------------------------------------------------
 
@@ -102,7 +104,7 @@ class DdlMixin:
         100 TB lever for partition-pruned scans later (Presto equivalent:
         ``WITH (partitioned_by = ARRAY[...])`` on the Hive connector).
         """
-        df = self._spark_sql(source) if isinstance(source, str) else source
+        df = spark_sql(self.spark, source) if isinstance(source, str) else source
         writer = df.write.format(format).mode(mode)
         if partition_by:
             writer = writer.partitionBy(*partition_by)
@@ -111,7 +113,7 @@ class DdlMixin:
 
     def insert_into(self, name: str, source: str | DataFrame, *, overwrite: bool = False) -> None:
         """INSERT INTO (append) / INSERT OVERWRITE, by-name column resolution."""
-        df = self._spark_sql(source) if isinstance(source, str) else source
+        df = spark_sql(self.spark, source) if isinstance(source, str) else source
         df.write.mode("overwrite" if overwrite else "append").insertInto(name)
 
     def delete_where(self, name: str, condition: str) -> int:
@@ -154,7 +156,7 @@ class DdlMixin:
     # -- views ----------------------------------------------------------------
 
     def create_view(self, name: str, sql: str, *, replace: bool = True) -> None:
-        df = self._spark_sql(sql)
+        df = spark_sql(self.spark, sql)
         if replace:
             df.createOrReplaceTempView(name)
         else:
@@ -227,7 +229,7 @@ class DdlMixin:
 
     def explain(self, sql: str, mode: str = "formatted") -> str:
         """EXPLAIN passthrough. Modes: simple|extended|codegen|cost|formatted."""
-        df = self._spark_sql(sql)
+        df = spark_sql(self.spark, sql)
         return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
             df._jdf.queryExecution(), mode
         )
@@ -317,7 +319,7 @@ class DdlMixin:
     def explain_analyze(self, sql: str) -> str:
         """EXPLAIN ANALYZE: execute, then render the plan with runtime metrics
         (rows, data size per operator) — ``ExplainAnalyzeOperator`` parity."""
-        df = self._spark_sql(sql)
+        df = spark_sql(self.spark, sql)
         df.write.format("noop").mode("overwrite").save()  # run fully, discard
         return df._jdf.queryExecution().executedPlan().toString()
 

@@ -11,19 +11,24 @@ plan → execute; ``presto-main/.../dispatcher/DispatchManager.java:142``,
   the session's function registry the first time a statement references
   it, once per session,
 * the extension operators (dedup / similarity / text / multimodal) exposed
-  as DataFrame→DataFrame transformers.
+  as DataFrame→DataFrame transformers,
+* :func:`sql_query`, which makes a registry entry of a SQL text (the
+  TPC-H/TPC-DS entries are their oracle texts run this way).
 """
 
 from __future__ import annotations
 
+import functools
 import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from . import catalog
 from .catalog import TABLES, register_tables
-from .ddl import _SESSION_PROPERTY_CONFS, _SESSION_PROPERTY_MAP, DdlMixin
+from .ddl import _SESSION_PROPERTY_CONFS, _SESSION_PROPERTY_MAP, DdlMixin, spark_sql
 from .functions.dialect import _TOKEN, DEFAULT_CATALOGS, rewrite_presto_sql
 from .functions.presto import register_presto_functions
+from .registry import QueryFn
 from .session import get_spark
 
 _PREPARE_RE = re.compile(r"(?is)^\s*PREPARE\s+([A-Za-z_][A-Za-z0-9_]*)\s+FROM\s+(.+?)\s*;?\s*$")
@@ -43,6 +48,40 @@ _EXPLAIN_RE = re.compile(
     r"(?:\s*,\s*(?:TYPE\s+(LOGICAL|DISTRIBUTED|IO|VALIDATE)|"
     r"FORMAT\s+(TEXT|GRAPHVIZ|JSON)))?"
     r"\s*\)\s+|(ANALYZE)\s+)?(SELECT.+|WITH.+|VALUES.+)$")
+
+_LEADING_WITH = re.compile(r"(?is)^(?:\s|--[^\n]*|/\*.*?\*/)*WITH\b")
+
+
+def sql_query(text: str) -> QueryFn:
+    """A registry query built from SQL ``text``: each call runs the text as
+    :meth:`Engine.sql` does, without an ``Engine`` or session views. It
+    loads only the driver tables the text names and binds them through
+    ``spark.sql``'s frame arguments, which become uniquely named views
+    dropped after analysis, so the session's own temp views of the same
+    names are neither read nor replaced."""
+
+    def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+        template, tables = _bound_template(text)
+        frames = {t: catalog.load_table(spark, sf_dir, t) for t in tables}
+        return spark_sql(spark, template, **frames)
+
+    return query
+
+
+@functools.cache
+def _bound_template(text: str) -> tuple[str, tuple[str, ...]]:
+    """``text`` through the dialect rewrite (on the first call only), with
+    each driver table it names defined as a leading CTE over its ``{name}``
+    frame placeholder; a CTE shadows any view of that name."""
+    body = rewrite_presto_sql(text)
+    words = {t.lower() for t in _TOKEN.findall(body)}
+    tables = tuple(t for t in TABLES if t in words)
+    ctes = ", ".join(f"{t} AS (SELECT * FROM {{{t}}})" for t in tables)
+    body = body.replace("{", "{{").replace("}", "}}")
+    m = _LEADING_WITH.match(body)
+    if m:
+        return f"{body[:m.end()]} {ctes},{body[m.end():]}", tables
+    return f"WITH {ctes}\n{body}", tables
 
 
 class Engine(DdlMixin):
@@ -133,7 +172,7 @@ class Engine(DdlMixin):
             ):
                 self.catalogs.add(m.group(1).lower())
             query = rewrite_presto_sql(query, catalogs=frozenset(self.catalogs))
-        df = self._spark_sql(query)
+        df = spark_sql(self.spark, query)
         # remember view definitions so SHOW CREATE VIEW can return the
         # original view text (ShowQueriesRewrite emits the stored SQL)
         m = re.match(
@@ -507,14 +546,14 @@ class Engine(DdlMixin):
             if analyze:
                 text = self.explain_analyze(body)
             elif etype and etype.upper() == "VALIDATE":
-                self._spark_sql(body).schema  # analyze; raises on invalid
+                spark_sql(self.spark, body).schema  # analyze; raises on invalid
                 return self.spark.createDataFrame([(True,)], "valid: boolean")
             elif etype and etype.upper() == "IO":
                 # IOPlanPrinter.java: JSON of tables read + pruned columns
                 # + per-scan pushed filters (columnConstraints analog)
                 text = self.explain_io(body)
             elif efmt == "JSON":
-                jqe = self._spark_sql(body)._jdf.queryExecution()
+                jqe = spark_sql(self.spark, body)._jdf.queryExecution()
                 plan = (
                     jqe.optimizedPlan()
                     if etype and etype.upper() == "LOGICAL"

@@ -8,10 +8,12 @@ re-executes once per consumer (measured: the MinHash signature UDF appeared
 materialization — persist the narrow frame once, let every consumer read
 the cached blocks.
 
-Bookkeeping mirrors `operators/tpcds.py` CTE materialization: at most ONE
-outstanding handle per stage name (a re-invocation releases the previous
-one, so long-lived sessions never accumulate cached blocks), and
-``release_stages()`` drops everything eagerly.
+This module is the one bookkeeper for such materializations, the
+``cte_materialization_enabled`` CTE frames of the kept TPC-DS ports
+included (they share one stage name): at most ONE outstanding handle per
+stage name (a re-invocation releases the previous one, so long-lived
+sessions never accumulate cached blocks), and ``release_stages()`` drops
+everything eagerly.
 """
 
 from __future__ import annotations

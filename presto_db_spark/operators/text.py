@@ -141,10 +141,8 @@ def _fanout_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     files = docs.inputFiles()
     if len(files) >= par:
         return docs
-    max_split = int(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", str(128 << 20))
-        .rstrip("b")
-    )
+    # the typed value: the conf string may carry a unit suffix ("64m")
+    max_split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     total = 0
     for f in files:
         try:

@@ -20,31 +20,31 @@ web_returns            lineitem rows with l_returnflag = 'R'
 warehouse              l_suppkey
 =====================  =====================================================
 
-Money rollups use the exact-cents idiom (``_msum``) so Spark and DuckDB
+Each query is its SQL text, the same text the DuckDB oracle runs,
+registered by ``_sql(name, text)`` and built into a registry entry by
+:func:`presto_db_spark.engine.sql_query` (the engine's SQL front end and
+Catalyst do the planning). A DataFrame port stays only where its comment
+names the keep-rule that holds for it: the text does not run on Spark or
+returns other rows there (1), the port does something the SQL cannot (2),
+or the port is measurably faster (3).
+
+Money rollups use the exact-cents idiom (``_msum_sql``) so Spark and DuckDB
 agree to the hashed digit regardless of accumulation order — TPC-DS's
 decimal(7,2) semantics on binary doubles.
-
-Scale notes: every query is a star join — Catalyst broadcasts ``part`` /
-``customer`` / dim-filtered ``orders`` under AQE exactly as it does for the
-TPC-H spine (asserted by tests/test_plans.py patterns). q95's "orders with
->1 supplier" CTE is implemented as a groupBy-HAVING (one shuffle, linear)
-rather than the reference's self-join formulation — identical result set,
-no hot-order quadratic blowup; the oracle keeps the reference's self-join
-text to pin equivalence.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window as W
 
 from ..catalog import load_table
+from ..engine import sql_query
+from ..registry import QueryFn
+from .stagecache import materialize_stage
 from .tpch import _csum, _csum_sql, _msum, _msum_sql
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
 
 
@@ -60,6 +60,11 @@ def _q(name: str, sql: str | None = None):
     return deco
 
 
+def _sql(name: str, text: str) -> None:
+    """Register ``name`` as SQL ``text``: the entry runs the oracle's text."""
+    _q(name, text)(sql_query(text))
+
+
 def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
     return [load_table(spark, sf_dir, n) for n in names]
 
@@ -68,31 +73,11 @@ def _rev():
     return F.col("l_extendedprice") * (1 - F.col("l_discount"))
 
 
-# Persisted-CTE bookkeeping: with cte_materialization_enabled on, q04/q11
-# persist their year_total frame.  A long-lived session invoking them
-# repeatedly must not accumulate cached blocks, so each new materialization
-# releases the previous one (at most ONE outstanding handle), and
-# release_materialized_ctes() lets callers drop it eagerly.
-_MATERIALIZED_CTES: list[DataFrame] = []
-
-
-def _materialize_cte(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Persist ``df`` MEMORY_AND_DISK when the cte_materialization session
-    property is on, unpersisting any previously-materialized CTE first."""
-    if spark.conf.get("spark.presto_db.cte.materialize", "false") != "true":
-        return df
-    from pyspark import StorageLevel
-
-    release_materialized_ctes()
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _MATERIALIZED_CTES.append(df)
-    return df
-
-
-def release_materialized_ctes() -> None:
-    """Unpersist every CTE frame persisted by cte_materialization_enabled."""
-    while _MATERIALIZED_CTES:
-        _MATERIALIZED_CTES.pop().unpersist()
+# cte_materialization_enabled (ddl.py) persists a kept port's multiply-read
+# CTE frame. All such ports share one stage name, so a long-lived session
+# holds at most ONE such frame: each materialization releases the last.
+CTE_MATERIALIZE = "spark.presto_db.cte.materialize"
+CTE_STAGE = "tpcds_cte"
 
 
 _REV_SQL = "l_extendedprice * (1 - l_discount)"
@@ -100,7 +85,7 @@ _REV_SQL = "l_extendedprice * (1 - l_discount)"
 
 # --- q3: year x brand revenue for one manufacturer, November ---------------
 
-@_q(
+_sql(
     "tpcds_q03",
     f"""
 SELECT year(o.o_orderdate) AS d_year, p.p_brand AS brand,
@@ -114,24 +99,11 @@ ORDER BY d_year ASC, sum_agg DESC, brand ASC
 LIMIT 100
 """,
 )
-def tpcds_q03(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q03 shape (tpcds/q03.sql: date_dim x store_sales x item,
-    manufact filter + month filter, year x brand rollup)."""
-    orders, lineitem, part = _t(spark, sf_dir, "orders", "lineitem", "part")
-    return (
-        orders.filter(F.month("o_orderdate") == 11)
-        .join(lineitem, F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(part.filter(F.col("p_size") == 28), F.col("p_partkey") == F.col("l_partkey"))
-        .groupBy(F.year("o_orderdate").alias("d_year"), F.col("p_brand").alias("brand"))
-        .agg(_msum(_rev()).alias("sum_agg"))
-        .orderBy(F.asc("d_year"), F.desc("sum_agg"), F.asc("brand"))
-        .limit(100)
-    )
 
 
 # --- q7: demographic-filtered per-item averages ----------------------------
 
-@_q(
+_sql(
     "tpcds_q07",
     f"""
 SELECT p.p_brand AS i_brand,
@@ -151,37 +123,11 @@ ORDER BY i_brand ASC
 LIMIT 100
 """,
 )
-def tpcds_q07(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q07 shape (tpcds/q07.sql: fact x demographics x date x item x
-    promotion with an OR'd channel filter, four per-item averages)."""
-    lineitem, orders, customer, part = _t(
-        spark, sf_dir, "lineitem", "orders", "customer", "part"
-    )
-    dem = customer.filter(F.col("c_mktsegment") == "BUILDING")
-    ords = orders.filter(
-        ((F.col("o_orderpriority") == "1-URGENT") | (F.col("o_orderstatus") == "F"))
-        & (F.year("o_orderdate") == 2000)
-    )
-    n = F.count(F.lit(1))
-    return (
-        lineitem.join(ords, F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(dem, F.col("c_custkey") == F.col("o_custkey"))
-        .join(part, F.col("p_partkey") == F.col("l_partkey"))
-        .groupBy(F.col("p_brand").alias("i_brand"))
-        .agg(
-            F.round(F.avg("l_quantity"), 6).alias("agg1"),
-            F.round(_csum(F.col("l_extendedprice")) / 100 / n, 6).alias("agg2"),
-            F.round(_csum(F.col("l_discount")) / 100 / n, 6).alias("agg3"),
-            F.round(_csum(F.col("l_tax")) / 100 / n, 6).alias("agg4"),
-        )
-        .orderBy(F.asc("i_brand"))
-        .limit(100)
-    )
 
 
 # --- q19: brand revenue where buyer and supplier geographies differ --------
 
-@_q(
+_sql(
     "tpcds_q19",
     f"""
 SELECT p.p_brand AS brand, p.p_type AS i_manufact,
@@ -198,29 +144,11 @@ ORDER BY ext_price DESC, brand ASC, i_manufact ASC
 LIMIT 100
 """,
 )
-def tpcds_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q19 shape (tpcds/q19.sql: the zip-mismatch join — buyer
-    geography <> seller geography — over brand/manufact rollup)."""
-    orders, customer, lineitem, supplier, part = _t(
-        spark, sf_dir, "orders", "customer", "lineitem", "supplier", "part"
-    )
-    return (
-        orders.filter((F.month("o_orderdate") == 11) & (F.year("o_orderdate") == 1998))
-        .join(customer, F.col("c_custkey") == F.col("o_custkey"))
-        .join(lineitem, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(supplier, F.col("s_suppkey") == F.col("l_suppkey"))
-        .join(part.filter(F.col("p_size") == 8), F.col("p_partkey") == F.col("l_partkey"))
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(F.col("p_brand").alias("brand"), F.col("p_type").alias("i_manufact"))
-        .agg(_msum(_rev()).alias("ext_price"))
-        .orderBy(F.desc("ext_price"), F.asc("brand"), F.asc("i_manufact"))
-        .limit(100)
-    )
 
 
 # --- q42 / q52: year x category / year x brand November rollups ------------
 
-@_q(
+_sql(
     "tpcds_q42",
     f"""
 SELECT year(o.o_orderdate) AS d_year, p.p_type AS i_category,
@@ -234,21 +162,9 @@ ORDER BY sum_sales DESC, d_year ASC, i_category ASC
 LIMIT 100
 """,
 )
-def tpcds_q42(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q42 shape (tpcds/q42.sql: dt x fact x item, category rollup)."""
-    orders, lineitem, part = _t(spark, sf_dir, "orders", "lineitem", "part")
-    return (
-        orders.filter((F.month("o_orderdate") == 11) & (F.year("o_orderdate") == 2000))
-        .join(lineitem, F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(part.filter(F.col("p_size") == 1), F.col("p_partkey") == F.col("l_partkey"))
-        .groupBy(F.year("o_orderdate").alias("d_year"), F.col("p_type").alias("i_category"))
-        .agg(_msum(_rev()).alias("sum_sales"))
-        .orderBy(F.desc("sum_sales"), F.asc("d_year"), F.asc("i_category"))
-        .limit(100)
-    )
 
 
-@_q(
+_sql(
     "tpcds_q52",
     f"""
 SELECT year(o.o_orderdate) AS d_year, p.p_brand AS brand,
@@ -262,23 +178,11 @@ ORDER BY d_year ASC, ext_price DESC, brand ASC
 LIMIT 100
 """,
 )
-def tpcds_q52(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q52 shape (tpcds/q52.sql: q42's join with brand grain)."""
-    orders, lineitem, part = _t(spark, sf_dir, "orders", "lineitem", "part")
-    return (
-        orders.filter((F.month("o_orderdate") == 11) & (F.year("o_orderdate") == 2000))
-        .join(lineitem, F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(part.filter(F.col("p_size") == 1), F.col("p_partkey") == F.col("l_partkey"))
-        .groupBy(F.year("o_orderdate").alias("d_year"), F.col("p_brand").alias("brand"))
-        .agg(_msum(_rev()).alias("ext_price"))
-        .orderBy(F.asc("d_year"), F.desc("ext_price"), F.asc("brand"))
-        .limit(100)
-    )
 
 
 # --- q95: CTE re-used in two IN-subqueries (multi-supplier orders) ---------
 
-@_q(
+_sql(
     "tpcds_q95",
     f"""
 WITH multi_supp AS (
@@ -303,51 +207,11 @@ WHERE o.o_orderdate >= TIMESTAMP '1997-03-01'
     WHERE r.l_returnflag = 'R')
 """,
 )
-def tpcds_q95(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q95 shape (tpcds/q95.sql: ws_wh CTE referenced by BOTH IN
-    subqueries — orders shipped from >1 warehouse that were also returned).
-
-    The CTE is computed as groupBy(l_orderkey) HAVING n_supp > 1 — one
-    linear shuffle — instead of the reference's self-join, which is
-    quadratic within hot orders; both IN's become left-semi joins against
-    the same cached-plan DataFrame (Spark reuses the exchange)."""
-    lineitem, orders, customer, nation = _t(
-        spark, sf_dir, "lineitem", "orders", "customer", "nation"
-    )
-    multi_supp = (
-        lineitem.groupBy("l_orderkey")
-        .agg(F.countDistinct("l_suppkey").alias("n_supp"))
-        .filter(F.col("n_supp") > 1)
-        .select("l_orderkey")
-    )
-    returned = (
-        lineitem.filter(F.col("l_returnflag") == "R")
-        .select("l_orderkey")
-        .join(multi_supp, "l_orderkey", "left_semi")
-    )
-    fr = nation.filter(F.col("n_name") == "FRANCE")
-    base = (
-        lineitem.join(
-            orders.filter(
-                (F.col("o_orderdate") >= F.lit("1997-03-01").cast("timestamp"))
-                & (F.col("o_orderdate") < F.lit("1997-05-01").cast("timestamp"))
-            ),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        .join(customer, F.col("c_custkey") == F.col("o_custkey"))
-        .join(fr, F.col("n_nationkey") == F.col("c_nationkey"), "left_semi")
-        .join(multi_supp, "l_orderkey", "left_semi")
-        .join(returned, "l_orderkey", "left_semi")
-    )
-    return base.agg(
-        F.countDistinct("l_orderkey").alias("order_cnt"),
-        _msum(F.col("l_extendedprice") * F.col("l_tax")).alias("total_ship_cost"),
-        _msum(_rev()).alias("total_net_profit"),
-    )
 
 
 # --- q11: year-over-year growth, CTE referenced four times -----------------
 
+# Kept port (keep-rule 2): cte_materialization_enabled persists year_total.
 @_q(
     "tpcds_q11",
     f"""
@@ -418,7 +282,9 @@ def tpcds_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(_csum(F.col("o_totalprice")).alias("year_total"))
         .withColumn("sale_type", F.lit("w"))
     )
-    year_total = _materialize_cte(spark, store.unionByName(web))
+    year_total = store.unionByName(web)
+    if spark.conf.get(CTE_MATERIALIZE, "false") == "true":
+        year_total = materialize_stage(CTE_STAGE, year_total)
 
     def leg(alias: str, sale_type: str, dyear: int) -> DataFrame:
         return (
@@ -453,7 +319,7 @@ def tpcds_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- q88: eight time-slot scans of one fact, single-row cross join ---------
 
-@_q(
+_sql(
     "tpcds_q88",
     """
 SELECT * FROM
@@ -475,31 +341,11 @@ SELECT * FROM
     ON o.o_orderkey = l.l_orderkey WHERE month(o.o_orderdate) = 8) s8
 """,
 )
-def tpcds_q88(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q88 shape (tpcds/q88.sql: eight filtered scans of the same
-    fact cross-joined into one row of time-slot counts).
-
-    Implemented as ONE scan: conditional aggregation over the month bucket
-    — 8 fact scans collapse to a single pass with 8 count_if columns
-    (identical single-row result; at 100 TB this is 8x less IO than the
-    literal eight-subquery plan, and Spark's scalar subquery execution
-    would not dedup the scans)."""
-    lineitem, orders = _t(spark, sf_dir, "lineitem", "orders")
-    m = F.month("o_orderdate")
-    joined = lineitem.join(orders, F.col("o_orderkey") == F.col("l_orderkey")).select(
-        m.alias("m")
-    )
-    return joined.agg(
-        *[
-            F.count(F.when(F.col("m") == i, 1)).alias(f"h{i}")
-            for i in range(1, 9)
-        ]
-    )
 
 
 # --- q67: rollup + per-category window rank --------------------------------
 
-@_q(
+_sql(
     "tpcds_q67",
     f"""
 WITH results AS (
@@ -524,47 +370,11 @@ WHERE rk <= 5
 ORDER BY i_category NULLS FIRST, rk, i_brand NULLS FIRST, d_year NULLS FIRST
 """,
 )
-def tpcds_q67(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q67 shape (tpcds/q67.sql: ROLLUP over the sales hierarchy,
-    then rank() per category with a top-k filter — GROUPING SETS feeding
-    WindowGroupLimit). Sums are exact cents so rank ties are
-    engine-identical; rank order carries explicit tie-breaks."""
-    orders, lineitem, part = _t(spark, sf_dir, "orders", "lineitem", "part")
-    from pyspark.sql.window import Window as W
-
-    base = (
-        orders.filter(F.year("o_orderdate").between(1998, 2000))
-        .join(lineitem, F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(part, F.col("p_partkey") == F.col("l_partkey"))
-        .select(
-            F.col("p_type").alias("i_category"),
-            F.col("p_brand").alias("i_brand"),
-            F.year("o_orderdate").alias("d_year"),
-            F.col("l_extendedprice").alias("l_extendedprice"),
-            F.col("l_discount").alias("l_discount"),
-        )
-    )
-    rolled = base.rollup("i_category", "i_brand", "d_year").agg(
-        _csum(_rev()).alias("sumsales")
-    )
-    w = W.partitionBy("i_category").orderBy(
-        F.desc("sumsales"), F.asc_nulls_first("i_brand"), F.asc_nulls_first("d_year")
-    )
-    return (
-        rolled.withColumn("rk", F.rank().over(w))
-        .filter(F.col("rk") <= 5)
-        .orderBy(
-            F.asc_nulls_first("i_category"),
-            F.asc("rk"),
-            F.asc_nulls_first("i_brand"),
-            F.asc_nulls_first("d_year"),
-        )
-    )
 
 
 # --- q34: trips with 5-7 items, joined back to the customer ----------------
 
-@_q(
+_sql(
     "tpcds_q34",
     """
 WITH trips AS (
@@ -579,31 +389,11 @@ WHERE o.o_orderstatus = 'F'
 ORDER BY c.c_name, c.c_custkey, ticket
 """,
 )
-def tpcds_q34(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q34 shape (tpcds/q34.sql: tickets with BETWEEN-bounded item
-    counts — aggregate-HAVING subquery joined back to customer)."""
-    lineitem, orders, customer = _t(spark, sf_dir, "lineitem", "orders", "customer")
-    trips = (
-        lineitem.groupBy("l_orderkey")
-        .agg(F.count("*").alias("cnt"))
-        .filter(F.col("cnt").between(5, 7))
-    )
-    return (
-        trips.join(
-            orders.filter(F.col("o_orderstatus") == "F"),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        .join(customer, F.col("c_custkey") == F.col("o_custkey"))
-        .select(
-            "c_name", "c_custkey", F.col("l_orderkey").alias("ticket"), "cnt"
-        )
-        .orderBy("c_name", "c_custkey", "ticket")
-    )
 
 
 # --- q48: sum over three OR'd demographic/quantity/discount bands ----------
 
-@_q(
+_sql(
     "tpcds_q48",
     """
 SELECT CAST(sum(CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS total_qty
@@ -618,25 +408,6 @@ WHERE (c.c_mktsegment = 'AUTOMOBILE' AND l.l_discount BETWEEN 0.00 AND 0.03
        AND l.l_quantity BETWEEN 25 AND 50)
 """,
 )
-def tpcds_q48(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q48 shape (tpcds/q48.sql: one sum guarded by three OR'd
-    (demographic x sales-band) predicates — the disjunctive-pushdown case:
-    Catalyst factors the customer/lineitem conjuncts out of the OR into
-    scan-level filters)."""
-    lineitem, orders, customer = _t(spark, sf_dir, "lineitem", "orders", "customer")
-    seg = F.col("c_mktsegment")
-    disc, qty = F.col("l_discount"), F.col("l_quantity")
-    bands = (
-        ((seg == "AUTOMOBILE") & disc.between(0.00, 0.03) & qty.between(1, 20))
-        | ((seg == "BUILDING") & disc.between(0.03, 0.06) & qty.between(10, 35))
-        | ((seg == "MACHINERY") & disc.between(0.06, 0.10) & qty.between(25, 50))
-    )
-    return (
-        lineitem.join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(customer, F.col("c_custkey") == F.col("o_custkey"))
-        .filter(bands)
-        .agg(F.sum(qty.cast("long")).alias("total_qty"))
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -645,8 +416,6 @@ def tpcds_q48(spark: SparkSession, sf_dir: str) -> DataFrame:
 # l_returnflag N = store_sales, A = catalog_sales, R = web_sales (three
 # disjoint row sets over the same fact, like TPC-DS's three channel facts).
 # ---------------------------------------------------------------------------
-
-_CHANNEL = {"store": "N", "catalog": "A", "web": "R"}
 
 
 def _channel_cust_dates_sql(flag: str) -> str:
@@ -658,19 +427,7 @@ def _channel_cust_dates_sql(flag: str) -> str:
   WHERE l.l_returnflag = '{flag}' AND year(o.o_orderdate) = 1997"""
 
 
-def _channel_cust_dates(spark, sf_dir, flag: str) -> DataFrame:
-    orders, lineitem, customer = _t(spark, sf_dir, "orders", "lineitem", "customer")
-    return (
-        lineitem.filter(F.col("l_returnflag") == flag)
-        .join(orders.filter(F.year("o_orderdate") == 1997),
-              F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(customer, F.col("c_custkey") == F.col("o_custkey"))
-        .select(F.col("c_name"), F.col("o_orderdate").cast("date").alias("d_date"))
-        .distinct()
-    )
-
-
-@_q(
+_sql(
     "tpcds_q38",
     f"""
 SELECT CAST(count(*) AS BIGINT) AS cnt FROM (
@@ -682,19 +439,9 @@ SELECT CAST(count(*) AS BIGINT) AS cnt FROM (
 ) hot_cust
 """,
 )
-def tpcds_q38(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q38 shape (tpcds/q38.sql: customers active in ALL three
-    channels in a 12-month window — DISTINCT per channel, 2-deep
-    INTERSECT, count). Scale: each branch is one distinct-shuffle on
-    (name, date); INTERSECT is a hash semi-chain on already-distinct
-    inputs, no row explosion."""
-    n = _channel_cust_dates(spark, sf_dir, "N")
-    a = _channel_cust_dates(spark, sf_dir, "A")
-    r = _channel_cust_dates(spark, sf_dir, "R")
-    return n.intersect(a).intersect(r).agg(F.count("*").cast("bigint").alias("cnt"))
 
 
-@_q(
+_sql(
     "tpcds_q87",
     f"""
 SELECT CAST(count(*) AS BIGINT) AS cnt FROM (
@@ -706,15 +453,6 @@ SELECT CAST(count(*) AS BIGINT) AS cnt FROM (
 ) cool_cust
 """,
 )
-def tpcds_q87(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q87 shape (tpcds/q87.sql: q38's INTERSECT battery with
-    EXCEPT — store-only customers)."""
-    n = _channel_cust_dates(spark, sf_dir, "N")
-    a = _channel_cust_dates(spark, sf_dir, "A")
-    r = _channel_cust_dates(spark, sf_dir, "R")
-    return n.exceptAll(a).distinct().exceptAll(r).distinct().agg(
-        F.count("*").cast("bigint").alias("cnt")
-    )
 
 
 # --- q2: week-over-year sales ratio from a UNION-of-channels CTE -----------
@@ -730,6 +468,7 @@ _Q02_RATIOS_SQL = ", ".join(
     for d in _Q02_DAYS
 )
 
+# Kept port (keep-rule 1, text not portable): dayname() spells weekdays differently on Spark.
 @_q(
     "tpcds_q02",
     f"""
@@ -823,7 +562,7 @@ _Q05_WSR_SQL = f"""
          {_csum_sql("CASE WHEN l_returnflag = 'A' THEN l_extendedprice * (1 - l_discount) ELSE 0 END")} AS profit
   FROM lineitem WHERE l_returnflag = 'A' GROUP BY id"""
 
-@_q(
+_sql(
     "tpcds_q05",
     f"""
 WITH ssr AS ({_Q05_SSR_SQL}), csr AS ({_Q05_CSR_SQL}), wsr AS ({_Q05_WSR_SQL}),
@@ -844,72 +583,13 @@ ORDER BY channel ASC NULLS FIRST, id ASC NULLS FIRST
 LIMIT 100
 """,
 )
-def tpcds_q05(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q05 shape (tpcds/q05.sql: three per-channel sales/returns
-    CTEs — each a UNION of sales rows and return rows aggregated to the
-    channel's own id domain — unioned and re-aggregated GROUP BY
-    ROLLUP(channel, id)). Exact-cents inner sums so the two-level
-    aggregation is order-independent; money surfaces as 2dp at the end."""
-    orders, lineitem = _t(spark, sf_dir, "orders", "lineitem")
-
-    def cents(c):
-        return F.round(c * 100)
-
-    li = lineitem
-    ssr = (
-        li.filter(F.col("l_returnflag").isin("N", "R"))
-        .groupBy(F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("id"))
-        .agg(
-            F.sum(cents(F.when(F.col("l_returnflag") == "N", F.col("l_extendedprice")).otherwise(0.0))).alias("sales"),
-            F.sum(cents(F.when(F.col("l_returnflag") == "R", F.col("l_extendedprice")).otherwise(0.0))).alias("returns"),
-            (
-                F.sum(cents(F.when(F.col("l_returnflag") == "N",
-                                   F.col("l_extendedprice") * (1 - F.col("l_discount"))).otherwise(0.0)))
-                - F.sum(cents(F.when(F.col("l_returnflag") == "R",
-                                     F.col("l_extendedprice") * F.col("l_tax")).otherwise(0.0)))
-            ).alias("profit"),
-        )
-    )
-    csr = orders.groupBy(
-        F.concat(F.lit("c"), F.col("o_orderpriority")).alias("id")
-    ).agg(
-        F.sum(cents(F.when(F.col("o_orderstatus") != "F", F.col("o_totalprice")).otherwise(0.0))).alias("sales"),
-        F.sum(cents(F.when(F.col("o_orderstatus") == "F", F.col("o_totalprice")).otherwise(0.0))).alias("returns"),
-        (
-            F.sum(cents(F.when(F.col("o_orderstatus") != "F", F.col("o_totalprice")).otherwise(0.0)))
-            - F.sum(cents(F.when(F.col("o_orderstatus") == "F", F.col("o_totalprice")).otherwise(0.0)))
-        ).alias("profit"),
-    )
-    wsr = (
-        li.filter(F.col("l_returnflag") == "A")
-        .groupBy(F.concat(F.lit("w"), F.col("l_linenumber").cast("string")).alias("id"))
-        .agg(
-            F.sum(cents(F.col("l_extendedprice"))).alias("sales"),
-            F.lit(0).cast("bigint").alias("returns"),
-            F.sum(cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias("profit"),
-        )
-    )
-    unioned = (
-        ssr.select(F.lit("store channel").alias("channel"), "id", "sales", "returns", "profit")
-        .unionByName(csr.select(F.lit("catalog channel").alias("channel"), "id", "sales", "returns", "profit"))
-        .unionByName(wsr.select(F.lit("web channel").alias("channel"), "id", "sales", "returns", "profit"))
-    )
-    return (
-        unioned.rollup("channel", "id")
-        .agg(
-            F.round(F.sum("sales") / 100.0, 2).alias("sales"),
-            F.round(F.sum("returns") / 100.0, 2).alias("returns"),
-            F.round(F.sum("profit") / 100.0, 2).alias("profit"),
-        )
-        .orderBy(F.asc_nulls_first("channel"), F.asc_nulls_first("id"))
-        .limit(100)
-    )
 
 
 # --- q8: zip-list INTERSECT preferred-customer zips gating a star join -----
 
 _Q08_NATIONS = "[3, 7, 11, 13, 17, 19, 23, 2, 5]"
 
+# Kept port (keep-rule 1, text not portable): Spark rejects UNNEST outside join position.
 @_q(
     "tpcds_q08",
     f"""
@@ -968,16 +648,6 @@ def tpcds_q08(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- q10/q35: correlated-EXISTS batteries over channel activity ------------
 
-def _channel_custkeys(spark, sf_dir, flag: str, year: int) -> DataFrame:
-    orders, lineitem = _t(spark, sf_dir, "orders", "lineitem")
-    return (
-        lineitem.filter(F.col("l_returnflag") == flag)
-        .join(orders.filter(F.year("o_orderdate") == year),
-              F.col("o_orderkey") == F.col("l_orderkey"))
-        .select("o_custkey")
-        .distinct()
-    )
-
 
 def _channel_exists_sql(flag: str, year: int) -> str:
     return f"""EXISTS (
@@ -986,7 +656,7 @@ def _channel_exists_sql(flag: str, year: int) -> str:
       AND year(o.o_orderdate) = {year})"""
 
 
-@_q(
+_sql(
     "tpcds_q10",
     f"""
 SELECT c.c_mktsegment AS cd_segment,
@@ -1001,33 +671,9 @@ GROUP BY cd_segment
 ORDER BY cd_segment ASC
 """,
 )
-def tpcds_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q10 shape (tpcds/q10.sql: customers with store activity AND
-    (web OR catalog) activity in the window — an EXISTS battery — rolled
-    up by demographics). The OR-of-EXISTS is a semi-join against the
-    UNION of the two channels' key sets (identical semantics); each
-    channel key set is distinct-projected before the join, so the semi
-    probes stay small at any scale."""
-    customer = _t(spark, sf_dir, "customer")[0]
-    store = _channel_custkeys(spark, sf_dir, "N", 1998)
-    either = _channel_custkeys(spark, sf_dir, "A", 1998).unionByName(
-        _channel_custkeys(spark, sf_dir, "R", 1998)
-    ).distinct()
-    return (
-        customer.join(store, F.col("c_custkey") == store["o_custkey"], "left_semi")
-        .join(either, F.col("c_custkey") == either["o_custkey"], "left_semi")
-        .groupBy(F.col("c_mktsegment").alias("cd_segment"))
-        .agg(
-            F.count("*").cast("bigint").alias("cnt1"),
-            F.round(_csum(F.col("c_acctbal")) / 100.0 / F.count("*"), 6).alias("avg_bal"),
-            F.round(F.min("c_acctbal"), 2).alias("min_bal"),
-            F.round(F.max("c_acctbal"), 2).alias("max_bal"),
-        )
-        .orderBy(F.asc("cd_segment"))
-    )
 
 
-@_q(
+_sql(
     "tpcds_q35",
     f"""
 SELECT n.n_name AS ca_state, c.c_mktsegment AS cd_segment,
@@ -1044,72 +690,9 @@ ORDER BY ca_state ASC, cd_segment ASC
 LIMIT 100
 """,
 )
-def tpcds_q35(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q35 shape (tpcds/q35.sql: q10's EXISTS battery joined to
-    the address dimension, grouped by state x demographics with the
-    count/min/max/avg column battery)."""
-    customer, nation = _t(spark, sf_dir, "customer", "nation")
-    store = _channel_custkeys(spark, sf_dir, "N", 1997)
-    either = _channel_custkeys(spark, sf_dir, "R", 1997).unionByName(
-        _channel_custkeys(spark, sf_dir, "A", 1997)
-    ).distinct()
-    return (
-        customer.join(store, F.col("c_custkey") == store["o_custkey"], "left_semi")
-        .join(either, F.col("c_custkey") == either["o_custkey"], "left_semi")
-        .join(F.broadcast(nation), F.col("n_nationkey") == F.col("c_nationkey"))
-        .groupBy(F.col("n_name").alias("ca_state"), F.col("c_mktsegment").alias("cd_segment"))
-        .agg(
-            F.count("*").cast("bigint").alias("cnt"),
-            F.round(F.min("c_acctbal"), 2).alias("min_bal"),
-            F.round(F.max("c_acctbal"), 2).alias("max_bal"),
-            F.round(_csum(F.col("c_acctbal")) / 100.0 / F.count("*"), 6).alias("avg_bal"),
-        )
-        .orderBy(F.asc("ca_state"), F.asc("cd_segment"))
-        .limit(100)
-    )
 
 
 # --- q36/q86: ROLLUP + rank-within-parent (GROUPING-keyed window) ----------
-
-def _rollup_rank(spark, sf_dir, *, flag: str | None, measure_cents,
-                 rank_asc: bool, name_meas: str):
-    """Shared q36/q86 skeleton: channel fact x part, GROUP BY
-    ROLLUP(category, class), measure + lochierarchy from GROUPING(),
-    rank() within (lochierarchy, parent category)."""
-    orders, lineitem, part = _t(spark, sf_dir, "orders", "lineitem", "part")
-    li = lineitem if flag is None else lineitem.filter(F.col("l_returnflag") == flag)
-    base = (
-        li.join(orders.filter(F.year("o_orderdate") == 2000),
-                F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(part, F.col("p_partkey") == F.col("l_partkey"))
-        .select(F.col("p_type").alias("i_category"), F.col("p_brand").alias("i_class"),
-                "l_extendedprice", "l_discount", "l_tax")
-    )
-    agg = (
-        base.rollup("i_category", "i_class")
-        .agg(
-            measure_cents().alias(name_meas),
-            (F.grouping("i_category") + F.grouping("i_class")).alias("lochierarchy"),
-            F.grouping("i_class").alias("_g_class"),
-        )
-    )
-    order_col = F.col(name_meas).asc() if rank_asc else F.col(name_meas).desc()
-    w = W.partitionBy(
-        "lochierarchy",
-        F.when(F.col("_g_class") == 0, F.col("i_category")),
-    ).orderBy(order_col, F.asc_nulls_first("i_category"), F.asc_nulls_first("i_class"))
-    return (
-        agg.withColumn("rank_within_parent", F.rank().over(w).cast("int"))
-        .select(name_meas, "i_category", "i_class", "lochierarchy", "rank_within_parent")
-        .orderBy(
-            F.desc("lochierarchy"),
-            F.asc_nulls_first(F.when(F.col("lochierarchy") == 0, F.col("i_category"))),
-            F.asc("rank_within_parent"),
-            F.asc_nulls_first("i_category"),
-            F.asc_nulls_first("i_class"),
-        )
-        .limit(100)
-    )
 
 
 def _rollup_rank_sql(*, flag_pred: str, measure_sql: str, rank_dir: str, name_meas: str) -> str:
@@ -1136,7 +719,7 @@ LIMIT 100
 """
 
 
-@_q(
+_sql(
     "tpcds_q36",
     _rollup_rank_sql(
         flag_pred="l.l_returnflag = 'N'",
@@ -1148,24 +731,9 @@ LIMIT 100
         name_meas="gross_margin",
     ),
 )
-def tpcds_q36(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q36 shape (tpcds/q36.sql: gross-margin ROLLUP over
-    category/class with rank() partitioned by (GROUPING-sum, parent
-    category) — the share-of-parent hierarchy window). Margin is a ratio
-    of exact-cent sums rounded to 6dp, so rank keys are identical across
-    engines; extra (category, class) tiebreaks pin total order."""
-
-    def margin():
-        profit = _csum(F.col("l_extendedprice") * (1 - F.col("l_discount"))
-                       - F.col("l_extendedprice") * F.col("l_tax"))
-        sales = _csum(F.col("l_extendedprice"))
-        return F.round(profit.cast("double") / sales, 6)
-
-    return _rollup_rank(spark, sf_dir, flag="N", measure_cents=margin,
-                        rank_asc=True, name_meas="gross_margin")
 
 
-@_q(
+_sql(
     "tpcds_q86",
     _rollup_rank_sql(
         flag_pred="l.l_returnflag = 'R'",
@@ -1174,21 +742,11 @@ def tpcds_q36(spark: SparkSession, sf_dir: str) -> DataFrame:
         name_meas="total_sum",
     ),
 )
-def tpcds_q86(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q86 shape (tpcds/q86.sql: web-channel net-paid ROLLUP over
-    category/class with the same rank-within-parent GROUPING window,
-    ranked DESC)."""
-
-    def total():
-        return _msum(_rev())
-
-    return _rollup_rank(spark, sf_dir, flag="R", measure_cents=total,
-                        rank_asc=False, name_meas="total_sum")
 
 
 # --- q1: correlated per-store average return threshold ---------------------
 
-@_q(
+_sql(
     "tpcds_q01",
     """
 WITH ctr AS (
@@ -1210,37 +768,6 @@ ORDER BY c.c_name
 LIMIT 100
 """,
 )
-def tpcds_q01(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q01 shape (tpcds/q01.sql: customer_total_return CTE, customers
-    whose returns exceed 1.2x their store's average — a correlated scalar
-    subquery over the same CTE). Decorrelated the Spark-idiomatic way: the
-    per-store average is a window over the grouped CTE (one shuffle, no
-    re-scan), the exact plan Presto's optimizer builds from the correlated
-    form. The 1.2x threshold is cross-multiplied into exact integer cents
-    (total*10*... vs 12*sum/count as identical double division) so the
-    boundary is engine-stable. ctr_store_sk < 5 is the s_state filter
-    analog."""
-    li, orders, cust = _t(spark, sf_dir, "lineitem", "orders", "customer")
-    ctr = (
-        li.filter(F.col("l_returnflag") == "R")
-        .join(orders.filter(F.year("o_orderdate") == 1996),
-              F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy(F.col("o_custkey").alias("ctr_customer_sk"),
-                 (F.col("l_suppkey") % 10).alias("ctr_store_sk"))
-        .agg(_csum(F.col("l_extendedprice")).alias("ctr_total_return"))
-    )
-    w = W.partitionBy("ctr_store_sk")
-    with_avg = ctr.withColumn("store_sum", F.sum("ctr_total_return").over(w)) \
-                  .withColumn("store_cnt", F.count("*").over(w))
-    hot = with_avg.filter(
-        (F.col("ctr_total_return") * 10
-         > F.lit(12) * F.col("store_sum") / F.col("store_cnt"))
-        & (F.col("ctr_store_sk") < 5)
-    )
-    return (
-        hot.join(cust, hot.ctr_customer_sk == cust.c_custkey)
-        .select("c_name").orderBy("c_name").limit(100)
-    )
 
 
 # --- q9: bucketed CASE battery of scalar subqueries ------------------------
@@ -1260,6 +787,7 @@ def _q09_branch_sql(lo: int, hi: int, thr: int, n: int) -> str:
   END AS bucket{n}"""
 
 
+# Kept port (keep-rule 1, text not portable): Spark cannot parse the text.
 @_q(
     "tpcds_q09",
     f"""
@@ -1330,7 +858,7 @@ def _q49_channel_sql(ch: str) -> str:
    WHERE return_rank <= 10 OR currency_rank <= 10"""
 
 
-@_q(
+_sql(
     "tpcds_q49",
     f"""
 SELECT * FROM (
@@ -1344,54 +872,6 @@ ORDER BY channel, return_rank, currency_rank, item
 LIMIT 100
 """,
 )
-def tpcds_q49(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q49 shape (tpcds/q49.sql: per-channel worst-return-ratio
-    ranking — sales LEFT JOIN returns folded to conditional aggregation,
-    two independent rank() windows, rank<=10 filter, UNION of the three
-    channels). Ratios are exact-int divisions evaluated identically in
-    both engines; the returns-row filter (reference: wr_return_amt >
-    10000) maps to quantity >= 25 on the R rows.
-
-    Scale: the dual global rank() windows are single-partition by
-    semantics (ORDER BY with no PARTITION BY — the reference's shape
-    too), but their input is the per-item aggregate, already reduced by
-    the HAVING to items with qualifying returns. At 100 TB you'd pre-trim
-    each metric with a distributed top-K (rank <= 10 rows all lie within
-    the K smallest values for K >> ties) before the global window."""
-    (li,) = _t(spark, sf_dir, "lineitem")
-    outs = []
-    for ch, lines in _Q49_CHANNELS.items():
-        base = li.filter(
-            F.col("l_linenumber").isin(*lines) & (F.year("l_shipdate") == 1996)
-        )
-        ret = (F.col("l_returnflag") == "R") & (F.col("l_quantity") >= 25)
-        g = (
-            base.groupBy(F.col("l_partkey").alias("item"))
-            .agg(
-                F.sum(F.when(ret, F.col("l_quantity")).otherwise(0)).alias("rq"),
-                F.sum("l_quantity").alias("sq"),
-                F.sum(F.when(ret, F.round(F.col("l_extendedprice") * 100))
-                      .otherwise(0)).alias("rc"),
-                F.sum(F.round(F.col("l_extendedprice") * 100)).alias("sc"),
-                F.sum(F.when(ret, 1).otherwise(0)).alias("rn"),
-            )
-            .filter(F.col("rn") > 0)
-            .select(
-                "item",
-                (F.col("rq").cast("double") / F.col("sq")).alias("return_ratio"),
-                (F.col("rc").cast("double") / F.col("sc")).alias("currency_ratio"),
-            )
-        )
-        ranked = g.select(
-            F.lit(ch).alias("channel"),
-            "item",
-            "return_ratio",
-            F.rank().over(W.orderBy("return_ratio")).alias("return_rank"),
-            F.rank().over(W.orderBy("currency_ratio")).alias("currency_rank"),
-        ).filter((F.col("return_rank") <= 10) | (F.col("currency_rank") <= 10))
-        outs.append(ranked)
-    u = outs[0].unionByName(outs[1]).unionByName(outs[2]).distinct()
-    return u.orderBy("channel", "return_rank", "currency_rank", "item").limit(100)
 
 
 # --- q51: cumulative channel sums, FULL OUTER, running-max compare ---------
@@ -1406,7 +886,7 @@ def _q51_channel_sql(flag: str) -> str:
    GROUP BY l_partkey % 50, date_trunc('month', l_shipdate)"""
 
 
-@_q(
+_sql(
     "tpcds_q51",
     f"""
 WITH web_v1 AS ({_q51_channel_sql('N')}),
@@ -1431,66 +911,11 @@ ORDER BY item_sk, d_date
 LIMIT 100
 """,
 )
-def tpcds_q51(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q51 shape (tpcds/q51.sql: per-item cumulative sales curves for
-    web and store channels — nested sum(sum()) OVER — FULL OUTER joined on
-    (item, date), then running max() windows over the stitched series and
-    a web-overtakes-store filter). Exact-cents cumulative sums keep the
-    comparison engine-stable. Scale: both channel aggs and all three
-    windows share the same (item) hash/range partitioning; the FULL OUTER
-    is an equi-join on the grouped (small) outputs."""
-    (li,) = _t(spark, sf_dir, "lineitem")
-
-    def channel(flag: str) -> DataFrame:
-        g = (
-            li.filter(F.col("l_returnflag") == flag)
-            .groupBy(
-                (F.col("l_partkey") % 50).alias("item_sk"),
-                F.trunc("l_shipdate", "month").alias("d_date"),
-            )
-            .agg(_csum(F.col("l_extendedprice")).alias("msum"))
-        )
-        w = (
-            W.partitionBy("item_sk")
-            .orderBy("d_date")
-            .rowsBetween(W.unboundedPreceding, W.currentRow)
-        )
-        return g.select("item_sk", "d_date", F.sum("msum").over(w).alias("cume_sales"))
-
-    web, store = channel("N").alias("web"), channel("A").alias("store")
-    stitched = web.join(
-        store,
-        (F.col("web.item_sk") == F.col("store.item_sk"))
-        & (F.col("web.d_date") == F.col("store.d_date")),
-        "full_outer",
-    ).select(
-        F.when(F.col("web.item_sk").isNotNull(), F.col("web.item_sk"))
-        .otherwise(F.col("store.item_sk")).alias("item_sk"),
-        F.when(F.col("web.d_date").isNotNull(), F.col("web.d_date"))
-        .otherwise(F.col("store.d_date")).alias("d_date"),
-        F.col("web.cume_sales").alias("web_sales"),
-        F.col("store.cume_sales").alias("store_sales"),
-    )
-    w = (
-        W.partitionBy("item_sk")
-        .orderBy("d_date")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    y = stitched.select(
-        "item_sk", "d_date", "web_sales", "store_sales",
-        F.max("web_sales").over(w).alias("web_cumulative"),
-        F.max("store_sales").over(w).alias("store_cumulative"),
-    )
-    return (
-        y.filter(F.col("web_cumulative") > F.col("store_cumulative"))
-        .orderBy("item_sk", "d_date")
-        .limit(100)
-    )
 
 
 # --- q65: store-item revenue below a tenth of the store average ------------
 
-@_q(
+_sql(
     "tpcds_q65",
     """
 WITH sa AS (
@@ -1512,39 +937,6 @@ ORDER BY s.s_name, p.p_name
 LIMIT 100
 """,
 )
-def tpcds_q65(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q65 shape (tpcds/q65.sql: per-(store, item) revenue compared
-    to a tenth of the store's average item revenue — the aggregate-of-
-    aggregate derived-table join — then store/item dims for the report).
-    The 0.1x-average threshold is cross-multiplied into exact integers
-    (rev * 10 * cnt <= sum) so no float boundary exists. Scale: sa is one
-    shuffle on (store, item); sb reuses sa; the dim joins broadcast."""
-    li, supp, part = _t(spark, sf_dir, "lineitem", "supplier", "part")
-    sa = (
-        li.groupBy(
-            F.col("l_suppkey").alias("store_sk"), F.col("l_partkey").alias("item_sk")
-        )
-        .agg(_csum(_rev()).alias("revenue"))
-    )
-    sb = sa.groupBy("store_sk").agg(
-        F.sum("revenue").alias("ssum"), F.count("*").alias("cnt")
-    )
-    sc = sa.alias("sc")
-    joined = (
-        sc.join(sb, "store_sk")
-        .filter(F.col("revenue") * 10 * F.col("cnt") <= F.col("ssum"))
-        .join(supp, F.col("store_sk") == F.col("s_suppkey"))
-        .join(part, F.col("item_sk") == F.col("p_partkey"))
-    )
-    return (
-        joined.select(
-            "s_name", "p_name",
-            F.round(F.col("revenue") / 100.0, 2).alias("revenue"),
-            "p_retailprice",
-        )
-        .orderBy("s_name", "p_name")
-        .limit(100)
-    )
 
 
 # --- q78: unreturned sales per channel, cross-channel ratio ----------------
@@ -1565,7 +957,7 @@ def _q78_channel_sql(mod: int, pre: str) -> str:
    GROUP BY year(l.l_shipdate), l.l_partkey % 50, o.o_custkey"""
 
 
-@_q(
+_sql(
     "tpcds_q78",
     f"""
 WITH ss AS ({_q78_channel_sql(0, 'ss')}),
@@ -1587,92 +979,11 @@ ORDER BY ratio, ss_qty DESC, ss_wc DESC, ss_sp DESC, ss_item_sk, ss_customer_sk
 LIMIT 100
 """,
 )
-def tpcds_q78(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q78 shape (tpcds/q78.sql: per-channel CTEs of UNRETURNED
-    sales — sales LEFT JOIN returns, keep the null side — grouped on
-    (year, item, customer); store channel LEFT JOINed to the other two and
-    filtered to customers active elsewhere; store-vs-other quantity
-    ratio). The LEFT-JOIN-IS-NULL is the reference's anti-join idiom,
-    preserved verbatim (Catalyst plans it as an anti join). Channels are
-    l_linenumber mod 3; returns are the channel's R rows."""
-    li, orders = _t(spark, sf_dir, "lineitem", "orders")
-
-    def channel(mod: int, pre: str) -> DataFrame:
-        sales = li.filter(F.col("l_linenumber") % 3 == mod)
-        rets = sales.filter(F.col("l_returnflag") == "R").select(
-            F.col("l_orderkey").alias("r_ok"), F.col("l_linenumber").alias("r_ln")
-        )
-        kept = (
-            sales.join(
-                rets,
-                (F.col("r_ok") == F.col("l_orderkey"))
-                & (F.col("r_ln") == F.col("l_linenumber")),
-                "left",
-            )
-            .filter(F.col("r_ok").isNull())
-            .join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
-        )
-        return kept.groupBy(
-            F.year("l_shipdate").alias(f"{pre}_sold_year"),
-            (F.col("l_partkey") % 50).alias(f"{pre}_item_sk"),
-            F.col("o_custkey").alias(f"{pre}_customer_sk"),
-        ).agg(
-            F.sum("l_quantity").cast("bigint").alias(f"{pre}_qty"),
-            _csum(_rev()).alias(f"{pre}_wc"),
-            _csum(F.col("l_extendedprice")).alias(f"{pre}_sp"),
-        )
-
-    ss, ws, cs = channel(0, "ss"), channel(1, "ws"), channel(2, "cs")
-    j = (
-        ss.join(
-            ws,
-            (F.col("ws_sold_year") == F.col("ss_sold_year"))
-            & (F.col("ws_item_sk") == F.col("ss_item_sk"))
-            & (F.col("ws_customer_sk") == F.col("ss_customer_sk")),
-            "left",
-        )
-        .join(
-            cs,
-            (F.col("cs_sold_year") == F.col("ss_sold_year"))
-            & (F.col("cs_item_sk") == F.col("ss_item_sk"))
-            & (F.col("cs_customer_sk") == F.col("ss_customer_sk")),
-            "left",
-        )
-        .filter(
-            ((F.coalesce(F.col("ws_qty"), F.lit(0)) > 0)
-             | (F.coalesce(F.col("cs_qty"), F.lit(0)) > 0))
-            & (F.col("ss_sold_year") == 1996)
-        )
-    )
-    return (
-        j.select(
-            "ss_item_sk", "ss_customer_sk",
-            F.round(
-                F.col("ss_qty").cast("double")
-                / F.coalesce(F.col("ws_qty") + F.col("cs_qty"), F.lit(1)),
-                2,
-            ).alias("ratio"),
-            F.col("ss_qty").alias("store_qty"),
-            F.col("ss_wc").alias("store_wholesale_cost"),
-            F.col("ss_sp").alias("store_sales_price"),
-            (F.coalesce(F.col("ws_qty"), F.lit(0))
-             + F.coalesce(F.col("cs_qty"), F.lit(0))).alias("other_chan_qty"),
-            (F.coalesce(F.col("ws_wc"), F.lit(0))
-             + F.coalesce(F.col("cs_wc"), F.lit(0))).alias("other_chan_wholesale_cost"),
-            (F.coalesce(F.col("ws_sp"), F.lit(0))
-             + F.coalesce(F.col("cs_sp"), F.lit(0))).alias("other_chan_sales_price"),
-        )
-        .orderBy(
-            "ratio", F.desc("store_qty"), F.desc("store_wholesale_cost"),
-            F.desc("store_sales_price"), "ss_item_sk", "ss_customer_sk",
-        )
-        .limit(100)
-    )
 
 
 # --- q93: returns-adjusted actual sales per customer -----------------------
 
-@_q(
+_sql(
     "tpcds_q93",
     """
 SELECT o_custkey AS ss_customer_sk, CAST(sum(act_sales) AS BIGINT) AS sumsales
@@ -1696,52 +1007,6 @@ ORDER BY sumsales, ss_customer_sk
 LIMIT 100
 """,
 )
-def tpcds_q93(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q93 shape (tpcds/q93.sql: store_sales LEFT JOIN store_returns
-    on (item, ticket) with the reason-dim filter that — exactly as in the
-    reference text — turns the outer join into an inner one; per-row
-    actual-sales = sold minus returned quantity repriced). Returns are the
-    R rows at half quantity; 'reason 28' maps to the returning supplier's
-    nation 7. round() of identical IEEE expressions keeps cents aligned."""
-    li, orders, supp = _t(spark, sf_dir, "lineitem", "orders", "supplier")
-    rets = (
-        li.filter(F.col("l_returnflag") == "R")
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .select(
-            F.col("l_orderkey").alias("ret_ok"),
-            F.col("l_linenumber").alias("ret_ln"),
-            F.floor(F.col("l_quantity") / 2).alias("ret_qty"),
-            "s_nationkey",
-        )
-    )
-    t = (
-        li.join(
-            rets,
-            (F.col("ret_ok") == F.col("l_orderkey"))
-            & (F.col("ret_ln") == F.col("l_linenumber")),
-            "left",
-        )
-        .join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
-        .filter(F.col("s_nationkey") == 7)
-        .select(
-            "o_custkey",
-            F.when(
-                F.col("ret_qty").isNotNull(),
-                F.round(
-                    (F.col("l_quantity") - F.col("ret_qty"))
-                    / F.col("l_quantity") * F.col("l_extendedprice") * 100
-                ),
-            )
-            .otherwise(F.round(F.col("l_extendedprice") * 100))
-            .alias("act_sales"),
-        )
-    )
-    return (
-        t.groupBy(F.col("o_custkey").alias("ss_customer_sk"))
-        .agg(F.sum("act_sales").cast("bigint").alias("sumsales"))
-        .orderBy("sumsales", "ss_customer_sk")
-        .limit(100)
-    )
 
 
 # --- q97: channel-overlap counts via FULL OUTER join -----------------------
@@ -1754,7 +1019,7 @@ def _q97_channel_sql(flag: str) -> str:
    GROUP BY o.o_custkey, l.l_partkey"""
 
 
-@_q(
+_sql(
     "tpcds_q97",
     f"""
 WITH ssci AS ({_q97_channel_sql('N')}),
@@ -1769,40 +1034,6 @@ FROM ssci
 FULL JOIN csci ON ssci.customer_sk = csci.customer_sk AND ssci.item_sk = csci.item_sk
 """,
 )
-def tpcds_q97(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q97 shape (tpcds/q97.sql: DISTINCT (customer, item) pairs per
-    channel, FULL OUTER joined on the pair, classified into store-only /
-    catalog-only / both counts). Scale: each channel is one distinct
-    shuffle on the composite key; the FULL OUTER is an equi-join of the
-    deduplicated sides — no row explosion; the final count is a global
-    agg of the join output."""
-    li, orders = _t(spark, sf_dir, "lineitem", "orders")
-
-    def channel(flag: str) -> DataFrame:
-        return (
-            li.filter(F.col("l_returnflag") == flag)
-            .join(orders.filter(F.year("o_orderdate").between(1996, 1997)),
-                  F.col("l_orderkey") == F.col("o_orderkey"))
-            .select(F.col("o_custkey").alias("customer_sk"),
-                    F.col("l_partkey").alias("item_sk"))
-            .distinct()
-        )
-
-    ssci, csci = channel("N").alias("ssci"), channel("A").alias("csci")
-    j = ssci.join(
-        csci,
-        (F.col("ssci.customer_sk") == F.col("csci.customer_sk"))
-        & (F.col("ssci.item_sk") == F.col("csci.item_sk")),
-        "full_outer",
-    )
-    both = F.col("ssci.customer_sk").isNotNull() & F.col("csci.customer_sk").isNotNull()
-    s_only = F.col("ssci.customer_sk").isNotNull() & F.col("csci.customer_sk").isNull()
-    c_only = F.col("ssci.customer_sk").isNull() & F.col("csci.customer_sk").isNotNull()
-    return j.agg(
-        F.sum(F.when(s_only, 1).otherwise(0)).cast("bigint").alias("store_only"),
-        F.sum(F.when(c_only, 1).otherwise(0)).cast("bigint").alias("catalog_only"),
-        F.sum(F.when(both, 1).otherwise(0)).cast("bigint").alias("store_and_catalog"),
-    )
 
 
 # --- q31: quarter-over-quarter share growth, 6-way CTE self-join -----------
@@ -1823,7 +1054,7 @@ _Q31_WS_SQL = """
    GROUP BY c.c_nationkey, quarter(o.o_orderdate), year(o.o_orderdate)"""
 
 
-@_q(
+_sql(
     "tpcds_q31",
     f"""
 WITH ss AS ({_Q31_SS_SQL}),
@@ -1845,62 +1076,6 @@ WHERE ss1.d_qoy = 1 AND ss1.d_year = 1996
 ORDER BY ss1.county
 """,
 )
-def tpcds_q31(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q31 shape (tpcds/q31.sql: per-county quarterly sales for the
-    store and web channels, each CTE instantiated THREE times (q1/q2/q3)
-    and six-way joined on county; keep counties where the web channel grew
-    faster than store in both quarter transitions). The growth comparison
-    ws2/ws1 > ss2/ss1 is cross-multiplied to exact integer cents. Scale:
-    one shuffle per channel CTE; the six instances are slices of the same
-    two grouped outputs (tiny), joined on the county key."""
-    li, orders, cust = _t(spark, sf_dir, "lineitem", "orders", "customer")
-    ss = (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .groupBy(
-            F.col("c_nationkey").alias("county"),
-            F.quarter("o_orderdate").alias("d_qoy"),
-            F.year("o_orderdate").alias("d_year"),
-        )
-        .agg(_csum(_rev()).alias("store_sales"))
-    )
-    ws = (
-        orders.join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .groupBy(
-            F.col("c_nationkey").alias("county"),
-            F.quarter("o_orderdate").alias("d_qoy"),
-            F.year("o_orderdate").alias("d_year"),
-        )
-        .agg(_csum(F.col("o_totalprice")).alias("web_sales"))
-    )
-
-    def pick(df, q, col):
-        return df.filter((F.col("d_qoy") == q) & (F.col("d_year") == 1996)).select(
-            "county", F.col(col).alias(f"{col}_{q}")
-        )
-
-    j = (
-        pick(ss, 1, "store_sales")
-        .join(pick(ss, 2, "store_sales"), "county")
-        .join(pick(ss, 3, "store_sales"), "county")
-        .join(pick(ws, 1, "web_sales"), "county")
-        .join(pick(ws, 2, "web_sales"), "county")
-        .join(pick(ws, 3, "web_sales"), "county")
-    )
-    j = j.filter(
-        (F.col("web_sales_2") * F.col("store_sales_1")
-         > F.col("store_sales_2") * F.col("web_sales_1"))
-        & (F.col("web_sales_3") * F.col("store_sales_2")
-           > F.col("store_sales_3") * F.col("web_sales_2"))
-    )
-    return j.select(
-        "county",
-        F.lit(1996).alias("d_year"),
-        (F.col("web_sales_2").cast("double") / F.col("web_sales_1")).alias("web_q1_q2_increase"),
-        (F.col("store_sales_2").cast("double") / F.col("store_sales_1")).alias("store_q1_q2_increase"),
-        (F.col("web_sales_3").cast("double") / F.col("web_sales_2")).alias("web_q2_q3_increase"),
-        (F.col("store_sales_3").cast("double") / F.col("store_sales_2")).alias("store_q2_q3_increase"),
-    ).orderBy("county")
 
 
 # --- q44: best/worst performing items by asc/desc rank join ----------------
@@ -1917,7 +1092,7 @@ _Q44_BASE_SQL = """
    FROM lineitem WHERE l_suppkey % 10 = 4 AND l_returnflag = 'R'"""
 
 
-@_q(
+_sql(
     "tpcds_q44",
     f"""
 WITH item_avg AS ({_Q44_ITEM_AVG_SQL}),
@@ -1945,54 +1120,11 @@ JOIN part p2 ON p2.p_partkey = a.item_sk
 ORDER BY a.rnk
 """,
 )
-def tpcds_q44(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q44 shape (tpcds/q44.sql: per-item average profit for one
-    store, HAVING above 0.9x a scalar-subquery baseline, ranked ascending
-    AND descending, the two top-10 rank lists joined on rank, item dim
-    joined twice for best/worst names). The 0.9x threshold is
-    cross-multiplied to exact integers; ranks tie-break on item_sk so
-    both engines order identically. Note the reference swaps best/worst
-    via the i1/i2 join order — preserved. Scale: one item aggregation,
-    one broadcast scalar, two global windows over the (small) item-avg
-    set, broadcast dim joins."""
-    li, part = _t(spark, sf_dir, "lineitem", "part")
-    store = li.filter(F.col("l_suppkey") % 10 == 4)
-    item_avg = store.groupBy(F.col("l_partkey").alias("item_sk")).agg(
-        _csum(_rev()).alias("s_cents"), F.count("*").alias("cnt")
-    )
-    base = store.filter(F.col("l_returnflag") == "R").agg(
-        F.sum(F.round(_rev() * 100)).cast("bigint").alias("g_cents"),
-        F.count("*").alias("g_cnt"),
-    )
-    v1 = (
-        item_avg.crossJoin(F.broadcast(base))
-        .filter(F.col("s_cents") * 10 * F.col("g_cnt") > 9 * F.col("g_cents") * F.col("cnt"))
-        .select("item_sk", (F.col("s_cents").cast("double") / F.col("cnt")).alias("rank_col"))
-    )
-    asc = v1.select(
-        "item_sk", F.rank().over(W.orderBy("rank_col", "item_sk")).alias("rnk")
-    ).filter(F.col("rnk") < 11)
-    desc = v1.select(
-        "item_sk", F.rank().over(W.orderBy(F.desc("rank_col"), F.asc("item_sk"))).alias("rnk")
-    ).filter(F.col("rnk") < 11)
-    p1, p2 = part.alias("p1"), part.alias("p2")
-    return (
-        asc.alias("a")
-        .join(desc.alias("d"), "rnk")
-        .join(p1, F.col("p1.p_partkey") == F.col("d.item_sk"))
-        .join(p2, F.col("p2.p_partkey") == F.col("a.item_sk"))
-        .select(
-            "rnk",
-            F.col("p1.p_name").alias("best_performing"),
-            F.col("p2.p_name").alias("worst_performing"),
-        )
-        .orderBy("rnk")
-    )
 
 
 # --- q50: sale-to-return latency buckets per store -------------------------
 
-@_q(
+_sql(
     "tpcds_q50",
     """
 SELECT s.s_name, s.s_nationkey,
@@ -2018,43 +1150,11 @@ ORDER BY s.s_name, s.s_nationkey
 LIMIT 100
 """,
 )
-def tpcds_q50(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q50 shape (tpcds/q50.sql: store_sales joined to
-    store_returns on ticket+item, return-latency day-gap bucketed into
-    30/60/90/120 CASE columns, grouped by the store's address block).
-    Sale date is o_orderdate, return date l_shipdate of the R rows;
-    the fact-fact ticket join is the orders equi-join. Scale: the
-    returned-in-August filter prunes the fact scan before the join; one
-    shuffle to the store grouping."""
-    li, orders, supp = _t(spark, sf_dir, "lineitem", "orders", "supplier")
-    gap = F.datediff(F.col("l_shipdate"), F.col("o_orderdate"))
-    buckets = [
-        (gap <= 30, "d30"),
-        ((gap > 30) & (gap <= 60), "d31_60"),
-        ((gap > 60) & (gap <= 90), "d61_90"),
-        ((gap > 90) & (gap <= 120), "d91_120"),
-        (gap > 120, "d_over_120"),
-    ]
-    j = (
-        li.filter(
-            (F.col("l_returnflag") == "R")
-            & (F.year("l_shipdate") == 1996)
-            & (F.month("l_shipdate") == 8)
-        )
-        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-    )
-    return (
-        j.groupBy("s_name", "s_nationkey")
-        .agg(*[F.sum(F.when(c, 1).otherwise(0)).cast("bigint").alias(n) for c, n in buckets])
-        .orderBy("s_name", "s_nationkey")
-        .limit(100)
-    )
 
 
 # --- q6: states buying above-category-average-priced items -----------------
 
-@_q(
+_sql(
     "tpcds_q06",
     """
 SELECT c.c_nationkey AS state, CAST(count(*) AS BIGINT) AS cnt
@@ -2073,44 +1173,11 @@ ORDER BY cnt, state
 LIMIT 100
 """,
 )
-def tpcds_q06(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q06 shape (tpcds/q06.sql: states whose customers bought items
-    priced over 1.02x their category's average in one month — a correlated
-    scalar average over the item dim). Decorrelated as a window over the
-    category partition (the plan Presto builds); the 1.02x threshold is
-    (the synthetic retailprice spread is ±5%, so the reference's 1.2x
-    selects nothing);
-    exact integer cents against identical-double division. Scale: the
-    priced item set is computed on the part DIM (small) then broadcast
-    into the fact star join; one shuffle to the state rollup."""
-    li, orders, cust, part = _t(spark, sf_dir, "lineitem", "orders", "customer", "part")
-    w = W.partitionBy("p_type")
-    priced = (
-        part.withColumn("cents", F.round(F.col("p_retailprice") * 100))
-        .withColumn("cat_sum", F.sum("cents").over(w).cast("bigint"))
-        .withColumn("cat_cnt", F.count("*").over(w))
-        .filter(F.col("cents") * 100 > 102 * (F.col("cat_sum") / F.col("cat_cnt")))
-        .select("p_partkey")
-    )
-    j = (
-        li.join(orders.filter(
-            (F.year("o_orderdate") == 1996) & (F.month("o_orderdate") == 1)),
-            F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(priced, F.col("l_partkey") == F.col("p_partkey"))
-    )
-    return (
-        j.groupBy(F.col("c_nationkey").alias("state"))
-        .agg(F.count("*").cast("bigint").alias("cnt"))
-        .filter(F.col("cnt") >= 2)
-        .orderBy("cnt", "state")
-        .limit(100)
-    )
 
 
 # --- q23: frequent items x best customers CTE chain ------------------------
 
-@_q(
+_sql(
     "tpcds_q23",
     """
 WITH frequent_items AS (
@@ -2142,45 +1209,6 @@ WHERE year(o.o_orderdate) = 1996 AND month(o.o_orderdate) = 2
   AND o.o_custkey IN (SELECT o_custkey FROM best_customers)
 """,
 )
-def tpcds_q23(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q23 shape (tpcds/q23_1.sql: frequent_ss_items — items sold >4
-    times on one day over four years — intersected with best_ss_customer —
-    customers above 50% of the maximum customer spend, a scalar-subquery-
-    of-a-CTE threshold — then one month's sales restricted to both IN
-    lists). The 50%-of-max is cross-multiplied exact (ssales*2 > cmax).
-    Scale: both gate CTEs are semi-join (broadcastable distinct key) sides;
-    the scalar max is a one-row broadcast; the month filter prunes the
-    final fact pass."""
-    li, orders = _t(spark, sf_dir, "lineitem", "orders")
-    lo = li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-    years = lo.filter(F.year("o_orderdate").between(1995, 1998))
-    frequent = (
-        years.groupBy("l_partkey", F.col("o_orderdate").cast("date"))
-        .agg(F.count("*").alias("cnt"))
-        .filter(F.col("cnt") > 4)
-        .select(F.col("l_partkey").alias("item_sk"))
-        .distinct()
-    )
-    csales = years.groupBy("o_custkey").agg(
-        F.sum(
-            F.round(F.col("l_quantity") * (F.col("l_extendedprice") / F.col("l_quantity")) * 100)
-        ).cast("bigint").alias("csales")
-    )
-    cmax = csales.agg(F.max("csales").alias("cmax"))
-    ssales = lo.groupBy("o_custkey").agg(
-        F.sum(F.round(F.col("l_extendedprice") * 100)).cast("bigint").alias("ssales")
-    )
-    best = (
-        ssales.crossJoin(F.broadcast(cmax))
-        .filter(F.col("ssales") * 2 > F.col("cmax"))
-        .select("o_custkey")
-    )
-    month = lo.filter((F.year("o_orderdate") == 1996) & (F.month("o_orderdate") == 2))
-    return (
-        month.join(frequent, month.l_partkey == frequent.item_sk, "left_semi")
-        .join(best, "o_custkey", "left_semi")
-        .agg(F.sum(F.round(F.col("l_extendedprice") * 100)).cast("bigint").alias("sales_cents"))
-    )
 
 
 # --- q66: two-carrier monthly pivot per warehouse --------------------------
@@ -2202,7 +1230,7 @@ def _q66_arm_sql(status: str) -> str:
    GROUP BY l.l_suppkey, year(l.l_shipdate)"""
 
 
-@_q(
+_sql(
     "tpcds_q66",
     f"""
 WITH both_arms AS (
@@ -2221,56 +1249,11 @@ ORDER BY s.s_name
 LIMIT 100
 """,
 )
-def tpcds_q66(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q66 shape (tpcds/q66.sql: web+catalog sales UNION ALL'd into
-    one CTE, each arm pre-pivoted into 12 monthly columns, re-aggregated
-    per warehouse with per-square-foot normalizations). Carriers are the
-    two l_linestatus arms; warehouse = supplier with a deterministic
-    sq_ft surrogate. Exact-cents month columns make the 24 output
-    aggregates order-independent; the per-sqft divisions are identical
-    doubles in both engines. Scale: each arm is one scan+groupBy (the
-    pivot is conditional aggregation, not a shuffle per month); the
-    union re-agg touches 12-column rows keyed by warehouse — tiny."""
-    li, supp = _t(spark, sf_dir, "lineitem", "supplier")
-
-    def arm(status: str) -> DataFrame:
-        base = li.filter(
-            (F.col("l_linestatus") == status) & (F.year("l_shipdate") == 1996)
-        )
-        return base.groupBy(
-            F.col("l_suppkey").alias("wh"), F.year("l_shipdate").alias("yr")
-        ).agg(*[
-            F.sum(
-                F.when(F.month("l_shipdate") == i + 1,
-                       F.round(F.col("l_extendedprice") * 100)).otherwise(0)
-            ).alias(f"{m}_cents")
-            for i, m in enumerate(_Q66_MONTHS)
-        ])
-
-    both = arm("O").unionByName(arm("F"))
-    sq_ft = F.col("s_suppkey") % 100 + 50
-    g = (
-        both.join(supp, F.col("wh") == F.col("s_suppkey"))
-        .groupBy("s_name", "s_nationkey", "s_suppkey", "yr")
-        .agg(*[F.sum(f"{m}_cents").alias(f"{m}_sum") for m in _Q66_MONTHS])
-    )
-    return (
-        g.select(
-            "s_name", "s_nationkey", sq_ft.alias("sq_ft"),
-            F.lit("O_AND_F").alias("ship_carriers"), "yr",
-            *[F.round(F.col(f"{m}_sum") / 100.0, 2).alias(f"{m}_sales")
-              for m in _Q66_MONTHS],
-            *[F.round(F.col(f"{m}_sum") / 100.0 / sq_ft, 6)
-              .alias(f"{m}_sales_per_sq_foot") for m in _Q66_MONTHS],
-        )
-        .orderBy("s_name")
-        .limit(100)
-    )
 
 
 # --- q61: promotional-sales share, two single-row star aggregates ----------
 
-@_q(
+_sql(
     "tpcds_q61",
     """
 SELECT promotions, total,
@@ -2295,34 +1278,6 @@ FROM (
 ) all_sales
 """,
 )
-def tpcds_q61(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q61 shape (tpcds/q61.sql: promotional sales vs all sales for
-    one geography+category+month — two single-row star aggregates
-    cross-joined into a share ratio; the promo side adds the OR'd channel
-    predicate). The ratio divides exact cent sums as identical doubles.
-    Scale: both aggregates share the same broadcast star join; the cross
-    join is 1x1."""
-    li, orders, cust, part = _t(spark, sf_dir, "lineitem", "orders", "customer", "part")
-    base = (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(part, F.col("l_partkey") == F.col("p_partkey"))
-        .filter(
-            (F.col("c_nationkey") == 5) & (F.col("p_size") == 28)
-            & (F.year("o_orderdate") == 1996) & (F.month("o_orderdate") == 11)
-        )
-    )
-    promo = base.filter(
-        (F.col("l_returnflag") == "R") | (F.col("l_linestatus") == "F")
-        | (F.col("l_discount") > 0.05)
-    ).agg(F.sum(F.round(F.col("l_extendedprice") * 100)).cast("bigint").alias("promotions"))
-    total = base.agg(
-        F.sum(F.round(F.col("l_extendedprice") * 100)).cast("bigint").alias("total")
-    )
-    return promo.crossJoin(total).select(
-        "promotions", "total",
-        (F.col("promotions").cast("double") / F.col("total") * 100).alias("promo_pct"),
-    )
 
 
 # --- q59: week-over-week weekday mix per store -----------------------------
@@ -2330,6 +1285,7 @@ def tpcds_q61(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q59_DAYS = ["Sunday", "Monday", "Tuesday", "Wednesday", "Thursday", "Friday", "Saturday"]
 
 
+# Kept port (keep-rule 1, text not portable): dayname() spells weekdays differently on Spark.
 @_q(
     "tpcds_q59",
     f"""
@@ -2405,7 +1361,7 @@ def _q14_channel_items_sql(flag: str) -> str:
       WHERE l.l_returnflag = '{flag}' AND year(o.o_orderdate) BETWEEN 1996 AND 1998"""
 
 
-@_q(
+_sql(
     "tpcds_q14",
     f"""
 WITH cross_items AS (
@@ -2432,53 +1388,11 @@ ORDER BY channel, i_item_sk
 LIMIT 100
 """,
 )
-def tpcds_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q14 shape (tpcds/q14_1.sql: cross_items — the INTERSECT of
-    the three channels' item sets — gating a monthly rollup whose HAVING
-    compares against a scalar-CTE average). The average is exact-cents
-    integer division broadcast as a 1-row frame into the HAVING; the gate
-    is a semi-join against the INTERSECT chain. Scale: the INTERSECT runs
-    on distinct item keys (narrow); avg_sales is one scan; the gated
-    rollup is one shuffle on (channel, item)."""
-    li, orders = _t(spark, sf_dir, "lineitem", "orders")
-    lo = li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-    yrs = lo.filter(F.year("o_orderdate").between(1996, 1998))
-
-    def items(flag: str) -> DataFrame:
-        return yrs.filter(F.col("l_returnflag") == flag).select("l_partkey").distinct()
-
-    cross_items = items("N").intersect(items("A")).intersect(items("R"))
-    avg_sales = yrs.agg(
-        (
-            F.sum(
-                F.round(F.col("l_quantity") * (F.col("l_extendedprice") / F.col("l_quantity")) * 100)
-            ).cast("bigint") / F.count("*")
-        ).alias("average_cents")
-    )
-    month = lo.filter((F.year("o_orderdate") == 1998) & (F.month("o_orderdate") == 11))
-    g = (
-        month.join(cross_items, "l_partkey", "left_semi")
-        .crossJoin(F.broadcast(avg_sales))
-        .groupBy(
-            F.col("l_returnflag").alias("channel"),
-            F.col("l_partkey").alias("i_item_sk"),
-            "average_cents",
-        )
-        .agg(
-            F.count("*").cast("bigint").alias("cnt"),
-            F.sum(F.round(F.col("l_extendedprice") * 100)).cast("bigint").alias("sales_cents"),
-        )
-    )
-    return (
-        g.filter(F.col("sales_cents") > F.col("average_cents"))
-        .select("channel", "i_item_sk", "cnt", "sales_cents")
-        .orderBy("channel", "i_item_sk")
-        .limit(100)
-    )
 
 
 # --- q54: revenue-bucket histogram of customer spend -----------------------
 
+# Kept port (keep-rule 1, text not portable): DuckDB integer division `//`.
 @_q(
     "tpcds_q54",
     """
@@ -2546,7 +1460,7 @@ def _q58_channel_sql(flag: str, name: str) -> str:
    GROUP BY l.l_partkey"""
 
 
-@_q(
+_sql(
     "tpcds_q58",
     f"""
 WITH ss_items AS ({_q58_channel_sql('N', 'ss')}),
@@ -2564,46 +1478,11 @@ ORDER BY item_id
 LIMIT 100
 """,
 )
-def tpcds_q58(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q58 shape (tpcds/q58.sql: items whose store/catalog/web
-    revenues each sit within 10% of the three-channel average — the
-    symmetric-band three-way join). The band test is cross-multiplied to
-    exact integers (rev*30 BETWEEN 9*sum AND 11*sum ⇔ rev within ±10% of
-    sum/3). Scale: three channel rollups on the item key, then narrow
-    equi-joins of the aggregates."""
-    li, orders = _t(spark, sf_dir, "lineitem", "orders")
-    lo = li.join(orders.filter(F.year("o_orderdate") == 1996),
-                 F.col("l_orderkey") == F.col("o_orderkey"))
-
-    def channel(flag: str, name: str) -> DataFrame:
-        return (
-            lo.filter(F.col("l_returnflag") == flag)
-            .groupBy(F.col("l_partkey").alias("item_sk"))
-            .agg(F.sum(F.round(F.col("l_extendedprice") * 100)).cast("bigint")
-                 .alias(f"{name}_rev"))
-        )
-
-    ss, cs, ws = channel("N", "ss"), channel("A", "cs"), channel("R", "ws")
-    j = ss.join(cs, "item_sk").join(ws, "item_sk")
-    tot = F.col("ss_rev") + F.col("cs_rev") + F.col("ws_rev")
-    band = (
-        (F.col("ss_rev") * 30).between(9 * tot, 11 * tot)
-        & (F.col("cs_rev") * 30).between(9 * tot, 11 * tot)
-        & (F.col("ws_rev") * 30).between(9 * tot, 11 * tot)
-    )
-    return (
-        j.filter(band)
-        .select(
-            F.col("item_sk").alias("item_id"), "ss_rev", "cs_rev", "ws_rev",
-            F.round(tot.cast("double") / 3, 2).alias("average"),
-        )
-        .orderBy("item_id")
-        .limit(100)
-    )
 
 
 # --- q79: per-customer most-profitable trip --------------------------------
 
+# Kept port (keep-rule 1, text not portable): dayofweek() numbers weekdays differently on Spark.
 @_q(
     "tpcds_q79",
     """
@@ -2672,7 +1551,7 @@ def _q33_channel_sql(flag: str) -> str:
    GROUP BY p.p_size"""
 
 
-@_q(
+_sql(
     "tpcds_q33",
     f"""
 WITH ss AS ({_q33_channel_sql('N')}),
@@ -2685,34 +1564,6 @@ ORDER BY total_cents, manufact
 LIMIT 100
 """,
 )
-def tpcds_q33(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q33 shape (tpcds/q33.sql: per-manufacturer revenue computed
-    independently in each of the three channels — each arm gated by an
-    IN-subquery over the category dim — UNION ALL'd and re-aggregated).
-    Scale: the category IN-list is a dim-only semi-join (broadcast); each
-    arm is one star shuffle; the re-agg runs on three small aggregates."""
-    li, orders, part = _t(spark, sf_dir, "lineitem", "orders", "part")
-    sizes = part.filter(F.col("p_type").like("%ECO%")).select("p_size").distinct()
-
-    def channel(flag: str) -> DataFrame:
-        return (
-            li.filter(F.col("l_returnflag") == flag)
-            .join(orders.filter(
-                (F.year("o_orderdate") == 1996) & (F.month("o_orderdate") == 5)),
-                F.col("l_orderkey") == F.col("o_orderkey"))
-            .join(part, F.col("l_partkey") == F.col("p_partkey"))
-            .join(F.broadcast(sizes), "p_size", "left_semi")
-            .groupBy(F.col("p_size").alias("manufact"))
-            .agg(F.sum(F.round(F.col("l_extendedprice") * 100)).alias("cents"))
-        )
-
-    u = channel("N").unionByName(channel("A")).unionByName(channel("R"))
-    return (
-        u.groupBy("manufact")
-        .agg(F.sum("cents").cast("bigint").alias("total_cents"))
-        .orderBy("total_cents", "manufact")
-        .limit(100)
-    )
 
 
 # --- q75: year-over-year decline by brand, returns-netted ------------------
@@ -2734,6 +1585,7 @@ def _q75_channel_sql(mod: int) -> str:
       WHERE l.l_linenumber % 3 = {mod} AND p.p_type LIKE '%DARD%'"""
 
 
+# Kept port (keep-rule 1, text not portable): DuckDB integer division `//`.
 @_q(
     "tpcds_q75",
     f"""
@@ -2847,7 +1699,7 @@ def _q76_arm_sql(channel: str, col_name: str, flag: str, pred: str) -> str:
    WHERE l.l_returnflag = '{flag}' AND {pred}"""
 
 
-@_q(
+_sql(
     "tpcds_q76",
     f"""
 SELECT channel, col_name, d_year, d_qoy, i_category,
@@ -2861,48 +1713,11 @@ ORDER BY channel, col_name, d_year, d_qoy, i_category
 LIMIT 100
 """,
 )
-def tpcds_q76(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q76 shape (tpcds/q76.sql: per-channel anomaly rows — the
-    reference filters ss_store_sk IS NULL etc.; the driver data has no
-    NULL keys, so each channel gets a sparse 'degenerate value' predicate
-    — UNION ALL'd and rolled up by (channel, col_name, year, quarter,
-    category)). Scale: three pruned star scans, one rollup shuffle."""
-    li, orders, part = _t(spark, sf_dir, "lineitem", "orders", "part")
-    preds = {
-        "store": F.col("l_discount") == 0,
-        "web": F.col("l_tax") == 0,
-        "catalog": F.col("l_quantity") >= 49,
-    }
-    arms = []
-    for channel, col_name, flag, _ in _Q76_ARMS:
-        arms.append(
-            li.filter((F.col("l_returnflag") == flag) & preds[channel])
-            .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-            .join(part, F.col("l_partkey") == F.col("p_partkey"))
-            .select(
-                F.lit(channel).alias("channel"),
-                F.lit(col_name).alias("col_name"),
-                F.year("o_orderdate").alias("d_year"),
-                F.quarter("o_orderdate").alias("d_qoy"),
-                F.col("p_type").alias("i_category"),
-                F.round(F.col("l_extendedprice") * 100).alias("ext_cents"),
-            )
-        )
-    u = arms[0].unionByName(arms[1]).unionByName(arms[2])
-    return (
-        u.groupBy("channel", "col_name", "d_year", "d_qoy", "i_category")
-        .agg(
-            F.count("*").cast("bigint").alias("sales_cnt"),
-            F.sum("ext_cents").cast("bigint").alias("sales_amt_cents"),
-        )
-        .orderBy("channel", "col_name", "d_year", "d_qoy", "i_category")
-        .limit(100)
-    )
 
 
 # --- q12: item revenue share within class (windowed share) -----------------
 
-@_q(
+_sql(
     "tpcds_q12",
     """
 SELECT p.p_name AS i_item_id, p.p_type AS i_category, p.p_brand AS i_class,
@@ -2921,46 +1736,11 @@ ORDER BY i_category, i_class, i_item_id, revenueratio
 LIMIT 100
 """,
 )
-def tpcds_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q12 shape (tpcds/q12.sql: per-item revenue over a 30-day
-    window for three categories, each item's share of its class via
-    sum(sum()) OVER (PARTITION BY class) — the windowed-share-of-parent
-    idiom, here over a grouped frame rather than q36/q86's rollup).
-    Scale: one star shuffle to the item grouping; the share window
-    re-partitions the (small) aggregate by class."""
-    li, orders, part = _t(spark, sf_dir, "lineitem", "orders", "part")
-    g = (
-        li.join(orders.filter(
-            F.col("o_orderdate").cast("date").between("1996-02-22", "1996-03-23")),
-            F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(part.filter(F.col("p_type").isin("ECONOMY", "PROMO", "SMALL")),
-              F.col("l_partkey") == F.col("p_partkey"))
-        .groupBy(
-            F.col("p_name").alias("i_item_id"),
-            F.col("p_type").alias("i_category"),
-            F.col("p_brand").alias("i_class"),
-            F.col("p_retailprice").alias("i_current_price"),
-        )
-        .agg(F.sum(F.round(F.col("l_extendedprice") * 100)).cast("bigint")
-             .alias("itemrevenue_cents"))
-    )
-    w = W.partitionBy("i_class")
-    return (
-        g.withColumn(
-            "revenueratio",
-            F.col("itemrevenue_cents").cast("double") * 100
-            / F.sum("itemrevenue_cents").over(w),
-        )
-        .select("i_item_id", "i_category", "i_class", "i_current_price",
-                "itemrevenue_cents", "revenueratio")
-        .orderBy("i_category", "i_class", "i_item_id", "revenueratio")
-        .limit(100)
-    )
 
 
 # --- q90: am/pm activity ratio (events table) ------------------------------
 
-@_q(
+_sql(
     "tpcds_q90",
     """
 SELECT CAST(amc AS DOUBLE) / pmc AS am_pm_ratio
@@ -2973,26 +1753,11 @@ FROM (
 ) pm
 """,
 )
-def tpcds_q90(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q90 shape (tpcds/q90.sql: morning vs evening activity counts
-    under demographic/page-size bands, ratioed — two single-row filtered
-    aggregates cross-joined). Runs on the events table (the only source
-    with time-of-day); the hd_dep_count/wp_char_count bands map to
-    event_type + value bands. Scale: two pruned scans, 1x1 cross join."""
-    events = load_table(spark, sf_dir, "events")
-    base = events.filter(
-        (F.col("event_type") == "click") & F.col("value").between(10, 90)
-    )
-    am = base.filter(F.hour("ts").between(8, 9)).agg(F.count("*").alias("amc"))
-    pm = base.filter(F.hour("ts").between(19, 20)).agg(F.count("*").alias("pmc"))
-    return am.crossJoin(pm).select(
-        (F.col("amc").cast("double") / F.col("pmc")).alias("am_pm_ratio")
-    )
 
 
 # --- q92: excess-discount amount (correlated 1.3x avg) ---------------------
 
-@_q(
+_sql(
     "tpcds_q92",
     """
 SELECT CAST(sum(disc_cents) AS BIGINT) AS excess_discount_cents
@@ -3007,28 +1772,6 @@ FROM (
 WHERE disc_cents * 10 * item_cnt > 13 * item_sum
 """,
 )
-def tpcds_q92(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q92 shape (tpcds/q92.sql: total web discount on rows whose
-    discount exceeds 1.3x the item's average discount over the period —
-    the correlated scalar-average threshold, decorrelated to a window).
-    The 1.3x test is cross-multiplied exact integers. Scale: one window
-    shuffle on the item key; no self-join of the fact."""
-    li, orders = _t(spark, sf_dir, "lineitem", "orders")
-    w = W.partitionBy("l_partkey")
-    t = (
-        li.join(orders.filter(F.year("o_orderdate") == 1996),
-                F.col("l_orderkey") == F.col("o_orderkey"))
-        .select(
-            "l_partkey",
-            F.round(F.col("l_extendedprice") * F.col("l_discount") * 100).alias("disc_cents"),
-        )
-        .withColumn("item_sum", F.sum("disc_cents").over(w))
-        .withColumn("item_cnt", F.count("*").over(w))
-    )
-    return (
-        t.filter(F.col("disc_cents") * 10 * F.col("item_cnt") > 13 * F.col("item_sum"))
-        .agg(F.sum("disc_cents").cast("bigint").alias("excess_discount_cents"))
-    )
 
 
 # --- q4: year_total battery over THREE channels ----------------------------
@@ -3057,6 +1800,7 @@ _Q04_CHANNELS_SQL = f"""
   GROUP BY 1, 2, 3"""
 
 
+# Kept port (keep-rule 2): cte_materialization_enabled persists year_total.
 @_q(
     "tpcds_q04",
     f"""
@@ -3112,7 +1856,9 @@ def tpcds_q04(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(_csum(F.col("l_extendedprice") * F.col("l_tax")).alias("year_total"))
         .withColumn("sale_type", F.lit("c"))
     )
-    year_total = _materialize_cte(spark, store.unionByName(web).unionByName(catalog))
+    year_total = store.unionByName(web).unionByName(catalog)
+    if spark.conf.get(CTE_MATERIALIZE, "false") == "true":
+        year_total = materialize_stage(CTE_STAGE, year_total)
 
     def leg(alias: str, st: str, dyear: int) -> DataFrame:
         return (
@@ -3164,7 +1910,7 @@ def _exact_stats_sql(q: str) -> str:
     )
 
 
-@_q(
+_sql(
     "tpcds_q17",
     f"""
 WITH s AS (
@@ -3195,61 +1941,11 @@ ORDER BY i_item_id
 LIMIT 100
 """,
 )
-def tpcds_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q17 shape (tpcds/q17.sql: items bought in Q1, returned in
-    Q1-Q3, repurchased from the catalog within two years — a THREE-fact
-    chain joined on (customer, item-group) with date ordering — then
-    per-item-group count/avg/stdev of the quantities at each stage; the
-    part key is coarsened to groups so the chain fires at test scale). Stddev is computed
-    from exact integer sums (n·Σx² − (Σx)² form), so both engines emit
-    identical doubles with no accumulation-order drift. Scale: the chain
-    is two equi-joins on (customer, item) of quarter-pruned slices — the
-    date ordering is a residual predicate, not a join explosion."""
-    li, orders = _t(spark, sf_dir, "lineitem", "orders")
-    lo = li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-
-    def stage(flag, pred, qty_name, date_name):
-        return lo.filter((F.col("l_returnflag") == flag) & pred).select(
-            F.col("o_custkey").alias("ck"),
-            (F.col("l_partkey") % 10).alias("pk"),
-            F.col("l_quantity").cast("bigint").alias(qty_name),
-            F.col("o_orderdate").cast("date").alias(date_name),
-        )
-
-    s = stage("A", (F.year("o_orderdate") == 1996) & (F.quarter("o_orderdate") == 1),
-              "qty_s", "sdate").alias("s")
-    r = stage("R", (F.year("o_orderdate") == 1996) & (F.quarter("o_orderdate") <= 3),
-              "qty_r", "rdate").alias("r")
-    c2 = stage("N", F.year("o_orderdate").between(1996, 1997), "qty_c", "cdate").alias("c2")
-    chain = (
-        s.join(r, (F.col("r.ck") == F.col("s.ck")) & (F.col("r.pk") == F.col("s.pk"))
-               & (F.col("rdate") >= F.col("sdate")))
-        .join(c2, (F.col("c2.ck") == F.col("s.ck")) & (F.col("c2.pk") == F.col("s.pk"))
-              & (F.col("cdate") >= F.col("rdate")))
-    )
-
-    def stats(q):
-        cnt = F.count(q)
-        sm = F.sum(F.col(q))
-        ss = F.sum(F.col(q) * F.col(q))
-        return [
-            cnt.cast("bigint").alias(f"{q}_cnt"),
-            (sm.cast("double") / cnt).alias(f"{q}_avg"),
-            F.when(cnt > 1, F.sqrt((cnt * ss - sm * sm).cast("double")
-                                   / (cnt * (cnt - 1)))).alias(f"{q}_stdev"),
-        ]
-
-    return (
-        chain.groupBy(F.col("s.pk").alias("i_item_id"))
-        .agg(*(stats("qty_s") + stats("qty_r") + stats("qty_c")))
-        .orderBy("i_item_id")
-        .limit(100)
-    )
 
 
 # --- q55: brand revenue for one month (minimal star rollup) ----------------
 
-@_q(
+_sql(
     "tpcds_q55",
     f"""
 SELECT p.p_brand AS brand, {_msum_sql("l.l_extendedprice * (1 - l.l_discount)")} AS ext_price
@@ -3262,27 +1958,11 @@ ORDER BY ext_price DESC, brand
 LIMIT 100
 """,
 )
-def tpcds_q55(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q55 shape (tpcds/q55.sql: single-month brand revenue for one
-    manager's items — the minimal dim-filtered star rollup). Broadcast
-    star join, one shuffle."""
-    li, orders, part = _t(spark, sf_dir, "lineitem", "orders", "part")
-    return (
-        li.join(orders.filter(
-            (F.year("o_orderdate") == 1996) & (F.month("o_orderdate") == 11)),
-            F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(part.filter(F.col("p_size").between(20, 30)),
-              F.col("l_partkey") == F.col("p_partkey"))
-        .groupBy(F.col("p_brand").alias("brand"))
-        .agg(_msum(_rev()).alias("ext_price"))
-        .orderBy(F.desc("ext_price"), "brand")
-        .limit(100)
-    )
 
 
 # --- q96: filtered count through three broadcast dims ----------------------
 
-@_q(
+_sql(
     "tpcds_q96",
     """
 SELECT CAST(count(*) AS BIGINT) AS cnt
@@ -3294,22 +1974,6 @@ WHERE month(o.o_orderdate) = 8 AND c.c_mktsegment = 'BUILDING'
   AND s.s_nationkey < 10 AND l.l_quantity BETWEEN 20 AND 30
 """,
 )
-def tpcds_q96(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q96 shape (tpcds/q96.sql: a bare count(*) through three
-    broadcast dimension filters — the selectivity-pipeline microbench).
-    All three dims broadcast; the fact scan carries the residual
-    predicates; a single global count."""
-    li, orders, supp, cust = _t(spark, sf_dir, "lineitem", "orders", "supplier", "customer")
-    return (
-        li.filter(F.col("l_quantity").between(20, 30))
-        .join(orders.filter(F.month("o_orderdate") == 8),
-              F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(supp.filter(F.col("s_nationkey") < 10),
-              F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(cust.filter(F.col("c_mktsegment") == "BUILDING"),
-              F.col("o_custkey") == F.col("c_custkey"))
-        .agg(F.count("*").cast("bigint").alias("cnt"))
-    )
 
 
 # --- q18: multi-measure AVG over a ROLLUP hierarchy ------------------------
@@ -3323,7 +1987,7 @@ _Q18_MEASURES = [
 ]
 
 
-@_q(
+_sql(
     "tpcds_q18",
     f"""
 SELECT p.p_brand AS i_item_id, n.n_name AS ca_country, c.c_mktsegment AS ca_state,
@@ -3339,53 +2003,11 @@ GROUP BY ROLLUP (p.p_brand, n.n_name, c.c_mktsegment)
 ORDER BY ca_country, ca_state, i_item_id
 """,
 )
-def tpcds_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q18 shape (tpcds/q18.sql: seven AVG measures over a ROLLUP of
-    the item x geography hierarchy under demographic filters). Averages
-    are exact-int sums divided by the group count — identical doubles in
-    both engines at every rollup level. No LIMIT: the rollup output is
-    dim-bounded (~brands x nations x segments), and dropping it avoids
-    engine NULLS-ordering differences in top-k selection. Scale: one
-    ROLLUP shuffle over a dim-pruned star join."""
-    li, orders, cust, nation, part = _t(
-        spark, sf_dir, "lineitem", "orders", "customer", "nation", "part"
-    )
-    j = (
-        li.join(orders.filter(
-            F.month("o_orderdate").isin(1, 2, 6, 8, 9, 12)
-            & (F.year("o_orderdate") == 1996)),
-            F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust.filter(
-            F.col("c_mktsegment").isin("BUILDING", "MACHINERY", "HOUSEHOLD")),
-            F.col("o_custkey") == F.col("c_custkey"))
-        .join(nation, F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(part, F.col("l_partkey") == F.col("p_partkey"))
-    )
-    measures = {
-        "agg1": F.col("l_quantity").cast("bigint"),
-        "agg2": F.round(F.col("l_extendedprice") * 100).cast("bigint"),
-        "agg3": F.round(F.col("l_extendedprice") * F.col("l_discount") * 100).cast("bigint"),
-        "agg4": F.round(F.col("l_extendedprice") * F.col("l_tax") * 100).cast("bigint"),
-        "agg5": F.col("o_custkey").cast("bigint"),
-    }
-    pre = j.select(
-        F.col("p_brand").alias("i_item_id"),
-        F.col("n_name").alias("ca_country"),
-        F.col("c_mktsegment").alias("ca_state"),
-        *[v.alias(k) for k, v in measures.items()],
-    )
-    return (
-        pre.rollup("i_item_id", "ca_country", "ca_state")
-        .agg(*[
-            (F.sum(k).cast("double") / F.count("*")).alias(k) for k in measures
-        ])
-        .orderBy("ca_country", "ca_state", "i_item_id")
-    )
 
 
 # --- q45: disjunctive gate across two dimensions ---------------------------
 
-@_q(
+_sql(
     "tpcds_q45",
     """
 SELECT c.c_nationkey AS ca_zip, c.c_mktsegment AS ca_city,
@@ -3402,40 +2024,6 @@ ORDER BY ca_zip, ca_city
 LIMIT 100
 """,
 )
-def tpcds_q45(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q45 shape (tpcds/q45.sql: revenue by geography where the row
-    passes EITHER a literal zip-list filter OR membership in an
-    IN-subquery item list — the disjunctive cross-dimension gate that
-    can't become a plain semi-join). The item list stays DISTRIBUTED: the
-    filtered dim broadcasts into a LEFT join and the OR tests the join
-    key's non-nullness — no driver-side collect, so the pattern survives
-    a selective-on-a-big-dim subquery at 100 TB (r04 verdict wart #1).
-    Scale: quarter pruning first, broadcast dim joins, one rollup
-    shuffle."""
-    li, orders, cust, part = _t(spark, sf_dir, "lineitem", "orders", "customer", "part")
-    sel_items = part.filter(
-        F.col("p_partkey").isin(2, 3, 5, 7, 11, 13, 17, 19, 23, 29)
-    ).select(F.col("p_partkey").alias("sel_partkey"))
-    j = (
-        li.join(orders.filter(
-            (F.quarter("o_orderdate") == 2) & (F.year("o_orderdate") == 1996)),
-            F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(sel_items), F.col("sel_partkey") == F.col("l_partkey"), "left")
-        .filter(
-            F.col("c_nationkey").isin(3, 7, 11, 15, 19)
-            | F.col("sel_partkey").isNotNull()
-        )
-    )
-    return (
-        j.groupBy(
-            F.col("c_nationkey").alias("ca_zip"),
-            F.col("c_mktsegment").alias("ca_city"),
-        )
-        .agg(F.sum(F.round(F.col("l_extendedprice") * 100)).cast("bigint").alias("sum_cents"))
-        .orderBy("ca_zip", "ca_city")
-        .limit(100)
-    )
 
 
 # --- q13: three OR'd demographic bands, multi-avg output -------------------
@@ -3450,7 +2038,7 @@ _Q13_BANDS_SQL = """(
 )"""
 
 
-@_q(
+_sql(
     "tpcds_q13",
     f"""
 SELECT CAST(sum(CAST(l.l_quantity AS BIGINT)) AS DOUBLE) / count(*) AS avg_qty,
@@ -3464,47 +2052,11 @@ JOIN supplier s ON l.l_suppkey = s.s_suppkey
 WHERE s.s_nationkey < 15 AND year(o.o_orderdate) = 1996 AND {_Q13_BANDS_SQL}
 """,
 )
-def tpcds_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q13 shape (tpcds/q13.sql: one global aggregate row of
-    averages under THREE OR'd demographic x quantity x price bands — the
-    disjunctive band predicate that defeats single-range pushdown and
-    must evaluate as a residual). Averages are exact-int sums over the
-    joint count, identical doubles in both engines. Scale: the bands sit
-    as one residual filter on a broadcast star join; a single global
-    aggregate."""
-    li, orders, cust, supp = _t(spark, sf_dir, "lineitem", "orders", "customer", "supplier")
-    bands = (
-        ((F.col("c_mktsegment") == "BUILDING") & F.col("l_quantity").between(1, 20)
-         & F.col("o_totalprice").between(10000, 150000))
-        | ((F.col("c_mktsegment") == "MACHINERY") & F.col("l_quantity").between(21, 35)
-           & F.col("o_totalprice").between(20000, 200000))
-        | ((F.col("c_mktsegment") == "HOUSEHOLD") & F.col("l_quantity").between(36, 50)
-           & F.col("o_totalprice").between(50000, 250000))
-    )
-    j = (
-        li.join(orders.filter(F.year("o_orderdate") == 1996),
-                F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(supp.filter(F.col("s_nationkey") < 15),
-              F.col("l_suppkey") == F.col("s_suppkey"))
-        .filter(bands)
-    )
-    cnt = F.count("*")
-    qty = F.sum(F.col("l_quantity").cast("bigint"))
-    price = F.sum(F.round(F.col("l_extendedprice") * 100).cast("bigint"))
-    disc = F.sum(F.round(F.col("l_extendedprice") * F.col("l_discount") * 100).cast("bigint"))
-    net = F.sum(F.round(_rev() * 100).cast("bigint"))
-    return j.agg(
-        (qty.cast("double") / cnt).alias("avg_qty"),
-        (price.cast("double") / cnt).alias("avg_price_cents"),
-        (disc.cast("double") / cnt).alias("avg_disc_cents"),
-        net.cast("bigint").alias("net_cents"),
-    )
 
 
 # --- q47: monthly deviation from yearly average, with lag/lead neighbors ---
 
-@_q(
+_sql(
     "tpcds_q47",
     """
 WITH v1 AS (
@@ -3532,46 +2084,3 @@ ORDER BY i_category, i_brand, d_year, d_moy
 LIMIT 100
 """,
 )
-def tpcds_q47(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q47 shape (tpcds/q47.sql: months whose sales deviate more
-    than 10% from their (category, brand, year) average, reported with
-    the neighboring months' sales — the reference formulates lag/lead as
-    rank self-joins; lag()/lead() over the same ordering is the
-    equivalent single-pass plan, and the oracle uses the same spelling).
-    The deviation test is cross-multiplied exact integers
-    (10·|sum·cnt − Σ| > Σ). Scale: one shuffle to the month grouping;
-    all three windows share the (category, brand) partitioning."""
-    li, orders, part = _t(spark, sf_dir, "lineitem", "orders", "part")
-    g = (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(part, F.col("l_partkey") == F.col("p_partkey"))
-        .groupBy(
-            F.col("p_type").alias("i_category"),
-            F.col("p_brand").alias("i_brand"),
-            F.year("o_orderdate").alias("d_year"),
-            F.month("o_orderdate").alias("d_moy"),
-        )
-        .agg(F.sum(F.round(F.col("l_extendedprice") * 100)).cast("bigint").alias("sum_sales"))
-    )
-    wy = W.partitionBy("i_category", "i_brand", "d_year")
-    ws = W.partitionBy("i_category", "i_brand").orderBy("d_year", "d_moy")
-    v1 = (
-        g.withColumn("year_sum", F.sum("sum_sales").over(wy).cast("bigint"))
-        .withColumn("year_cnt", F.count("*").over(wy))
-        .withColumn("psum", F.lag("sum_sales").over(ws))
-        .withColumn("nsum", F.lead("sum_sales").over(ws))
-    )
-    return (
-        v1.filter(
-            (F.col("d_year") == 1997) & (F.col("year_sum") > 0)
-            & (10 * F.abs(F.col("sum_sales") * F.col("year_cnt") - F.col("year_sum"))
-               > F.col("year_sum"))
-        )
-        .select(
-            "i_category", "i_brand", "d_year", "d_moy", "sum_sales",
-            (F.col("year_sum").cast("double") / F.col("year_cnt")).alias("avg_monthly_sales"),
-            "psum", "nsum",
-        )
-        .orderBy("i_category", "i_brand", "d_year", "d_moy")
-        .limit(100)
-    )

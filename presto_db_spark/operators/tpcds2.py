@@ -14,24 +14,28 @@ re-targeted onto the driver's TPC-H-ish tables:
 * returns → ``l_returnflag = 'R'`` rows;
 * item → part, store/warehouse → supplier, address state/city → nation,
   date_dim roles → functions of o_orderdate / l_shipdate;
-* every float aggregate uses the exact-cents idiom (``_msum``/``_csum``)
-  so Spark and DuckDB agree bit-for-bit;
+* every float aggregate uses the exact-cents idiom (``_msum_sql``/
+  ``_csum_sql``) so Spark and DuckDB agree bit-for-bit;
 * every LIMIT query carries a deterministic total ORDER BY in BOTH
   engines.
+
+As there, each query is its SQL text registered by ``_sql(name, text)``,
+and a DataFrame port stays only where its comment names its keep-rule.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window as W
 
 from ..catalog import load_table
+from ..engine import sql_query
+from ..registry import QueryFn
+from .stagecache import materialize_stage
+from .tpcds import CTE_MATERIALIZE, CTE_STAGE
 from .tpch import _csum, _csum_sql, _msum, _msum_sql
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
 
 
@@ -47,6 +51,11 @@ def _q(name: str, sql: str | None = None):
     return deco
 
 
+def _sql(name: str, text: str) -> None:
+    """Register ``name`` as SQL ``text``: the entry runs the oracle's text."""
+    _q(name, text)(sql_query(text))
+
+
 def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
     return [load_table(spark, sf_dir, n) for n in names]
 
@@ -60,7 +69,7 @@ _REV_SQL = "l_extendedprice * (1 - l_discount)"
 
 # --- q15: customer catalog revenue under an OR'd geography/amount gate -----
 
-@_q(
+_sql(
     "tpcds_q15",
     f"""
 SELECT n.n_name AS ca_zip, {_msum_sql("l.l_extendedprice")} AS sum_sales
@@ -76,64 +85,9 @@ ORDER BY n.n_name ASC
 LIMIT 100
 """,
 )
-def tpcds_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q15 shape (tpcds/q15.sql: catalog sales by customer zip for
-    one quarter, where the customer qualifies through an OR of zip
-    prefixes, states, or a per-line amount — the disjunct spans two
-    tables, so it must stay a residual above the join). Geography analog:
-    nation for zip/state, exact-cents threshold for the amount leg.
-    Scale: customer/nation broadcast; one aggregation shuffle."""
-    li, orders, cust, nation = _t(spark, sf_dir, "lineitem", "orders", "customer", "nation")
-    j = (
-        li.join(orders.filter((F.year("o_orderdate") == 1996) & (F.quarter("o_orderdate") == 2)),
-                F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(nation, F.col("c_nationkey") == F.col("n_nationkey"))
-        .filter(
-            F.col("c_nationkey").isin(1, 3, 5)
-            | F.col("c_mktsegment").isin("BUILDING", "MACHINERY")
-            | (F.round(F.col("l_extendedprice") * 100) > 5000000)
-        )
-    )
-    return (
-        j.groupBy(F.col("n_name").alias("ca_zip"))
-        .agg(_msum(F.col("l_extendedprice")).alias("sum_sales"))
-        .orderBy(F.asc("ca_zip"))
-        .limit(100)
-    )
 
 
 # --- q98 / q20: item revenue share of its class (window over grouped agg) --
-
-def _revenue_share(spark, sf_dir, amount, amount_sql, cats, date_lo, date_hi, limit):
-    li, orders, part = _t(spark, sf_dir, "lineitem", "orders", "part")
-    j = (
-        li.join(orders.filter(F.col("o_orderdate").between(date_lo, date_hi)),
-                F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(part.filter(F.col("p_type").isin(*cats)), F.col("l_partkey") == F.col("p_partkey"))
-    )
-    g = j.groupBy(
-        F.col("p_partkey").alias("i_item_id"),
-        F.col("p_name").alias("i_item_desc"),
-        F.col("p_type").alias("i_category"),
-        F.col("p_brand").alias("i_class"),
-        F.col("p_retailprice").alias("i_current_price"),
-    ).agg(
-        _msum(amount).alias("itemrevenue"),
-        # the class-share window re-sums revenues in arbitrary order; only
-        # integer cents are order-independent, so the ratio is cents/cents
-        _csum(amount).alias("_itemrev_c"),
-    )
-    w = W.partitionBy("i_class")
-    out = g.withColumn(
-        "revenueratio",
-        F.col("_itemrev_c") * 100 / F.sum("_itemrev_c").over(w),
-    ).drop("_itemrev_c")
-    out = out.orderBy(
-        F.asc("i_category"), F.asc("i_class"), F.asc("i_item_id"),
-        F.asc("i_item_desc"), F.asc("revenueratio"),
-    )
-    return out.limit(limit) if limit else out
 
 
 def _revenue_share_sql(amount_sql, cats, date_lo, date_hi, limit):
@@ -158,26 +112,12 @@ ORDER BY i_category ASC, i_class ASC, i_item_id ASC, i_item_desc ASC, revenuerat
 _Q98_CATS = ("STANDARD", "SMALL", "ECONOMY")
 
 
-@_q("tpcds_q98", _revenue_share_sql(_REV_SQL, _Q98_CATS, "1996-02-22", "1996-03-23", 0))
-def tpcds_q98(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q98 shape (tpcds/q98.sql: store-channel item revenue and its
-    share of the class total — an agg-over-window on a grouped frame, NO
-    LIMIT in the reference). The share divides two exact-cent integers so
-    both engines emit identical doubles. Scale: one grouping shuffle; the
-    class window re-partitions the (small) grouped frame only."""
-    return _revenue_share(spark, sf_dir, _rev(), _REV_SQL, _Q98_CATS,
-                          "1996-02-22", "1996-03-23", 0)
+_sql("tpcds_q98", _revenue_share_sql(_REV_SQL, _Q98_CATS, "1996-02-22", "1996-03-23", 0))
 
 
-@_q("tpcds_q20", _revenue_share_sql("l_extendedprice", _Q20_CATS := (
+_sql("tpcds_q20", _revenue_share_sql("l_extendedprice", _Q20_CATS := (
     "STANDARD", "LARGE", "PROMO"),
     "1997-02-22", "1997-03-23", 100))
-def tpcds_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q20 shape (tpcds/q20.sql: the catalog-channel twin of q98 —
-    same class-share window, LIMIT 100). Catalog amount analog:
-    l_extendedprice (undiscounted), distinct category set and window."""
-    return _revenue_share(spark, sf_dir, F.col("l_extendedprice"), "l_extendedprice",
-                          _Q20_CATS, "1997-02-22", "1997-03-23", 100)
 
 
 # --- q53 / q63: rolling category deviation from the per-key mean -----------
@@ -188,46 +128,6 @@ _BANDS_SQL = (
     "OR (p.p_type IN ('ECONOMY', 'MEDIUM') "
     "AND p.p_brand IN ('Brand#21', 'Brand#22', 'Brand#23', 'Brand#24', 'Brand#25')))"
 )
-
-
-def _bands_col():
-    return (
-        F.col("p_type").isin("STANDARD", "SMALL")
-        & F.col("p_brand").isin("Brand#11", "Brand#12", "Brand#13", "Brand#14", "Brand#15")
-    ) | (
-        F.col("p_type").isin("ECONOMY", "MEDIUM")
-        & F.col("p_brand").isin("Brand#21", "Brand#22", "Brand#23", "Brand#24", "Brand#25")
-    )
-
-
-def _deviation(spark, sf_dir, key_col, key_name, period_col):
-    li, orders, part = _t(spark, sf_dir, "lineitem", "orders", "part")
-    j = (
-        li.join(orders.filter(F.year("o_orderdate") == 1996),
-                F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(part.filter(_bands_col()), F.col("l_partkey") == F.col("p_partkey"))
-    )
-    g = j.groupBy(key_col.alias(key_name), period_col.alias("period")).agg(
-        _msum(F.col("l_extendedprice")).alias("sum_sales"),
-        # the per-key window re-sums these in arbitrary order; only integer
-        # cents sum order-independently, so the window runs over cents
-        _csum(F.col("l_extendedprice")).alias("_c"),
-    )
-    w = W.partitionBy(key_name)
-    v = (
-        g.withColumn("key_sum_c", F.sum("_c").over(w))
-        .withColumn("key_cnt", F.count("*").over(w))
-        # one exact-integer division at the end — bit-identical across engines
-        .withColumn("avg_sales",
-                    F.col("key_sum_c") / (100 * F.col("key_cnt")))
-    )
-    # abs(sum − avg)/avg > 0.1 cross-multiplied into exact integers:
-    # 10·|c·cnt − key_sum_c| > key_sum_c  (key_sum_c > 0 by the >0 gate)
-    return v.filter(
-        (F.col("key_sum_c") > 0)
-        & (10 * F.abs(F.col("_c") * F.col("key_cnt") - F.col("key_sum_c"))
-           > F.col("key_sum_c"))
-    ).select(key_name, "period", "sum_sales", "avg_sales")
 
 
 def _deviation_sql(key_sql, key_name, period_sql):
@@ -254,37 +154,18 @@ WHERE key_sum_c > 0 AND 10 * abs(c * key_cnt - key_sum_c) > key_sum_c
 """
 
 
-@_q(
+_sql(
     "tpcds_q53",
     _deviation_sql("p.p_size", "i_manufact_id", "quarter(o.o_orderdate)")
     + "ORDER BY avg_sales ASC, sum_sales ASC, i_manufact_id ASC, period ASC LIMIT 100",
 )
-def tpcds_q53(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q53 shape (tpcds/q53.sql: quarterly manufacturer sales that
-    deviate >10% from the manufacturer's mean — agg-over-window above a
-    grouped frame gated by a two-band disjunctive (category, class,
-    brand) filter). Deviation is the exact cross-multiplied integer test.
-    Scale: band filter prunes part before the join; one grouping shuffle;
-    window over the small grouped frame."""
-    v = _deviation(spark, sf_dir, F.col("p_size"), "i_manufact_id",
-                   F.quarter("o_orderdate"))
-    return v.orderBy(F.asc("avg_sales"), F.asc("sum_sales"),
-                     F.asc("i_manufact_id"), F.asc("period")).limit(100)
 
 
-@_q(
+_sql(
     "tpcds_q63",
     _deviation_sql("p.p_partkey % 100", "i_manager_id", "month(o.o_orderdate)")
     + "ORDER BY i_manager_id ASC, avg_sales ASC, sum_sales ASC, period ASC LIMIT 100",
 )
-def tpcds_q63(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q63 shape (tpcds/q63.sql: q53's monthly twin keyed by
-    manager — same disjunctive band gate, deviation vs the manager's
-    monthly mean, manager-first ordering)."""
-    v = _deviation(spark, sf_dir, F.col("p_partkey") % 100, "i_manager_id",
-                   F.month("o_orderdate"))
-    return v.orderBy(F.asc("i_manager_id"), F.asc("avg_sales"),
-                     F.asc("sum_sales"), F.asc("period")).limit(100)
 
 
 # --- q62 / q99: ship-latency bucket matrix ---------------------------------
@@ -336,6 +217,7 @@ LIMIT 100
 """
 
 
+# Kept port (keep-rule 1, text not portable): DuckDB datediff('day', ...).
 @_q("tpcds_q62", _latency_sql(1996, "o.o_orderpriority", "web_name"))
 def tpcds_q62(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-DS q62 shape (tpcds/q62.sql: web-channel order→ship latency
@@ -346,6 +228,7 @@ def tpcds_q62(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _latency_buckets(spark, sf_dir, 1996, F.col("o_orderpriority"), "web_name")
 
 
+# Kept port (keep-rule 1, text not portable): DuckDB datediff('day', ...).
 @_q("tpcds_q99", _latency_sql(1997, "o.o_orderstatus", "cc_name"))
 def tpcds_q99(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-DS q99 shape (tpcds/q99.sql: q62's catalog twin — same latency
@@ -356,7 +239,7 @@ def tpcds_q99(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- q32: excess discount vs 1.3x the item's windowed average --------------
 
-@_q(
+_sql(
     "tpcds_q32",
     """
 SELECT CAST(sum(disc_cents) AS BIGINT) AS excess_discount_cents
@@ -372,48 +255,9 @@ JOIN part p ON t.l_partkey = p.p_partkey
 WHERE p.p_size = 28 AND disc_cents * 10 * item_cnt > 13 * item_sum
 """,
 )
-def tpcds_q32(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q32 shape (tpcds/q32.sql: catalog lines whose discount
-    exceeds 1.3x the same item's 90-day average — q92's catalog twin with
-    a manufacturer gate OUTSIDE the correlated average, so the window
-    must be computed over ALL items in the period before the part filter
-    applies). Decorrelated as a window over the date-sliced fact; the
-    1.3x test is cross-multiplied exact integers. Scale: one window
-    shuffle on l_partkey; part broadcasts."""
-    li, orders, part = _t(spark, sf_dir, "lineitem", "orders", "part")
-    base = li.join(
-        orders.filter(F.col("o_orderdate").between("1996-01-27", "1996-04-26")),
-        F.col("l_orderkey") == F.col("o_orderkey"),
-    ).select(
-        "l_partkey",
-        F.round(F.col("l_extendedprice") * F.col("l_discount") * 100).alias("disc_cents"),
-    )
-    w = W.partitionBy("l_partkey")
-    t = base.withColumn("item_sum", F.sum("disc_cents").over(w)).withColumn(
-        "item_cnt", F.count("*").over(w)
-    )
-    return (
-        t.join(part.filter(F.col("p_size") == 28), F.col("l_partkey") == F.col("p_partkey"))
-        .filter(F.col("disc_cents") * 10 * F.col("item_cnt") > 13 * F.col("item_sum"))
-        .agg(F.sum("disc_cents").cast("bigint").alias("excess_discount_cents"))
-    )
 
 
 # --- q30 / q81: customer returns above 1.2x their state's average ----------
-
-def _ctr(spark, sf_dir, year, amount, amount_sql):
-    """customer_total_return CTE: returns by (customer, state), the state
-    coming from the returning customer's address (nation analog)."""
-    li, orders, cust = _t(spark, sf_dir, "lineitem", "orders", "customer")
-    return (
-        li.filter(F.col("l_returnflag") == "R")
-        .join(orders.filter(F.year("o_orderdate") == year),
-              F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .groupBy(F.col("c_custkey").alias("ctr_customer_sk"),
-                 F.col("c_nationkey").alias("ctr_state"))
-        .agg(_csum(amount).alias("ctr_total_return"))
-    )
 
 
 def _ctr_sql(year, amount_sql):
@@ -428,19 +272,6 @@ def _ctr_sql(year, amount_sql):
 """
 
 
-def _ctr_hot(ctr):
-    """ctr rows above 1.2x their state's average — the correlated scalar
-    subquery decorrelated as a window (exact integer cross-multiply:
-    10·ret·cnt > 12·state_sum)."""
-    w = W.partitionBy("ctr_state")
-    return (
-        ctr.withColumn("state_sum", F.sum("ctr_total_return").over(w))
-        .withColumn("state_cnt", F.count("*").over(w))
-        .filter(F.col("ctr_total_return") * 10 * F.col("state_cnt")
-                > 12 * F.col("state_sum"))
-    )
-
-
 _CTR_HOT_SQL = """
   SELECT ctr_customer_sk, ctr_state, ctr_total_return
   FROM (
@@ -452,7 +283,7 @@ _CTR_HOT_SQL = """
 """
 
 
-@_q(
+_sql(
     "tpcds_q30",
     f"""
 WITH ctr AS ({_ctr_sql(1996, "l.l_extendedprice")}),
@@ -467,29 +298,9 @@ ORDER BY c.c_name ASC, ctr_total_return ASC
 LIMIT 100
 """,
 )
-def tpcds_q30(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q30 shape (tpcds/q30.sql: web-channel customer_total_return
-    CTE keyed by the returning address state, customers above 1.2x their
-    state's average return, re-joined to customer + current address
-    filtered to one state). State analog: nation; the correlated AVG
-    decorrelates to a state-partitioned window; the 1.2x gate is exact
-    integer cross-multiplication. Scale: one grouping + one window
-    shuffle on the CTE; customer/nation broadcast into the outer join."""
-    ctr = _ctr(spark, sf_dir, 1996, F.col("l_extendedprice"), "l.l_extendedprice")
-    hot = _ctr_hot(ctr)
-    cust, nation = _t(spark, sf_dir, "customer", "nation")
-    return (
-        hot.join(cust, F.col("ctr_customer_sk") == F.col("c_custkey"))
-        .join(nation.filter(F.col("n_name") == "NATION_5"),
-              F.col("c_nationkey") == F.col("n_nationkey"))
-        .select("c_name", "c_mktsegment", "c_acctbal",
-                F.col("ctr_total_return").cast("bigint").alias("ctr_total_return"))
-        .orderBy(F.asc("c_name"), F.asc("ctr_total_return"))
-        .limit(100)
-    )
 
 
-@_q(
+_sql(
     "tpcds_q81",
     f"""
 WITH ctr AS ({_ctr_sql(1997, "l.l_extendedprice * (1 + l.l_tax)")}),
@@ -504,65 +315,9 @@ ORDER BY c.c_name ASC, ctr_total_return ASC
 LIMIT 100
 """,
 )
-def tpcds_q81(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q81 shape (tpcds/q81.sql: q30's catalog twin — the returned
-    amount includes tax (cr_return_amt_inc_tax), different year and
-    state, address columns in the output)."""
-    ctr = _ctr(spark, sf_dir, 1997,
-               F.col("l_extendedprice") * (1 + F.col("l_tax")),
-               "l.l_extendedprice * (1 + l.l_tax)")
-    hot = _ctr_hot(ctr)
-    cust, nation = _t(spark, sf_dir, "customer", "nation")
-    return (
-        hot.join(cust, F.col("ctr_customer_sk") == F.col("c_custkey"))
-        .join(nation.filter(F.col("n_name") == "NATION_7"),
-              F.col("c_nationkey") == F.col("n_nationkey"))
-        .select("c_name", F.col("n_name").alias("ca_state"), "c_acctbal",
-                F.col("ctr_total_return").cast("bigint").alias("ctr_total_return"))
-        .orderBy(F.asc("c_name"), F.asc("ctr_total_return"))
-        .limit(100)
-    )
 
 
 # --- q25 / q29: store sale -> store return -> catalog repurchase chain -----
-
-def _three_fact(spark, sf_dir, year, moy, agg1, agg2, agg3, d3_cond_col):
-    """Three slices of the fact joined on (customer, item): a sale in one
-    month, its return in the following months, and a repurchase later."""
-    li, orders, part, supp = _t(spark, sf_dir, "lineitem", "orders", "part", "supplier")
-    s = (
-        li.alias("l1")
-        .join(orders.alias("o1"),
-              F.col("l1.l_orderkey") == F.col("o1.o_orderkey"))
-        .filter((F.year("o1.o_orderdate") == year) & (F.month("o1.o_orderdate") == moy)
-                & (F.col("l1.l_returnflag") != "R"))
-    )
-    r = (
-        li.alias("l2")
-        .join(orders.alias("o2"),
-              F.col("l2.l_orderkey") == F.col("o2.o_orderkey"))
-        .filter((F.year("o2.o_orderdate") == year)
-                & F.month("o2.o_orderdate").between(moy, moy + 3)
-                & (F.col("l2.l_returnflag") == "R"))
-    )
-    c = (
-        li.alias("l3")
-        .join(orders.alias("o3"),
-              F.col("l3.l_orderkey") == F.col("o3.o_orderkey"))
-        .filter(d3_cond_col)
-    )
-    j = (
-        s.join(r, F.col("l2.l_partkey") == F.col("l1.l_partkey"))
-        .join(c, F.col("l3.l_partkey") == F.col("l2.l_partkey"))
-        .join(part, F.col("l1.l_partkey") == F.col("p_partkey"))
-        .join(supp, F.col("l1.l_suppkey") == F.col("s_suppkey"))
-    )
-    return (
-        j.groupBy(F.col("p_name").alias("i_item_desc"), F.col("s_name").alias("s_store_name"))
-        .agg(agg1, agg2, agg3)
-        .orderBy(F.asc("i_item_desc"), F.asc("s_store_name"))
-        .limit(100)
-    )
 
 
 def _three_fact_sql(year, moy, sel, d3_cond_sql):
@@ -588,7 +343,7 @@ LIMIT 100
 """
 
 
-@_q(
+_sql(
     "tpcds_q25",
     _three_fact_sql(
         1996, 4,
@@ -598,22 +353,9 @@ LIMIT 100
         "year(o3.o_orderdate) = 1996 AND month(o3.o_orderdate) BETWEEN 4 AND 7",
     ),
 )
-def tpcds_q25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q25 shape (tpcds/q25.sql: store sale in April, its return
-    within the following months, and the same customer's catalog
-    repurchase of the same item — a three-fact chain joined on
-    (customer, item) with three date roles, profit/loss sums per
-    (item, store)). Scale: the fact self-joins are equi-joins on
-    (custkey, partkey); month filters prune each slice before the join;
-    part/supplier broadcast."""
-    m1 = _msum(F.col("l1.l_extendedprice") * (1 - F.col("l1.l_discount"))).alias("store_sales_profit")
-    m2 = _msum(F.col("l2.l_extendedprice")).alias("store_returns_loss")
-    m3 = _msum(F.col("l3.l_extendedprice") * (1 - F.col("l3.l_discount"))).alias("catalog_sales_profit")
-    d3 = (F.year("o3.o_orderdate") == 1996) & F.month("o3.o_orderdate").between(4, 7)
-    return _three_fact(spark, sf_dir, 1996, 4, m1, m2, m3, d3)
 
 
-@_q(
+_sql(
     "tpcds_q29",
     _three_fact_sql(
         1996, 9,
@@ -623,15 +365,6 @@ def tpcds_q25(spark: SparkSession, sf_dir: str) -> DataFrame:
         "year(o3.o_orderdate) IN (1996, 1997, 1998)",
     ),
 )
-def tpcds_q29(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q29 shape (tpcds/q29.sql: q25's quantity twin — same
-    three-fact (customer, item) chain, quantity sums, and a three-year
-    window on the repurchase slice instead of a month band)."""
-    m1 = F.sum("l1.l_quantity").cast("bigint").alias("store_sales_quantity")
-    m2 = F.sum("l2.l_quantity").cast("bigint").alias("store_returns_quantity")
-    m3 = F.sum("l3.l_quantity").cast("bigint").alias("catalog_sales_quantity")
-    d3 = F.year("o3.o_orderdate").isin(1996, 1997, 1998)
-    return _three_fact(spark, sf_dir, 1996, 9, m1, m2, m3, d3)
 
 
 # --- q46 / q68: per-trip city-mismatch report ------------------------------
@@ -689,6 +422,7 @@ LIMIT 100
 """
 
 
+# Kept port (keep-rule 1, text not portable): DuckDB datediff('day', ...).
 @_q(
     "tpcds_q46",
     _trip_mismatch_sql(
@@ -727,7 +461,7 @@ def tpcds_q46(spark: SparkSession, sf_dir: str) -> DataFrame:
                           order_cols, (1, 2, 3, 4, 5))
 
 
-@_q(
+_sql(
     "tpcds_q68",
     _trip_mismatch_sql(
         "(l.l_quantity = 4 OR l.l_linenumber = 3) AND year(o.o_orderdate) IN (1996, 1997, 1998)"
@@ -741,31 +475,11 @@ def tpcds_q46(spark: SparkSession, sf_dir: str) -> DataFrame:
         (6, 7),
     ),
 )
-def tpcds_q68(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q68 shape (tpcds/q68.sql: q46's month-start twin — trips on
-    the first two days of the month in two cities, price/tax/list sums,
-    same current-vs-bought city mismatch)."""
-    inner = (
-        ((F.col("l_quantity") == 4) | (F.col("l_linenumber") == 3))
-        & F.year("o_orderdate").isin(1996, 1997, 1998)
-        & F.dayofmonth("o_orderdate").between(1, 2)
-    )
-    aggs = [
-        _msum(F.col("l_extendedprice")).alias("extended_price"),
-        _msum(F.col("l_extendedprice") * (1 + F.col("l_tax"))).alias("list_price"),
-        _msum(F.col("l_extendedprice") * F.col("l_tax")).alias("extended_tax"),
-    ]
-    out_cols = ["c_name", "ca_city", "bought_city", "ss_ticket_number",
-                "extended_price", "extended_tax", "list_price"]
-    order_cols = [F.asc("c_name"), F.asc("ss_ticket_number"), F.asc("ca_city"),
-                  F.asc("bought_city")]
-    return _trip_mismatch(spark, sf_dir, inner, None, aggs, None, out_cols,
-                          order_cols, (6, 7))
 
 
 # --- q57: monthly deviation with lag/lead neighbors, per call center -------
 
-@_q(
+_sql(
     "tpcds_q57",
     f"""
 WITH v1 AS (
@@ -801,64 +515,11 @@ ORDER BY sum_sales * year_cnt - year_sum ASC, cc_name ASC, i_category ASC,
 LIMIT 100
 """,
 )
-def tpcds_q57(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q57 shape (tpcds/q57.sql: catalog months per (category,
-    brand, call center) deviating >10% from the year average, with the
-    neighbor months via rank self-joins — expressed as lag/lead over the
-    same ordering, the equivalent single-pass plan; the extra Dec/Jan
-    boundary months exist only to feed the lag/lead edges, exactly as the
-    reference's OR'd date filter does). Call-center analog: supplier
-    nation. Deviation and ordering keys are exact integers. Scale: one
-    grouping shuffle; all three windows share one (cat, brand, cc)
-    partitioning."""
-    li, orders, part, supp, nation = _t(
-        spark, sf_dir, "lineitem", "orders", "part", "supplier", "nation")
-    datef = (
-        (F.year("o_orderdate") == 1996)
-        | ((F.year("o_orderdate") == 1995) & (F.month("o_orderdate") == 12))
-        | ((F.year("o_orderdate") == 1997) & (F.month("o_orderdate") == 1))
-    )
-    g = (
-        li.join(orders.filter(datef), F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(part, F.col("l_partkey") == F.col("p_partkey"))
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(nation, F.col("s_nationkey") == F.col("n_nationkey"))
-        .groupBy(
-            F.col("p_type").alias("i_category"), F.col("p_brand").alias("i_brand"),
-            F.col("n_name").alias("cc_name"),
-            F.year("o_orderdate").alias("d_year"), F.month("o_orderdate").alias("d_moy"),
-        )
-        .agg(_csum(F.col("l_extendedprice")).alias("sum_sales"))
-    )
-    wy = W.partitionBy("i_category", "i_brand", "cc_name", "d_year")
-    ws = W.partitionBy("i_category", "i_brand", "cc_name").orderBy("d_year", "d_moy")
-    v1 = (
-        g.withColumn("year_sum", F.sum("sum_sales").over(wy).cast("bigint"))
-        .withColumn("year_cnt", F.count("*").over(wy))
-        .withColumn("psum", F.lag("sum_sales").over(ws).cast("bigint"))
-        .withColumn("nsum", F.lead("sum_sales").over(ws).cast("bigint"))
-    )
-    return (
-        v1.filter(
-            (F.col("d_year") == 1996) & (F.col("year_sum") > 0)
-            & (10 * F.abs(F.col("sum_sales") * F.col("year_cnt") - F.col("year_sum"))
-               > F.col("year_sum"))
-        )
-        .select(
-            "i_category", "i_brand", "cc_name", "d_year", "d_moy", "sum_sales",
-            (F.col("year_sum").cast("double") / F.col("year_cnt")).alias("avg_monthly_sales"),
-            "psum", "nsum",
-        )
-        .orderBy(
-            F.asc(F.col("sum_sales") * F.col("year_cnt") - F.col("year_sum")),
-            F.asc("cc_name"), F.asc("i_category"), F.asc("i_brand"), F.asc("d_moy"),
-        )
-        .limit(100)
-    )
 
 
 # --- q74: two-channel year-over-year growth (q11's lean twin) --------------
 
+# Kept port (keep-rule 2): cte_materialization_enabled persists year_total.
 @_q(
     "tpcds_q74",
     f"""
@@ -922,9 +583,9 @@ def tpcds_q74(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(_csum(F.col("o_totalprice")).alias("year_total"))
         .withColumn("sale_type", F.lit("w"))
     )
-    from .tpcds import _materialize_cte
-
-    year_total = _materialize_cte(spark, store.unionByName(web))
+    year_total = store.unionByName(web)
+    if spark.conf.get(CTE_MATERIALIZE, "false") == "true":
+        year_total = materialize_stage(CTE_STAGE, year_total)
 
     def leg(alias, st, yr):
         return (
@@ -955,7 +616,7 @@ def tpcds_q74(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q77_WIN = ("1996-08-23", "1996-09-22")
 
 
-@_q(
+_sql(
     "tpcds_q77",
     f"""
 WITH ss AS (
@@ -1015,72 +676,11 @@ ORDER BY channel ASC NULLS FIRST, id ASC NULLS FIRST, sales ASC
 LIMIT 100
 """,
 )
-def tpcds_q77(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q77 shape (tpcds/q77.sql: six 30-day CTEs — sales and
-    returns per store / call center / web page — unioned with channel
-    labels under a ROLLUP(channel, id), including the reference's odd
-    catalog-channel CROSS join of its sales and returns CTEs). Channel
-    keys: supplier / order priority / line status. Scale: each CTE is one
-    pruned scan + tiny grouping; the rollup runs over dozens of rows."""
-    li, orders = _t(spark, sf_dir, "lineitem", "orders")
-    base = li.join(
-        orders.filter(F.col("o_orderdate").between(*_Q77_WIN)),
-        F.col("l_orderkey") == F.col("o_orderkey"),
-    )
-    rets = base.filter(F.col("l_returnflag") == "R")
-    # integer CENTS through the union — the rollup re-sums these values in
-    # arbitrary order, and only integer-valued doubles are order-independent
-    sales_aggs = [
-        _csum(F.col("l_extendedprice")).alias("sales"),
-        _csum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("profit"),
-    ]
-    ret_aggs = [
-        _csum(F.col("l_extendedprice")).alias("returns_"),
-        _csum(F.col("l_extendedprice") * F.col("l_tax")).alias("profit_loss"),
-    ]
-    ss = base.groupBy(F.col("l_suppkey").alias("sk")).agg(*sales_aggs)
-    sr = rets.groupBy(F.col("l_suppkey").alias("sk")).agg(*ret_aggs)
-    cs = base.groupBy(F.col("o_orderpriority").alias("ck")).agg(*sales_aggs)
-    cr = rets.groupBy(F.col("o_orderpriority").alias("ck")).agg(*ret_aggs)
-    ws = base.groupBy(F.col("l_linestatus").alias("wk")).agg(*sales_aggs)
-    wr = rets.groupBy(F.col("l_linestatus").alias("wk")).agg(*ret_aggs)
-    store = (
-        ss.alias("ss").join(sr.alias("sr"), F.col("ss.sk") == F.col("sr.sk"), "left")
-        .select(F.lit("store channel").alias("channel"),
-                F.col("ss.sk").cast("string").alias("id"),
-                F.col("sales"),
-                F.coalesce(F.col("returns_"), F.lit(0)).alias("returns_"),
-                (F.col("profit") - F.coalesce(F.col("profit_loss"), F.lit(0))).alias("profit"))
-    )
-    catalog = (
-        cs.alias("cs").crossJoin(cr.alias("cr"))
-        .select(F.lit("catalog channel").alias("channel"),
-                F.col("cs.ck").cast("string").alias("id"),
-                F.col("sales"), F.col("returns_"),
-                (F.col("profit") - F.col("profit_loss")).alias("profit"))
-    )
-    web = (
-        ws.alias("ws").join(wr.alias("wr"), F.col("ws.wk") == F.col("wr.wk"), "left")
-        .select(F.lit("web channel").alias("channel"),
-                F.col("ws.wk").cast("string").alias("id"),
-                F.col("sales"),
-                F.coalesce(F.col("returns_"), F.lit(0)).alias("returns_"),
-                (F.col("profit") - F.coalesce(F.col("profit_loss"), F.lit(0))).alias("profit"))
-    )
-    x = store.unionByName(catalog).unionByName(web)
-    return (
-        x.rollup("channel", "id")
-        .agg(F.round(F.sum("sales") / 100, 2).alias("sales"),
-             F.round(F.sum("returns_") / 100, 2).alias("returns_"),
-             F.round(F.sum("profit") / 100, 2).alias("profit"))
-        .orderBy(F.asc_nulls_first("channel"), F.asc_nulls_first("id"), F.asc("sales"))
-        .limit(100)
-    )
 
 
 # --- q80: row-level sale-return left joins per channel, rollup -------------
 
-@_q(
+_sql(
     "tpcds_q80",
     f"""
 WITH base AS (
@@ -1132,69 +732,11 @@ ORDER BY channel ASC NULLS FIRST, id ASC NULLS FIRST, sales ASC
 LIMIT 100
 """,
 )
-def tpcds_q80(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q80 shape (tpcds/q80.sql: per-channel 30-day sales with each
-    sale row LEFT-joined to its return (same order + item) before
-    aggregation — returns and net profit ride the row-level join, unlike
-    q77's pre-aggregated CTEs — item-price and promotion gates, then the
-    same ROLLUP(channel, id) union). Promotion analog: order priority;
-    the row-level return join is (l_orderkey, l_partkey) equi. Scale: the
-    sale→return join is a co-partitioned equi-join on the fact keys; the
-    rollup input is small."""
-    li, orders, part = _t(spark, sf_dir, "lineitem", "orders", "part")
-    base = (
-        li.filter(F.col("l_returnflag") != "R")
-        .join(orders.filter(F.col("o_orderdate").between(*_Q77_WIN)
-                            & (F.col("o_orderpriority") != "1-URGENT")),
-              F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(part.filter(F.col("p_retailprice") > 905),
-              F.col("l_partkey") == F.col("p_partkey"))
-    )
-    ret = (
-        li.filter(F.col("l_returnflag") == "R")
-        .select(F.col("l_orderkey").alias("r_orderkey"),
-                F.col("l_partkey").alias("r_partkey"),
-                F.col("l_extendedprice").alias("r_price"),
-                (F.col("l_extendedprice") * F.col("l_discount")).alias("r_loss"))
-    )
-    joined = base.join(
-        ret,
-        (F.col("l_orderkey") == F.col("r_orderkey"))
-        & (F.col("l_partkey") == F.col("r_partkey")),
-        "left",
-    )
-    # cents through the union (rollup re-sums; see q77 note)
-    sales = _csum(F.col("l_extendedprice")).alias("sales")
-    returns_ = F.sum(F.coalesce(F.round(F.col("r_price") * 100), F.lit(0))).cast("bigint").alias("returns_")
-    profit = F.sum(
-        F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100)
-        - F.coalesce(F.round(F.col("r_loss") * 100), F.lit(0))
-    ).cast("bigint").alias("profit")
-
-    def channel(key_col, label, prefix):
-        return joined.groupBy(key_col.cast("string").alias("k")).agg(sales, returns_, profit).select(
-            F.lit(label).alias("channel"), F.concat(F.lit(prefix), F.col("k")).alias("id"),
-            "sales", "returns_", "profit",
-        )
-
-    x = (
-        channel(F.col("l_suppkey"), "store channel", "store")
-        .unionByName(channel(F.col("o_orderpriority"), "catalog channel", "catalog_page"))
-        .unionByName(channel(F.col("l_linestatus"), "web channel", "web_site"))
-    )
-    return (
-        x.rollup("channel", "id")
-        .agg(F.round(F.sum("sales") / 100, 2).alias("sales"),
-             F.round(F.sum("returns_") / 100, 2).alias("returns_"),
-             F.round(F.sum("profit") / 100, 2).alias("profit"))
-        .orderBy(F.asc_nulls_first("channel"), F.asc_nulls_first("id"), F.asc("sales"))
-        .limit(100)
-    )
 
 
 # --- q83: three return channels joined per item over shared weeks ----------
 
-@_q(
+_sql(
     "tpcds_q83",
     """
 WITH weeks AS (
@@ -1235,56 +777,11 @@ ORDER BY s.item_id ASC, sr_item_qty ASC
 LIMIT 100
 """,
 )
-def tpcds_q83(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q83 shape (tpcds/q83.sql: returned quantities per item in
-    three channels over the weeks containing three given dates — the
-    nested date_dim week subquery — inner-joined per item with each
-    channel's share of the three-channel total). Channel analog:
-    l_linenumber mod 3 slices of the R rows; week filter via weekofyear
-    (ISO in both engines). Shares divide exact integers. Scale: three
-    pruned scans + one 3-way equi-join on item."""
-    import datetime
-
-    li, orders = _t(spark, sf_dir, "lineitem", "orders")
-    weeks = sorted({datetime.date(1996, 6, 30).isocalendar()[1],
-                    datetime.date(1996, 9, 27).isocalendar()[1],
-                    datetime.date(1996, 11, 17).isocalendar()[1]})
-    r = (
-        li.filter(F.col("l_returnflag") == "R")
-        .join(orders.filter(F.weekofyear("o_orderdate").isin(weeks)),
-              F.col("l_orderkey") == F.col("o_orderkey"))
-    )
-
-    def channel(mod, name):
-        return (
-            r.filter(F.col("l_linenumber") % 3 == mod)
-            .groupBy(F.col("l_partkey").alias(f"{name}_key"))
-            .agg(F.sum("l_quantity").cast("bigint").alias(f"{name}_item_qty"))
-        )
-
-    s, c, w = channel(1, "sr"), channel(2, "cr"), channel(0, "wr")
-    j = (
-        s.join(c, F.col("sr_key") == F.col("cr_key"))
-        .join(w, F.col("sr_key") == F.col("wr_key"))
-    )
-    total = F.col("sr_item_qty") + F.col("cr_item_qty") + F.col("wr_item_qty")
-    dev = lambda q: F.round(q.cast("double") / total / 3.0 * 100, 6)  # noqa: E731
-    return (
-        j.select(
-            F.col("sr_key").alias("item_id"),
-            "sr_item_qty", dev(F.col("sr_item_qty")).alias("sr_dev"),
-            "cr_item_qty", dev(F.col("cr_item_qty")).alias("cr_dev"),
-            "wr_item_qty", dev(F.col("wr_item_qty")).alias("wr_dev"),
-            (total.cast("double") / 3.0).alias("average"),
-        )
-        .orderBy(F.asc("item_id"), F.asc("sr_item_qty"))
-        .limit(100)
-    )
 
 
 # --- q72: fact-to-fact inventory join on (item, week) ----------------------
 
-@_q(
+_sql(
     "tpcds_q72",
     """
 SELECT p.p_name AS i_item_desc, s.s_name AS w_warehouse_name,
@@ -1314,69 +811,11 @@ ORDER BY total_cnt DESC, i_item_desc ASC, w_warehouse_name ASC, d_week_seq ASC
 LIMIT 100
 """,
 )
-def tpcds_q72(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q72 shape (tpcds/q72.sql: the notorious catalog-sales ×
-    inventory fact-to-fact join — same item, same WEEK, on-hand quantity
-    below the ordered quantity — with demographic gates, a ship-after-5-
-    days date inequality across two date roles, and a LEFT join to
-    promotion counted into promo/no-promo buckets). Inventory analog: a
-    second lineitem slice keyed by (partkey, week); warehouse = that
-    slice's supplier; promotion = the order's R-flagged return line.
-    Scale: THE planner stress — the only safe plan is the equi-join on
-    (partkey, week-bucket) with the quantity inequality as residual;
-    dims broadcast; no date-range cross join ever materializes."""
-    li, orders, part, supp, cust = _t(
-        spark, sf_dir, "lineitem", "orders", "part", "supplier", "customer")
-    l1 = (
-        li.alias("l1")
-        .join(orders.alias("o1").filter((F.year("o1.o_orderdate") == 1996)
-                                        & F.col("o1.o_orderpriority").isin("1-URGENT", "2-HIGH")),
-              F.col("l1.l_orderkey") == F.col("o1.o_orderkey"))
-        .join(cust.filter(F.col("c_mktsegment").isin("BUILDING", "MACHINERY")),
-              F.col("o1.o_custkey") == F.col("c_custkey"))
-        .filter(F.col("l1.l_shipdate")
-                > F.date_add(F.col("o1.o_orderdate"), 5))
-    )
-    l2 = (
-        li.alias("l2")
-        .join(orders.alias("o2").filter(F.year("o2.o_orderdate") == 1996),
-              F.col("l2.l_orderkey") == F.col("o2.o_orderkey"))
-    )
-    pr = (
-        li.filter(F.col("l_returnflag") == "R")
-        .select(F.col("l_orderkey").alias("pr_orderkey"),
-                F.col("l_partkey").alias("pr_partkey"))
-        .distinct()
-    )
-    j = (
-        l1.join(
-            l2,
-            (F.col("l2.l_partkey") == F.col("l1.l_partkey"))
-            & (F.weekofyear("o2.o_orderdate") == F.weekofyear("o1.o_orderdate"))
-            & (F.col("l2.l_quantity") < F.col("l1.l_quantity")),
-        )
-        .join(part, F.col("l1.l_partkey") == F.col("p_partkey"))
-        .join(supp, F.col("l2.l_suppkey") == F.col("s_suppkey"))
-        .join(pr, (F.col("pr_orderkey") == F.col("l1.l_orderkey"))
-              & (F.col("pr_partkey") == F.col("l1.l_partkey")), "left")
-    )
-    return (
-        j.groupBy(F.col("p_name").alias("i_item_desc"),
-                  F.col("s_name").alias("w_warehouse_name"),
-                  F.weekofyear("o1.o_orderdate").alias("d_week_seq"))
-        .agg(
-            F.sum(F.when(F.col("pr_orderkey").isNull(), 1).otherwise(0)).cast("bigint").alias("no_promo"),
-            F.sum(F.when(F.col("pr_orderkey").isNotNull(), 1).otherwise(0)).cast("bigint").alias("promo"),
-            F.count("*").cast("bigint").alias("total_cnt"),
-        )
-        .orderBy(F.desc("total_cnt"), F.asc("i_item_desc"),
-                 F.asc("w_warehouse_name"), F.asc("d_week_seq"))
-        .limit(100)
-    )
 
 
 # --- q64: two-year cross_sales CTE self-join -------------------------------
 
+# Kept port (keep-rule 2): the cross_sales stage is pinned once for the year self-join.
 @_q(
     "tpcds_q64",
     f"""
@@ -1555,37 +994,6 @@ def _q64_cross_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- q16 / q94: multi-warehouse shipped, never-returned orders -------------
 
-def _ship_orders(spark, sf_dir, date_lo, date_hi, nations, prio):
-    li, orders, cust = _t(spark, sf_dir, "lineitem", "orders", "customer")
-    l1 = (
-        li.filter(F.col("l_shipdate").between(date_lo, date_hi))
-        .join(orders.filter(F.col("o_orderpriority") == prio),
-              F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust.filter(F.col("c_nationkey").isin(*nations)),
-              F.col("o_custkey") == F.col("c_custkey"))
-    )
-    # EXISTS: another line of the order shipped from a DIFFERENT warehouse
-    l2 = li.select(F.col("l_orderkey").alias("e_orderkey"),
-                   F.col("l_suppkey").alias("e_suppkey"))
-    with_other = l1.join(
-        l2,
-        (F.col("e_orderkey") == F.col("l_orderkey"))
-        & (F.col("e_suppkey") != F.col("l_suppkey")),
-        "left_semi",
-    )
-    # NOT EXISTS: the order has no return line
-    returned = li.filter(F.col("l_returnflag") == "R").select(
-        F.col("l_orderkey").alias("r_orderkey")
-    )
-    kept = with_other.join(
-        returned, F.col("r_orderkey") == F.col("l_orderkey"), "left_anti"
-    )
-    return kept.agg(
-        F.countDistinct("l_orderkey").cast("bigint").alias("order_count"),
-        _msum(F.col("l_extendedprice") * F.col("l_discount")).alias("total_ship_cost"),
-        _msum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("total_net_profit"),
-    )
-
 
 def _ship_orders_sql(date_lo, date_hi, nations, prio):
     nat = ", ".join(str(n) for n in nations)
@@ -1607,30 +1015,15 @@ WHERE l1.l_shipdate BETWEEN '{date_lo}' AND '{date_hi}'
 """
 
 
-@_q("tpcds_q16", _ship_orders_sql("1996-02-01", "1996-04-01", (1, 2, 3), "2-HIGH"))
-def tpcds_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q16 shape (tpcds/q16.sql: catalog orders shipped in a 60-day
-    window to one state from one county's call centers, that shipped from
-    MULTIPLE warehouses — a correlated EXISTS on the same fact — and were
-    NEVER returned — a NOT EXISTS anti-join — reported as distinct-order
-    count + cost sums). Warehouse analog: l_suppkey; the EXISTS becomes a
-    residual-conditioned semi-join on the order key, the NOT EXISTS a
-    broadcast anti-join. Scale: both sub-lookups co-partition with the
-    fact on l_orderkey — no row explosion."""
-    return _ship_orders(spark, sf_dir, "1996-02-01", "1996-04-01", (1, 2, 3), "2-HIGH")
+_sql("tpcds_q16", _ship_orders_sql("1996-02-01", "1996-04-01", (1, 2, 3), "2-HIGH"))
 
 
-@_q("tpcds_q94", _ship_orders_sql("1997-02-01", "1997-04-01", (5, 7, 9), "5-LOW"))
-def tpcds_q94(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q94 shape (tpcds/q94.sql: q16's web twin — identical
-    multi-warehouse EXISTS / never-returned NOT EXISTS skeleton on the
-    web channel, different window/state/site gate)."""
-    return _ship_orders(spark, sf_dir, "1997-02-01", "1997-04-01", (5, 7, 9), "5-LOW")
+_sql("tpcds_q94", _ship_orders_sql("1997-02-01", "1997-04-01", (5, 7, 9), "5-LOW"))
 
 
 # --- q21: inventory before/after a pivot date ------------------------------
 
-@_q(
+_sql(
     "tpcds_q21",
     """
 SELECT * FROM (
@@ -1650,61 +1043,9 @@ ORDER BY w_warehouse_name ASC, i_item_id ASC
 LIMIT 100
 """,
 )
-def tpcds_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q21 shape (tpcds/q21.sql: per (warehouse, item) on-hand
-    quantity split into before/after a pivot date over a ±30-day window,
-    keeping items whose after/before ratio stays within a band — widened to [1/2, 2] for the synthetic data's sparser per-(warehouse, item) groups).
-    Inventory analog: lineitem quantities by ship date; warehouse =
-    supplier. The ratio divides exact integers → identical doubles.
-    Scale: one grouping; price band prunes part before the join."""
-    li, supp, part = _t(spark, sf_dir, "lineitem", "supplier", "part")
-    x = (
-        li.filter(F.col("l_shipdate").between("1996-01-10", "1996-05-10"))
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(part.filter(F.col("p_retailprice").between(905, 911)),
-              F.col("l_partkey") == F.col("p_partkey"))
-        .groupBy(F.col("s_name").alias("w_warehouse_name"),
-                 F.col("p_partkey").alias("i_item_id"))
-        .agg(
-            F.sum(F.when(F.col("l_shipdate") < "1996-03-11", F.col("l_quantity"))
-                  .otherwise(0)).cast("bigint").alias("inv_before"),
-            F.sum(F.when(F.col("l_shipdate") >= "1996-03-11", F.col("l_quantity"))
-                  .otherwise(0)).cast("bigint").alias("inv_after"),
-        )
-    )
-    ratio = F.col("inv_after").cast("double") / F.col("inv_before")
-    return (
-        x.filter((F.col("inv_before") > 0)
-                 & ratio.between(F.lit(1.0) / 2.0, F.lit(2.0) / 1.0))
-        .orderBy(F.asc("w_warehouse_name"), F.asc("i_item_id"))
-        .limit(100)
-    )
 
 
 # --- q37 / q82: in-stock items also selling in a channel -------------------
-
-def _instock(spark, sf_dir, date_lo, date_hi, sizes, chan_flag):
-    li, part = _t(spark, sf_dir, "lineitem", "part")
-    inv = li.filter(
-        F.col("l_shipdate").between(date_lo, date_hi)
-        & F.col("l_quantity").between(10, 40)
-    )
-    chan = li.filter(F.col("l_linestatus") == chan_flag).select(
-        F.col("l_partkey").alias("ch_partkey")
-    )
-    return (
-        inv.join(part.filter(F.col("p_retailprice").between(905, 915)
-                             & F.col("p_size").isin(*sizes)),
-                 F.col("l_partkey") == F.col("p_partkey"))
-        .join(chan, F.col("ch_partkey") == F.col("l_partkey"), "left_semi")
-        .groupBy(F.col("p_partkey").alias("i_item_id"),
-                 F.col("p_name").alias("i_item_desc"),
-                 F.col("p_retailprice").alias("i_current_price"))
-        .agg(F.count("*").alias("_cnt"))
-        .select("i_item_id", "i_item_desc", "i_current_price")
-        .orderBy(F.asc("i_item_id"))
-        .limit(100)
-    )
 
 
 def _instock_sql(date_lo, date_hi, sizes, chan_flag):
@@ -1726,28 +1067,15 @@ LIMIT 100
 """
 
 
-@_q("tpcds_q37", _instock_sql("1996-02-01", "1996-04-01", (7, 14, 21, 28), "O"))
-def tpcds_q37(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q37 shape (tpcds/q37.sql: items from four manufacturers in a
-    price band, held in inventory at 100-500 units during a 60-day
-    window, that ALSO sell in the catalog channel — the fact semi-join).
-    Inventory analog: lineitem quantity band by ship date; channel =
-    linestatus slice. Scale: part prunes first; the channel check is a
-    semi-join on partkey."""
-    return _instock(spark, sf_dir, "1996-02-01", "1996-04-01", (7, 14, 21, 28), "O")
+_sql("tpcds_q37", _instock_sql("1996-02-01", "1996-04-01", (7, 14, 21, 28), "O"))
 
 
-@_q("tpcds_q82", _instock_sql("1997-05-25", "1997-07-24", (5, 10, 15, 20), "F"))
-def tpcds_q82(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q82 shape (tpcds/q82.sql: q37's store twin — same in-stock
-    + also-selling skeleton against the store channel, different window
-    and manufacturer set)."""
-    return _instock(spark, sf_dir, "1997-05-25", "1997-07-24", (5, 10, 15, 20), "F")
+_sql("tpcds_q82", _instock_sql("1997-05-25", "1997-07-24", (5, 10, 15, 20), "F"))
 
 
 # --- q26: demographic-gated catalog item averages --------------------------
 
-@_q(
+_sql(
     "tpcds_q26",
     """
 SELECT p.p_partkey AS i_item_id,
@@ -1767,38 +1095,11 @@ ORDER BY i_item_id ASC
 LIMIT 100
 """,
 )
-def tpcds_q26(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q26 shape (tpcds/q26.sql: q07's catalog twin — per-item
-    quantity/list/coupon/sales averages under a three-way demographic
-    gate plus an OR'd promotion-channel gate). Demographics analog:
-    mktsegment + orderstatus; promotion OR: order priority. Averages
-    divide exact cents by counts → identical doubles."""
-    li, orders, cust, part = _t(spark, sf_dir, "lineitem", "orders", "customer", "part")
-    j = (
-        li.join(orders.filter((F.col("o_orderstatus") == "F")
-                              & (F.year("o_orderdate") == 1997)
-                              & F.col("o_orderpriority").isin("3-MEDIUM", "4-NOT SPECIFIED")),
-                F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust.filter(F.col("c_mktsegment") == "AUTOMOBILE"),
-              F.col("o_custkey") == F.col("c_custkey"))
-        .join(part, F.col("l_partkey") == F.col("p_partkey"))
-    )
-    return (
-        j.groupBy(F.col("p_partkey").alias("i_item_id"))
-        .agg(
-            F.round(F.avg("l_quantity"), 6).alias("agg1"),
-            F.round(F.avg(F.round(F.col("l_extendedprice") * (1 + F.col("l_tax")) * 100)), 6).alias("agg2"),
-            F.round(F.avg(F.round(F.col("l_extendedprice") * F.col("l_discount") * 100)), 6).alias("agg3"),
-            F.round(F.avg(F.round(F.col("l_extendedprice") * 100)), 6).alias("agg4"),
-        )
-        .orderBy(F.asc("i_item_id"))
-        .limit(100)
-    )
 
 
 # --- q27: rollup with GROUPING() over item x state -------------------------
 
-@_q(
+_sql(
     "tpcds_q27",
     """
 SELECT p.p_brand AS i_item_id, n.n_name AS s_state,
@@ -1820,38 +1121,6 @@ ORDER BY i_item_id ASC NULLS FIRST, s_state ASC NULLS FIRST
 LIMIT 100
 """,
 )
-def tpcds_q27(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q27 shape (tpcds/q27.sql: demographic-gated store averages
-    under ROLLUP(item, state) with the GROUPING(s_state) marker column —
-    the rollup + grouping-function pairing). State analog: supplier
-    nation, three states. Scale: one rollup aggregation; dims
-    broadcast."""
-    li, orders, cust, supp, nation, part = _t(
-        spark, sf_dir, "lineitem", "orders", "customer", "supplier", "nation", "part")
-    j = (
-        li.join(orders.filter(F.year("o_orderdate") == 1996),
-                F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust.filter(F.col("c_mktsegment") == "BUILDING"),
-              F.col("o_custkey") == F.col("c_custkey"))
-        .join(supp.filter(F.col("s_nationkey").isin(3, 7, 11)),
-              F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(nation, F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(part, F.col("l_partkey") == F.col("p_partkey"))
-    )
-    return (
-        j.rollup("p_brand", "n_name")
-        .agg(
-            F.grouping("n_name").cast("int").alias("g_state"),
-            F.round(F.avg("l_quantity"), 6).alias("agg1"),
-            F.round(F.avg(F.round(F.col("l_extendedprice") * (1 + F.col("l_tax")) * 100)), 6).alias("agg2"),
-            F.round(F.avg(F.round(F.col("l_extendedprice") * F.col("l_discount") * 100)), 6).alias("agg3"),
-            F.round(F.avg(F.round(F.col("l_extendedprice") * 100)), 6).alias("agg4"),
-        )
-        .select(F.col("p_brand").alias("i_item_id"), F.col("n_name").alias("s_state"),
-                "g_state", "agg1", "agg2", "agg3", "agg4")
-        .orderBy(F.asc_nulls_first("i_item_id"), F.asc_nulls_first("s_state"))
-        .limit(100)
-    )
 
 
 # --- q28: six quantity-band list-price buckets (single pass) ---------------
@@ -1869,7 +1138,7 @@ def _q28_cond_sql(lo, hi, plo, phi):
             f"OR round(l_extendedprice * l_tax * 100) BETWEEN 100 AND 4100)")
 
 
-@_q(
+_sql(
     "tpcds_q28",
     "SELECT "
     + ", ".join(
@@ -1880,36 +1149,11 @@ def _q28_cond_sql(lo, hi, plo, phi):
     )
     + " FROM lineitem",
 )
-def tpcds_q28(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q28 shape (tpcds/q28.sql: six quantity-band buckets — each
-    with an OR'd price/coupon/wholesale gate — reporting avg list price,
-    count and DISTINCT count per bucket in one row). The reference spells
-    six derived-table scans cross-joined; implemented as ONE scan with
-    conditional aggregation — six fact scans collapse to a single pass
-    (the q88 pattern; 6x less IO at scale, same single-row result).
-    List-price cents keep the averages exact."""
-    (li,) = _t(spark, sf_dir, "lineitem")
-    aggs = []
-    for b, lo, hi, plo, phi in _Q28_BANDS:
-        cond = (
-            F.col("l_quantity").between(lo, hi)
-            & (
-                F.round(F.col("l_extendedprice") * 100).between(plo, phi)
-                | F.round(F.col("l_extendedprice") * F.col("l_discount") * 100).between(200, 5200)
-                | F.round(F.col("l_extendedprice") * F.col("l_tax") * 100).between(100, 4100)
-            )
-        )
-        lp = F.when(cond, F.round(F.col("l_extendedprice") * 100))
-        aggs += [
-            F.round(F.avg(lp), 6).alias(f"b{b}_lp"),
-            F.count(F.when(cond, 1)).cast("bigint").alias(f"b{b}_cnt"),
-            F.countDistinct(lp).cast("bigint").alias(f"b{b}_cntd"),
-        ]
-    return li.agg(*aggs)
 
 
 # --- q43: weekday sales matrix per store -----------------------------------
 
+# Kept port (keep-rule 1, text not portable): DuckDB datediff('day', ...).
 @_q(
     "tpcds_q43",
     f"""
@@ -1958,7 +1202,7 @@ def tpcds_q43(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- q89: monthly deviation from the (item, store) mean --------------------
 
-@_q(
+_sql(
     "tpcds_q89",
     f"""
 WITH g AS (
@@ -1986,47 +1230,11 @@ ORDER BY c * key_cnt - key_sum_c ASC, s_store_name ASC, i_category ASC,
 LIMIT 100
 """,
 )
-def tpcds_q89(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q89 shape (tpcds/q89.sql: months whose store-item-class
-    sales deviate >10% from the (category, brand, store) yearly mean —
-    agg-over-window above a grouped frame gated by the two-band
-    disjunctive category/class filter, ordered by the signed deviation).
-    Deviation and ordering keys are exact cross-multiplied integers."""
-    li, orders, part, supp = _t(spark, sf_dir, "lineitem", "orders", "part", "supplier")
-    g = (
-        li.join(orders.filter(F.year("o_orderdate") == 1996),
-                F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(part.filter(_bands_col()), F.col("l_partkey") == F.col("p_partkey"))
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .groupBy(F.col("p_type").alias("i_category"), F.col("p_brand").alias("i_brand"),
-                 F.col("s_name").alias("s_store_name"),
-                 F.month("o_orderdate").alias("d_moy"))
-        .agg(_msum(F.col("l_extendedprice")).alias("sum_sales"),
-             # window re-sums in arbitrary order → run it over exact cents
-             _csum(F.col("l_extendedprice")).alias("_c"))
-    )
-    w = W.partitionBy("i_category", "i_brand", "s_store_name")
-    v = g.withColumn("key_sum_c", F.sum("_c").over(w)).withColumn(
-        "key_cnt", F.count("*").over(w)
-    )
-    return (
-        v.filter((F.col("key_sum_c") != 0)
-                 & (10 * F.abs(F.col("_c") * F.col("key_cnt") - F.col("key_sum_c"))
-                    > F.abs(F.col("key_sum_c"))))
-        .select("i_category", "i_brand", "s_store_name", "d_moy", "sum_sales",
-                (F.col("key_sum_c").cast("double") / (100 * F.col("key_cnt")))
-                .alias("avg_monthly_sales"),
-                (F.col("_c") * F.col("key_cnt") - F.col("key_sum_c")).alias("_dev"))
-        .orderBy(F.asc("_dev"), F.asc("s_store_name"), F.asc("i_category"),
-                 F.asc("i_brand"), F.asc("d_moy"))
-        .limit(100)
-        .drop("_dev")
-    )
 
 
 # --- q22: four-level rollup of average on-hand quantity --------------------
 
-@_q(
+_sql(
     "tpcds_q22",
     """
 SELECT p.p_name AS i_product_name, p.p_brand AS i_brand, p.p_type AS i_class,
@@ -2042,32 +1250,6 @@ ORDER BY qoh ASC, i_product_name ASC NULLS FIRST, i_brand ASC NULLS FIRST,
 LIMIT 100
 """,
 )
-def tpcds_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q22 shape (tpcds/q22.sql: average on-hand inventory under a
-    FOUR-level ROLLUP(product, brand, class, category) over a 12-month
-    window — the deepest rollup in the corpus). Inventory analog:
-    lineitem quantities. The average divides exact ints → identical
-    doubles. Scale: one rollup aggregation (Spark expands grouping sets
-    in a single Expand+HashAggregate pass)."""
-    li, orders, part = _t(spark, sf_dir, "lineitem", "orders", "part")
-    j = (
-        li.join(orders.filter(F.year("o_orderdate") == 1996),
-                F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(part, F.col("l_partkey") == F.col("p_partkey"))
-    )
-    return (
-        j.rollup("p_name", "p_brand", "p_type", F.col("p_size").cast("int"))
-        .agg(F.round(F.avg("l_quantity"), 6).alias("qoh"))
-        .select(
-            F.col("p_name").alias("i_product_name"), F.col("p_brand").alias("i_brand"),
-            F.col("p_type").alias("i_class"),
-            F.col("p_size").alias("i_category"), "qoh",
-        )
-        .orderBy(F.asc("qoh"), F.asc_nulls_first("i_product_name"),
-                 F.asc_nulls_first("i_brand"), F.asc_nulls_first("i_class"),
-                 F.asc_nulls_first("i_category"))
-        .limit(100)
-    )
 
 
 # --- q39: month-over-month inventory variability self-join -----------------
@@ -2106,74 +1288,15 @@ LIMIT 100
 """
 
 
-@_q("tpcds_q39", _q39_sql(None))
-def tpcds_q39(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q39 shape (tpcds/q39_1.sql: per (warehouse, item, month)
-    inventory mean and stddev, keep high coefficient-of-variation groups,
-    self-join January against February of the same (warehouse, item) —
-    the variability screen). Warehouse analog: supplier-nation band, item
-    bucket: partkey mod 20 (the synthetic data is too sparse for
-    per-(supplier, part, month) stddevs); threshold 0.5 (the reference's
-    1.0 is above the uniform quantities' cov). Scale: one
-    grouping, then a self-join of the small filtered frame."""
-    return _q39_join(spark, sf_dir, cov1_min=None)
+_sql("tpcds_q39", _q39_sql(None))
 
 
-@_q("tpcds_q39_2", _q39_sql(0.65))
-def tpcds_q39_2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q39 SECOND benchto variant (tpcds/q39_2.sql — VERDICT r09
-    #5): identical CTE and self-join, plus the extra January-side
-    coefficient-of-variation screen (reference: ``inv1.cov > 1.5`` on a
-    CTE already filtered at 1.0; here 0.65 over the CTE's 0.5 — the
-    measured cov quartiles of the synthetic quantities are 0.46/0.58/0.69,
-    so the screen keeps roughly the top January quartile, biting without
-    emptying)."""
-    return _q39_join(spark, sf_dir, cov1_min=0.65)
-
-
-def _q39_join(
-    spark: SparkSession, sf_dir: str, cov1_min: float | None
-) -> DataFrame:
-    li, orders, supp = _t(spark, sf_dir, "lineitem", "orders", "supplier")
-    foo = (
-        li.join(orders.filter(F.year("o_orderdate") == 1996),
-                F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .groupBy((F.col("s_nationkey") % 5).alias("w_warehouse_sk"),
-                 (F.col("l_partkey") % 20).alias("i_item_sk"),
-                 F.month("o_orderdate").alias("d_moy"))
-        .agg(F.stddev_samp("l_quantity").alias("stdev"), F.avg("l_quantity").alias("mean"))
-    )
-    inv = (
-        foo.filter(F.when(F.col("mean") == 0, F.lit(0.0))
-                   .otherwise(F.col("stdev") / F.col("mean")) > 0.5)
-        .select("w_warehouse_sk", "i_item_sk", "d_moy",
-                F.round("mean", 6).alias("mean"),
-                F.round(F.when(F.col("mean") == 0, F.lit(None))
-                        .otherwise(F.col("stdev") / F.col("mean")), 6).alias("cov"))
-    )
-    i1 = inv.filter(F.col("d_moy") == 1)
-    if cov1_min is not None:
-        i1 = i1.filter(F.col("cov") > cov1_min)
-    i1 = i1.alias("inv1")
-    i2 = inv.filter(F.col("d_moy") == 2).alias("inv2")
-    return (
-        i1.join(i2, (F.col("inv1.i_item_sk") == F.col("inv2.i_item_sk"))
-                & (F.col("inv1.w_warehouse_sk") == F.col("inv2.w_warehouse_sk")))
-        .select(F.col("inv1.w_warehouse_sk").alias("wsk1"),
-                F.col("inv1.i_item_sk").alias("isk1"),
-                F.col("inv1.d_moy").alias("moy1"),
-                F.col("inv1.mean").alias("mean1"), F.col("inv1.cov").alias("cov1"),
-                F.col("inv2.d_moy").alias("moy2"),
-                F.col("inv2.mean").alias("mean2"), F.col("inv2.cov").alias("cov2"))
-        .orderBy("wsk1", "isk1", "mean1", "cov1", "mean2", "cov2")
-        .limit(100)
-    )
+_sql("tpcds_q39_2", _q39_sql(0.65))
 
 
 # --- q40: net catalog sales before/after a pivot, returns subtracted -------
 
-@_q(
+_sql(
     "tpcds_q40",
     """
 SELECT n.n_name AS w_state, p.p_partkey AS i_item_id,
@@ -2200,43 +1323,6 @@ ORDER BY w_state ASC, i_item_id ASC
 LIMIT 100
 """,
 )
-def tpcds_q40(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q40 shape (tpcds/q40.sql: catalog sales net of their
-    row-level returns (LEFT join on order+item), split before/after a
-    pivot date per (warehouse state, item) over a ±30-day window with an
-    item price band). Warehouse state analog: supplier nation. All cents
-    exact."""
-    li, orders, supp, nation, part = _t(
-        spark, sf_dir, "lineitem", "orders", "supplier", "nation", "part")
-    r = li.filter(F.col("l_returnflag") == "R").select(
-        F.col("l_orderkey").alias("r_orderkey"),
-        F.col("l_partkey").alias("r_partkey"),
-        (F.col("l_extendedprice") * F.col("l_discount")).alias("r_price"),
-    )
-    j = (
-        li.filter(F.col("l_returnflag") != "R")
-        .join(orders.filter(F.col("o_orderdate").between("1996-02-10", "1996-04-10")),
-              F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(r, (F.col("l_orderkey") == F.col("r_orderkey"))
-              & (F.col("l_partkey") == F.col("r_partkey")), "left")
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(nation, F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(part.filter(F.col("p_retailprice").between(905, 911)),
-              F.col("l_partkey") == F.col("p_partkey"))
-    )
-    net = (F.round(F.col("l_extendedprice") * 100)
-           - F.coalesce(F.round(F.col("r_price") * 100), F.lit(0)))
-    return (
-        j.groupBy(F.col("n_name").alias("w_state"), F.col("p_partkey").alias("i_item_id"))
-        .agg(
-            F.sum(F.when(F.col("o_orderdate") < "1996-03-11", net).otherwise(0))
-            .cast("bigint").alias("sales_before"),
-            F.sum(F.when(F.col("o_orderdate") >= "1996-03-11", net).otherwise(0))
-            .cast("bigint").alias("sales_after"),
-        )
-        .orderBy(F.asc("w_state"), F.asc("i_item_id"))
-        .limit(100)
-    )
 
 
 # --- q41: manufacturers with items matching a deep attribute battery -------
@@ -2249,7 +1335,7 @@ _Q41_BATTERY_SQL = (
 )
 
 
-@_q(
+_sql(
     "tpcds_q41",
     f"""
 SELECT DISTINCT i1.p_name AS i_product_name
@@ -2261,35 +1347,11 @@ ORDER BY i_product_name ASC
 LIMIT 100
 """,
 )
-def tpcds_q41(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q41 shape (tpcds/q41.sql: DISTINCT product names whose
-    MANUFACTURER has at least one item matching a deep OR'd
-    (category, color, units, size) attribute battery — a correlated
-    count(*) > 0 on the item dimension itself, i.e. a self semi-join of
-    the dim). Manufacturer analog: p_size; battery: (type, brand) bands.
-    Decorrelated as a distinct-key semi-join — the exact plan Presto's
-    optimizer builds."""
-    (part,) = _t(spark, sf_dir, "part")
-    battery = (
-        ((F.col("p_type") == "STANDARD") & F.col("p_brand").isin("Brand#11", "Brand#12", "Brand#13"))
-        | ((F.col("p_type") == "SMALL") & F.col("p_brand").isin("Brand#14", "Brand#15", "Brand#21"))
-        | ((F.col("p_type") == "ECONOMY") & F.col("p_brand").isin("Brand#22", "Brand#23", "Brand#24"))
-        | ((F.col("p_type") == "MEDIUM") & F.col("p_brand").isin("Brand#25", "Brand#31", "Brand#32"))
-    )
-    matching = part.filter(battery).select(F.col("p_size").alias("m_size")).distinct()
-    return (
-        part.filter(F.col("p_size").between(10, 30))
-        .join(matching, F.col("m_size") == F.col("p_size"), "left_semi")
-        .select(F.col("p_name").alias("i_product_name"))
-        .distinct()
-        .orderBy(F.asc("i_product_name"))
-        .limit(100)
-    )
 
 
 # --- q73: trip party-size counts between 1 and 5 ---------------------------
 
-@_q(
+_sql(
     "tpcds_q73",
     """
 WITH dj AS (
@@ -2311,35 +1373,11 @@ WHERE dj.cnt BETWEEN 1 AND 5
 ORDER BY dj.cnt DESC, c.c_name ASC, dj.ss_ticket_number ASC
 """,
 )
-def tpcds_q73(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q73 shape (tpcds/q73.sql: month-start store trips under a
-    household-demographic OR gate in four counties, keeping trips with
-    1-5 qualifying lines, reported with the customer — q46's counting
-    sibling; no LIMIT in the reference, deterministic total order
-    added)."""
-    li, orders, supp, cust = _t(spark, sf_dir, "lineitem", "orders", "supplier", "customer")
-    dj = (
-        li.filter((F.col("l_quantity") == 4) | (F.col("l_linenumber") == 3))
-        .join(orders.filter(F.dayofmonth("o_orderdate").between(1, 2)
-                            & F.year("o_orderdate").isin(1996, 1997, 1998)),
-              F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(supp.filter(F.col("s_nationkey").isin(2, 4, 6, 8)),
-              F.col("l_suppkey") == F.col("s_suppkey"))
-        .groupBy(F.col("o_orderkey").alias("ss_ticket_number"),
-                 F.col("o_custkey").alias("ss_customer_sk"))
-        .agg(F.count("*").cast("bigint").alias("cnt"))
-    )
-    return (
-        dj.filter(F.col("cnt").between(1, 5))
-        .join(cust, F.col("ss_customer_sk") == F.col("c_custkey"))
-        .select("c_name", "c_mktsegment", "ss_ticket_number", "cnt")
-        .orderBy(F.desc("cnt"), F.asc("c_name"), F.asc("ss_ticket_number"))
-    )
 
 
 # --- q84: income-band customers with a recorded return ---------------------
 
-@_q(
+_sql(
     "tpcds_q84",
     """
 SELECT c.c_custkey AS customer_id,
@@ -2354,34 +1392,11 @@ ORDER BY customer_id ASC
 LIMIT 100
 """,
 )
-def tpcds_q84(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q84 shape (tpcds/q84.sql: customers in one city whose
-    household income band sits in a 50k window and who appear in
-    store_returns — a five-dim chain ending in a fact semi-join).
-    City analog: nation; income band: acctbal window; the returns
-    check is a semi-join through orders. Output concatenates the
-    name as the reference does."""
-    cust, nation, li, orders = _t(spark, sf_dir, "customer", "nation", "lineitem", "orders")
-    returned_cust = (
-        li.filter(F.col("l_returnflag") == "R")
-        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .select(F.col("o_custkey").alias("rc_custkey"))
-    )
-    return (
-        cust.filter(F.col("c_acctbal").between(1000, 6000))
-        .join(nation.filter(F.col("n_name") == "NATION_3"),
-              F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(returned_cust, F.col("rc_custkey") == F.col("c_custkey"), "left_semi")
-        .select(F.col("c_custkey").alias("customer_id"),
-                F.concat(F.col("c_name"), F.lit(", "), F.col("c_mktsegment")).alias("customername"))
-        .orderBy(F.asc("customer_id"))
-        .limit(100)
-    )
 
 
 # --- q91: call-center return losses under demographic bands ----------------
 
-@_q(
+_sql(
     "tpcds_q91",
     f"""
 SELECT o.o_orderpriority AS call_center, c.c_mktsegment AS cd_marital_status,
@@ -2397,30 +1412,6 @@ GROUP BY 1, 2
 ORDER BY returns_loss DESC, call_center ASC, cd_marital_status ASC
 """,
 )
-def tpcds_q91(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q91 shape (tpcds/q91.sql: catalog return losses per call
-    center for one month, customers gated by an OR of
-    (marital, education) bands plus buy-potential and gmt-offset
-    filters, ordered by loss). Call center analog: order priority;
-    demographic bands: mktsegment; gmt band: nationkey. No LIMIT in the
-    reference; ordering keys are exact cents + text."""
-    li, orders, cust = _t(spark, sf_dir, "lineitem", "orders", "customer")
-    j = (
-        li.filter(F.col("l_returnflag") == "R")
-        .join(orders.filter((F.year("o_orderdate") == 1996)
-                            & (F.month("o_orderdate") == 11)),
-              F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust.filter(F.col("c_mktsegment").isin("BUILDING", "MACHINERY")
-                          & (F.col("c_nationkey") < 12)),
-              F.col("o_custkey") == F.col("c_custkey"))
-    )
-    return (
-        j.groupBy(F.col("o_orderpriority").alias("call_center"),
-                  F.col("c_mktsegment").alias("cd_marital_status"))
-        .agg(_csum(F.col("l_extendedprice")).alias("returns_loss"))
-        .orderBy(F.desc("returns_loss"), F.asc("call_center"),
-                 F.asc("cd_marital_status"))
-    )
 
 
 # --- q56 / q60: three-channel totals for an item subset --------------------
@@ -2446,66 +1437,23 @@ GROUP BY i_item_id
 """
 
 
-def _chan3(spark, sf_dir, item_cond, year, moy, nat_band):
-    li, orders, cust, part = _t(spark, sf_dir, "lineitem", "orders", "customer", "part")
-    items = part.filter(item_cond).select(F.col("p_partkey").alias("sel_partkey"))
-    base = (
-        li.join(orders.filter((F.year("o_orderdate") == year)
-                              & (F.month("o_orderdate") == moy)),
-                F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust.filter(F.col("c_nationkey") < nat_band),
-              F.col("o_custkey") == F.col("c_custkey"))
-        .join(items, F.col("sel_partkey") == F.col("l_partkey"), "left_semi")
-    )
-
-    def chan(flag):
-        return (
-            base.filter(F.col("l_returnflag") == flag)
-            .groupBy(F.col("l_partkey").alias("i_item_id"))
-            .agg(_csum(F.col("l_extendedprice")).alias("total_sales"))
-        )
-
-    return (
-        chan("N").unionByName(chan("A")).unionByName(chan("R"))
-        .groupBy("i_item_id")
-        .agg(F.sum("total_sales").cast("bigint").alias("total_sales"))
-    )
-
-
-@_q(
+_sql(
     "tpcds_q56",
     _chan3_sql("p_brand IN ('Brand#11', 'Brand#21', 'Brand#31')", 1996, 2, 13)
     + "ORDER BY total_sales ASC, i_item_id ASC LIMIT 100",
 )
-def tpcds_q56(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q56 shape (tpcds/q56.sql: per-item totals across the three
-    sales channels for items in three colors, one month, one gmt band —
-    three structurally identical CTEs (each with an item-id IN subquery)
-    UNION ALL'd and re-grouped). Color analog: brand set; channels:
-    returnflag slices; gmt: nation band."""
-    return _chan3(
-        spark, sf_dir,
-        F.col("p_brand").isin("Brand#11", "Brand#21", "Brand#31"), 1996, 2, 13,
-    ).orderBy(F.asc("total_sales"), F.asc("i_item_id")).limit(100)
 
 
-@_q(
+_sql(
     "tpcds_q60",
     _chan3_sql("p_type = 'ECONOMY'", 1997, 9, 11)
     + "ORDER BY i_item_id ASC, total_sales ASC LIMIT 100",
 )
-def tpcds_q60(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q60 shape (tpcds/q60.sql: q56's category twin — same
-    three-channel CTE union for one category/month/gmt band, item-first
-    ordering)."""
-    return _chan3(
-        spark, sf_dir, F.col("p_type") == "ECONOMY", 1997, 9, 11,
-    ).orderBy(F.asc("i_item_id"), F.asc("total_sales")).limit(100)
 
 
 # --- q69: store-only customers' demographic profile ------------------------
 
-@_q(
+_sql(
     "tpcds_q69",
     """
 SELECT c.c_mktsegment AS cd_gender,
@@ -2531,46 +1479,11 @@ ORDER BY cd_gender ASC, cd_purchase_estimate ASC, cd_credit_rating ASC
 LIMIT 100
 """,
 )
-def tpcds_q69(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q69 shape (tpcds/q69.sql: the demographic profile of
-    customers in three states who bought in the STORE channel during one
-    quarter but NOT in the web or catalog channels — one EXISTS plus two
-    NOT EXISTS on the fact). Channels: returnflag slices; demographics:
-    mktsegment / acctbal band / nation band. Scale: one semi-join + two
-    anti-joins on the customer key, then a small grouping."""
-    li, orders, cust = _t(spark, sf_dir, "lineitem", "orders", "customer")
-
-    def bought(flag):
-        return (
-            li.filter(F.col("l_returnflag") == flag)
-            .join(orders.filter((F.year("o_orderdate") == 1996)
-                                & F.month("o_orderdate").between(4, 6)),
-                  F.col("l_orderkey") == F.col("o_orderkey"))
-            .select(F.col("o_custkey").alias(f"{flag}_custkey"))
-        )
-
-    out = (
-        cust.filter(F.col("c_nationkey").isin(2, 5, 8))
-        .join(bought("A"), F.col("A_custkey") == F.col("c_custkey"), "left_semi")
-        .join(bought("N"), F.col("N_custkey") == F.col("c_custkey"), "left_anti")
-        .join(bought("R"), F.col("R_custkey") == F.col("c_custkey"), "left_anti")
-    )
-    return (
-        out.groupBy(
-            F.col("c_mktsegment").alias("cd_gender"),
-            (F.floor(F.col("c_acctbal") / 1000) * 1000).cast("bigint").alias("cd_purchase_estimate"),
-            (F.col("c_nationkey") % 3).cast("int").alias("cd_credit_rating"),
-        )
-        .agg(F.count("*").cast("bigint").alias("cnt"))
-        .orderBy(F.asc("cd_gender"), F.asc("cd_purchase_estimate"),
-                 F.asc("cd_credit_rating"))
-        .limit(100)
-    )
 
 
 # --- q70: state/county profit rollup with rank-within-parent ---------------
 
-@_q(
+_sql(
     "tpcds_q70",
     f"""
 WITH agg AS (
@@ -2611,63 +1524,11 @@ ORDER BY lochierarchy DESC,
 LIMIT 100
 """,
 )
-def tpcds_q70(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q70 shape (tpcds/q70.sql: profit under ROLLUP(state, county)
-    with rank() partitioned by the GROUPING-function hierarchy level —
-    rank-within-parent — plus the reference's famous degenerate top-5
-    state subquery (rank() PARTITION BY the grouped key itself is always
-    1, so the IN keeps every state — faithfully reproduced). Scale:
-    rollup + one window over the small grouped frame."""
-    li, orders, supp, nation = _t(spark, sf_dir, "lineitem", "orders", "supplier", "nation")
-    j96 = (
-        li.join(orders.filter(F.year("o_orderdate") == 1996),
-                F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(nation, F.col("s_nationkey") == F.col("n_nationkey"))
-    )
-    top5 = (
-        j96.groupBy(F.col("n_name").alias("s_state"))
-        .agg(F.sum(F.round(F.col("l_extendedprice") * 100)).alias("t"))
-        .withColumn("ranking", F.rank().over(W.partitionBy("s_state").orderBy(F.desc("t"))))
-        .filter(F.col("ranking") <= 5)
-        .select(F.col("s_state").alias("sel_state"))
-    )
-    agg = (
-        j96.join(top5, F.col("sel_state") == F.col("n_name"), "left_semi")
-        .rollup("n_name", "s_name")
-        .agg(
-            _msum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("total_sum"),
-            F.grouping("n_name").cast("int").alias("g_state"),
-            F.grouping("s_name").cast("int").alias("g_county"),
-        )
-    )
-    lo = F.col("g_state") + F.col("g_county")
-    wr = W.partitionBy(lo, F.when(F.col("g_county") == 0, F.col("n_name"))).orderBy(
-        F.desc("total_sum")
-    )
-    return (
-        agg.select(
-            "total_sum",
-            F.col("n_name").alias("s_state"), F.col("s_name").alias("s_county"),
-            lo.alias("lochierarchy"),
-            F.rank().over(wr).cast("int").alias("rank_within_parent"),
-            F.col("g_state"), F.col("g_county"),
-        )
-        .orderBy(
-            F.desc("lochierarchy"),
-            F.asc_nulls_first(F.when(F.col("g_state") + F.col("g_county") == 0,
-                                     F.col("s_state"))),
-            F.asc("rank_within_parent"),
-            F.asc_nulls_first("s_state"), F.asc_nulls_first("s_county"),
-        )
-        .select("total_sum", "s_state", "s_county", "lochierarchy", "rank_within_parent")
-        .limit(100)
-    )
 
 
 # --- q71: brand revenue by hour across three unioned channels --------------
 
-@_q(
+_sql(
     "tpcds_q71",
     f"""
 WITH tmp AS (
@@ -2696,41 +1557,11 @@ GROUP BY 1, 2
 ORDER BY ext_price DESC, brand ASC, t_hour ASC
 """,
 )
-def tpcds_q71(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q71 shape (tpcds/q71.sql: one manager's brand revenue at
-    breakfast/dinner hours, the fact being a UNION ALL of all three
-    channels joined to time_dim — the all-channel hourly profile).
-    Hour analog: deterministic per-line hash mod 24 (the same synthetic
-    time the benchto adapter uses); meal bands 6-9/17-20; manager:
-    partkey band. No LIMIT in the reference."""
-    li, orders, part = _t(spark, sf_dir, "lineitem", "orders", "part")
-    o_nov = orders.filter((F.month("o_orderdate") == 11) & (F.year("o_orderdate") == 1996))
-
-    def chan(flag):
-        return (
-            li.filter(F.col("l_returnflag") == flag)
-            .join(o_nov, F.col("l_orderkey") == F.col("o_orderkey"))
-            .select(
-                F.round(F.col("l_extendedprice") * 100).alias("ext_price"),
-                F.col("l_partkey").alias("sold_item_sk"),
-                ((F.col("l_orderkey") * 7 + F.col("l_linenumber") * 3) % 24).alias("t_hour"),
-            )
-        )
-
-    tmp = chan("N").unionByName(chan("A")).unionByName(chan("R"))
-    return (
-        tmp.join(part.filter(F.col("p_partkey") % 100 < 20),
-                 F.col("sold_item_sk") == F.col("p_partkey"))
-        .filter(F.col("t_hour").between(6, 9) | F.col("t_hour").between(17, 20))
-        .groupBy(F.col("p_brand").alias("brand"), F.col("t_hour").cast("int").alias("t_hour"))
-        .agg(F.sum("ext_price").cast("bigint").alias("ext_price"))
-        .orderBy(F.desc("ext_price"), F.asc("brand"), F.asc("t_hour"))
-    )
 
 
 # --- q85: returns under paired-demographic and address band ORs ------------
 
-@_q(
+_sql(
     "tpcds_q85",
     """
 SELECT concat('reason_', CAST(l.l_linenumber % 5 AS STRING)) AS r_reason_desc,
@@ -2755,51 +1586,6 @@ ORDER BY r_reason_desc ASC, avg_quantity ASC, avg_refunded ASC, avg_fee ASC
 LIMIT 100
 """,
 )
-def tpcds_q85(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q85 shape (tpcds/q85.sql: web returns joined back to their
-    sales with PAIRED demographic bands — marital/education must match
-    across the refunding and returning demographics AND gate a price band
-    — plus an OR'd (state set, profit band) address gate, averaged per
-    return reason). Demographic pairing analog: (mktsegment, orderstatus)
-    bands; reason dim: linenumber mod 5. All band arithmetic exact
-    cents."""
-    li, orders, cust = _t(spark, sf_dir, "lineitem", "orders", "customer")
-    price = F.round(F.col("l_extendedprice") * 100)
-    profit = F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100)
-    demo = (
-        ((F.col("c_mktsegment") == "BUILDING") & (F.col("o_orderstatus") == "F")
-         & price.between(1000000, 5000000))
-        | ((F.col("c_mktsegment") == "MACHINERY") & (F.col("o_orderstatus") == "O")
-           & price.between(500000, 3000000))
-        | ((F.col("c_mktsegment") == "AUTOMOBILE") & (F.col("o_orderstatus") == "P")
-           & price.between(1500000, 6000000))
-    )
-    addr = (
-        (F.col("c_nationkey").isin(1, 4, 7) & profit.between(100000, 20000000))
-        | (F.col("c_nationkey").isin(10, 13, 16) & profit.between(150000, 30000000))
-        | (F.col("c_nationkey").isin(19, 22, 24) & profit.between(50000, 25000000))
-    )
-    j = (
-        li.filter(F.col("l_returnflag") == "R")
-        .join(orders.filter(F.year("o_orderdate") == 1996),
-              F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .filter(demo & addr)
-    )
-    return (
-        j.groupBy(
-            F.concat(F.lit("reason_"), (F.col("l_linenumber") % 5).cast("string"))
-            .alias("r_reason_desc")
-        )
-        .agg(
-            F.round(F.avg("l_quantity"), 6).alias("avg_quantity"),
-            F.round(F.avg(F.round(F.col("l_extendedprice") * F.col("l_discount") * 100)), 6).alias("avg_refunded"),
-            F.round(F.avg(F.round(F.col("l_extendedprice") * F.col("l_tax") * 100)), 6).alias("avg_fee"),
-        )
-        .orderBy(F.asc("r_reason_desc"), F.asc("avg_quantity"),
-                 F.asc("avg_refunded"), F.asc("avg_fee"))
-        .limit(100)
-    )
 
 
 # --- q24: per-color netpaid vs 5% of the all-color average -----------------
@@ -2837,6 +1623,7 @@ ORDER BY c_last_name ASC, s_store_name ASC
 """
 
 
+# Kept port (keep-rule 2): cte_materialization_enabled persists ssales.
 @_q("tpcds_q24", _q24_sql(_Q24_BRANDS_1))
 def tpcds_q24(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-DS q24 shape (tpcds/q24_1.sql: store purchases in RETURNED
@@ -2853,6 +1640,7 @@ def tpcds_q24(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _q24_paid(spark, sf_dir, _Q24_BRANDS_1)
 
 
+# Kept port (keep-rule 2): cte_materialization_enabled persists ssales.
 @_q("tpcds_q24_2", _q24_sql(_Q24_BRANDS_2))
 def tpcds_q24_2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-DS q24 SECOND benchto variant (tpcds/q24_2.sql — VERDICT r09
@@ -2884,9 +1672,8 @@ def _q24_paid(
                  F.col("p_brand").alias("i_color"))
         .agg(_csum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("netpaid"))
     )
-    from .tpcds import _materialize_cte
-
-    ssales = _materialize_cte(spark, ssales)
+    if spark.conf.get(CTE_MATERIALIZE, "false") == "true":
+        ssales = materialize_stage(CTE_STAGE, ssales)
     threshold = ssales.agg((F.avg("netpaid") * 0.05).alias("thr"))
     out = (
         ssales.filter(F.col("i_color").isin(*brands))
@@ -2924,7 +1711,7 @@ def _q14_2_year_arm_sql(year: int) -> str:
           > (SELECT average_cents FROM avg_sales)"""
 
 
-@_q(
+_sql(
     "tpcds_q14_2",
     f"""
 WITH cross_items AS (
@@ -2947,83 +1734,11 @@ ORDER BY ty.i_brand
 LIMIT 100
 """,
 )
-def tpcds_q14_2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q14 SECOND benchto variant (tpcds/q14_2.sql — VERDICT r09
-    #5): the same cross_items INTERSECT gate and avg_sales scalar
-    threshold as q14_1 (operators/tpcds.py:tpcds_q14), but the final
-    query compares THE SAME CALENDAR WEEK this year vs last year — two
-    gated weekly rollups self-joined on the item attribute. Adaptation:
-    channels = returnflag arms, item attribute = part brand, week =
-    ISO week 6 (both Spark ``weekofyear`` and DuckDB ``weekofyear`` are
-    ISO-8601; week 6 sits mid-quarter, away from the week-53 boundary
-    ambiguity). Scale: cross_items stays a distinct-key INTERSECT
-    (narrow semi-join side), avg_sales a 1-row broadcast, and each year
-    arm is one week-pruned scan + brand rollup — the year-over-year join
-    is brand-cardinality (25 rows)."""
-    li, orders, part = _t(spark, sf_dir, "lineitem", "orders", "part")
-    lo = li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-    yrs = lo.filter(F.year("o_orderdate").between(1996, 1998))
-
-    def items(flag: str) -> DataFrame:
-        return (
-            yrs.filter(F.col("l_returnflag") == flag)
-            .select("l_partkey").distinct()
-        )
-
-    cross_items = items("N").intersect(items("A")).intersect(items("R"))
-    avg_sales = yrs.agg(
-        (
-            F.sum(
-                F.round(
-                    F.col("l_quantity")
-                    * (F.col("l_extendedprice") / F.col("l_quantity"))
-                    * 100
-                )
-            ).cast("bigint")
-            / F.count("*")
-        ).alias("average_cents")
-    )
-
-    def year_arm(year: int) -> DataFrame:
-        wk = lo.filter(
-            (F.year("o_orderdate") == year)
-            & (F.weekofyear("o_orderdate") == 6)
-        )
-        return (
-            wk.join(cross_items, "l_partkey", "left_semi")
-            .join(part, F.col("l_partkey") == F.col("p_partkey"))
-            .groupBy(F.col("p_brand").alias("i_brand"))
-            .agg(
-                F.sum(F.round(F.col("l_extendedprice") * 100))
-                .cast("bigint")
-                .alias("sales_cents"),
-                F.count("*").cast("bigint").alias("number_sales"),
-            )
-            .crossJoin(F.broadcast(avg_sales))
-            .filter(F.col("sales_cents") > F.col("average_cents"))
-            .select("i_brand", "sales_cents", "number_sales")
-        )
-
-    ty = year_arm(1998).alias("ty")
-    ly = year_arm(1997).alias("ly")
-    return (
-        ty.join(ly, F.col("ty.i_brand") == F.col("ly.i_brand"))
-        .select(
-            F.lit("store").alias("channel"),
-            F.col("ty.i_brand").alias("i_brand"),
-            F.col("ty.sales_cents").alias("ty_sales_cents"),
-            F.col("ty.number_sales").alias("ty_number_sales"),
-            F.col("ly.sales_cents").alias("ly_sales_cents"),
-            F.col("ly.number_sales").alias("ly_number_sales"),
-        )
-        .orderBy("i_brand")
-        .limit(100)
-    )
 
 
 # --- q23_2: best-customer frequent-item sales per customer name ------------
 
-@_q(
+_sql(
     "tpcds_q23_2",
     """
 WITH frequent_items AS (
@@ -3074,71 +1789,3 @@ ORDER BY c_last_name ASC, sales_cents ASC
 LIMIT 100
 """,
 )
-def tpcds_q23_2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q23 SECOND benchto variant (tpcds/q23_2.sql — VERDICT r09
-    #5): the same frequent_ss_items + best_ss_customer gate CTEs as
-    q23_1 (operators/tpcds.py:tpcds_q23), but the final query reports
-    PER-CUSTOMER-NAME sales from TWO channels UNION ALL'd (reference:
-    catalog + web; adaptation: the 'A' and 'R' returnflag arms), ordered
-    by name then sales. Frequency granularity deviation: q23_1 keeps the
-    reference's per-(item, DAY) count>4, which the synthetic fixture's
-    density makes an empty set (~30 sales/part over 7 years — measured:
-    zero qualifying days at sf0.01); the _2 twin counts per (item, YEAR)
-    so the gate actually gates (1.8k qualifying parts at sf0.01). Scale:
-    the gate CTEs are computed once and feed both arms as broadcastable
-    distinct-key semi-join sides (AQE reuses the exchanges); each arm is
-    one month-pruned fact pass; the final sort is a top-100
-    TakeOrdered."""
-    li, orders, cust = _t(spark, sf_dir, "lineitem", "orders", "customer")
-    lo = li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-    years = lo.filter(F.year("o_orderdate").between(1995, 1998))
-    frequent = (
-        years.groupBy("l_partkey", F.year("o_orderdate"))
-        .agg(F.count("*").alias("cnt"))
-        .filter(F.col("cnt") > 4)
-        .select(F.col("l_partkey").alias("item_sk"))
-        .distinct()
-    )
-    csales = years.groupBy("o_custkey").agg(
-        F.sum(
-            F.round(
-                F.col("l_quantity")
-                * (F.col("l_extendedprice") / F.col("l_quantity"))
-                * 100
-            )
-        ).cast("bigint").alias("csales")
-    )
-    cmax = csales.agg(F.max("csales").alias("cmax"))
-    ssales = lo.groupBy("o_custkey").agg(
-        F.sum(F.round(F.col("l_extendedprice") * 100))
-        .cast("bigint")
-        .alias("ssales")
-    )
-    best = (
-        ssales.crossJoin(F.broadcast(cmax))
-        .filter(F.col("ssales") * 2 > F.col("cmax"))
-        .select("o_custkey")
-    )
-    month = lo.filter(
-        (F.year("o_orderdate") == 1996) & (F.month("o_orderdate") == 2)
-    )
-
-    def arm(flag: str) -> DataFrame:
-        return (
-            month.filter(F.col("l_returnflag") == flag)
-            .join(frequent, month.l_partkey == frequent.item_sk, "left_semi")
-            .join(best, "o_custkey", "left_semi")
-            .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-            .groupBy(F.col("c_name").alias("c_last_name"))
-            .agg(
-                F.sum(F.round(F.col("l_extendedprice") * 100))
-                .cast("bigint")
-                .alias("sales_cents")
-            )
-        )
-
-    return (
-        arm("A").unionAll(arm("R"))
-        .orderBy(F.asc("c_last_name"), F.asc("sales_cents"))
-        .limit(100)
-    )

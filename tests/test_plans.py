@@ -264,7 +264,7 @@ def test_srp_bucket_single_execution(spark, sf_dir):
 
 
 def test_no_cartesian_across_tpc_corpus(spark, sf_dir):
-    """Blanket plan-hygiene gate over ALL 121 TPC-H + TPC-DS queries: no
+    """Blanket plan-hygiene gate over ALL 125 TPC-H + TPC-DS queries: no
     CartesianProduct anywhere (BroadcastNestedLoopJoin is allowed — it is
     the 1-row scalar-subquery attach pattern). Sole exception: tpcds_q77,
     whose CROSS JOIN of the catalog sales/returns CTEs is the reference's

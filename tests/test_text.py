@@ -262,3 +262,17 @@ def test_bpe_pair_counts_match_local_recount(spark, sf_dir):
                 c[w[i:i + 2]] += 1
     expect = sorted(c.items(), key=lambda kv: (-kv[1], kv[0]))[: tx._BPE_TOPK]
     assert [(r.pair, r.n_occurrences) for r in rows] == expect
+
+
+def test_ngram_novelty_with_unit_suffixed_split_size(spark, sf_dir):
+    """spark.sql.files.maxPartitionBytes in Spark's own unit spelling
+    ("64m") must not break the narrow-scan fan-out decision."""
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "64m")
+    try:
+        problems = check_query(spark, "text_ngram_novelty", tx.QUERIES["text_ngram_novelty"],
+                               tx.ORACLE["text_ngram_novelty"], sf_dir)
+    finally:
+        spark.conf.set(key, old)
+    assert not problems, problems

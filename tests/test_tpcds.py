@@ -57,14 +57,13 @@ def test_tpcds_q11_cte_materialization_prop(spark, sf_dir):
         from presto_db_spark.operators.stagecache import release_stages
 
         release_stages()
-        tpcds.release_materialized_ctes()
         spark.catalog.clearCache()
         jsc = spark.sparkContext._jsc.sc()
         base = jsc.getPersistentRDDs().size()
         tpcds.QUERIES["tpcds_q11"](spark, sf_dir)
         tpcds.QUERIES["tpcds_q04"](spark, sf_dir)
         assert jsc.getPersistentRDDs().size() <= base + 1
-        tpcds.release_materialized_ctes()
+        release_stages()
         assert jsc.getPersistentRDDs().size() <= base
     finally:
         eng.set_session("cte_materialization_enabled", False)

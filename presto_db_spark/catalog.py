@@ -1,5 +1,9 @@
 """Catalog bootstrap: register the driver's parquet tables as temp views.
 
+Also the scan helpers every operator family shares: ``load_tables``
+(several tables at once), ``fanout`` (spread a narrow scan before
+CPU-heavy work) and ``small_df`` (a small literal table as one partition).
+
 Mirrors the reference's connector metadata layer
 (``presto-main/.../metadata/MetadataManager.java``,
 ``presto-tpch/.../TpchMetadata.java:92``) — but in Spark the catalog IS the
@@ -11,6 +15,8 @@ nothing here assumes single-file tables.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -60,6 +66,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
+    """``load_table`` for each name, in order."""
+    return [load_table(spark, sf_dir, n) for n in names]
+
+
 def register_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Register every driver table as a temp view; returns name→DataFrame."""
     out: dict[str, DataFrame] = {}
@@ -68,6 +79,42 @@ def register_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         df.createOrReplaceTempView(name)
         out[name] = df
     return out
+
+
+def fanout(df: DataFrame, *keys: str) -> DataFrame:
+    """Spread a narrow scan across the cores ahead of CPU-heavy work (an
+    explode, an Arrow UDF, a codec): ``repartition(defaultParallelism,
+    *keys)`` — hashed on ``keys``, round-robin without — unless the scan
+    already arrives as at least that many splits, i.e.
+    ``max(files, bytes // maxPartitionBytes) >= defaultParallelism``.
+
+    Why the rule holds: Spark's split planner cuts every file at
+    ``spark.sql.files.maxPartitionBytes``, so that maximum is the task
+    count the scan runs with. Once it reaches the parallelism the work
+    is already full-width and a repartition would only add a shuffle of
+    the raw input. Below it, a small one-file input runs its CPU-heavy
+    stage on one task while the other cores idle, and one exchange of
+    the input is cheap next to the work it spreads (text_ngram_novelty
+    at sf0.1: 3.6 -> 1.3 s). The decision reads only file metadata
+    (``inputFiles()`` plus a stat; ``getNumPartitions()`` would force a
+    plan-to-RDD conversion, ~0.8 s cold), never the data; a file that
+    cannot be stat'ed locally (object storage) is assumed to split."""
+    spark = df.sparkSession
+    par = spark.sparkContext.defaultParallelism
+    files = df.inputFiles()
+    if len(files) >= par:
+        return df
+    # the typed value: the conf string may carry a unit suffix ("64m")
+    max_split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    total = 0
+    for f in files:
+        try:
+            total += os.path.getsize(f.removeprefix("file:"))
+        except OSError:
+            return df  # object storage: assume it splits
+    if total // max_split >= par:
+        return df
+    return df.repartition(par, *keys)
 
 
 def small_df(spark: SparkSession, data, schema) -> DataFrame:

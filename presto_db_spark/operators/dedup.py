@@ -25,6 +25,10 @@ Training-data-pipeline dedup (BASELINE.json north-star) designed for
   at any partitioning; unrolled-CTE oracle) over the supply bipartite
   graph — the iterative-graph-algorithm primitive next to the CC loop.
 
+Every CPU-heavy stage over the raw corpus (the MinHash signature UDF,
+the SimHash explode) reads it through ``catalog.fanout``, the engine's
+one rule for spreading a narrow scan across the cores.
+
 The reference has no near-dup machinery (nothing comparable exists in
 /root/reference — checked); these are the extension operators the project
 brief adds on top of Presto parity.
@@ -32,18 +36,16 @@ brief adds on top of Presto parity.
 
 from __future__ import annotations
 
-import os
 import re
-from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..catalog import load_table
+from ..catalog import fanout, load_table
+from ..registry import family
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE: dict[str, str] = {}
+QUERIES, ORACLE, _q = family()
 
 MOD50 = 2**50  # rolling-hash modulus (see operators/text.py)
 MERSENNE31 = 2**31 - 1  # minhash permutation modulus
@@ -52,48 +54,6 @@ MERSENNE31 = 2**31 - 1  # minhash permutation modulus
 # the oracle SQL embeds the same numbers.
 MINHASH_PERMS = [(2 * k + 1, 12289 * (k + 1) % MERSENNE31) for k in range(16)]
 N_BANDS, ROWS_PER_BAND = 4, 4
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
-
-
-def _fanout(raw_docs: DataFrame, spark: SparkSession) -> DataFrame:
-    """Fan a small scan out so a CPU-bound Arrow UDF gets real parallelism.
-
-    A small corpus arrives as one file split; conditional on the scan's
-    natural split count so a 100 TB input (millions of splits) pays NO
-    extra text shuffle. ``inputFiles()`` is a pure metadata probe
-    (``df.rdd.getNumPartitions()`` would force plan→RDD conversion,
-    ~0.8 s cold per fresh lineage). Fan-out is sized from the input
-    BYTES, not blindly to defaultParallelism: 32 tasks over a few
-    thousand docs pay more in per-task scheduling + Arrow python-worker
-    round-trips than they recover (measured r06 at sf0.1: 8 partitions
-    ≈ 0.3 s faster than 32); ~256 KB of compressed text per task keeps
-    every worker busy while the corpus is small, and large corpora hit
-    the ``defaultParallelism`` cap.
-    """
-    par = spark.sparkContext.defaultParallelism
-    files = raw_docs.inputFiles()
-    if len(files) >= par:
-        return raw_docs
-    try:
-        nbytes = sum(
-            os.path.getsize(f[len("file:"):] if f.startswith("file:") else f)
-            for f in files
-        )
-        fan = min(par, max(8, nbytes // (256 * 1024)))
-    except OSError:  # non-local fs — metadata probe unavailable
-        fan = par
-    return raw_docs.repartition(int(fan), "doc_id")
 
 
 def _shingles(col: Column, n: int = 3) -> Column:
@@ -405,8 +365,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     raw_docs = load_table(spark, sf_dir, "documents")
     # The signature UDF is CPU-bound: make sure it runs with real
-    # parallelism (see _fanout for the sizing rationale).
-    docs = _fanout(raw_docs, spark)
+    # parallelism (catalog.fanout).
+    docs = fanout(raw_docs, "doc_id")
     # The full-corpus signature is NARROW (doc_id + 16 longs ≈ 140 B/doc)
     # and fans into both sides of the band self-join. ReuseExchange cannot
     # be relied on here — AQE turns the self-join into a broadcast join, so
@@ -513,9 +473,7 @@ FROM sig GROUP BY simhash
 
 @_q("dedup_simhash", _SIMHASH_SQL)
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    )
+    docs = fanout(load_table(spark, sf_dir, "documents"), "doc_id")
     tok = docs.select(
         "doc_id",
         F.explode(F.array_distinct(F.split(F.trim("text"), r"\s+"))).alias("t"),
@@ -895,7 +853,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     existing match (max Jaccard, ties to the smallest existing id)."""
     raw_docs = load_table(spark, sf_dir, "documents")
     is_inc = (F.col("doc_id") % INC_MOD) == 0
-    docs = _fanout(raw_docs, spark)
+    docs = fanout(raw_docs, "doc_id")
 
     # ONE signature pass over all docs (production: existing signatures are
     # read from the persisted index; here both sides derive from the same
@@ -1031,7 +989,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     production remedy is the ``dedup_substring_spans`` window pass —
     documented trade-off, not a silent gap."""
     raw_docs = load_table(spark, sf_dir, "documents")
-    docs = _fanout(raw_docs, spark)
+    docs = fanout(raw_docs, "doc_id")
     sig_mh = (
         docs.select("doc_id", _minhash_mh_pd()(F.col("text")).alias("mh"))
         .select(
@@ -2074,9 +2032,7 @@ def layout_simhash_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
     (e6 Jaccard, integer mean)."""
     from .distrank import global_index
 
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    )
+    docs = fanout(load_table(spark, sf_dir, "documents"), "doc_id")
     tok = docs.select(
         "doc_id",
         F.explode(F.array_distinct(F.split(F.trim("text"), r"\s+"))).alias("t"),

@@ -20,27 +20,13 @@ Dialect notes (cross-engine determinism):
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .tpch import _t
+from ..catalog import load_tables
+from ..registry import family
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
+QUERIES, ORACLE, _q = family()
 
 
 # --- string family ----------------------------------------------------------
@@ -65,7 +51,7 @@ FROM part
 """,
 )
 def func_string(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (part,) = _t(spark, sf_dir, "part")
+    (part,) = load_tables(spark, sf_dir, "part")
     return part.select(
         "p_partkey",
         F.length("p_name").alias("len"),
@@ -97,7 +83,7 @@ FROM documents WHERE doc_id < 50
 """,
 )
 def func_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = load_tables(spark, sf_dir, "documents")
     return docs.filter(F.col("doc_id") < 50).select(
         "doc_id",
         F.col("text").rlike("join.*scan").alias("has_seq"),
@@ -128,7 +114,7 @@ FROM orders WHERE o_orderkey < 200
 """,
 )
 def func_datetime(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = load_tables(spark, sf_dir, "orders")
     return orders.filter(F.col("o_orderkey") < 200).select(
         "o_orderkey",
         F.year("o_orderdate").alias("y"),
@@ -167,7 +153,7 @@ FROM lineitem WHERE l_orderkey < 100
 """,
 )
 def func_math(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     return li.filter(F.col("l_orderkey") < 100).select(
         "l_orderkey",
         "l_linenumber",
@@ -198,7 +184,7 @@ FROM events GROUP BY event_type
 """,
 )
 def func_json(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (events,) = _t(spark, sf_dir, "events")
+    (events,) = load_tables(spark, sf_dir, "events")
     return events.groupBy("event_type").agg(
         F.sum(F.get_json_object("props", "$.k").cast("long")).alias("k_sum"),
         F.count("*").alias("cnt"),
@@ -226,7 +212,7 @@ def func_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array scalars over embeddings. The 3-element slice is emitted as
     three scalar columns — the driver's pandas canonicalizer cannot sort
     top-level list columns (r05 lesson), and raw floats stay bit-exact."""
-    (emb,) = _t(spark, sf_dir, "embeddings")
+    (emb,) = load_tables(spark, sf_dir, "embeddings")
     e = F.col("embedding")
     return emb.filter(F.col("vec_id") < 100).select(
         "vec_id",
@@ -267,7 +253,7 @@ FROM customer
 """,
 )
 def func_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (cust,) = _t(spark, sf_dir, "customer")
+    (cust,) = load_tables(spark, sf_dir, "customer")
     return cust.select(
         "c_custkey",
         F.when(F.col("c_acctbal") < 0, "neg")
@@ -300,7 +286,7 @@ FROM lineitem GROUP BY l_returnflag
 """,
 )
 def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.round(F.stddev_samp("l_quantity"), 6).alias("sd_s"),
         F.round(F.stddev_pop("l_quantity"), 6).alias("sd_p"),
@@ -327,7 +313,7 @@ FROM lineitem GROUP BY l_returnflag
 """,
 )
 def agg_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.round(F.percentile("l_quantity", F.lit(0.25)), 6).alias("p25"),
         F.round(F.percentile("l_quantity", F.lit(0.5)), 6).alias("p50"),
@@ -351,7 +337,7 @@ FROM customer GROUP BY c_nationkey
 """,
 )
 def agg_minmax_by(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (cust,) = _t(spark, sf_dir, "customer")
+    (cust,) = load_tables(spark, sf_dir, "customer")
     # Fold the tie-break key into the ordering value as exact integer math
     # (Presto min_by/max_by pick an arbitrary row on ties — we pin it).
     key = F.round(F.col("c_acctbal") * 100).cast("long") * 1000000 + F.col("c_custkey")
@@ -377,7 +363,7 @@ FROM lineitem GROUP BY l_returnflag
 """,
 )
 def agg_bool_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.bool_and(F.col("l_quantity") > 0).alias("all_pos"),
         F.bool_or(F.col("l_discount") > 0.09).alias("any_big_disc"),
@@ -410,7 +396,7 @@ def agg_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     error-bound booleans, and the oracle pins them TRUE — so the driver's
     value-hash now verifies the estimates land inside their documented
     bounds instead of recording rows-only."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     # exact reference median via the exact percentile aggregate: its
     # state is a value->count map bounded by price cardinality, while
     # percentile_approx at accuracy INT_MAX buffers O(n) samples per

@@ -28,28 +28,14 @@ order-stable.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .tpch import _t
+from ..catalog import load_tables
+from ..registry import family
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
+QUERIES, ORACLE, _q = family()
 
 
 # --- string family, part 2 ---------------------------------------------------
@@ -78,7 +64,7 @@ def func_string_extra(spark: SparkSession, sf_dir: str) -> DataFrame:
     """chr/codepoint/translate/repeat/left/right/starts-ends-with/initcap and
     hamming_distance (``StringFunctions.java``; ``HammingDistanceFunction``)
     — hamming as a pure zip_with expression, no UDF."""
-    (part,) = _t(spark, sf_dir, "part")
+    (part,) = load_tables(spark, sf_dir, "part")
     a = F.substring(F.rpad(F.col("p_name"), 5, "x"), 1, 5)
     b = F.substring(F.rpad(F.col("p_brand"), 5, "x"), 1, 5)
     ham = F.aggregate(
@@ -130,7 +116,7 @@ FROM part WHERE p_partkey < 300
 def func_binary_bitwise(spark: SparkSession, sf_dir: str) -> DataFrame:
     """md5/sha256/hex/base64 (``VarbinaryFunctions.java``) + bitwise and/or/
     xor/shift/bit_count/not (``BitwiseFunctions.java``)."""
-    (part,) = _t(spark, sf_dir, "part")
+    (part,) = load_tables(spark, sf_dir, "part")
     pk = F.col("p_partkey")
     sz = F.col("p_size").cast("long")
     return part.filter(pk < 300).select(
@@ -172,7 +158,7 @@ def func_hash_engine(spark: SparkSession, sf_dir: str) -> DataFrame:
     values, stable across runs and versions) plus structural invariants
     (injectivity over the 100-part sample, bucket range, sha1 shape) as
     in-query booleans the oracle requires TRUE."""
-    (part,) = _t(spark, sf_dir, "part")
+    (part,) = load_tables(spark, sf_dir, "part")
     hashed = part.filter(F.col("p_partkey") < 100).select(
         "p_partkey",
         "p_name",
@@ -218,7 +204,7 @@ def func_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     transform_values/map_zip_with (``pm/operator/scalar/Map*.java``).
     The oracle states the expected values directly (DuckDB's map surface
     differs); outputs are scalars/sorted arrays so hashing is stable."""
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = load_tables(spark, sf_dir, "orders")
     m = F.create_map(
         F.lit("price"), F.col("o_totalprice"),
         F.lit("key"), F.col("o_orderkey").cast("double"),
@@ -257,7 +243,7 @@ def func_struct_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``SequenceFunction.java``), zip_with (``ZipFunction.java``),
     array_repeat/flatten (``Array*.java``). Sequence sums have closed-form
     oracles; the date sequence length equals floor(days/7)+1."""
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = load_tables(spark, sf_dir, "orders")
     ok = F.col("o_orderkey")
     n = F.lit(1) + ok % 3
     return orders.filter(ok < 100).select(
@@ -298,7 +284,7 @@ def func_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     """url_extract_protocol/host/path/query/parameter + url_encode
     (``UrlFunctions.java``) via Spark parse_url/url_encode. The oracle
     reconstructs expected parts from the URL's own components."""
-    (cust,) = _t(spark, sf_dir, "customer")
+    (cust,) = load_tables(spark, sf_dir, "customer")
     url = F.concat(
         F.lit("https://shop.example.com/seg/"),
         F.lower("c_mktsegment"),
@@ -337,7 +323,7 @@ FROM customer WHERE c_custkey < 300
 def func_trycast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Presto TRY()/try_cast → NULL-on-error (``TryFunction.java``,
     ``TryCastFunction.java``) via Spark try_cast/try_divide/try_add."""
-    (cust,) = _t(spark, sf_dir, "customer")
+    (cust,) = load_tables(spark, sf_dir, "customer")
     ck = F.col("c_custkey")
     return cust.filter(ck < 300).select(
         "c_custkey",
@@ -382,7 +368,7 @@ def func_math_extra(spark: SparkSession, sf_dir: str) -> DataFrame:
     """width_bucket / to_base / factorial-like / hyperbolics / atan2 / pmod
     (``MathFunctions.java``). DuckDB lacks width_bucket & hyperbolics — the
     oracle computes the definitions."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     d = F.col("l_discount")
     return li.filter(F.col("l_orderkey") < 100).select(
         "l_orderkey",
@@ -439,7 +425,7 @@ def agg_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     (orderkey, linenumber) pairs; Presto map_agg keeps an arbitrary value on
     key collision — we pin it with min() so both engines agree. multimap_agg
     keeps ALL values (sorted entry list)."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     base = li.filter(F.col("l_orderkey") < 500)
     pairs = base.groupBy("l_orderkey", "l_linenumber").agg(F.min("l_quantity").alias("v"))
     m = F.map_from_entries(F.array_sort(F.collect_list(F.struct("l_linenumber", "v"))))
@@ -491,7 +477,7 @@ def agg_hist_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram counts: -Σ p·log2(p). Two-level aggregation — the partial
     (rf, ls) rollup is map-side combinable, so this scales as two cheap
     shuffles of ~|groups| rows regardless of input size."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     counts = li.groupBy("l_returnflag", "l_linestatus").agg(F.count("*").alias("cnt"))
     p = F.col("cnt") / F.sum("cnt").over(Window.partitionBy("l_returnflag"))
     counts = counts.withColumn("p", p)
@@ -531,7 +517,7 @@ def agg_checksum_geomean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """checksum (``ChecksumAggregationFunction.java`` — order-independent
     XOR of per-row hashes; here md5-derived so both engines agree),
     geometric_mean (``GeometricMeanAggregations.java``) and SUM(DISTINCT)."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     row_hash = F.conv(
         F.substring(
             F.md5(
@@ -580,7 +566,7 @@ def agg_moments_regr(spark: SparkSession, sf_dir: str) -> DataFrame:
     moments, matching Spark) and regr_slope/intercept/count
     (``DoubleRegressionAggregation.java``). The oracle computes the moment
     definitions (DuckDB's skewness/kurtosis are sample-adjusted)."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.round(F.skewness("l_quantity"), 6).alias("skew"),
         F.round(F.kurtosis("l_quantity"), 6).alias("kurt"),
@@ -609,7 +595,7 @@ def agg_arrays_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice(sort_array(collect_list))), set_agg, and string_agg
     (canonical sorted-join form). Ties pinned by folding the key into an
     exact BIGINT, as in agg_minmax_by."""
-    (cust,) = _t(spark, sf_dir, "customer")
+    (cust,) = load_tables(spark, sf_dir, "customer")
     key = F.round(F.col("c_acctbal") * 100).cast("long") * 1000000 + F.col("c_custkey")
     withk = cust.select(F.col("c_nationkey").cast("int").alias("nat"),
                         "c_custkey", "c_mktsegment", key.alias("k"))
@@ -654,7 +640,7 @@ def agg_map_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     value on key collision; we pin max() so both engines agree. Emulated
     the scalable way: explode the per-row maps and re-aggregate by key
     (map-side combinable), then canonicalize to key-sorted arrays."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     per_order = (
         li.filter(F.col("l_orderkey") < 2000)
         .groupBy("l_returnflag", "l_orderkey", "l_linestatus")
@@ -690,7 +676,7 @@ def agg_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle checks the merge's ACCURACY: the merged estimate must land
     within 5% of the exact global distinct count (in-query boolean pinned
     TRUE by the oracle) alongside the exact group count and total."""
-    (cust,) = _t(spark, sf_dir, "customer")
+    (cust,) = load_tables(spark, sf_dir, "customer")
     per_nation = cust.groupBy("c_nationkey").agg(
         F.hll_sketch_agg("c_custkey").alias("sk"),
         F.countDistinct("c_custkey").alias("exact_n"),

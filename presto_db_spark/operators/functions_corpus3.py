@@ -17,29 +17,15 @@
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .tpch import _t
+from ..catalog import load_tables
+from ..registry import family
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE: dict[str, str] = {}
+QUERIES, ORACLE, _q = family()
 
 MOD31 = (1 << 31) - 1  # Mersenne modulus: h*prime stays well under 2^63
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
 
 
 @_q(
@@ -64,7 +50,7 @@ def agg_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``exp(sum(log))``-style reducible — the collect_list form here is the
     *generic* (arbitrary lambda) emulation, bounded by the group size.
     """
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     x = F.col("l_quantity").cast("long") % 97 + 1
     return (
         li.filter(F.col("l_orderkey") < 2000)
@@ -100,7 +86,7 @@ FROM s
 )
 def func_wilson(spark: SparkSession, sf_dir: str) -> DataFrame:
     """wilson_interval_lower/upper(successes, trials, z) at z=1.96."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     agg = li.groupBy("l_returnflag").agg(
         F.count_if(F.col("l_discount") > 0.05).cast("double").alias("pos"),
         F.count("*").cast("double").alias("n"),
@@ -139,7 +125,7 @@ FROM ips
 def func_ip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IPv4 string ↔ integer and /24 prefix — the ipaddress/ipprefix family
     as pure expressions (split + integer math; no UDF)."""
-    (cust,) = _t(spark, sf_dir, "customer")
+    (cust,) = load_tables(spark, sf_dir, "customer")
     ck = F.col("c_custkey")
     ip = F.concat(
         F.lit("10."),
@@ -225,7 +211,7 @@ FROM customer WHERE c_custkey < 400
 def func_inverse_normal_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """inverse_normal_cdf (``MathFunctions.java``) — Acklam's approximation
     as a pure expression; the oracle evaluates the identical fragment."""
-    (cust,) = _t(spark, sf_dir, "customer")
+    (cust,) = load_tables(spark, sf_dir, "customer")
     return cust.filter(F.col("c_custkey") < 400).select(
         "c_custkey",
         F.round(F.expr(_P_EXPR), 6).alias("p"),
@@ -250,7 +236,7 @@ def agg_bit_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """bitwise_and_agg / bitwise_or_agg (``BitwiseAndAggregation.java``,
     ``BitwiseOrAggregation.java``) plus json_array_length / json_size
     (``JsonFunctions.java``) over synthesized JSON documents."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     k = (F.col("l_orderkey") % 4096).cast("long")
     jarr = F.concat(F.lit("["), F.col("l_linenumber").cast("string"), F.lit(",2,3]"))
     jobj = F.concat(
@@ -345,7 +331,7 @@ def func_bigendian_fnv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """to_big_endian_64/32 as the canonical zero-padded hex image, plus an
     FNV-1-style portable polynomial hash (32-bit FNV prime, Mersenne-31-reduced
     so every intermediate product stays below 2^63 in both engines)."""
-    (part,) = _t(spark, sf_dir, "part")
+    (part,) = load_tables(spark, sf_dir, "part")
     fnv = F.aggregate(
         F.split(F.col("p_name"), ""),
         F.lit(2166136261 % MOD31).cast("long"),
@@ -438,7 +424,7 @@ def agg_classification_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOTH sides) — the driver's pandas canonicalizer cannot sort top-level
     list columns (r05 ERR), and integer-div micros are bit-identical
     across engines where round(double, 6) is not guaranteed to be."""
-    (cust,) = _t(spark, sf_dir, "customer")
+    (cust,) = load_tables(spark, sf_dir, "customer")
     from pyspark.sql.window import Window as W
 
     scored = cust.select(
@@ -535,7 +521,7 @@ def func_color_bar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..functions import color as C
 
-    (cust,) = _t(spark, sf_dir, "customer")
+    (cust,) = load_tables(spark, sf_dir, "customer")
     ck = F.col("c_custkey")
     p = cust.filter(ck < 200).select(
         ck.alias("id"),
@@ -587,7 +573,7 @@ def func_data_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     is covered by the golden-pair scalar tests)."""
     from ..functions.compat import ensure_functions
 
-    (cust,) = _t(spark, sf_dir, "customer")
+    (cust,) = load_tables(spark, sf_dir, "customer")
     ensure_functions(spark, {"parse_presto_data_size"})
     cust.filter(F.col("c_custkey") < 2000).createOrReplaceTempView("_ds_cust")
     return spark.sql("""
@@ -668,7 +654,7 @@ def agg_differential_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-partition sort window is over 1024 rows by construction."""
     from pyspark.sql import Window
 
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     width = (_DE_HI - _DE_LO) / _DE_BINS
     bins = li.groupBy(
         F.least(

@@ -23,30 +23,16 @@ oracle value-checks everything.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .tpch import _t
+from ..catalog import load_tables
+from ..registry import family
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE: dict[str, str] = {}
+QUERIES, ORACLE, _q = family()
 
 RADIUS = 3.0
 GRID = RADIUS  # cell width == radius → adjacency covers all candidate pairs
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
 
 
 # Deterministic synthetic coordinates in a 100×100 plane.
@@ -55,7 +41,7 @@ _Y_SQL = "CAST((c_custkey * 73) % 1000 AS DOUBLE) / 10"
 
 
 def _points(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (cust,) = _t(spark, sf_dir, "customer")
+    (cust,) = load_tables(spark, sf_dir, "customer")
     ck = F.col("c_custkey")
     return cust.select(
         ck.alias("pid"),
@@ -289,7 +275,7 @@ def geo_polygon_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``presto-geospatial/.../GeoFunctions.java``): per-nation pentagon,
     per-customer synthetic point, containment counted through an equi-join
     on nationkey (never a cross join)."""
-    nation, cust = _t(spark, sf_dir, "nation", "customer")
+    nation, cust = load_tables(spark, sf_dir, "nation", "customer")
     nk = F.col("n_nationkey")
     cx = ((nk * 17) % 80 + 10).cast("double")
     cy = ((nk * 29) % 80 + 10).cast("double")
@@ -359,7 +345,7 @@ def geo_polygon_join(spark: SparkSession, sf_dir: str) -> DataFrame:
       candidates bounded per cell), then exact crossing-number containment
       filters — never a cross join. The oracle IS the naive theta-join, so
       the hash match proves blocking loses no pairs."""
-    nation, cust = _t(spark, sf_dir, "nation", "customer")
+    nation, cust = load_tables(spark, sf_dir, "nation", "customer")
     nk = F.col("n_nationkey")
     cx = ((nk * 17) % 80 + 10).cast("double")
     cy = ((nk * 29) % 80 + 10).cast("double")
@@ -459,7 +445,7 @@ def geo_bing_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     JVM expressions — the web-mercator forward/backward transforms and
     the quadkey bit-interleave spelled as DIV-by-2^k arithmetic that
     both engines evaluate bit-identically."""
-    cust = _t(spark, sf_dir, "customer")[0]
+    cust = load_tables(spark, sf_dir, "customer")[0]
     pts = cust.filter(F.col("c_custkey") < 2000).select(
         F.col("c_custkey").alias("pid"),
         ((F.col("c_custkey") * 73 % 17000).cast("double") / 100 - 85).alias("lat"),

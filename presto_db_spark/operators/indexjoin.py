@@ -28,15 +28,13 @@ reference's optimizer applies, never a silent full scan.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..registry import family
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE: dict[str, str] = {}
+QUERIES, ORACLE, _q = family()
 
 MAX_INDEX_KEYS = 10_000  # applicability gate (IndexJoinOptimizer analog)
 
@@ -79,18 +77,6 @@ FROM probe p JOIN orders o ON o.o_custkey = p.c_custkey
 GROUP BY p.c_custkey, p.c_name
 ORDER BY p.c_custkey
 """
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
 
 
 @_q("join_index_lookup", _IDX_SQL)

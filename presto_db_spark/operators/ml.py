@@ -32,28 +32,14 @@ evaluate identically.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from .tpch import _t
+from ..catalog import load_tables
+from ..registry import family
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
+QUERIES, ORACLE, _q = family()
 
 
 # --- grouped OLS regression --------------------------------------------------
@@ -95,7 +81,7 @@ def ml_regress_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle moves 5 numbers per group).  Closed form evaluated in a
     fixed IEEE order; DECIMAL(38,0) carries the cross products the
     oracle holds in HUGEINT (both exact at ~1e22)."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     xq = F.round(F.col("l_quantity") * 100).cast("long")
     y = F.round(F.col("l_extendedprice") * 100).cast("long")
     s = li.groupBy(F.col("l_returnflag").alias("flag")).agg(
@@ -165,7 +151,7 @@ def ml_classify_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapses the k candidates map-side — no window sort, and the only
     shuffle is the final label count.  Centroids are exact-integer sums
     divided once in IEEE double (identical in the oracle)."""
-    cust, supp = _t(spark, sf_dir, "customer", "supplier")
+    cust, supp = load_tables(spark, sf_dir, "customer", "supplier")
     cen = cust.groupBy(F.col("c_mktsegment").alias("label")).agg(
         (
             F.sum(F.round(F.col("c_acctbal") * 100).cast("long")).cast("double")
@@ -278,7 +264,7 @@ def ml_evaluate_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal wherever the double arithmetic is not on a tie knife-edge).
     Truth and prediction stay distributed; only per-class counters
     (the reference's own aggregation state) reach the driver."""
-    cust, = _t(spark, sf_dir, "customer")
+    cust, = load_tables(spark, sf_dir, "customer")
     cen = cust.groupBy(F.col("c_mktsegment").alias("label")).agg(
         (
             F.sum(F.round(F.col("c_acctbal") * 100).cast("long")).cast("double")
@@ -424,7 +410,7 @@ def ml_linear_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     internal only, the output columns stay BIGINT): n·sxy·10⁶ crosses
     10¹⁹ already at sf0.01, so the wide type is a correctness
     requirement, not headroom polish."""
-    li = _t(spark, sf_dir, "lineitem")[0]
+    li = load_tables(spark, sf_dir, "lineitem")[0]
     pts = li.select(
         F.col("l_returnflag").alias("grp"),
         F.col("l_quantity").cast("long").alias("x"),
@@ -534,7 +520,7 @@ def ml_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference anchor: presto-ml/src/main/java/com/facebook/presto/ml/
     LearnClassifierAggregation.java (single-node trainer this replaces)."""
-    docs = _t(spark, sf_dir, "documents")[0].filter(F.trim("text") != "")
+    docs = load_tables(spark, sf_dir, "documents")[0].filter(F.trim("text") != "")
     tok = docs.select(
         "doc_id",
         "lang",
@@ -686,7 +672,7 @@ def ml_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket vocabulary, ~150 rows here), and the final ranking is a
     TakeOrderedAndProject.  Deeper trees iterate this operator per node
     on filtered partitions."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     pos = F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("pos")
     pts = li.select(
         F.expr(
@@ -824,7 +810,7 @@ def ml_logistic_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same cached scan; the update math never touches data size.
     BIGINT bound: |err| <= 1e6, so G_1 <= 1e6*50*rows — safe past 1e11
     rows."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     pts = li.select(
         F.expr("CAST(round(l_quantity) AS BIGINT) - 25").alias("x1"),
         F.expr(
@@ -988,7 +974,7 @@ def ml_kfold_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     (value x fold) grid, prefix windows, per-fold argmin, and held-out
     evaluation all run on that aggregate — the 100 TB cost is the scan,
     exactly once."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     y = F.when(F.expr(_CV_TEACHER), 1).otherwise(0)
     fold = F.expr(f"CAST(l_orderkey % {_CV_FOLDS} AS INT)")
     pts = li.select(
@@ -1546,7 +1532,7 @@ def ml_multiple_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 128-bit margin holds through ~sf 1 (det numerators reach ~2e37
     at sf 1 — same documented envelope as the single-feature op).
     Scale: ONE data pass; the solve is O(1) per group."""
-    li = _t(spark, sf_dir, "lineitem")[0]
+    li = load_tables(spark, sf_dir, "lineitem")[0]
     dec = "decimal(38,0)"
     q = F.col("l_quantity").cast("long")
     disc = F.round(F.col("l_discount") * 100).cast("long")
@@ -1740,7 +1726,7 @@ def ml_lift_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
     decile table; the cumulative window runs on 10 rows."""
     from .distrank import global_index
 
-    orders = _t(spark, sf_dir, "orders")[0]
+    orders = load_tables(spark, sf_dir, "orders")[0]
     cust = orders.groupBy(F.col("o_custkey").alias("ck")).agg(
         F.sum(F.round(F.col("o_totalprice") * 100)).cast("long").alias("score"),
         F.max(
@@ -1825,7 +1811,7 @@ def ml_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact-side count groupBy (map-side combinable, category
     cardinality rows) + a 1-row broadcast prior — the encoding never
     touches the fact table twice."""
-    orders, cust = _t(spark, sf_dir, "orders", "customer")
+    orders, cust = load_tables(spark, sf_dir, "orders", "customer")
     base = orders.join(
         cust, F.col("o_custkey") == F.col("c_custkey")
     ).select(
@@ -1925,7 +1911,7 @@ def ml_psi_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything after is a 10-row relation."""
     from .distrank import global_index
 
-    orders = _t(spark, sf_dir, "orders")[0]
+    orders = load_tables(spark, sf_dir, "orders")[0]
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
     ref = orders.filter(F.year("o_orderdate") == 1996).select(
         cents.alias("s"), F.col("o_orderkey").alias("ok")
@@ -2033,7 +2019,7 @@ def ml_cohen_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: ONE scan-shaped aggregate, every sum map-side combinable;
     no joins, no windows."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     a = F.when(F.col("l_quantity") > 25, 1).otherwise(0)
     b = F.when(F.col("l_discount") >= 0.05, 1).otherwise(0)
     dec = "decimal(38,0)"
@@ -2124,7 +2110,7 @@ def ml_learning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cumulating bands is a ≤4·|buckets|-row join, never a rescan); the
     eval join broadcasts the ≤40-row model table. The curve costs two
     scans total at any data size."""
-    orders = _t(spark, sf_dir, "orders")[0]
+    orders = load_tables(spark, sf_dir, "orders")[0]
     base = orders.select(
         F.col("o_orderkey").alias("k"),
         F.least(
@@ -2254,7 +2240,7 @@ def ml_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-group state is k rows, never the user count; the {k}-row
     discount table broadcasts.  All metric math is exact integer
     (e9 discounts x integer relevance)."""
-    ev = _t(spark, sf_dir, "events")[0]
+    ev = load_tables(spark, sf_dir, "events")[0]
     pu = ev.groupBy("event_type", "user_id").agg(
         F.sum(
             F.when(F.to_date("ts") <= F.lit("2024-01-15").cast("date"), 1)
@@ -2357,7 +2343,7 @@ def ml_mcnemar_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     single output row at any data size; the statistic is pure integer
     arithmetic on the two discordant cells (the concordant cells cancel
     out of the test, which is why the comparison is cheap)."""
-    orders = _t(spark, sf_dir, "orders")[0]
+    orders = load_tables(spark, sf_dir, "orders")[0]
     scored = orders.select(
         F.when(F.col("o_orderpriority") == "1-URGENT", 1).otherwise(0)
         .alias("y"),
@@ -2473,7 +2459,7 @@ def ml_permutation_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     union of broadcast-model joins."""
     from .distrank import global_index
 
-    orders = _t(spark, sf_dir, "orders")[0]
+    orders = load_tables(spark, sf_dir, "orders")[0]
     base = orders.select(
         F.col("o_orderkey").alias("k"),
         F.when(F.col("o_totalprice") >= 160000, 1).otherwise(0).alias("y"),
@@ -2610,7 +2596,7 @@ def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two map-side-combinable bucket groupBys (train rates / eval
     outcomes), a broadcast-size join on the <=10-row bucket table, and
     a single-row total — the full decomposition at two scans."""
-    orders = _t(spark, sf_dir, "orders")[0]
+    orders = load_tables(spark, sf_dir, "orders")[0]
     base = orders.select(
         F.col("o_orderkey").alias("k"),
         F.when(F.col("o_orderpriority") == "1-URGENT", 1).otherwise(0)

@@ -21,7 +21,7 @@ Design for scale:
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 import pandas as pd
 
@@ -29,22 +29,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..catalog import load_table
+from ..catalog import fanout, load_table
+from ..registry import family
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
+QUERIES, ORACLE, _q = family()
 
 
 FEATURE_SCHEMA = T.StructType(
@@ -2485,9 +2473,8 @@ def multimodal_flac_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     codec gate: every shipped media format now has a real in-repo
     codec."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 120)
-    # single-file input reads as ONE split; the codec is the CPU-heavy
-    # stage, so spread the bounded doc set across the executors first
-    ids = docs.select("doc_id").repartition(spark.sparkContext.defaultParallelism)
+    # the codec is the CPU-heavy stage: spread the bounded doc set first
+    ids = fanout(docs.select("doc_id"))
     media = ids.mapInPandas(_flac_encode_batches, _BMP_SCHEMA)
     feats = media.mapInPandas(_flac_decode_batches, _FLAC_FEAT_SCHEMA)
     return feats.orderBy("doc_id")

@@ -20,31 +20,16 @@ keeps the contract deterministic so both engines agree exactly).
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..catalog import load_table
-from .tpch import _t
+from ..catalog import load_table, load_tables
+from ..registry import family
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
+QUERIES, ORACLE, _q = family()
 
 
 @_q(
@@ -68,7 +53,7 @@ def udf_vectorized_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     def sigmoid(x: pd.Series) -> pd.Series:
         return np.round(1.0 / (1.0 + np.exp(-(x - 25) / 10)), 6)
 
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     return li.filter(F.col("l_orderkey") < 500).select(
         "l_orderkey",
         "l_linenumber",
@@ -109,7 +94,7 @@ def udf_grouped_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     return (
         li.filter(F.col("l_orderkey") < 2000)
         .select("l_returnflag", "l_orderkey", "l_linenumber", "l_quantity")
@@ -173,7 +158,7 @@ GROUP BY l_returnflag
 def agg_numeric_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """numeric_histogram with deterministic equi-width buckets (two-pass:
     min/max then bin) — canonicalized to sorted bucket/count arrays."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     bounds = li.groupBy("l_returnflag").agg(
         F.min("l_extendedprice").alias("lo"), F.max("l_extendedprice").alias("hi")
     )

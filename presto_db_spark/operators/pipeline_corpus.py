@@ -19,13 +19,12 @@ paid for the composition (Catalyst pipelines the gates into the scans).
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..catalog import load_table
+from ..catalog import fanout, load_table
+from ..registry import family
 from .dedup import (
     MERSENNE31,
     MINHASH_PERMS,
@@ -38,20 +37,7 @@ from .dedup import (
     _SQL_ROLL,
 )
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
+QUERIES, ORACLE, _q = family()
 
 
 LANGS = ("en", "es", "de", "fr")
@@ -105,9 +91,7 @@ ORDER BY e.lang, e.source
 
 @_q("pipeline_training_corpus", _PIPELINE_SQL)
 def pipeline_training_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    )
+    docs = fanout(load_table(spark, sf_dir, "documents"), "doc_id")
     words = F.split(F.trim("text"), r"\s+")
     gated = docs.filter(
         F.col("n_chars").between(MIN_CHARS, MAX_CHARS)

@@ -20,7 +20,6 @@ the range predicate becomes part of the equi-join key.
 
 from __future__ import annotations
 
-from collections.abc import Callable
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -28,21 +27,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..catalog import load_table
+from ..registry import family
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
+QUERIES, ORACLE, _q = family()
 
 
 def range_join(

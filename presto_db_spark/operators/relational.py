@@ -26,27 +26,13 @@ money sums use the exact-cents idiom (see tpch._msum).
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from .tpch import _t
+from ..catalog import load_tables
+from ..registry import family
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
+QUERIES, ORACLE, _q = family()
 
 
 # --- window: ranking family -------------------------------------------------
@@ -67,7 +53,7 @@ WINDOW w AS (PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey)
 """,
 )
 def win_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (cust,) = _t(spark, sf_dir, "customer")
+    (cust,) = load_tables(spark, sf_dir, "customer")
     w = W.partitionBy("c_nationkey").orderBy(F.desc("c_acctbal"), "c_custkey")
     return cust.select(
         "c_custkey",
@@ -99,7 +85,7 @@ WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
 """,
 )
 def win_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = load_tables(spark, sf_dir, "orders")
     w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     w_full = w.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
     return orders.select(
@@ -130,7 +116,7 @@ FROM orders
 """,
 )
 def win_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = load_tables(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100)
     w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     w_run = w.rowsBetween(W.unboundedPreceding, W.currentRow)
@@ -164,7 +150,7 @@ FROM (
 """,
 )
 def win_topn_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (cust,) = _t(spark, sf_dir, "customer")
+    (cust,) = load_tables(spark, sf_dir, "customer")
     w = W.partitionBy("c_nationkey").orderBy(F.desc("c_acctbal"), "c_custkey")
     return (
         cust.select(
@@ -192,7 +178,7 @@ GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
 """,
 )
 def grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     li.createOrReplaceTempView("lineitem")
     return spark.sql(
         """
@@ -216,7 +202,7 @@ GROUP BY CUBE (l_returnflag, l_linestatus)
 """,
 )
 def cube_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     rev_c = F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100)
     return (
         li.cube("l_returnflag", "l_linestatus")
@@ -237,7 +223,7 @@ GROUP BY ROLLUP (year(o_orderdate), o_orderpriority)
 """,
 )
 def rollup_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = load_tables(spark, sf_dir, "orders")
     return (
         orders.withColumn("yr", F.year("o_orderdate"))
         .rollup("yr", "o_orderpriority")
@@ -256,7 +242,7 @@ SELECT o_custkey AS k FROM orders WHERE o_orderstatus = 'F'
 """,
 )
 def setop_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust, orders = _t(spark, sf_dir, "customer", "orders")
+    cust, orders = load_tables(spark, sf_dir, "customer", "orders")
     a = cust.filter(F.col("c_acctbal") > 1000).select(F.col("c_custkey").alias("k"))
     b = orders.filter(F.col("o_orderstatus") == "F").select(F.col("o_custkey").alias("k"))
     return a.intersect(b)
@@ -271,7 +257,7 @@ SELECT o_custkey AS k FROM orders WHERE o_orderpriority = '1-URGENT'
 """,
 )
 def setop_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = load_tables(spark, sf_dir, "orders")
     a = orders.filter(F.col("o_orderstatus") != "P").select(F.col("o_custkey").alias("k"))
     b = orders.filter(F.col("o_orderpriority") == "1-URGENT").select(
         F.col("o_custkey").alias("k")
@@ -290,7 +276,7 @@ SELECT k, CAST(count(*) AS BIGINT) AS cnt FROM (
 """,
 )
 def setop_union_all_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, supp = _t(spark, sf_dir, "lineitem", "supplier")
+    li, supp = load_tables(spark, sf_dir, "lineitem", "supplier")
     a = li.filter(F.col("l_returnflag") == "R").select(F.col("l_suppkey").alias("k"))
     b = supp.select(F.col("s_suppkey").alias("k"))
     return a.unionAll(b).groupBy("k").agg(F.count("*").alias("cnt"))
@@ -307,7 +293,7 @@ SELECT CAST(NULL AS BIGINT) AS k
 """,
 )
 def setop_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, supp = _t(spark, sf_dir, "lineitem", "supplier")
+    li, supp = load_tables(spark, sf_dir, "lineitem", "supplier")
     a = li.filter(F.col("l_returnflag") == "R").select(F.col("l_suppkey").alias("k"))
     b = supp.select(F.col("s_suppkey").alias("k"))
     c = spark.range(1).select(F.lit(None).cast("long").alias("k"))
@@ -325,7 +311,7 @@ SELECT DISTINCT l_suppkey FROM lineitem ORDER BY l_suppkey LIMIT 5
 """,
 )
 def distinct_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     return li.select("l_suppkey").distinct().orderBy("l_suppkey").limit(5)
 
 
@@ -341,7 +327,7 @@ GROUP BY v.tier
 """,
 )
 def values_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (cust,) = _t(spark, sf_dir, "customer")
+    (cust,) = load_tables(spark, sf_dir, "customer")
     from ..catalog import small_df
 
     tiers = small_df(
@@ -369,7 +355,7 @@ FROM (SELECT doc_id, unnest(list_transform(string_split(text, ' '),
 """,
 )
 def unnest_words(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = load_tables(spark, sf_dir, "documents")
     return (
         docs.filter(F.col("doc_id") < 20)
         .select("doc_id", F.posexplode(F.split("text", " ")).alias("pos", "word"))
@@ -389,7 +375,7 @@ WHERE o_totalprice > 2 * (SELECT avg(o2.o_totalprice) FROM orders o2
 """,
 )
 def subq_scalar_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = load_tables(spark, sf_dir, "orders")
     # Decorrelated form: the correlated scalar avg becomes a grouped join
     # (reference rule: TransformCorrelatedScalarAggregationToJoin.java).
     per_cust = orders.groupBy(F.col("o_custkey").alias("ck")).agg(
@@ -414,7 +400,7 @@ GROUP BY c_mktsegment
 """,
 )
 def subq_in_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust, orders = _t(spark, sf_dir, "customer", "orders")
+    cust, orders = load_tables(spark, sf_dir, "customer", "orders")
     in_1997 = orders.filter(
         (F.col("o_orderdate") >= "1997-01-01") & (F.col("o_orderdate") < "1998-01-01")
     ).select("o_custkey")
@@ -435,7 +421,7 @@ WHERE p_retailprice >= ALL (SELECT p2.p_retailprice FROM part p2
 """,
 )
 def subq_quantified_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (part,) = _t(spark, sf_dir, "part")
+    (part,) = load_tables(spark, sf_dir, "part")
     # `>= ALL (correlated)` ≡ >= max of the group — the decorrelation the
     # reference applies in TransformQuantifiedComparisonApplyToLateralJoin.java.
     per_brand = part.groupBy(F.col("p_brand").alias("pb")).agg(
@@ -463,7 +449,7 @@ ON a.k = b.k
 """,
 )
 def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, supp = _t(spark, sf_dir, "lineitem", "supplier")
+    li, supp = load_tables(spark, sf_dir, "lineitem", "supplier")
     a = (
         li.filter(F.col("l_returnflag") == "A")
         .groupBy(F.col("l_suppkey").alias("k"))
@@ -487,7 +473,7 @@ FROM nation RIGHT JOIN region ON n_regionkey = r_regionkey AND n_nationkey < 5
 """,
 )
 def join_right_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
-    nation, region = _t(spark, sf_dir, "nation", "region")
+    nation, region = load_tables(spark, sf_dir, "nation", "region")
     return nation.join(
         region,
         (F.col("n_regionkey") == F.col("r_regionkey")) & (F.col("n_nationkey") < 5),

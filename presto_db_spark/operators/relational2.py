@@ -26,27 +26,13 @@ Reference semantics exercised (SURVEY.md §2):
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .tpch import _t
+from ..catalog import load_tables
+from ..registry import family
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
+QUERIES, ORACLE, _q = family()
 
 
 @_q(
@@ -61,7 +47,7 @@ WHERE EXISTS (SELECT 1 FROM orders o
 """,
 )
 def subq_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust, orders = _t(spark, sf_dir, "customer", "orders")
+    cust, orders = load_tables(spark, sf_dir, "customer", "orders")
     big = orders.filter(F.col("o_totalprice") > 400000).select("o_custkey").distinct()
     urgent = (
         orders.filter(F.col("o_orderpriority") == "1-URGENT").select("o_custkey").distinct()
@@ -92,7 +78,7 @@ def subq_not_in_null(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join semantics that a hand-built LEFT ANTI would get wrong."""
     import uuid
 
-    cust, orders = _t(spark, sf_dir, "customer", "orders")
+    cust, orders = load_tables(spark, sf_dir, "customer", "orders")
     # unique view names: query functions must not collide on session state
     cv, ov = f"_r2_c_{uuid.uuid4().hex[:8]}", f"_r2_o_{uuid.uuid4().hex[:8]}"
     cust.createOrReplaceTempView(cv)
@@ -126,7 +112,7 @@ FROM lineitem GROUP BY l_returnflag
 def agg_multi_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three DISTINCT aggs + plain aggs in one GROUP BY — the MarkDistinct
     shape; Spark plans it as a single pass over Expand (check: one scan)."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.countDistinct("l_partkey").alias("nd_part"),
         F.countDistinct("l_suppkey").alias("nd_supp"),
@@ -167,7 +153,7 @@ SELECT l_partkey, l_suppkey FROM lineitem WHERE l_orderkey >= 1000 AND l_orderke
 """,
 )
 def setop_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     a = li.filter(F.col("l_orderkey") < 2000).select("l_partkey", "l_suppkey")
     b = li.filter((F.col("l_orderkey") >= 1000) & (F.col("l_orderkey") < 3000)).select(
         "l_partkey", "l_suppkey"
@@ -238,7 +224,7 @@ def win_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the skip-over behavior is actually exercised."""
     from pyspark.sql import Window as W
 
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = load_tables(spark, sf_dir, "orders")
     t = orders.filter(F.col("o_custkey") < 50).select(
         "o_orderkey",
         "o_custkey",
@@ -271,7 +257,7 @@ SELECT l_partkey, l_suppkey FROM lineitem WHERE l_orderkey >= 1000 AND l_orderke
 def setop_except_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT (distinct) — the dedup variant next to setop_except_all
     (``ImplementIntersectAndExceptAsUnion.java`` lowers both)."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     a = li.filter(F.col("l_orderkey") < 2000).select("l_partkey", "l_suppkey")
     b = li.filter((F.col("l_orderkey") >= 1000) & (F.col("l_orderkey") < 3000)).select(
         "l_partkey", "l_suppkey"
@@ -291,7 +277,7 @@ def misc_unique_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     → monotonically_increasing_id. Ids themselves are partition-dependent, so
     the oracle checks the operator's contract instead: as many DISTINCT ids
     as rows."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     with_id = li.filter(F.col("l_orderkey") < 5000).withColumn(
         "uid", F.monotonically_increasing_id()
     )
@@ -315,7 +301,7 @@ def sample_bernoulli(spark: SparkSession, sf_dir: str) -> DataFrame:
     group, the sampled count must land within 6 sigma of the 10%
     expectation (binomial bound, in-query boolean the oracle pins TRUE)
     alongside the exact group totals."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     totals = li.groupBy("l_returnflag").agg(F.count("*").alias("n_total"))
     sampled = (
         li.sample(fraction=0.1, seed=42)
@@ -483,7 +469,7 @@ def part_pivot_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash aggregate — identical shuffle count to the conditional-CASE form
     Presto users write (the oracle), with the operator surface Spark adds
     on top."""
-    part = _t(spark, sf_dir, "part")[0]
+    part = load_tables(spark, sf_dir, "part")[0]
     wide = (
         part.filter(F.col("p_brand").isin(_PIVOT_BRANDS))
         .select(

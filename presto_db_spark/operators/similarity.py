@@ -16,6 +16,8 @@ reference, which has only sparse-map ``cosine_similarity`` in
   planes. Hyperplane coefficients are fixed literals so the result is
   deterministic and the DuckDB oracle reproduces it exactly.
 
+The embeddings scan (``_emb``) is never fanned out: see its docstring.
+
 Float determinism: both engines fold the dot product left-to-right in
 DOUBLE (explicit casts; no engine-native cosine builtin is used in the
 oracle), ranking keys are (rounded sim, vec_id) so ordering can't diverge
@@ -24,15 +26,13 @@ in the last ulp.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, small_df
+from ..registry import family
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE: dict[str, str] = {}
+QUERIES, ORACLE, _q = family()
 
 N_QUERIES = 10  # vec_id < N_QUERIES form the query set
 TOP_K = 5
@@ -40,50 +40,14 @@ DIM = 64
 N_PLANES = 8  # LSH: 8 hyperplanes → 256 buckets
 
 
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
-
-
-_EMB_FANOUT_MIN_BYTES = 256 << 20  # one shuffle only pays off past this
-
-
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embeddings scan. Parquet is splittable — Spark's split planner
-    (``spark.sql.files.maxPartitionBytes``) already fans a large input
-    across the cluster, so an explicit repartition is a pure extra
-    exchange there. The one case it helps is a big input arriving as
-    FEWER splits than cores (e.g. a handful of huge row groups):
-    repartition only then. A small input (< 256 MB) never benefits —
-    the Arrow passes on it are sub-second and the shuffle is pure
-    overhead (measured 0.9 s → 0.5-0.6 s across the similarity suite at
-    sf0.1). Files that cannot be stat'ed locally (object storage) are
-    conservatively treated as large."""
-    import os
-
-    df = load_table(spark, sf_dir, "embeddings")
-    par = spark.sparkContext.defaultParallelism
-    files = df.inputFiles()
-    if len(files) >= par:
-        return df  # enough natural splits
-    total = 0
-    for f in files:
-        p = f.removeprefix("file:")
-        try:
-            total += os.path.getsize(p)
-        except OSError:
-            total = _EMB_FANOUT_MIN_BYTES  # unstat-able → assume large
-            break
-    if total >= _EMB_FANOUT_MIN_BYTES:
-        return df.repartition(par, "vec_id")
-    return df
+    """Embeddings scan, deliberately not fanned out (no
+    ``catalog.fanout``): the Arrow passes over a small input are
+    sub-second and an exchange ahead of them is pure overhead (measured
+    0.9 s -> 0.5-0.6 s across the similarity suite at sf0.1), while a
+    large input already arrives as many splits (parquet splits at
+    ``spark.sql.files.maxPartitionBytes``)."""
+    return load_table(spark, sf_dir, "embeddings")
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -3104,15 +3068,8 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
                     StructField("mmr_e6x10", LongType(), True),
                 ]
             )
-            # one slice: the default parallelize would scatter 5 rows
-            # over defaultParallelism near-empty partitions and the
-            # orderBy would sample+shuffle all of them (~0.3 s of empty
-            # tasks measured at local[32])
-            return spark.createDataFrame(
-                spark.sparkContext.parallelize(
-                    [tuple(int(v) for v in r) for r in rows], 1
-                ),
-                schema,
+            return small_df(
+                spark, [tuple(int(v) for v in r) for r in rows], schema
             ).orderBy("pick")
     return _mmr_sequential(spark, rel)
 

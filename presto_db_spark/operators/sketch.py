@@ -23,29 +23,15 @@
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from .tpch import _t
+from ..catalog import load_tables
+from ..registry import family
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE: dict[str, str] = {}
+QUERIES, ORACLE, _q = family()
 
 BIN = 100.0  # sketch grid width over l_extendedprice (domain ~[900, 105000])
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
 
 
 def sketch_histogram(
@@ -105,7 +91,7 @@ JOIN      (SELECT l_returnflag, min(bin) * {BIN} AS v FROM cum
 )
 def sketch_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """value_at_quantile(sketch, 0.25/0.5/0.75) per return flag."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     sk = sketch_histogram(li, ["l_returnflag"], "l_extendedprice")
     p25 = value_at_quantile(sk, ["l_returnflag"], 0.25, "p25")
     p50 = value_at_quantile(sk, ["l_returnflag"], 0.50, "p50")
@@ -135,7 +121,7 @@ def sketch_weighted_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted approx_percentile(x, w, 0.5): quantity-weighted median price
     (``ApproximateLongPercentileAggregations.java`` weighted overloads) —
     each row contributes l_quantity units of mass to its price bin."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     li = li.withColumn("w", F.col("l_quantity").cast("long"))
     sk = sketch_histogram(li, ["l_returnflag"], "l_extendedprice", weight="w")
     return value_at_quantile(sk, ["l_returnflag"], 0.50, "wp50")
@@ -170,7 +156,7 @@ def sketch_quantile_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array form approx_percentile(x, ARRAY[0.25, 0.5, 0.75]) — one sketch
     pass, one output row per group with the quantile vector (emitted as
     three scalar columns: the driver's canonicalizer can't sort lists)."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     sk = sketch_histogram(li, ["l_returnflag"], "l_extendedprice")
     p25 = value_at_quantile(sk, ["l_returnflag"], 0.25, "p25")
     p50 = value_at_quantile(sk, ["l_returnflag"], 0.50, "p50")
@@ -198,7 +184,7 @@ FROM sk GROUP BY l_returnflag
 )
 def sketch_quantile_at_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """quantile_at_value(sketch, 50000) — inverse lookup on the same sketch."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     sk = sketch_histogram(li, ["l_returnflag"], "l_extendedprice")
     return sk.groupBy("l_returnflag").agg(
         F.round(
@@ -233,7 +219,7 @@ def func_decimal(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB decimal division decays to DOUBLE, so any in-sum division can
     never hash-match; integer cents are bit-comparable on both engines.
     """
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     dec_price = (
         F.round(F.col("l_extendedprice") * 100).cast("long").cast("decimal(18,2)") / 100
     )
@@ -322,7 +308,7 @@ def sketch_adaptive_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-depth digest — value_at_quantile = left boundary of the bin
     holding the order statistic, rank error ≤ 1/ADAPTIVE_B + sampling
     slack regardless of the value distribution."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     t = F.col("l_extendedprice") / 1000.0
     skew = li.select(
         (t * t * t * t * t * t * t * t * t).alias("v"),
@@ -441,7 +427,7 @@ def agg_set_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     digest) rides along so the estimator error is visible in the output.
     The md5-prefix 48-bit hash stands in for Murmur3 (`:180 add()`)
     so every value is reproducible in DuckDB."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     hv = F.conv(F.substring(F.md5(F.col("l_partkey").cast("string")), 1, 12), 16, 10).cast("long")
     h = (
         li.filter(F.col("l_suppkey") < _SD_NGROUPS)
@@ -579,7 +565,7 @@ def agg_khyperloglog(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5-prefix hash). Only sampled keys are aggregated: the join is a
     broadcast semi over K keys, so 100 TB of fact rows reduce to K
     groups."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     hv = F.conv(
         F.substring(F.md5(F.col("l_orderkey").cast("string")), 1, 12), 16, 10
     ).cast("long")
@@ -706,9 +692,7 @@ def sketch_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ApproximateMostFrequentFunction.java) serves the same question with
     space-saving; CMS is the mergeable-counter formulation (extension).
     """.format(d=CMS_D, w=CMS_W)
-    from .tpch import _t
-
-    (docs,) = _t(spark, sf_dir, "documents")
+    (docs,) = load_tables(spark, sf_dir, "documents")
     wc = _cms_word_counts(docs)
     js = F.explode(F.sequence(F.lit(0), F.lit(CMS_D - 1))).alias("j")
     cells = (
@@ -802,7 +786,7 @@ def agg_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     presto-main/.../aggregation/QuantileDigestAggregationFunction.java
     serves the approximate form; the exact form users compose is this
     plan."""
-    orders = _t(spark, sf_dir, "orders")[0]
+    orders = load_tables(spark, sf_dir, "orders")[0]
     cents = orders.select(
         "o_orderpriority",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("c"),
@@ -871,7 +855,7 @@ def sketch_bottomk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the sketch never materializes more than k rows per partition; at
     100 TB shard sketches merge associatively (the same contract as the
     HLL/CMS family)."""
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = load_tables(spark, sf_dir, "orders")
     vals = orders.select(F.col("o_custkey").alias("v")).distinct()
     hashed = vals.select(
         "v",
@@ -944,7 +928,7 @@ def sketch_theta_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject (per-partition survivors); the sketch-side
     join touches k x k at most; only the truth column (eval-only,
     dropped in production) pays the exact distinct-join."""
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = load_tables(spark, sf_dir, "orders")
     h = lambda c: (  # noqa: E731
         F.conv(F.substring(F.md5(c.cast("string")), 1, 12), 16, 10).cast("long")
     )
@@ -1052,9 +1036,9 @@ def sketch_bloom_size_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     swap in approx_distinct at 100 TB — the plan formula is the same),
     cross-joined with a 2-row constant FPR table; output is
     |keys| x |FPRs| rows."""
-    orders = _t(spark, sf_dir, "orders")[0]
-    li = _t(spark, sf_dir, "lineitem")[0]
-    ev = _t(spark, sf_dir, "events")[0]
+    orders = load_tables(spark, sf_dir, "orders")[0]
+    li = load_tables(spark, sf_dir, "lineitem")[0]
+    ev = load_tables(spark, sf_dir, "events")[0]
     ndv = (
         orders.agg(F.countDistinct("o_custkey").cast("long").alias("n"))
         .select(F.lit("orders.o_custkey").alias("rel"), "n")

@@ -26,24 +26,12 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .tpch import _t
+from ..catalog import load_tables
+from ..registry import family
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE: dict[str, str] = {}
+QUERIES, ORACLE, _q = family()
 
 N_SALTS = 16
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
 
 
 def salt_of(col: Column, n_salts: int = N_SALTS) -> Column:
@@ -96,7 +84,7 @@ FROM lineitem GROUP BY l_returnflag
 def skew_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3 hot groups (l_returnflag) split into 16 parallel partials each,
     then merged — result must equal the plain aggregation (the oracle)."""
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     return salted_agg(
         li,
         keys=["l_returnflag"],
@@ -128,7 +116,7 @@ def skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact-to-dimension join through the salted path (broadcast disabled
     via hint-free shuffle plan is not forced — the salting itself must be
     result-invariant, which the plain-join oracle checks)."""
-    li, orders = _t(spark, sf_dir, "lineitem", "orders")
+    li, orders = load_tables(spark, sf_dir, "lineitem", "orders")
     fact = li.select(
         F.col("l_orderkey").alias("k"), "l_extendedprice", "l_discount", "l_orderkey"
     )

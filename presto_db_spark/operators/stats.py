@@ -29,28 +29,14 @@ Scale shape notes (100 TB):
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, small_df
+from ..registry import family
 from .events import CHI2_CRIT_E6
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
+QUERIES, ORACLE, _q = family()
 
 
 # chi-square df=2 critical value at alpha=0.05, e6 (for the ANOVA F with

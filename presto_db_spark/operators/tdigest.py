@@ -34,33 +34,19 @@ are deterministic under any partition layout.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .tpch import _t
+from ..catalog import load_tables
+from ..registry import family
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE: dict[str, str] = {}
+QUERIES, ORACLE, _q = family()
 
 COMPRESSION = 200.0  # ≤ ~2c centroids; worst-case rank error ≈ π/c ≈ 0.016
 EPS = 0.05  # contract band half-width; ~3× the two-level worst case
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
 
 
 def build_digest(
@@ -169,7 +155,7 @@ def sketch_tdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed with Spark's exact ``percentile`` only to *check* the digest —
     the digest itself never sees it.
     """
-    (orders,) = _t(spark, sf_dir, "orders")
+    (orders,) = load_tables(spark, sf_dir, "orders")
     qs = [0.25, 0.50, 0.75, 0.90, 0.99]
     est_cols = [f"est_p{int(q * 100)}" for q in qs]
     est = tdigest_agg(orders, ["o_orderpriority"], "o_totalprice", qs, est_cols)

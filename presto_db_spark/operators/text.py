@@ -5,33 +5,22 @@ quality scoring, token counting, document fingerprinting — each a pure
 DataFrame expression pipeline (JVM-side, codegen'd; no Python in the hot
 path) over the ``documents`` table, designed to scan 100 TB of text with
 nothing but a projection (no shuffle at all except final aggregation).
+The one CPU-heavy explode over the raw text (``text_ngram_novelty``)
+reads the corpus through ``catalog.fanout``.
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..catalog import load_table
+from ..catalog import fanout, load_table
+from ..registry import family
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
+QUERIES, ORACLE, _q = family()
 
 
 # Tiny per-language stopword marker lists for the n-gram/stopword heuristic.
@@ -121,37 +110,6 @@ def lang_id(col: Column) -> Column:
     )
     best = F.array_max(scored)
     return F.when(best["score"] > 0, best["lang"]).otherwise(F.lit("und"))
-
-
-def _fanout_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Documents scan for CPU-heavy n-gram explosions (r14): when the
-    scan's natural split count is below the session parallelism, one
-    cheap hash repartition of the raw text buys full-width execution of
-    the explode + partial-agg stage that follows (the work is linear in
-    characters with a ~30x row blowup — the classic bytes-vs-CPU case
-    AQE cannot see; dedup_fuzzy_del1 documents the same guard). At
-    scale the scan already arrives as >= parallelism splits (many files,
-    or file splitting at maxPartitionBytes) and the repartition — a full
-    shuffle of the corpus text — is skipped. A/B at sf0.1
-    (text_ngram_novelty): 3.6 -> 1.3 s median, rows identical."""
-    import os
-
-    docs = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    files = docs.inputFiles()
-    if len(files) >= par:
-        return docs
-    # the typed value: the conf string may carry a unit suffix ("64m")
-    max_split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-    total = 0
-    for f in files:
-        try:
-            total += os.path.getsize(f.removeprefix("file:"))
-        except OSError:
-            return docs  # unstat-able (object store): assume it splits
-    if max(len(files), total // max_split) >= par:
-        return docs
-    return docs.repartition(par, "doc_id")
 
 
 # --- queries ----------------------------------------------------------------
@@ -1995,8 +1953,8 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     Measured fresh-build sf0.1: 4.17 s (r10 instance-stream shape) →
     3.7 s; the remaining cost is the explode itself (the one genuinely
     linear-in-characters stage) — fanned out across cores r14 via
-    _fanout_docs (3.6 → 1.3 s median A/B)."""
-    docs = _fanout_docs(spark, sf_dir)
+    catalog.fanout (3.6 → 1.3 s median A/B)."""
+    docs = fanout(load_table(spark, sf_dir, "documents"), "doc_id")
     try:
         _small = os.path.getsize(f"{sf_dir}/documents.parquet") < 4 << 20
     except OSError:

@@ -38,35 +38,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_tables
 from ..engine import sql_query
-from ..registry import QueryFn
+from ..registry import family
 from .stagecache import materialize_stage
 from .tpch import _csum, _csum_sql, _msum, _msum_sql
 
-QUERIES: dict[str, QueryFn] = {}
-ORACLE: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
+QUERIES, ORACLE, _q = family()
 
 
 def _sql(name: str, text: str) -> None:
     """Register ``name`` as SQL ``text``: the entry runs the oracle's text."""
     _q(name, text)(sql_query(text))
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    return [load_table(spark, sf_dir, n) for n in names]
 
 
 def _rev():
@@ -260,7 +243,7 @@ def tpcds_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``Engine.set_session``), year_total is persisted MEMORY_AND_DISK
     before the 4-way self-join — the documented cluster-mode behavior:
     at 100× the two heaviest aggregations are paid once, not four times."""
-    customer, orders, lineitem = _t(spark, sf_dir, "customer", "orders", "lineitem")
+    customer, orders, lineitem = load_tables(spark, sf_dir, "customer", "orders", "lineitem")
     store = (
         customer.join(orders, F.col("o_custkey") == F.col("c_custkey"))
         .join(lineitem, F.col("l_orderkey") == F.col("o_orderkey"))
@@ -502,7 +485,7 @@ def tpcds_q02(spark: SparkSession, sf_dir: str) -> DataFrame:
     the year-over-year comparison joins two ~52-row aggregates. Week
     cents are exact integers so the pivoted sums are order-independent
     and the final ratios deterministic."""
-    orders, lineitem = _t(spark, sf_dir, "orders", "lineitem")
+    orders, lineitem = load_tables(spark, sf_dir, "orders", "lineitem")
     web = lineitem.filter(F.col("l_returnflag") == "R").select(
         F.col("l_shipdate").cast("date").alias("sold_date"),
         F.round(F.col("l_extendedprice") * 100).alias("cents"),
@@ -618,7 +601,7 @@ def tpcds_q08(spark: SparkSession, sf_dir: str) -> DataFrame:
     with zips of preferred customers — count(*)>10 HAVING — gating the
     store star join via IN-subquery). Nation keys stand in for 5-digit
     zips; supplier for store. The zips set is tiny → broadcast semi-join."""
-    orders, lineitem, supplier, customer = _t(
+    orders, lineitem, supplier, customer = load_tables(
         spark, sf_dir, "orders", "lineitem", "supplier", "customer"
     )
     zip_list = spark.range(0, 1).select(
@@ -804,7 +787,7 @@ def tpcds_q09(spark: SparkSession, sf_dir: str) -> DataFrame:
     optimizer cannot reach but a columnar engine should: one scan computes
     count/branch-numerator per bucket, integer-cent division keeps both
     engines bit-identical."""
-    li, region = _t(spark, sf_dir, "lineitem", "region")
+    li, region = load_tables(spark, sf_dir, "lineitem", "region")
     aggs = []
     for i, (lo, hi, _) in enumerate(_Q09_BUCKETS, 1):
         in_b = F.col("l_quantity").between(lo, hi)
@@ -1313,7 +1296,7 @@ def tpcds_q59(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys on (store, week±53). Exact-cent pivots; ratios are identical
     doubles. Scale: one shuffle to (week, store) grouping; the self-join
     and dim join are narrow aggregates."""
-    li, supp = _t(spark, sf_dir, "lineitem", "supplier")
+    li, supp = load_tables(spark, sf_dir, "lineitem", "supplier")
     wss = (
         li.groupBy(
             ((F.year("l_shipdate") - 1995) * 53 + F.weekofyear("l_shipdate")).alias("d_week_seq"),
@@ -1424,7 +1407,7 @@ def tpcds_q54(spark: SparkSession, sf_dir: str) -> DataFrame:
     are exact integer cent division. Scale: my_customers is a distinct
     semi-join gate; revenue is one shuffle on customer; the segment
     histogram aggregates the (already small) per-customer rollup."""
-    li, orders, part = _t(spark, sf_dir, "lineitem", "orders", "part")
+    li, orders, part = load_tables(spark, sf_dir, "lineitem", "orders", "part")
     my_customers = (
         li.join(orders.filter(F.year("o_orderdate") == 1996),
                 F.col("l_orderkey") == F.col("o_orderkey"))
@@ -1510,7 +1493,9 @@ def tpcds_q79(spark: SparkSession, sf_dir: str) -> DataFrame:
     dayofweek=2; the demographic OR gate maps to quantity/discount.
     Scale: filters prune the fact scan; one shuffle to the trip grouping;
     customer join is broadcastable."""
-    li, orders, supp, cust = _t(spark, sf_dir, "lineitem", "orders", "supplier", "customer")
+    li, orders, supp, cust = load_tables(
+        spark, sf_dir, "lineitem", "orders", "supplier", "customer"
+    )
     ms = (
         li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
@@ -1625,7 +1610,7 @@ def tpcds_q75(spark: SparkSession, sf_dir: str) -> DataFrame:
     are the channel's R rows at half quantity. Scale: per-channel star
     joins with an equi-join to returns; the YoY comparison joins two
     year-slices of one grouped frame."""
-    li, orders, part = _t(spark, sf_dir, "lineitem", "orders", "part")
+    li, orders, part = load_tables(spark, sf_dir, "lineitem", "orders", "part")
 
     def channel(mod: int) -> DataFrame:
         sales = li.filter(F.col("l_linenumber") % 3 == mod)
@@ -1833,7 +1818,7 @@ def tpcds_q04(spark: SparkSession, sf_dir: str) -> DataFrame:
     total (a distinct measure, as the reference's catalog channel is).
     Scale: same materialization story as q11 (cte_materialization_enabled
     persists the grouped frame before the six slices)."""
-    customer, orders, lineitem = _t(spark, sf_dir, "customer", "orders", "lineitem")
+    customer, orders, lineitem = load_tables(spark, sf_dir, "customer", "orders", "lineitem")
     co = customer.join(orders, F.col("o_custkey") == F.col("c_custkey"))
     keys = [
         F.col("c_custkey").alias("customer_id"),

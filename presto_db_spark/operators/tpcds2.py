@@ -28,36 +28,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_tables
 from ..engine import sql_query
-from ..registry import QueryFn
+from ..registry import family
 from .stagecache import materialize_stage
 from .tpcds import CTE_MATERIALIZE, CTE_STAGE
 from .tpch import _csum, _csum_sql, _msum, _msum_sql
 
-QUERIES: dict[str, QueryFn] = {}
-ORACLE: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
+QUERIES, ORACLE, _q = family()
 
 
 def _sql(name: str, text: str) -> None:
     """Register ``name`` as SQL ``text``: the entry runs the oracle's text."""
     _q(name, text)(sql_query(text))
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    return [load_table(spark, sf_dir, n) for n in names]
 
 
 def _rev():
@@ -171,7 +154,7 @@ _sql(
 # --- q62 / q99: ship-latency bucket matrix ---------------------------------
 
 def _latency_buckets(spark, sf_dir, year, third_col, third_name):
-    li, orders, supp = _t(spark, sf_dir, "lineitem", "orders", "supplier")
+    li, orders, supp = load_tables(spark, sf_dir, "lineitem", "orders", "supplier")
     lat = F.datediff(F.col("l_shipdate"), F.col("o_orderdate"))
     j = (
         li.join(orders.filter(F.year("o_orderdate") == year),
@@ -373,7 +356,7 @@ def _trip_mismatch(spark, sf_dir, inner_filter, inner_filter_sql, aggs, aggs_sql
                    out_cols, order_cols, store_nations):
     """dn = per-(trip, customer, bought_city) sums under a demographic OR
     filter; outer join to the customer's CURRENT city, keep mismatches."""
-    li, orders, supp, nation, cust = _t(
+    li, orders, supp, nation, cust = load_tables(
         spark, sf_dir, "lineitem", "orders", "supplier", "nation", "customer")
     n1 = nation.select(F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("bought_city"))
     n2 = nation.select(F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("ca_city"))
@@ -564,7 +547,7 @@ def tpcds_q74(spark: SparkSession, sf_dir: str) -> DataFrame:
     web vs store growth ratios). Ratios divide exact cents → identical
     doubles. Scale: same materialization story as q11 (the CTE feeds four
     consumers; cte_materialization_enabled persists it)."""
-    customer, orders, lineitem = _t(spark, sf_dir, "customer", "orders", "lineitem")
+    customer, orders, lineitem = load_tables(spark, sf_dir, "customer", "orders", "lineitem")
     o96 = orders.filter(F.year("o_orderdate").isin(1996, 1997))
     store = (
         customer.join(o96, F.col("o_custkey") == F.col("c_custkey"))
@@ -928,7 +911,7 @@ def _q64_cross_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate feeding the 7-join spine, grouped per (item, store, year).
     Exposed so the plan gate can assert the dims broadcast on the frame
     that actually executes (the pinned checkpoint hides it)."""
-    li, orders, part, supp, cust, nation = _t(
+    li, orders, part, supp, cust, nation = load_tables(
         spark, sf_dir, "lineitem", "orders", "part", "supplier", "customer", "nation")
     # r13 opt (guide §3.2 — reduce the big side BEFORE anything else):
     # the part predicate (retailprice band + 6 brands) keeps ~2.6% of
@@ -1178,7 +1161,7 @@ def tpcds_q43(spark: SparkSession, sf_dir: str) -> DataFrame:
     the day name). Day-of-week via epoch-day mod 7 (identical formula in
     both engines — no dow-convention skew); timezone gate: supplier
     nation band. Scale: one scan, one grouping — not seven."""
-    li, orders, supp = _t(spark, sf_dir, "lineitem", "orders", "supplier")
+    li, orders, supp = load_tables(spark, sf_dir, "lineitem", "orders", "supplier")
     j = (
         li.join(orders.filter(F.year("o_orderdate") == 1996),
                 F.col("l_orderkey") == F.col("o_orderkey"))
@@ -1655,7 +1638,7 @@ def tpcds_q24_2(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q24_paid(
     spark: SparkSession, sf_dir: str, brands: tuple[str, ...]
 ) -> DataFrame:
-    li, orders, cust, supp, part = _t(
+    li, orders, cust, supp, part = load_tables(
         spark, sf_dir, "lineitem", "orders", "customer", "supplier", "part")
     r = (li.filter(F.col("l_returnflag") == "R")
          .select(F.col("l_orderkey").alias("r_orderkey")).distinct())

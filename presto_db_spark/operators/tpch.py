@@ -31,13 +31,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_tables
 from ..engine import sql_query
 from ..registry import QueryFn
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    return [load_table(spark, sf_dir, n) for n in names]
 
 
 def _msum(c) -> F.Column:
@@ -390,7 +386,9 @@ def q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem; the aggregate shuffles one row per order). The DuckDB
     oracle keeps the literal EXISTS form, so equivalence is value-proven
     every run."""
-    li, supp, orders, nation = _t(spark, sf_dir, "lineitem", "supplier", "orders", "nation")
+    li, supp, orders, nation = load_tables(
+        spark, sf_dir, "lineitem", "supplier", "orders", "nation"
+    )
     agg = (
         li.groupBy("l_orderkey")
         .agg(

@@ -25,31 +25,13 @@ filter — mirroring the reference's partitioned SpatialJoinOperator
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_tables
+from ..registry import family
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    return [load_table(spark, sf_dir, n) for n in names]
+QUERIES, ORACLE, _q = family()
 
 
 # --- parsing ---------------------------------------------------------------
@@ -340,7 +322,7 @@ ORDER BY pid
 def geo_wkt_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST_GeometryFromText / ST_AsText / ST_X / ST_Y / ST_NumPoints /
     ST_IsClosed / ST_Length over parsed WKT (GeoFunctions.java:237-431)."""
-    cust = _t(spark, sf_dir, "customer")[0]
+    cust = load_tables(spark, sf_dir, "customer")[0]
     g = cust.filter(F.col("c_custkey") < 1000).select(
         F.col("c_custkey").alias("pid"),
         F.expr(_WKT_POINT).alias("pw"),
@@ -393,7 +375,7 @@ def geo_wkt_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST_Distance point↔polygon (GeoFunctions.java:933): zero inside
     (crossing-number), else clamped-projection min distance to the ring's
     segments. Equi-join on nationkey — scan-shaped, no cross join."""
-    nation, cust = _t(spark, sf_dir, "nation", "customer")
+    nation, cust = load_tables(spark, sf_dir, "nation", "customer")
     pts = cust.filter(F.col("c_custkey") < 2000).select(
         F.col("c_custkey").alias("pid"),
         F.col("c_nationkey").alias("nk"),
@@ -450,7 +432,7 @@ def geo_wkt_intersects_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join, the exact segment-crossing + mutual-containment predicate
     filters. Oracle is the naive theta-join — the hash match proves the
     blocking loses no pairs."""
-    nation, cust = _t(spark, sf_dir, "nation", "customer")
+    nation, cust = load_tables(spark, sf_dir, "nation", "customer")
     a = nation.select(
         F.col("n_nationkey").alias("nk"), F.expr(_wkt_pentagon("n_nationkey")).alias("w")
     ).select("nk", st_xs(F.col("w")).alias("axs"), st_ys(F.col("w")).alias("ays"))
@@ -584,7 +566,7 @@ def geo_wkt_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
     one scan, no shuffle, no UDF; centroid_within re-applies the
     crossing-number predicate at the computed centroid (true for these
     convex rings)."""
-    cust = _t(spark, sf_dir, "customer")[0]
+    cust = load_tables(spark, sf_dir, "customer")[0]
     g = cust.filter(F.col("c_custkey") < 2000).select(
         F.col("c_custkey").alias("pid"),
         F.expr(
@@ -671,7 +653,7 @@ def geo_wkt_line_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative segment lengths, first-reaching segment, linear
     interpolation. Zero-length segments fall back to the segment start;
     frac 0/1 land exactly on the endpoints."""
-    cust = _t(spark, sf_dir, "customer")[0]
+    cust = load_tables(spark, sf_dir, "customer")[0]
     g = cust.filter(F.col("c_custkey") < 1000).select(
         F.col("c_custkey").alias("pid"),
         ((F.col("c_custkey") % 5).cast("double") / 4).alias("frac"),

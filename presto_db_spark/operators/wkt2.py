@@ -29,33 +29,15 @@ beyond the grouping itself; rectangles-per-group bounds the window state.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..catalog import load_table
+from ..catalog import load_tables
+from ..registry import family
 from .wkt import _wkt_pentagon
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    return [load_table(spark, sf_dir, n) for n in names]
+QUERIES, ORACLE, _q = family()
 
 
 # --- multi-part parsing ----------------------------------------------------
@@ -231,7 +213,7 @@ def geo_wkt_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     ST_NumPoints across parts (:724), ST_Length as the sum of part
     lengths (:426 — multi dispatch), and ST_GeometryN (:785) extracting
     the 2nd point's coordinates."""
-    (cust,) = _t(spark, sf_dir, "customer")
+    (cust,) = load_tables(spark, sf_dir, "customer")
     g = cust.filter(F.col("c_custkey") < 500).selectExpr(
         "c_custkey AS gid",
         f"{_WKT_MULTIPOINT} AS mp",
@@ -305,7 +287,7 @@ def geo_wkt_polygon_holes(spark: SparkSession, sf_dir: str) -> DataFrame:
     opposite orientation), ST_Contains honoring holes (in shell AND not
     in any hole). The polygon center sits inside the hole → NOT
     contained; a point offset past the hole but inside the shell IS."""
-    (nation,) = _t(spark, sf_dir, "nation")
+    (nation,) = load_tables(spark, sf_dir, "nation")
     g = nation.selectExpr(
         "n_nationkey AS gid",
         f"{_wkt_pent_hole('n_nationkey')} AS w",
@@ -354,7 +336,7 @@ def geo_union_agg_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     ST_NumGeometries of the union counts distinct points. Scale: one
     distinct + one grouping shuffle; the per-group sort is bounded by
     distinct points per group."""
-    (cust,) = _t(spark, sf_dir, "customer")
+    (cust,) = load_tables(spark, sf_dir, "customer")
     pts = cust.select(
         F.col("c_nationkey").alias("grp"),
         ((F.col("c_custkey") * 37) % 50).cast("bigint").alias("x"),
@@ -432,7 +414,7 @@ def geo_union_envelope_area(spark: SparkSession, sf_dir: str) -> DataFrame:
     group work partitioned by the group key (no cross join, no geometry
     library), identical SQL in DuckDB. Overlapping envelopes are counted
     ONCE — the dissolve semantic that distinguishes union from sum."""
-    (nation,) = _t(spark, sf_dir, "nation")
+    (nation,) = load_tables(spark, sf_dir, "nation")
     from .wkt import st_xs, st_ys
 
     g = nation.selectExpr(
@@ -525,7 +507,7 @@ def geo_simplify(spark: SparkSession, sf_dir: str) -> DataFrame:
     (endpoints always survive) — the deterministic single-pass subset of
     ESRI's Douglas-Peucker, identical arithmetic in both engines. Pure
     projection — fuses into the scan at any scale."""
-    (nation,) = _t(spark, sf_dir, "nation")
+    (nation,) = load_tables(spark, sf_dir, "nation")
     from .wkt import st_xs, st_ys
 
     g = nation.selectExpr("n_nationkey AS gid", f"{_wkt_pentagon('n_nationkey')} AS w")
@@ -621,7 +603,7 @@ def geo_wkt_accessors(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the LINESTRING subtype, and ST_Boundary (:859) of a linestring =
     the MULTIPOINT of its endpoints. Pure projections — fuse into the
     scan."""
-    (cust,) = _t(spark, sf_dir, "customer")
+    (cust,) = load_tables(spark, sf_dir, "customer")
     from .wkt import st_geometry_type, st_xs, st_ys
 
     g = cust.filter(F.col("c_custkey") < 400).selectExpr(
@@ -697,7 +679,7 @@ def geo_kdb_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     machinery. Scale: two tiny median aggregations broadcast as scalars
     (the distributed analog of the reference's build-side tree sample);
     no cartesian product anywhere."""
-    (cust,) = _t(spark, sf_dir, "customer")
+    (cust,) = load_tables(spark, sf_dir, "customer")
     ck = F.col("c_custkey")
     pts = cust.filter(ck < 1500).select(
         ck.alias("pid"),

@@ -34,30 +34,17 @@ in-query (6 dp) exactly as the rest of the geo corpus does.
 from __future__ import annotations
 
 import math
-from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .tpch import _t
+from ..catalog import load_tables
+from ..registry import family
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE: dict[str, str] = {}
+QUERIES, ORACLE, _q = family()
 
 EARTH_RADIUS_KM = 6371.01  # SphericalGeographyUtils.java:36
 N_BUFFER_SEGMENTS = 16
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
 
 
 # Deterministic lat/lon synthesis: lat in [-60, 59.9], lon in [-180, 179.9].
@@ -116,7 +103,7 @@ FROM p ORDER BY pid
 )
 def geo_spherical_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """great_circle_distance (KM) + SphericalGeography ST_Distance (m)."""
-    (cust,) = _t(spark, sf_dir, "customer")
+    (cust,) = load_tables(spark, sf_dir, "customer")
     ck = F.col("c_custkey")
     p = cust.filter(ck < 2000).select(
         ck.alias("pid"),
@@ -206,7 +193,7 @@ def geo_spherical_area(spark: SparkSession, sf_dir: str) -> DataFrame:
     (deg→km)² over the spherical area ≈ cos(lat)⁻¹-ish ≥ 1 — an in-query
     sanity contract the oracle reproduces exactly.
     """
-    (cust,) = _t(spark, sf_dir, "customer")
+    (cust,) = load_tables(spark, sf_dir, "customer")
     ck = F.col("c_custkey")
     g = cust.filter(ck < 2000).select(
         ck.alias("pid"),
@@ -284,7 +271,7 @@ def geo_buffer(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``disk_area`` the πr² limit it approximates (ratio sin(x)/x ≈ 0.974
     at N=16), mirroring how Esri's buffer converges with densification.
     """
-    (cust,) = _t(spark, sf_dir, "customer")
+    (cust,) = load_tables(spark, sf_dir, "customer")
     ck = F.col("c_custkey")
     p = cust.filter(ck < 1000).select(
         ck.alias("pid"),

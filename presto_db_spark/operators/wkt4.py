@@ -38,28 +38,14 @@ the O(n³) hull is constant work per row.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..registry import family
 from .wkt import _PENT_DX, _PENT_DY, _wkt_pentagon, st_xs, st_ys
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
+QUERIES, ORACLE, _q = family()
 
 
 # B is A translated by a KEY-DEPENDENT offset (3+k%7, 2+k%9): always

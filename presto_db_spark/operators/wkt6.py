@@ -37,12 +37,11 @@ rings, constant per row at 100 TB.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..registry import family
 from .wkt import _sql_intersects, _wkt_pentagon, st_intersects_rings, st_xs, st_ys
 from .wkt2 import _part_strings, _SQL_PART_STRS, _SQL_P_XS, _SQL_P_YS, _wkt_pent_hole
 from .wkt4 import (
@@ -55,20 +54,7 @@ from .wkt4 import (
 )
 from .wkt5 import _SX, _SY, _wkt_pentagon_at
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE: dict[str, str] = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
+QUERIES, ORACLE, _q = family()
 
 
 # --- WKB: exact integer IEEE-754 little-endian hex --------------------------

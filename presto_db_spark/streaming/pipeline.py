@@ -31,9 +31,9 @@ from pyspark.sql import functions as F
 from ..catalog import load_table  # noqa: F401  (used by events_stream schema path)
 
 from ..operators.events import _CDC_SQL as _BATCH_CDC_SQL
+from ..registry import family
 
-QUERIES = {}
-ORACLE = {}
+QUERIES, ORACLE, _q = family()
 
 # One temp root per process, removed at exit — repeated sweeps/bench runs
 # must not accumulate mkdtemp dirs (staging symlink dirs are additionally
@@ -48,18 +48,6 @@ def _tmp_root() -> str:
         _TMP_ROOT = tempfile.mkdtemp(prefix="pds_streaming_")
         atexit.register(shutil.rmtree, _TMP_ROOT, ignore_errors=True)
     return _TMP_ROOT
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -22,9 +22,9 @@ def test_sketch_merge_associativity(spark, sf_dir):
     sketch — the mergeability property that makes digests distributable."""
     from pyspark.sql import functions as F
 
-    from presto_db_spark.operators.tpch import _t
+    from presto_db_spark.catalog import load_tables
 
-    li, orders, cust = _t(spark, sf_dir, "lineitem", "orders", "customer")
+    li, orders, cust = load_tables(spark, sf_dir, "lineitem", "orders", "customer")
     enriched = (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)

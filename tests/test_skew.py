@@ -18,9 +18,9 @@ def test_salted_agg_splits_groups(spark, sf_dir):
     actually splits the hot keys)."""
     from pyspark.sql import functions as F
 
-    from presto_db_spark.operators.tpch import _t
+    from presto_db_spark.catalog import load_tables
 
-    (li,) = _t(spark, sf_dir, "lineitem")
+    (li,) = load_tables(spark, sf_dir, "lineitem")
     salted = li.withColumn("_salt", skew.salt_of(F.col("l_orderkey")))
     n_partials = salted.groupBy("l_returnflag", "_salt").count().count()
     n_final = li.select("l_returnflag").distinct().count()

@@ -12,14 +12,16 @@ plan → execute; ``presto-main/.../dispatcher/DispatchManager.java:142``,
   it, once per session,
 * the extension operators (dedup / similarity / text / multimodal) exposed
   as DataFrame→DataFrame transformers,
-* :func:`sql_query`, which makes a registry entry of a SQL text (the
-  TPC-H/TPC-DS entries are their oracle texts run this way).
+* :func:`sql_query`, which makes a registry entry of a SQL text, and
+  :func:`sql_entry`, which registers one (an entry is its oracle text run
+  this way unless its module names a keep-rule for a port).
 """
 
 from __future__ import annotations
 
 import functools
 import re
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -66,6 +68,13 @@ def sql_query(text: str) -> QueryFn:
         return spark_sql(spark, template, **frames)
 
     return query
+
+
+def sql_entry(q: Callable, name: str, text: str) -> None:
+    """Register ``text`` under ``name`` with a family's ``_q`` decorator
+    (:func:`registry.family`): the entry is :func:`sql_query` of ``text``
+    and ``text`` is also its DuckDB oracle."""
+    q(name, text)(sql_query(text))
 
 
 @functools.cache

@@ -32,6 +32,11 @@ one rule for spreading a narrow scan across the cores.
 The reference has no near-dup machinery (nothing comparable exists in
 /root/reference — checked); these are the extension operators the project
 brief adds on top of Presto parity.
+
+An entry whose oracle text runs on Spark with the oracle's rows is that
+text, registered by ``engine.sql_entry``, unless a ``Kept port`` comment
+above its port names the keep-rule that holds; an unmarked port holds a
+text that does not (keep-rule 1, see :mod:`presto_db_spark.registry`).
 """
 
 from __future__ import annotations
@@ -43,6 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..catalog import fanout, load_table
+from ..engine import sql_entry
 from ..registry import family
 
 QUERIES, ORACLE, _q = family()
@@ -90,8 +96,8 @@ _SQL_SHINGLES = (
 
 # --- exact dedup ------------------------------------------------------------
 
-@_q(
-    "dedup_exact",
+sql_entry(
+    _q, "dedup_exact",
     """
 WITH hashed AS (
   SELECT doc_id, md5(text) AS h FROM documents
@@ -100,13 +106,6 @@ SELECT h, CAST(count(*) AS BIGINT) AS n_copies, min(doc_id) AS keep_id
 FROM hashed GROUP BY h
 """,
 )
-def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        docs.select("doc_id", F.md5(F.col("text").cast("binary")).alias("h"))
-        .groupBy("h")
-        .agg(F.count("*").alias("n_copies"), F.min("doc_id").alias("keep_id"))
-    )
 
 
 # --- n-gram Jaccard near-dup (blocked pairwise) ----------------------------
@@ -1184,6 +1183,7 @@ ORDER BY name_a, name_b
 """
 
 
+# Kept port (deferred): headline entry; its rule-3 A/B waits for per-session table binding.
 @_q("dedup_fuzzy_del1", _FUZZY_SQL)
 def dedup_fuzzy_del1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Typo-tolerant entity matching: all distinct name pairs at edit

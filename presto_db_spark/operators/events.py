@@ -8,6 +8,11 @@ pipeline shapes on Structured Streaming as the scale-out path.
 Scale notes: sessionization is a per-user window — shuffles once on
 ``user_id`` and stays partitioned for the gap/cumsum steps (one exchange in
 the plan); tumbling buckets aggregate with partial combine before shuffle.
+
+An entry whose oracle text runs on Spark with the oracle's rows is that
+text, registered by ``engine.sql_entry``, unless a ``Kept port`` comment
+above its port names the keep-rule that holds; an unmarked port holds a
+text that does not (keep-rule 1, see :mod:`presto_db_spark.registry`).
 """
 
 from __future__ import annotations
@@ -16,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, small_df
+from ..engine import sql_entry
 from ..registry import family
 
 QUERIES, ORACLE, _q = family()
@@ -23,8 +29,8 @@ QUERIES, ORACLE, _q = family()
 
 # --- tumbling-window aggregation -------------------------------------------
 
-@_q(
-    "events_tumbling",
+sql_entry(
+    _q, "events_tumbling",
     """
 SELECT date_trunc('hour', ts) AS hour_start, event_type,
        CAST(count(*) AS BIGINT) AS cnt,
@@ -34,19 +40,11 @@ FROM events
 GROUP BY date_trunc('hour', ts), event_type
 """,
 )
-def events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    return ev.groupBy(
-        F.date_trunc("hour", "ts").alias("hour_start"), "event_type"
-    ).agg(
-        F.count("*").alias("cnt"),
-        F.round(F.sum(F.round(F.col("value") * 100)) / 100, 2).alias("total_value"),
-        F.countDistinct("user_id").alias("users"),
-    )
 
 
 # --- sessionization (30-min inactivity gap) --------------------------------
 
+# Kept port (deferred): headline entry; its rule-3 A/B waits for per-session table binding.
 @_q(
     "events_sessionize",
     """
@@ -98,8 +96,8 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- per-user running / moving aggregates ----------------------------------
 
-@_q(
-    "events_moving",
+sql_entry(
+    _q, "events_moving",
     """
 SELECT event_id, user_id,
        round(avg(round(value * 100)) OVER (PARTITION BY user_id ORDER BY ts, event_id
@@ -109,25 +107,11 @@ SELECT event_id, user_id,
 FROM events WHERE user_id < 20
 """,
 )
-def events_moving(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100)
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    return ev.filter(F.col("user_id") < 20).select(
-        "event_id",
-        "user_id",
-        F.round(F.avg(cents).over(w.rowsBetween(-2, W.currentRow)) / 100, 4).alias(
-            "mov_avg"
-        ),
-        F.sum(cents)
-        .over(w.rowsBetween(W.unboundedPreceding, W.currentRow))
-        .cast("long")
-        .alias("run_cents"),
-    )
 
 
 # --- funnel: users who signup → purchase within 24h ------------------------
 
+# Kept port (keep-rule 2d, helper coverage): rangejoin.range_join.
 @_q(
     "events_funnel",
     """
@@ -162,8 +146,8 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- pivot: event_type counts per user (top users) -------------------------
 
-@_q(
-    "events_pivot",
+sql_entry(
+    _q, "events_pivot",
     """
 SELECT user_id,
        CAST(sum(CASE WHEN event_type = 'click'    THEN 1 ELSE 0 END) AS BIGINT) AS click,
@@ -174,19 +158,6 @@ SELECT user_id,
 FROM events WHERE user_id < 50 GROUP BY user_id
 """,
 )
-def events_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    out = (
-        ev.filter(F.col("user_id") < 50)
-        .groupBy("user_id")
-        .pivot("event_type", ["click", "view", "purchase", "signup", "error"])
-        .count()
-    )
-    # pivot leaves null where a type never occurred; SQL's sum(case) gives 0
-    return out.select(
-        "user_id",
-        *[F.coalesce(F.col(c), F.lit(0)).alias(c) for c in ["click", "view", "purchase", "signup", "error"]],
-    )
 
 
 # --- as-of join: each error event matched to the user's latest prior event -
@@ -246,24 +217,7 @@ ORDER BY from_type, to_type
 """
 
 
-@_q("events_transition_matrix", _TRANSITION_SQL)
-def events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """User-journey transition counts (the Markov-matrix build every
-    product-analytics pipeline runs): consecutive event pairs per user via
-    lead() over (user, ts) — one shuffle on user_id, windows scoped to a
-    single user's rows (never a self-join), then a tiny type×type rollup.
-    Deterministic ordering ties break on event_id."""
-    ev = load_table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
-        "event_type", F.lead("event_type").over(w).alias("next_type")
-    )
-    return (
-        seq.filter(F.col("next_type").isNotNull())
-        .groupBy(F.col("event_type").alias("from_type"), F.col("next_type").alias("to_type"))
-        .agg(F.count("*").cast("bigint").alias("n"))
-        .orderBy("from_type", "to_type")
-    )
+sql_entry(_q, "events_transition_matrix", _TRANSITION_SQL)
 
 
 # --- hypertable-style gap-fill + LOCF rollup --------------------------------
@@ -600,63 +554,7 @@ FROM s LEFT JOIN c ON c.user_id = s.user_id
 """
 
 
-@_q("events_windowfunnel", _FUNNEL3_SQL)
-def events_windowfunnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-step window funnel (ClickHouse ``windowFunnel`` semantics,
-    deterministic variant): per user, step 1 anchors at the FIRST signup,
-    step 2 at the first click within 24 h of it, step 3 at the first
-    purchase within 24 h of that click — the earliest-qualifying-event
-    rule makes the chain unique, so step timestamps are value-checkable
-    (ClickHouse's own any-chain maximization is order-dependent).
-
-    Each step is one (user-keyed) aggregate + one equi-join on user_id
-    with the time window as a range predicate against the ANCHORED
-    single timestamp (never event-to-event — the quadratic hot-user
-    blowup ``events_funnel`` documents cannot occur because one side is
-    already one row per user).
-
-    100 TB: three user-partitioned aggregates reusing one exchange
-    lineage; funnels with per-step fan-out route through
-    ``rangejoin.range_join`` instead."""
-    ev = load_table(spark, sf_dir, "events")
-
-    def first_after(
-        prev: DataFrame, prev_col: str, etype: str, out: str
-    ) -> DataFrame:
-        e = ev.filter(F.col("event_type") == etype).select("user_id", "ts")
-        return (
-            e.join(prev, "user_id")
-            .filter(
-                (F.col("ts") > F.col(prev_col))
-                & (F.col("ts") <= F.col(prev_col) + F.expr("INTERVAL 24 HOURS"))
-            )
-            .groupBy("user_id")
-            .agg(F.min("ts").alias(out))
-        )
-
-    s = (
-        ev.filter(F.col("event_type") == "signup")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("s_ts"))
-    )
-    c = first_after(s, "s_ts", "click", "c_ts")
-    p = first_after(c, "c_ts", "purchase", "p_ts")
-    return (
-        s.alias("s")
-        .join(c.select("user_id", "c_ts"), "user_id", "left")
-        .join(p.select("user_id", "p_ts"), "user_id", "left")
-        .select(
-            "user_id",
-            F.when(F.col("p_ts").isNotNull(), 3)
-            .when(F.col("c_ts").isNotNull(), 2)
-            .otherwise(1)
-            .cast("int")
-            .alias("step_reached"),
-            "s_ts",
-            "c_ts",
-            "p_ts",
-        )
-    )
+sql_entry(_q, "events_windowfunnel", _FUNNEL3_SQL)
 
 
 # --- RFM quintile scoring -----------------------------------------------------
@@ -681,60 +579,10 @@ FROM base
 """
 
 
-@_q("events_rfm_scores", _RFM_SQL)
-def events_rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFM customer scoring (the classic recency/frequency/monetary
-    segmentation): per purchasing user, days since last purchase as of a
-    fixed scoring date, purchase count, and exact-cents spend, each
-    quintiled with ``ntile(5)`` — ties totalized by user_id so the bucket
-    assignment is deterministic and cross-engine identical (ntile's
-    equal-height buckets are order-dependent; an untotalized ORDER BY
-    would let the engines split ties differently).
-
-    100 TB: one purchase-filtered groupBy (map-side combine), then three
-    global ntile windows over one row per customer — the window input is
-    customer-cardinality, not event-cardinality, so a single-partition
-    sort is acceptable the way the BPE top-k windows are. When even the
-    per-customer table is too large for one partition,
-    ``events_rfm_scores_scalable`` below computes the identical scores
-    via distributed ranks (range partition + prefix offsets) with no
-    single-partition window anywhere."""
-    ev = load_table(spark, sf_dir, "events")
-    base = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id")
-        .agg(
-            F.datediff(
-                F.lit(_RFM_ASOF).cast("date"), F.max("ts").cast("date")
-            )
-            .cast("bigint")
-            .alias("recency_days"),
-            F.count("*").alias("frequency"),
-            F.sum(F.round(F.col("value") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("monetary_cents"),
-        )
-    )
-    return base.select(
-        "user_id",
-        "recency_days",
-        "frequency",
-        "monetary_cents",
-        F.ntile(5)
-        .over(W.orderBy(F.asc("recency_days"), "user_id"))
-        .cast("int")
-        .alias("r_score"),
-        F.ntile(5)
-        .over(W.orderBy(F.desc("frequency"), "user_id"))
-        .cast("int")
-        .alias("f_score"),
-        F.ntile(5)
-        .over(W.orderBy(F.desc("monetary_cents"), "user_id"))
-        .cast("int")
-        .alias("m_score"),
-    )
+sql_entry(_q, "events_rfm_scores", _RFM_SQL)
 
 
+# Kept port (deferred): headline entry; its rule-3 A/B waits for per-session table binding.
 @_q("events_rfm_scores_scalable", _RFM_SQL)
 def events_rfm_scores_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The at-scale twin of ``events_rfm_scores`` (VERDICT r09 #3: the
@@ -829,42 +677,7 @@ WHERE n >= {_ZS_MIN_N}
 """
 
 
-@_q("events_anomaly_zscore", _ZS_SQL)
-def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling z-score anomaly detection (the standard metric-monitoring
-    rule): flag an event whose value sits more than 3 sample standard
-    deviations from the mean of the user's trailing 20 events. The test
-    is EXACT INTEGER — the |x-mean| > K·s comparison is cross-multiplied
-    into cents/count/sum/sum-of-squares so there is no sqrt, no division,
-    and no float anywhere, and both engines flag the identical rows
-    (a float-s computation can disagree in the last ulp exactly at the
-    flag boundary).
-
-    100 TB: one hash exchange on user_id, then a bounded-frame running
-    window (constant state per row); flags stream out — no second pass,
-    no self-join. The trailing frame EXCLUDES the current row, so a
-    genuine spike cannot mask itself by inflating its own baseline."""
-    ev = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("bigint")
-    win = (
-        W.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-_ZS_WIN, -1)
-    )
-    w = ev.select(
-        "user_id",
-        "event_id",
-        cents.alias("cents"),
-        F.count("*").over(win).cast("bigint").alias("n"),
-        F.sum(cents).over(win).cast("bigint").alias("s"),
-        F.sum(cents * cents).over(win).cast("bigint").alias("q"),
-    )
-    lhs = (F.col("cents") * F.col("n") - F.col("s"))
-    return w.filter(
-        (F.col("n") >= _ZS_MIN_N)
-        & (lhs * lhs * (F.col("n") - 1)
-           > _ZS_K * _ZS_K * F.col("n") * (F.col("n") * F.col("q") - F.col("s") * F.col("s")))
-    ).select("user_id", "event_id", "cents", "n")
+sql_entry(_q, "events_anomaly_zscore", _ZS_SQL)
 
 
 # --- JSON property rollup (json_extract over a REAL column) -------------------
@@ -1218,46 +1031,7 @@ FROM ranked WHERE rk <= {PATH_TOP_K} ORDER BY rk
 """
 
 
-@_q("events_path_analysis", _PATH_SQL)
-def events_path_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Path analysis (the Sankey-diagram feed): the top {k} three-step
-    event sequences across all users, with traversal and distinct-user
-    counts — the product-analytics view funnels are built FROM when the
-    steps aren't known in advance (windowfunnel assumes a fixed step
-    list; this discovers the paths).
-
-    Scale shape: sequences come from two lead() windows sharing ONE
-    (user_id)-keyed sort shuffle (per-user history bounded); path
-    counting is a map-side-combined aggregate on the path string (path
-    vocabulary is |event_types|³-bounded, tiny); the final top-k is
-    TakeOrderedAndProject via the rank filter — never a global sort of
-    the path table. No Python, exact integers only.""".format(k=PATH_TOP_K)
-    ev = load_table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
-        "user_id",
-        F.col("event_type").alias("e1"),
-        F.lead("event_type", 1).over(w).alias("e2"),
-        F.lead("event_type", 2).over(w).alias("e3"),
-    )
-    paths = (
-        seq.filter(F.col("e2").isNotNull() & F.col("e3").isNotNull())
-        .select(
-            F.concat_ws(">", "e1", "e2", "e3").alias("path"),
-            "user_id",
-        )
-        .groupBy("path")
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            F.countDistinct("user_id").cast("long").alias("n_users"),
-        )
-    )
-    ranked = paths.withColumn(
-        "rk", F.row_number().over(W.orderBy(F.desc("n"), "path"))
-    ).filter(F.col("rk") <= PATH_TOP_K)
-    return ranked.select(
-        F.col("rk").cast("int").alias("rk"), "path", "n", "n_users"
-    ).orderBy("rk")
+sql_entry(_q, "events_path_analysis", _PATH_SQL)
 
 
 # --- incremental materialized-view maintenance --------------------------------
@@ -2286,54 +2060,7 @@ GROUP BY r.event_type ORDER BY r.event_type
 """
 
 
-@_q("events_peak_concurrency", _PEAK_SQL)
-def events_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Peak concurrent load per event type: each event holds a resource
-    for a half-open 15-minute interval; the answer is the sweep-line
-    maximum of (+1 at start, -1 at end) running sums — the textbook
-    interval-scheduling primitive (meeting rooms / max simultaneous
-    sessions).  Reference users write this as a UNION ALL + window over
-    ``events``; same shape here.
-
-    Determinism at duplicate timestamps: boundary points are pre-grouped
-    to one row per (type, t, delta) so the running sum's sort key is
-    UNIQUE — no ROWS-frame ambiguity — and delta=-1 sorts before +1 at
-    equal t, encoding the half-open (end-before-start) rule in both
-    engines identically.
-
-    Scale shape: the boundary explode is 2x events but collapses
-    map-side in the (type, t, delta) groupBy; the running sum is ONE
-    window partitioned by event_type (parallel across types — for a
-    single giant series this becomes the range-partition prefix-offset
-    device of sort_distributed_sample); the peak fold is |types| rows."""
-    ev = load_table(spark, sf_dir, "events")
-    pts = ev.select(
-        "event_type", F.col("ts").alias("t"), F.lit(1).alias("delta")
-    ).unionByName(
-        ev.select(
-            "event_type",
-            (F.col("ts") + F.expr(f"INTERVAL {_CONCURRENCY_MIN} MINUTE")).alias(
-                "t"
-            ),
-            F.lit(-1).alias("delta"),
-        )
-    )
-    grp = pts.groupBy("event_type", "t", "delta").agg(
-        F.count("*").cast("long").alias("n")
-    )
-    w = W.partitionBy("event_type").orderBy("t", "delta")
-    run = grp.select(
-        "event_type", (F.sum(F.col("delta") * F.col("n")).over(w)).alias("live")
-    )
-    totals = ev.groupBy("event_type").agg(
-        F.count("*").cast("long").alias("n_intervals")
-    )
-    return (
-        run.groupBy("event_type")
-        .agg(F.max("live").cast("long").alias("peak_concurrency"))
-        .join(totals, "event_type")
-        .orderBy("event_type")
-    )
+sql_entry(_q, "events_peak_concurrency", _PEAK_SQL)
 
 
 # --- autocorrelation of the daily activity series ----------------------------
@@ -4097,55 +3824,7 @@ ORDER BY event_type, d
 """
 
 
-@_q("events_rolling_median", _ROLLMED_SQL)
-def events_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact trailing {w}-day rolling median of daily event counts per
-    type (lower median; emitted only where the window is full — the
-    STL full-window contract).  The robust alternative to
-    events_moving's mean when a single spike day should NOT drag the
-    smoothed line.
-
-    Scale: the self-join and rank windows run on the (type, day)
-    collapse — {w}x day-span rows per type at any raw data size; the
-    rank partitions on (type, day), so no single-partition state
-    anywhere."""
-    ev = load_table(spark, sf_dir, "events")
-    s = ev.groupBy("event_type", F.to_date("ts").alias("d")).agg(
-        F.count("*").cast("long").alias("x")
-    )
-    a, b = s.alias("a"), s.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("b.event_type") == F.col("a.event_type"))
-        & (F.col("b.d") >= F.date_sub(F.col("a.d"), _ROLLMED_WIN - 1))
-        & (F.col("b.d") <= F.col("a.d")),
-    ).select(
-        F.col("a.event_type").alias("event_type"),
-        F.col("a.d").alias("d"),
-        F.col("b.x").alias("v"),
-    )
-    wr = W.partitionBy("event_type", "d").orderBy("v")
-    wc = W.partitionBy("event_type", "d")
-    r = pairs.select(
-        "event_type", "d", "v",
-        F.row_number().over(wr).alias("rn"),
-        F.count("*").over(wc).alias("cnt"),
-    )
-    return (
-        r.groupBy("event_type", "d")
-        .agg(
-            F.min(F.when(F.col("rn") * 2 >= F.col("cnt"), F.col("v")))
-            .cast("long").alias("med7"),
-            F.max("cnt").cast("long").alias("n_in_window"),
-        )
-        .filter(F.col("n_in_window") == _ROLLMED_WIN)
-        .orderBy("event_type", "d")
-    )
-
-
-events_rolling_median.__doc__ = events_rolling_median.__doc__.format(
-    w=_ROLLMED_WIN
-)
+sql_entry(_q, "events_rolling_median", _ROLLMED_SQL)
 
 
 # --- delta-method CI for a ratio metric (r13) --------------------------------
@@ -4194,49 +3873,7 @@ FROM s ORDER BY arm
 """
 
 
-@_q("events_ab_delta_method", _DELTAM_SQL)
-def events_ab_delta_method(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Delta-method standard error and 95% CI for the ratio metric
-    revenue-cents-per-event by experiment arm (user_id parity):
-    Var(X/Y) ~ (s_x^2 + R^2 s_y^2 - 2R s_xy)/(ybar^2 n), the
-    denominator-is-random correction a per-user t-test gets wrong.
-
-    Scale: one user collapse + one 6-sum arm aggregate (both map-side
-    combinable) — 2 output rows at any data size; integer moment sums,
-    shared double tree for the variance algebra (sqrt is IEEE
-    correctly rounded), e6 outputs."""
-    ev = load_table(spark, sf_dir, "events")
-    u = ev.groupBy("user_id", (F.col("user_id") % 2).alias("arm")).agg(
-        F.sum(F.round(F.col("value") * 100)).cast("long").alias("x"),
-        F.count("*").cast("long").alias("y"),
-    )
-    m = u.groupBy("arm").agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-    )
-    d = m.selectExpr(
-        "arm", "n",
-        "CAST(sx AS DOUBLE) / CAST(sy AS DOUBLE) AS r",
-        "(CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * sx / n) / (n - 1) AS vx",
-        "(CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * sy / n) / (n - 1) AS vy",
-        "(CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * sy / n) / (n - 1) AS cxy",
-        "CAST(sy AS DOUBLE) / n AS ybar",
-    ).selectExpr(
-        "arm", "n", "r",
-        "sqrt((vx + r * r * vy - 2 * r * cxy) / (ybar * ybar * n)) AS se",
-    )
-    return d.selectExpr(
-        "CAST(arm AS BIGINT) AS arm",
-        "n AS n_users",
-        "CAST(round(r * 1000000) AS BIGINT) AS ratio_e6",
-        "CAST(round(se * 1000000) AS BIGINT) AS se_e6",
-        f"CAST(round((r - {_DELTA_Z} * se) * 1000000) AS BIGINT) AS ci_lo_e6",
-        f"CAST(round((r + {_DELTA_Z} * se) * 1000000) AS BIGINT) AS ci_hi_e6",
-    ).orderBy("arm")
+sql_entry(_q, "events_ab_delta_method", _DELTAM_SQL)
 
 
 # --- Jarque-Bera normality test (r13) ----------------------------------------

@@ -16,6 +16,11 @@ Dialect notes (cross-engine determinism):
 * approx_* functions are engine-specific by construction → no oracle entry
   (driver records the weaker rows-only check; the exact counterparts are
   oracle-checked here and in tpch_q16).
+
+An entry whose oracle text runs on Spark with the oracle's rows is that
+text, registered by ``engine.sql_entry``, unless a ``Kept port`` comment
+above its port names the keep-rule that holds; an unmarked port holds a
+text that does not (keep-rule 1, see :mod:`presto_db_spark.registry`).
 """
 
 from __future__ import annotations
@@ -24,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_tables
+from ..engine import sql_entry
 from ..registry import family
 
 QUERIES, ORACLE, _q = family()
@@ -31,8 +37,8 @@ QUERIES, ORACLE, _q = family()
 
 # --- string family ----------------------------------------------------------
 
-@_q(
-    "func_string",
+sql_entry(
+    _q, "func_string",
     """
 SELECT p_partkey,
        length(p_name) AS len,
@@ -50,23 +56,6 @@ SELECT p_partkey,
 FROM part
 """,
 )
-def func_string(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (part,) = load_tables(spark, sf_dir, "part")
-    return part.select(
-        "p_partkey",
-        F.length("p_name").alias("len"),
-        F.upper("p_name").alias("up"),
-        F.lower("p_brand").alias("lo"),
-        F.substring("p_name", 1, 5).alias("sub"),
-        F.replace(F.col("p_name"), F.lit(" "), F.lit("_")).alias("repl"),
-        F.reverse("p_type").alias("rev"),
-        F.lpad("p_brand", 10, "*").alias("pad"),
-        F.split_part(F.col("p_name"), F.lit(" "), F.lit(1)).alias("first_word"),
-        F.instr("p_name", "e").alias("pos_e"),
-        F.concat_ws("", F.col("p_brand"), F.lit(":"), F.col("p_type")).alias("cat"),
-        F.trim(F.lit("  x  ")).alias("trimmed"),
-        F.levenshtein("p_brand", F.lit("Brand#1")).alias("lev"),
-    )
 
 
 # --- regex family -----------------------------------------------------------
@@ -241,8 +230,8 @@ def func_array(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- conditional / null handling -------------------------------------------
 
-@_q(
-    "func_conditional",
+sql_entry(
+    _q, "func_conditional",
     """
 SELECT c_custkey,
        CASE WHEN c_acctbal < 0 THEN 'neg' WHEN c_acctbal < 1000 THEN 'low' ELSE 'high' END AS tier,
@@ -252,26 +241,12 @@ SELECT c_custkey,
 FROM customer
 """,
 )
-def func_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (cust,) = load_tables(spark, sf_dir, "customer")
-    return cust.select(
-        "c_custkey",
-        F.when(F.col("c_acctbal") < 0, "neg")
-        .when(F.col("c_acctbal") < 1000, "low")
-        .otherwise("high")
-        .alias("tier"),
-        F.coalesce(F.nullif(F.col("c_mktsegment"), F.lit("BUILDING")), F.lit("OTHER")).alias(
-            "seg"
-        ),
-        F.col("c_acctbal").eqNullSafe(F.lit(0.0)).alias("is_zero"),
-        F.when(F.col("c_nationkey") % 2 == 0, "even").otherwise("odd").alias("parity"),
-    )
 
 
 # --- aggregate: statistics (variance/corr/covar family) --------------------
 
-@_q(
-    "agg_stats",
+sql_entry(
+    _q, "agg_stats",
     """
 SELECT l_returnflag,
        round(stddev_samp(l_quantity), 6) AS sd_s,
@@ -285,18 +260,6 @@ SELECT l_returnflag,
 FROM lineitem GROUP BY l_returnflag
 """,
 )
-def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (li,) = load_tables(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.round(F.stddev_samp("l_quantity"), 6).alias("sd_s"),
-        F.round(F.stddev_pop("l_quantity"), 6).alias("sd_p"),
-        F.round(F.var_samp("l_quantity"), 6).alias("var_s"),
-        F.round(F.var_pop("l_quantity"), 6).alias("var_p"),
-        F.round(F.corr("l_quantity", "l_discount"), 6).alias("cr"),
-        F.round(F.covar_samp("l_quantity", "l_discount"), 6).alias("cv_s"),
-        F.round(F.covar_pop("l_quantity", "l_discount"), 6).alias("cv_p"),
-        F.round(F.avg("l_quantity"), 6).alias("mean_q"),
-    )
 
 
 # --- aggregate: exact percentiles ------------------------------------------
@@ -324,8 +287,8 @@ def agg_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- aggregate: min_by / max_by with deterministic tie-break ---------------
 
-@_q(
-    "agg_minmax_by",
+sql_entry(
+    _q, "agg_minmax_by",
     """
 SELECT CAST(c_nationkey AS INTEGER) AS nat,
        max_by(c_custkey, CAST(round(c_acctbal * 100) AS BIGINT) * 1000000 + c_custkey)
@@ -336,16 +299,6 @@ SELECT CAST(c_nationkey AS INTEGER) AS nat,
 FROM customer GROUP BY c_nationkey
 """,
 )
-def agg_minmax_by(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (cust,) = load_tables(spark, sf_dir, "customer")
-    # Fold the tie-break key into the ordering value as exact integer math
-    # (Presto min_by/max_by pick an arbitrary row on ties — we pin it).
-    key = F.round(F.col("c_acctbal") * 100).cast("long") * 1000000 + F.col("c_custkey")
-    return cust.groupBy(F.col("c_nationkey").alias("nat")).agg(
-        F.max_by("c_custkey", key).alias("richest"),
-        F.min_by("c_custkey", key).alias("poorest"),
-        F.max("c_acctbal").alias("max_bal"),
-    )
 
 
 # --- aggregate: bool / conditional count / distinct collections ------------
@@ -376,6 +329,7 @@ def agg_bool_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- aggregate: approx family (engine-specific → rows-only check) ----------
 
+# Kept port (keep-rule 2b, worse plan): the text fails test_agg_approx_exact_reference_is_percentile.
 @_q(
     "agg_approx",
     """

@@ -135,6 +135,7 @@ def func_binary_bitwise(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Kept port (keep-rule 2c, text skips the function): it pins constants, not hash calls.
 @_q(
     "func_hash_engine",
     """
@@ -184,6 +185,7 @@ def func_hash_engine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- map family --------------------------------------------------------------
 
+# Kept port (keep-rule 2c, text skips the function): it expands the map functions by hand.
 @_q(
     "func_map",
     """
@@ -266,6 +268,7 @@ def func_struct_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- URL family --------------------------------------------------------------
 
+# Kept port (keep-rule 2c, text skips the function): it pins constants, not URL calls.
 @_q(
     "func_url",
     """
@@ -305,6 +308,7 @@ def func_url(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- TRY / try_cast semantics ------------------------------------------------
 
+# Kept port (keep-rule 2c, text skips the function): it expands try_cast by hand.
 @_q(
     "func_trycast",
     """
@@ -344,6 +348,7 @@ def func_trycast(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- math family, part 2 -----------------------------------------------------
 
+# Kept port (keep-rule 2c, text skips the function): it expands the math functions by hand.
 @_q(
     "func_math_extra",
     """
@@ -542,6 +547,7 @@ def agg_checksum_geomean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- aggregate: central moments + linear regression --------------------------
 
+# Kept port (keep-rule 2c, text skips the function): it expands the moment and regr_* aggregates by hand.
 @_q(
     "agg_moments_regr",
     """
@@ -656,6 +662,7 @@ def agg_map_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Kept port (deferred): headline entry; its rule-3 A/B waits for per-session table binding.
 @_q(
     "agg_hll_sketch",
     """

@@ -13,6 +13,11 @@
 * ``fnv1_64``-style portable polynomial hash — oracle reproduces the fold
   via ``list_reduce`` (same integer math), unlike xxhash64/crc32 which stay
   rows-only in func_hash_engine.
+
+An entry whose oracle text runs on Spark with the oracle's rows is that
+text, registered by ``engine.sql_entry``, unless a ``Kept port`` comment
+above its port names the keep-rule that holds; an unmarked port holds a
+text that does not (keep-rule 1, see :mod:`presto_db_spark.registry`).
 """
 
 from __future__ import annotations
@@ -21,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_tables
+from ..ddl import spark_sql
+from ..engine import sql_entry
 from ..registry import family
 
 QUERIES, ORACLE, _q = family()
@@ -67,8 +74,8 @@ def agg_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
-    "func_wilson",
+sql_entry(
+    _q, "func_wilson",
     """
 WITH s AS (
   SELECT l_returnflag,
@@ -84,22 +91,6 @@ SELECT l_returnflag,
 FROM s
 """,
 )
-def func_wilson(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """wilson_interval_lower/upper(successes, trials, z) at z=1.96."""
-    (li,) = load_tables(spark, sf_dir, "lineitem")
-    agg = li.groupBy("l_returnflag").agg(
-        F.count_if(F.col("l_discount") > 0.05).cast("double").alias("pos"),
-        F.count("*").cast("double").alias("n"),
-    )
-    p, n, z = F.col("pos") / F.col("n"), F.col("n"), F.lit(1.96)
-    center = p + z * z / (2 * n)
-    margin = z * F.sqrt(p * (1 - p) / n + z * z / (4 * n * n))
-    denom = 1 + z * z / n
-    return agg.select(
-        "l_returnflag",
-        F.round((center - margin) / denom, 6).alias("wilson_lower"),
-        F.round((center + margin) / denom, 6).alias("wilson_upper"),
-    )
 
 
 @_q(
@@ -199,8 +190,8 @@ END
 _P_EXPR = "(CAST(c_custkey % 97 + 1 AS DOUBLE) / 98)"
 
 
-@_q(
-    "func_inverse_normal_cdf",
+sql_entry(
+    _q, "func_inverse_normal_cdf",
     f"""
 SELECT c_custkey,
        round({_P_EXPR}, 6) AS p,
@@ -208,15 +199,6 @@ SELECT c_custkey,
 FROM customer WHERE c_custkey < 400
 """,
 )
-def func_inverse_normal_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """inverse_normal_cdf (``MathFunctions.java``) — Acklam's approximation
-    as a pure expression; the oracle evaluates the identical fragment."""
-    (cust,) = load_tables(spark, sf_dir, "customer")
-    return cust.filter(F.col("c_custkey") < 400).select(
-        "c_custkey",
-        F.round(F.expr(_P_EXPR), 6).alias("p"),
-        F.round(F.expr(_ACKLAM.format(p=_P_EXPR)), 6).alias("inv_cdf"),
-    )
 
 
 @_q(
@@ -510,6 +492,7 @@ FROM p ORDER BY id
 _COLOR_SQL = _color_bar_parts()[4]
 
 
+# Kept port (keep-rule 2d, helper coverage): color.bar_expr and color.render_expr.
 @_q("func_color_bar", _COLOR_SQL)
 def func_color_bar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """color/rgb/render/bar (ColorFunctions.java:85-233).
@@ -571,12 +554,8 @@ def func_data_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark but float64 from the oracle's pandas path — the same hash-kind
     mismatch class as the r06 HUGEINT bug (the DECIMAL return type itself
     is covered by the golden-pair scalar tests)."""
-    from ..functions.compat import ensure_functions
-
     (cust,) = load_tables(spark, sf_dir, "customer")
-    ensure_functions(spark, {"parse_presto_data_size"})
-    cust.filter(F.col("c_custkey") < 2000).createOrReplaceTempView("_ds_cust")
-    return spark.sql("""
+    return spark_sql(spark, """
         SELECT c_custkey AS id,
                CONCAT(CAST(c_custkey % 900 + 1 AS STRING), '.',
                       CAST(c_custkey % 10 AS STRING),
@@ -589,8 +568,8 @@ def func_data_size(spark: SparkSession, sf_dir: str) -> DataFrame:
                         CASE CAST(c_custkey % 5 AS INT) WHEN 0 THEN 'B'
                           WHEN 1 THEN 'kB' WHEN 2 THEN 'MB'
                           WHEN 3 THEN 'GB' ELSE 'TB' END)) AS BIGINT) AS bytes
-        FROM _ds_cust ORDER BY id
-    """)
+        FROM {cust} ORDER BY id
+    """, cust=cust.filter(F.col("c_custkey") < 2000))
 
 
 # --- differential_entropy ----------------------------------------------------
@@ -611,8 +590,8 @@ def func_data_size(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DE_BINS, _DE_LO, _DE_HI = 64, 0.0, 120000.0
 _DE_N, _DE_M = 1024, 32  # m = round(sqrt(1024))
 
-@_q(
-    "agg_differential_entropy",
+sql_entry(
+    _q, "agg_differential_entropy",
     f"""
 WITH b AS (
   SELECT least({_DE_BINS - 1},
@@ -644,60 +623,3 @@ SELECT round(hist.de, 6) AS de_hist, round(vas.de, 6) AS de_vasicek
 FROM hist CROSS JOIN vas
 """,
 )
-def agg_differential_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``differential_entropy`` — both reference strategies (see module
-    notes above): the fixed-histogram MLE form is a pure two-level
-    aggregation (bin counts partial-combine map-side; at 100 TB the
-    shuffle carries ≤64 rows), and the Vasicek spacing estimator runs
-    over a BOUNDED deterministic 1024-value sample (the reference's own
-    reservoir strategy is bounded the same way, default 9999), so the
-    single-partition sort window is over 1024 rows by construction."""
-    from pyspark.sql import Window
-
-    (li,) = load_tables(spark, sf_dir, "lineitem")
-    width = (_DE_HI - _DE_LO) / _DE_BINS
-    bins = li.groupBy(
-        F.least(
-            F.lit(_DE_BINS - 1),
-            F.greatest(
-                F.lit(0),
-                F.floor((F.col("l_extendedprice") - _DE_LO) / width).cast("long"),
-            ),
-        ).alias("bin")
-    ).agg(F.count("*").alias("w"))
-    p = F.col("w").cast("double") / F.sum("w").over(Window.partitionBy()).cast("double")
-    hist = bins.select(p.alias("p")).agg(
-        ((-F.sum(F.col("p") * F.log("p")) + F.log(F.lit(width))) / F.log(F.lit(2.0)))
-        .alias("de")
-    )
-
-    samp = (
-        li.select(
-            F.col("l_extendedprice").alias("v"),
-            F.md5(
-                F.round(F.col("l_extendedprice") * 100).cast("long").cast("string")
-            ).alias("h"),
-        )
-        .dropDuplicates(["v"])
-        .orderBy("h")
-        .limit(_DE_N)
-    )
-    w_sort = Window.orderBy("v")
-    w_all = Window.orderBy("v").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    i = F.row_number().over(w_sort) - 1
-    a = F.when(
-        (i + _DE_M < _DE_N) & (i - _DE_M > 0), F.lit(2.0)
-    ).otherwise(F.lit(1.0))
-    s_plus = F.coalesce(F.lead("v", _DE_M).over(w_sort), F.max("v").over(w_all))
-    s_minus = F.coalesce(F.lag("v", _DE_M).over(w_sort), F.min("v").over(w_all))
-    vas = (
-        samp.select(
-            F.log((F.lit(float(_DE_N)) / (a * _DE_M)) * (s_plus - s_minus)).alias("t")
-        )
-        .agg((F.sum("t") / _DE_N / F.log(F.lit(2.0))).alias("de"))
-    )
-    return hist.crossJoin(vas).select(
-        F.round(hist.de, 6).alias("de_hist"), F.round(vas.de, 6).alias("de_vasicek")
-    )

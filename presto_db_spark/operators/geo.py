@@ -55,6 +55,7 @@ def st_distance(x1: Column, y1: Column, x2: Column, y2: Column) -> Column:
     return F.sqrt((x1 - x2) * (x1 - x2) + (y1 - y2) * (y1 - y2))
 
 
+# Kept port (keep-rule 2c, text skips the function): it expands the predicates by hand.
 @_q(
     "geo_point_predicates",
     f"""
@@ -97,6 +98,7 @@ def geo_point_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Kept port (keep-rule 2b, worse plan): the text's pair join is a nested loop.
 @_q(
     "geo_radius_join",
     f"""

@@ -18,6 +18,11 @@ the two classic one-shot shapes:
 * **association rules** — support / confidence / lift for co-purchased
   part pairs (the a-priori 2-itemset step), exact integer ppm so both
   engines rank identically.
+
+An entry whose oracle text runs on Spark with the oracle's rows is that
+text, registered by ``engine.sql_entry``, unless a ``Kept port`` comment
+above its port names the keep-rule that holds; an unmarked port holds a
+text that does not (keep-rule 1, see :mod:`presto_db_spark.registry`).
 """
 
 from __future__ import annotations
@@ -27,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..catalog import load_table, small_df
+from ..engine import sql_entry
 from ..registry import family
 
 QUERIES, ORACLE, _q = family()
@@ -85,6 +91,7 @@ JOIN oriented e3 ON e3.src = w1.dst AND e3.dst = w2.dst
 """
 
 
+# Kept port (deferred): the text unrolls the loop; it waits for the loop-state helper.
 @_q("graph_triangle_count", _TRIANGLE_SQL)
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle counting on the co-purchase graph via the degree-ordered
@@ -627,6 +634,7 @@ def _kcore_oracle() -> str:
     return "WITH " + ",\n".join(ctes) + "\n" + rows + "\nORDER BY round"
 
 
+# Kept port (deferred): the text unrolls the loop; it waits for the loop-state helper.
 @_q("graph_kcore", _kcore_oracle())
 def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-core decomposition by iterative peeling (Seidman 1983; the
@@ -752,6 +760,7 @@ FROM l{_LPA_ROUNDS} GROUP BY label ORDER BY community
 )
 
 
+# Kept port (deferred): the text unrolls the loop; it waits for the loop-state helper.
 @_q("graph_label_propagation", _LPA_SQL)
 def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan et
@@ -823,6 +832,7 @@ ORDER BY d.community
 )
 
 
+# Kept port (deferred): headline entry; its rule-3 A/B waits for per-session table binding.
 @_q("graph_modularity", _MODULARITY_SQL)
 def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Modularity decomposition of the LPA communities (Newman-Girvan
@@ -1685,39 +1695,7 @@ ORDER BY supp_a, supp_b
 """
 
 
-@_q("graph_bipartite_projection", _BIPROJ_SQL)
-def graph_bipartite_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-mode projection of the supplier↔part bipartite graph:
-    supplier pairs weighted by distinct shared parts (weight >=
-    {minw}), with the part-degree cap ({cap}) that bounds the per-part
-    pair fan-out at |S_p|² — frequent-item pruning, a fixture no-op and
-    the 100 TB survival device. Shape: one distinct collapse, one
-    degree groupBy, one equi self-join on the part key, one count
-    groupBy — all map-side combinable, no window, no Python."""
-    li = load_table(spark, sf_dir, "lineitem")
-    pb = li.select(
-        F.col("l_suppkey").cast("long").alias("s"),
-        F.col("l_partkey").cast("long").alias("p"),
-    ).distinct()
-    keep = pb.groupBy("p").agg(F.count("*").alias("dp")).filter(
-        F.col("dp") <= _BIPROJ_SUPP_MAX
-    ).select("p")
-    pbf = pb.join(keep, "p")
-    a = pbf.select(F.col("p"), F.col("s").alias("supp_a"))
-    b = pbf.select(F.col("p"), F.col("s").alias("supp_b"))
-    return (
-        a.join(b, "p")
-        .filter(F.col("supp_a") < F.col("supp_b"))
-        .groupBy("supp_a", "supp_b")
-        .agg(F.count("*").cast("long").alias("shared_parts"))
-        .filter(F.col("shared_parts") >= _BIPROJ_MIN_W)
-        .orderBy("supp_a", "supp_b")
-    )
-
-
-graph_bipartite_projection.__doc__ = graph_bipartite_projection.__doc__.format(
-    minw=_BIPROJ_MIN_W, cap=_BIPROJ_SUPP_MAX
-)
+sql_entry(_q, "graph_bipartite_projection", _BIPROJ_SQL)
 
 
 # --- landmark harmonic closeness (r12 second wave) ------------------------------

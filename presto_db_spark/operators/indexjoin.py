@@ -79,6 +79,7 @@ ORDER BY p.c_custkey
 """
 
 
+# Kept port (keep-rule 2d, helper coverage): index_lookup_join.
 @_q("join_index_lookup", _IDX_SQL)
 def join_index_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A bounded probe set (high-balance (>9000) BUILDING customers) looked up

@@ -121,6 +121,7 @@ _CENTROID_SQL = """
 """
 
 
+# Kept port (keep-rule 2b, worse plan): the text fails test_ml_plans_scale_shape.
 @_q(
     "ml_classify_centroid",
     f"""

@@ -16,6 +16,11 @@ Plus two event-analytics staples: retention cohorts and an equi-width
 numeric_histogram (``NumericHistogram.java`` — Presto's is a streaming
 merge whose bucket boundaries are nondeterministic; the equi-width variant
 keeps the contract deterministic so both engines agree exactly).
+
+An entry whose oracle text runs on Spark with the oracle's rows is that
+text, registered by ``engine.sql_entry``, unless a ``Kept port`` comment
+above its port names the keep-rule that holds; an unmarked port holds a
+text that does not (keep-rule 1, see :mod:`presto_db_spark.registry`).
 """
 
 from __future__ import annotations
@@ -27,11 +32,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import load_table, load_tables
+from ..engine import sql_entry
 from ..registry import family
 
 QUERIES, ORACLE, _q = family()
 
 
+# Kept port (keep-rule 2a, surface SQL does not reach): a scalar pandas UDF over Arrow batches.
 @_q(
     "udf_vectorized_scalar",
     """
@@ -62,6 +69,7 @@ def udf_vectorized_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Kept port (keep-rule 2a, surface SQL does not reach): a grouped-map applyInPandas UDF.
 @_q(
     "udf_grouped_zscore",
     """
@@ -103,8 +111,8 @@ def udf_grouped_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
-    "events_retention",
+sql_entry(
+    _q, "events_retention",
     """
 WITH first AS (
   SELECT user_id, min(date_trunc('day', ts)) AS d0 FROM events GROUP BY user_id
@@ -118,21 +126,6 @@ FROM act JOIN first ON act.user_id = first.user_id
 GROUP BY first.d0, date_diff('day', first.d0, act.d)
 """,
 )
-def events_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort retention: users grouped by first-seen day, activity counted
-    per day offset — two aggregations and one equi-join, all shuffle-lean."""
-    events = load_table(spark, sf_dir, "events")
-    days = events.select("user_id", F.date_trunc("day", "ts").alias("d"))
-    first = days.groupBy("user_id").agg(F.min("d").alias("d0"))
-    act = days.distinct()
-    return (
-        act.join(first, "user_id")
-        .groupBy(
-            F.col("d0").cast("date").alias("cohort_day"),
-            F.datediff("d", "d0").alias("day_offset"),
-        )
-        .agg(F.countDistinct("user_id").alias("n_active"))
-    )
 
 
 @_q(

@@ -103,6 +103,7 @@ def events_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Kept port (keep-rule 2d, helper coverage): range_join.
 @_q(
     "events_interval_agg",
     """

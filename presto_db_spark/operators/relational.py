@@ -22,6 +22,11 @@ Covers the reference inventory of SURVEY.md §2.4-§2.9:
 
 Determinism: every window order and LIMIT carries a unique-key tie-break;
 money sums use the exact-cents idiom (see tpch._msum).
+
+An entry whose oracle text runs on Spark with the oracle's rows is that
+text, registered by ``engine.sql_entry``, unless a ``Kept port`` comment
+above its port names the keep-rule that holds; an unmarked port holds a
+text that does not (keep-rule 1, see :mod:`presto_db_spark.registry`).
 """
 
 from __future__ import annotations
@@ -30,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_tables
+from ..engine import sql_entry
 from ..registry import family
 
 QUERIES, ORACLE, _q = family()
@@ -37,8 +43,8 @@ QUERIES, ORACLE, _q = family()
 
 # --- window: ranking family -------------------------------------------------
 
-@_q(
-    "win_rank",
+sql_entry(
+    _q, "win_rank",
     """
 SELECT c_custkey,
        CAST(c_nationkey AS INTEGER) AS nat,
@@ -52,25 +58,12 @@ FROM customer
 WINDOW w AS (PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey)
 """,
 )
-def win_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (cust,) = load_tables(spark, sf_dir, "customer")
-    w = W.partitionBy("c_nationkey").orderBy(F.desc("c_acctbal"), "c_custkey")
-    return cust.select(
-        "c_custkey",
-        F.col("c_nationkey").alias("nat"),
-        F.row_number().over(w).cast("long").alias("rn"),
-        F.rank().over(w).cast("long").alias("rnk"),
-        F.dense_rank().over(w).cast("long").alias("drnk"),
-        F.round(F.percent_rank().over(w), 6).alias("prnk"),
-        F.round(F.cume_dist().over(w), 6).alias("cd"),
-        F.ntile(4).over(w).alias("nt"),
-    )
 
 
 # --- window: value family (lag/lead/first/last/nth, IGNORE NULLS semantics) -
 
-@_q(
-    "win_value",
+sql_entry(
+    _q, "win_value",
     """
 SELECT o_orderkey,
        lag(o_totalprice)  OVER w AS prev_price,
@@ -84,24 +77,12 @@ FROM orders
 WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
 """,
 )
-def win_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (orders,) = load_tables(spark, sf_dir, "orders")
-    w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    w_full = w.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
-    return orders.select(
-        "o_orderkey",
-        F.lag("o_totalprice").over(w).alias("prev_price"),
-        F.lead("o_totalprice").over(w).alias("next_price"),
-        F.first("o_orderkey").over(w).alias("first_ord"),
-        F.last("o_orderkey").over(w_full).alias("last_ord"),
-        F.nth_value("o_orderkey", 2).over(w).alias("second_ord"),
-    )
 
 
 # --- window: ROWS / RANGE frames (running + moving aggregates) -------------
 
-@_q(
-    "win_frames",
+sql_entry(
+    _q, "win_frames",
     """
 SELECT o_orderkey,
        CAST(sum(round(o_totalprice * 100)) OVER (PARTITION BY o_custkey
@@ -115,28 +96,11 @@ SELECT o_orderkey,
 FROM orders
 """,
 )
-def win_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (orders,) = load_tables(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100)
-    w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    w_run = w.rowsBetween(W.unboundedPreceding, W.currentRow)
-    w_mov = w.rowsBetween(-2, W.currentRow)
-    # RANGE frame keyed on the order date: peers share the date.
-    w_range = (
-        W.partitionBy("o_custkey")
-        .orderBy(F.col("o_orderdate").cast("timestamp").cast("long"))
-        .rangeBetween(W.unboundedPreceding, W.currentRow)
-    )
-    return orders.select(
-        "o_orderkey",
-        F.sum(cents).over(w_run).cast("long").alias("running_cents"),
-        F.round(F.avg(cents).over(w_mov) / 100, 4).alias("moving_avg"),
-        F.count(F.lit(1)).over(w_range).cast("long").alias("range_cnt"),
-    )
 
 
 # --- top-N per group (TopNRowNumberOperator / WindowGroupLimit) ------------
 
+# Kept port (deferred): headline entry; its rule-3 A/B waits for per-session table binding.
 @_q(
     "win_topn_per_group",
     """
@@ -166,8 +130,8 @@ def win_topn_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- grouping sets / rollup / cube -----------------------------------------
 
-@_q(
-    "grouping_sets",
+sql_entry(
+    _q, "grouping_sets",
     """
 SELECT l_returnflag, l_linestatus,
        CAST(grouping(l_returnflag) AS INTEGER) AS g_rf,
@@ -177,23 +141,10 @@ FROM lineitem
 GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
 """,
 )
-def grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (li,) = load_tables(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("lineitem")
-    return spark.sql(
-        """
-        SELECT l_returnflag, l_linestatus,
-               CAST(grouping(l_returnflag) AS INT) AS g_rf,
-               CAST(grouping(l_linestatus) AS INT) AS g_ls,
-               CAST(sum(round(l_quantity)) AS BIGINT) AS qty
-        FROM lineitem
-        GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-        """
-    )
 
 
-@_q(
-    "cube_agg",
+sql_entry(
+    _q, "cube_agg",
     """
 SELECT l_returnflag, l_linestatus, CAST(count(*) AS BIGINT) AS cnt,
        round(sum(round((l_extendedprice * (1 - l_discount)) * 100)) / 100, 2) AS revenue
@@ -201,20 +152,10 @@ FROM lineitem
 GROUP BY CUBE (l_returnflag, l_linestatus)
 """,
 )
-def cube_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (li,) = load_tables(spark, sf_dir, "lineitem")
-    rev_c = F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100)
-    return (
-        li.cube("l_returnflag", "l_linestatus")
-        .agg(
-            F.count("*").alias("cnt"),
-            F.round(F.sum(rev_c) / 100, 2).alias("revenue"),
-        )
-    )
 
 
-@_q(
-    "rollup_agg",
+sql_entry(
+    _q, "rollup_agg",
     """
 SELECT CAST(year(o_orderdate) AS INTEGER) AS yr, o_orderpriority,
        CAST(count(*) AS BIGINT) AS cnt
@@ -222,51 +163,32 @@ FROM orders
 GROUP BY ROLLUP (year(o_orderdate), o_orderpriority)
 """,
 )
-def rollup_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (orders,) = load_tables(spark, sf_dir, "orders")
-    return (
-        orders.withColumn("yr", F.year("o_orderdate"))
-        .rollup("yr", "o_orderpriority")
-        .agg(F.count("*").alias("cnt"))
-    )
 
 
 # --- set operations ---------------------------------------------------------
 
-@_q(
-    "setop_intersect",
+sql_entry(
+    _q, "setop_intersect",
     """
 SELECT c_custkey AS k FROM customer WHERE c_acctbal > 1000
 INTERSECT
 SELECT o_custkey AS k FROM orders WHERE o_orderstatus = 'F'
 """,
 )
-def setop_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust, orders = load_tables(spark, sf_dir, "customer", "orders")
-    a = cust.filter(F.col("c_acctbal") > 1000).select(F.col("c_custkey").alias("k"))
-    b = orders.filter(F.col("o_orderstatus") == "F").select(F.col("o_custkey").alias("k"))
-    return a.intersect(b)
 
 
-@_q(
-    "setop_except_all",
+sql_entry(
+    _q, "setop_except_all",
     """
 SELECT o_custkey AS k FROM orders WHERE o_orderstatus <> 'P'
 EXCEPT ALL
 SELECT o_custkey AS k FROM orders WHERE o_orderpriority = '1-URGENT'
 """,
 )
-def setop_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (orders,) = load_tables(spark, sf_dir, "orders")
-    a = orders.filter(F.col("o_orderstatus") != "P").select(F.col("o_custkey").alias("k"))
-    b = orders.filter(F.col("o_orderpriority") == "1-URGENT").select(
-        F.col("o_custkey").alias("k")
-    )
-    return a.exceptAll(b)
 
 
-@_q(
-    "setop_union_all_counts",
+sql_entry(
+    _q, "setop_union_all_counts",
     """
 SELECT k, CAST(count(*) AS BIGINT) AS cnt FROM (
   SELECT l_suppkey AS k FROM lineitem WHERE l_returnflag = 'R'
@@ -275,15 +197,10 @@ SELECT k, CAST(count(*) AS BIGINT) AS cnt FROM (
 ) u GROUP BY k
 """,
 )
-def setop_union_all_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, supp = load_tables(spark, sf_dir, "lineitem", "supplier")
-    a = li.filter(F.col("l_returnflag") == "R").select(F.col("l_suppkey").alias("k"))
-    b = supp.select(F.col("s_suppkey").alias("k"))
-    return a.unionAll(b).groupBy("k").agg(F.count("*").alias("cnt"))
 
 
-@_q(
-    "setop_union_distinct",
+sql_entry(
+    _q, "setop_union_distinct",
     """
 SELECT l_suppkey AS k FROM lineitem WHERE l_returnflag = 'R'
 UNION
@@ -292,33 +209,22 @@ UNION
 SELECT CAST(NULL AS BIGINT) AS k
 """,
 )
-def setop_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, supp = load_tables(spark, sf_dir, "lineitem", "supplier")
-    a = li.filter(F.col("l_returnflag") == "R").select(F.col("l_suppkey").alias("k"))
-    b = supp.select(F.col("s_suppkey").alias("k"))
-    c = spark.range(1).select(F.lit(None).cast("long").alias("k"))
-    # Spark's DataFrame.union is UNION ALL; SQL UNION = union + distinct
-    # (the reference plans it the same way: union node + distinct agg).
-    return a.unionAll(b).unionAll(c).distinct()
 
 
 # --- distinct + limit (DistinctLimitOperator) ------------------------------
 
-@_q(
-    "distinct_limit",
+sql_entry(
+    _q, "distinct_limit",
     """
 SELECT DISTINCT l_suppkey FROM lineitem ORDER BY l_suppkey LIMIT 5
 """,
 )
-def distinct_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (li,) = load_tables(spark, sf_dir, "lineitem")
-    return li.select("l_suppkey").distinct().orderBy("l_suppkey").limit(5)
 
 
 # --- VALUES ----------------------------------------------------------------
 
-@_q(
-    "values_join",
+sql_entry(
+    _q, "values_join",
     """
 SELECT v.tier, CAST(count(*) AS BIGINT) AS cnt
 FROM (VALUES ('gold', 3000.0), ('silver', 1000.0), ('bronze', 0.0)) AS v(tier, lo)
@@ -326,21 +232,6 @@ JOIN customer ON c_acctbal >= v.lo
 GROUP BY v.tier
 """,
 )
-def values_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (cust,) = load_tables(spark, sf_dir, "customer")
-    from ..catalog import small_df
-
-    tiers = small_df(
-        spark,
-        [("gold", 3000.0), ("silver", 1000.0), ("bronze", 0.0)],
-        "tier string, lo double",
-    )
-    return (
-        F.broadcast(tiers)
-        .join(cust, F.col("c_acctbal") >= F.col("lo"))
-        .groupBy("tier")
-        .agg(F.count("*").alias("cnt"))
-    )
 
 
 # --- UNNEST with ordinality -------------------------------------------------
@@ -365,8 +256,8 @@ def unnest_words(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- subqueries ------------------------------------------------------------
 
-@_q(
-    "subq_scalar_corr",
+sql_entry(
+    _q, "subq_scalar_corr",
     """
 SELECT o_orderkey, o_custkey, o_totalprice
 FROM orders o
@@ -374,22 +265,10 @@ WHERE o_totalprice > 2 * (SELECT avg(o2.o_totalprice) FROM orders o2
                           WHERE o2.o_custkey = o.o_custkey)
 """,
 )
-def subq_scalar_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (orders,) = load_tables(spark, sf_dir, "orders")
-    # Decorrelated form: the correlated scalar avg becomes a grouped join
-    # (reference rule: TransformCorrelatedScalarAggregationToJoin.java).
-    per_cust = orders.groupBy(F.col("o_custkey").alias("ck")).agg(
-        F.avg("o_totalprice").alias("avg_price")
-    )
-    return (
-        orders.join(per_cust, F.col("o_custkey") == F.col("ck"))
-        .filter(F.col("o_totalprice") > 2 * F.col("avg_price"))
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-    )
 
 
-@_q(
-    "subq_in_agg",
+sql_entry(
+    _q, "subq_in_agg",
     """
 SELECT c_mktsegment, CAST(count(*) AS BIGINT) AS cnt
 FROM customer
@@ -399,16 +278,6 @@ WHERE c_custkey IN (SELECT o_custkey FROM orders
 GROUP BY c_mktsegment
 """,
 )
-def subq_in_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust, orders = load_tables(spark, sf_dir, "customer", "orders")
-    in_1997 = orders.filter(
-        (F.col("o_orderdate") >= "1997-01-01") & (F.col("o_orderdate") < "1998-01-01")
-    ).select("o_custkey")
-    return (
-        cust.join(in_1997, F.col("c_custkey") == F.col("o_custkey"), "left_semi")
-        .groupBy("c_mktsegment")
-        .agg(F.count("*").alias("cnt"))
-    )
 
 
 @_q(
@@ -436,8 +305,8 @@ def subq_quantified_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- join types beyond TPC-H (right / full outer / cross) ------------------
 
-@_q(
-    "join_full_outer",
+sql_entry(
+    _q, "join_full_outer",
     """
 SELECT coalesce(a.k, b.k) AS k, a.cnt_line, b.cnt_ord
 FROM (SELECT l_suppkey AS k, CAST(count(*) AS BIGINT) AS cnt_line
@@ -448,34 +317,12 @@ FULL OUTER JOIN
 ON a.k = b.k
 """,
 )
-def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, supp = load_tables(spark, sf_dir, "lineitem", "supplier")
-    a = (
-        li.filter(F.col("l_returnflag") == "A")
-        .groupBy(F.col("l_suppkey").alias("k"))
-        .agg(F.count("*").alias("cnt_line"))
-    )
-    b = (
-        supp.filter(F.col("s_acctbal") > 0)
-        .groupBy(F.col("s_suppkey").cast("long").alias("k"))
-        .agg(F.count("*").alias("cnt_ord"))
-    )
-    return a.join(b, a["k"] == b["k"], "full_outer").select(
-        F.coalesce(a["k"], b["k"]).alias("k"), "cnt_line", "cnt_ord"
-    )
 
 
-@_q(
-    "join_right_cross",
+sql_entry(
+    _q, "join_right_cross",
     """
 SELECT r_name, n_name
 FROM nation RIGHT JOIN region ON n_regionkey = r_regionkey AND n_nationkey < 5
 """,
 )
-def join_right_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
-    nation, region = load_tables(spark, sf_dir, "nation", "region")
-    return nation.join(
-        region,
-        (F.col("n_regionkey") == F.col("r_regionkey")) & (F.col("n_nationkey") < 5),
-        "right",
-    ).select("r_name", "n_name")

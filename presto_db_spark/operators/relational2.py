@@ -22,6 +22,11 @@ Reference semantics exercised (SURVEY.md §2):
   (``pm/sql/planner/optimizations/``) → Spark native ``intersectAll``.
 * TABLESAMPLE BERNOULLI — ``SampleNode`` (grammar ``SqlBase.g4``) →
   ``df.sample``; sampling is engine-specific → rows-only check.
+
+An entry whose oracle text runs on Spark with the oracle's rows is that
+text, registered by ``engine.sql_entry``, unless a ``Kept port`` comment
+above its port names the keep-rule that holds; an unmarked port holds a
+text that does not (keep-rule 1, see :mod:`presto_db_spark.registry`).
 """
 
 from __future__ import annotations
@@ -30,13 +35,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_tables
+from ..engine import sql_entry
 from ..registry import family
 
 QUERIES, ORACLE, _q = family()
 
 
-@_q(
-    "subq_exists",
+sql_entry(
+    _q, "subq_exists",
     """
 SELECT c.c_custkey, c.c_name
 FROM customer c
@@ -46,21 +52,10 @@ WHERE EXISTS (SELECT 1 FROM orders o
                   WHERE o.o_custkey = c.c_custkey AND o.o_orderpriority = '1-URGENT')
 """,
 )
-def subq_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust, orders = load_tables(spark, sf_dir, "customer", "orders")
-    big = orders.filter(F.col("o_totalprice") > 400000).select("o_custkey").distinct()
-    urgent = (
-        orders.filter(F.col("o_orderpriority") == "1-URGENT").select("o_custkey").distinct()
-    )
-    return (
-        cust.join(big, cust.c_custkey == big.o_custkey, "left_semi")
-        .join(urgent, cust.c_custkey == urgent.o_custkey, "left_anti")
-        .select("c_custkey", "c_name")
-    )
 
 
-@_q(
-    "subq_not_in_null",
+sql_entry(
+    _q, "subq_not_in_null",
     """
 SELECT
   (SELECT count(*) FROM customer
@@ -72,33 +67,10 @@ SELECT
     AS n_with_null
 """,
 )
-def subq_not_in_null(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NOT IN with a NULL-free subquery (plain anti join) vs a subquery
-    containing NULL (never-true → 0 rows). spark.sql keeps the null-aware
-    anti-join semantics that a hand-built LEFT ANTI would get wrong."""
-    import uuid
-
-    cust, orders = load_tables(spark, sf_dir, "customer", "orders")
-    # unique view names: query functions must not collide on session state
-    cv, ov = f"_r2_c_{uuid.uuid4().hex[:8]}", f"_r2_o_{uuid.uuid4().hex[:8]}"
-    cust.createOrReplaceTempView(cv)
-    orders.createOrReplaceTempView(ov)
-    return spark.sql(
-        f"""
-        SELECT
-          (SELECT count(*) FROM {cv}
-           WHERE c_custkey NOT IN
-             (SELECT o_custkey FROM {ov} WHERE o_orderkey < 1000)) AS n_no_null,
-          (SELECT count(*) FROM {cv}
-           WHERE c_custkey NOT IN
-             (SELECT nullif(o_custkey, o_custkey) FROM {ov}
-              WHERE o_orderkey < 10)) AS n_with_null
-        """
-    )
 
 
-@_q(
-    "agg_multi_distinct",
+sql_entry(
+    _q, "agg_multi_distinct",
     """
 SELECT l_returnflag,
        CAST(count(DISTINCT l_partkey) AS BIGINT) AS nd_part,
@@ -109,17 +81,6 @@ SELECT l_returnflag,
 FROM lineitem GROUP BY l_returnflag
 """,
 )
-def agg_multi_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Three DISTINCT aggs + plain aggs in one GROUP BY — the MarkDistinct
-    shape; Spark plans it as a single pass over Expand (check: one scan)."""
-    (li,) = load_tables(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.countDistinct("l_partkey").alias("nd_part"),
-        F.countDistinct("l_suppkey").alias("nd_supp"),
-        F.countDistinct("l_linestatus").alias("nd_status"),
-        F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-        F.count("*").alias("n"),
-    )
 
 
 @_q(
@@ -144,21 +105,14 @@ def unnest_ordinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
-    "setop_intersect_all",
+sql_entry(
+    _q, "setop_intersect_all",
     """
 SELECT l_partkey, l_suppkey FROM lineitem WHERE l_orderkey < 2000
 INTERSECT ALL
 SELECT l_partkey, l_suppkey FROM lineitem WHERE l_orderkey >= 1000 AND l_orderkey < 3000
 """,
 )
-def setop_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (li,) = load_tables(spark, sf_dir, "lineitem")
-    a = li.filter(F.col("l_orderkey") < 2000).select("l_partkey", "l_suppkey")
-    b = li.filter((F.col("l_orderkey") >= 1000) & (F.col("l_orderkey") < 3000)).select(
-        "l_partkey", "l_suppkey"
-    )
-    return a.intersectAll(b)
 
 
 @_q(
@@ -246,25 +200,17 @@ def win_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
-    "setop_except_distinct",
+sql_entry(
+    _q, "setop_except_distinct",
     """
 SELECT l_partkey, l_suppkey FROM lineitem WHERE l_orderkey < 2000
 EXCEPT
 SELECT l_partkey, l_suppkey FROM lineitem WHERE l_orderkey >= 1000 AND l_orderkey < 3000
 """,
 )
-def setop_except_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXCEPT (distinct) — the dedup variant next to setop_except_all
-    (``ImplementIntersectAndExceptAsUnion.java`` lowers both)."""
-    (li,) = load_tables(spark, sf_dir, "lineitem")
-    a = li.filter(F.col("l_orderkey") < 2000).select("l_partkey", "l_suppkey")
-    b = li.filter((F.col("l_orderkey") >= 1000) & (F.col("l_orderkey") < 3000)).select(
-        "l_partkey", "l_suppkey"
-    )
-    return a.subtract(b)
 
 
+# Kept port (keep-rule 2c, text skips the function): it asserts TRUE instead of computing the ids.
 @_q(
     "misc_unique_id",
     """
@@ -287,6 +233,7 @@ def misc_unique_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Kept port (keep-rule 2c, text skips the function): it asserts TRUE instead of sampling.
 @_q(
     "sample_bernoulli",
     """
@@ -393,6 +340,7 @@ FROM ranked WHERE rn % 1000 = 1 ORDER BY rn
 """
 
 
+# Kept port (deferred): headline entry; its rule-3 A/B waits for per-session table binding.
 @_q("sort_distributed_sample", _SORT_SQL)
 def sort_distributed_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed full-table sort acceptance (the reference ships a
@@ -433,15 +381,12 @@ def sort_distributed_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- PIVOT / UNPIVOT / gaps-and-islands (r11p wave) --------------------------
 # Presto 0.236 has no PIVOT syntax (users write conditional aggregation —
-# the exact shape this oracle uses); Spark has the native relational
-# operator (`RelationalGroupedDataset.pivot`, lowered to a single
-# hash-aggregate over `CASE` projections — no extra shuffle vs the manual
-# form). UNPIVOT is `DataFrame.unpivot` (Expand node, zero shuffles).
+# the exact shape the pivot text uses; Spark plans it as one hash
+# aggregate over `CASE` projections). UNPIVOT is `DataFrame.unpivot`
+# (Expand node, zero shuffles).
 # Gaps-and-islands is the classic sequence analytic: runs of consecutive
 # keys found via the key-minus-row_number invariant, windowed PER GROUP
 # (never a single-partition window).
-
-_PIVOT_BRANDS = ["Brand#1", "Brand#2", "Brand#3", "Brand#4", "Brand#5"]
 
 _PIVOT_SQL = """
 WITH p AS (
@@ -460,32 +405,7 @@ FROM p GROUP BY size_mod ORDER BY size_mod
 """
 
 
-@_q("part_pivot_wide", _PIVOT_SQL)
-def part_pivot_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Native PIVOT: brand columns × size-bucket rows, sum of exact retail
-    cents per cell. The explicit values list keeps the plan single-pass
-    (no distinct-values pre-query) and the IN filter reaches the parquet
-    scan, so only the pivoted brands are ever read. One map-side-combined
-    hash aggregate — identical shuffle count to the conditional-CASE form
-    Presto users write (the oracle), with the operator surface Spark adds
-    on top."""
-    part = load_tables(spark, sf_dir, "part")[0]
-    wide = (
-        part.filter(F.col("p_brand").isin(_PIVOT_BRANDS))
-        .select(
-            (F.col("p_size") % 5).cast("bigint").alias("size_mod"),
-            "p_brand",
-            F.round(F.col("p_retailprice") * 100).cast("bigint").alias("c"),
-        )
-        .groupBy("size_mod")
-        .pivot("p_brand", _PIVOT_BRANDS)
-        .agg(F.sum("c"))
-    )
-    cols = [F.col("size_mod")] + [
-        F.col(f"`{b}`").cast("bigint").alias(f"b{i + 1}_cents")
-        for i, b in enumerate(_PIVOT_BRANDS)
-    ]
-    return wide.select(*cols).orderBy("size_mod")
+sql_entry(_q, "part_pivot_wide", _PIVOT_SQL)
 
 
 _UNPIVOT_SQL = """
@@ -508,6 +428,7 @@ SELECT user_id, metric, value FROM (
 """
 
 
+# Kept port (keep-rule 2b, worse plan): the text fails test_unpivot_plan_shape.
 @_q("events_unpivot_metrics", _UNPIVOT_SQL)
 def events_unpivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native UNPIVOT (wide metric columns → tidy long rows): one per-user
@@ -555,33 +476,7 @@ ORDER BY o_custkey, island_start
 """
 
 
-@_q("win_gaps_islands", _ISLANDS_SQL)
-def win_gaps_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gaps-and-islands: maximal runs of CONSECUTIVE order keys held by
-    one customer, via the key-minus-row_number constant-per-run invariant.
-    The window partitions by o_custkey (bounded per-key width — never a
-    single-partition window), and the island fold is the same exchange's
-    groupBy, so the whole analytic is ONE shuffle on o_custkey. Scale:
-    per-customer order counts are bounded; skewed customers stay within
-    one partition's window sort."""
-    from pyspark.sql.window import Window as W
-
-    from ..catalog import load_table
-
-    o = load_table(spark, sf_dir, "orders").select("o_custkey", "o_orderkey")
-    w = W.partitionBy("o_custkey").orderBy("o_orderkey")
-    s = o.withColumn("grp", F.col("o_orderkey") - F.row_number().over(w))
-    return (
-        s.groupBy("o_custkey", "grp")
-        .agg(
-            F.min("o_orderkey").alias("island_start"),
-            F.max("o_orderkey").alias("island_end"),
-            F.count("*").alias("island_len"),
-        )
-        .filter(F.col("island_len") >= 2)
-        .select("o_custkey", "island_start", "island_end", "island_len")
-        .orderBy("o_custkey", "island_start")
-    )
+sql_entry(_q, "win_gaps_islands", _ISLANDS_SQL)
 
 
 # --- correlated LATERAL subquery (r11t wave) ---------------------------------
@@ -606,25 +501,7 @@ ORDER BY c.c_custkey, t.price_cents DESC, t.o_orderkey
 """
 
 
-@_q("subq_lateral_topn", _LATERAL_SQL)
-def subq_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated LATERAL subquery with per-group ORDER BY + LIMIT (each
-    BUILDING customer's two priciest orders), written as literal LATERAL
-    SQL in BOTH engines. Spark DECORRELATES it: a row_number window
-    partitioned by o_custkey + rn <= 2 filter, then ONE broadcast hash
-    equi-join against the filtered customers — never a per-row nested
-    re-execution of the subquery (the gate asserts no nested-loop join).
-    The planner additionally materializes the lateral body's ORDER BY as
-    a range sort to pin per-group row order before the rank; the
-    hand-written DataFrame twin (win_topn_per_group) skips that extra
-    exchange — the documented cost of the declarative surface. Total
-    order inside the body (price DESC, orderkey) keeps the picked rows
-    identical across engines."""
-    from ..catalog import load_table
-
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_LATERAL_SQL)
+sql_entry(_q, "subq_lateral_topn", _LATERAL_SQL)
 
 
 # --- existence join (EXISTS as a projected column, r11x wave) ----------------
@@ -651,19 +528,7 @@ ORDER BY c_mktsegment, has_urgent
 """
 
 
-@_q("join_existence_flag", _EXISTENCE_SQL)
-def join_existence_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXISTS projected as a column (did this customer ever place an
-    urgent order?) — planned as an ExistenceJoin, the join type between
-    semi (filter) and outer (data): one hash join on o_custkey emitting
-    a boolean match channel, never a row-multiplying outer join + post
-    aggregation. Plan-gated on the ExistenceJoin node. The identical
-    EXISTS SQL runs in both engines."""
-    from ..catalog import load_table
-
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_EXISTENCE_SQL)
+sql_entry(_q, "join_existence_flag", _EXISTENCE_SQL)
 
 
 # --- aggregate FILTER clause (r11z wave) -------------------------------------
@@ -686,15 +551,4 @@ FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus
 """
 
 
-@_q("agg_filter_clause", _FILTER_SQL)
-def agg_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Aggregate FILTER (WHERE ...) clauses — plain, on a sum, and on a
-    DISTINCT count — as ONE literal SQL text both engines parse (the
-    masked-aggregation surface Presto users write instead of CASE
-    expressions; Spark lowers it to the same conditional aggregates, so
-    the plan is still a single two-phase pass). Exact cents keep the
-    value hash stable."""
-    from ..catalog import load_table
-
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_FILTER_SQL)
+sql_entry(_q, "agg_filter_clause", _FILTER_SQL)

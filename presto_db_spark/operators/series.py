@@ -16,6 +16,11 @@ per series-year), per-series windows partition on the series key, and
 the one global order statistic (weighted median) rides
 ``distrank.global_index`` on a value-cardinality-bounded group table —
 never a single-partition window over data.
+
+An entry whose oracle text runs on Spark with the oracle's rows is that
+text, registered by ``engine.sql_entry``, unless a ``Kept port`` comment
+above its port names the keep-rule that holds; an unmarked port holds a
+text that does not (keep-rule 1, see :mod:`presto_db_spark.registry`).
 """
 
 from __future__ import annotations
@@ -25,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..catalog import load_table, small_df
+from ..engine import sql_entry
 from ..registry import family
 
 QUERIES, ORACLE, _q = family()
@@ -342,6 +348,7 @@ FROM c WHERE 2 * csum >= total
 """
 
 
+# Kept port (keep-rule 2b, worse plan): the text's running-sum window runs on one partition.
 @_q("agg_weighted_median", _WMEDIAN_SQL)
 def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantity-weighted median price (lower weighted median: the
@@ -475,33 +482,7 @@ ORDER BY flag
 """
 
 
-@_q("agg_mode_exact", _MODE_SQL)
-def agg_mode_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact per-group mode (most frequent quantity per return flag)
-    with a DETERMINISTIC tie-break (smallest value at the max count) —
-    the contract engine-native ``mode()`` aggregates don't make (both
-    Spark's and DuckDB's pick an arbitrary tie winner, so neither is
-    oracle-safe; the counted-table + rank formulation is).
-
-    Scale: one (flag, qty) groupBy — map-side combinable, output
-    value-cardinality-bounded — then a rank window over that BOUNDED
-    table. The same two-step shape as agg_weighted_median."""
-    li = load_table(spark, sf_dir, "lineitem")
-    c = li.groupBy(
-        F.col("l_returnflag").alias("flag"),
-        F.round("l_quantity").cast("long").alias("qty"),
-    ).agg(F.count("*").cast("long").alias("n"))
-    r = c.withColumn(
-        "rk",
-        F.row_number().over(
-            W.partitionBy("flag").orderBy(F.desc("n"), "qty")
-        ),
-    )
-    return (
-        r.filter(F.col("rk") == 1)
-        .select("flag", F.col("qty").alias("mode_qty"), F.col("n").alias("mode_count"))
-        .orderBy("flag")
-    )
+sql_entry(_q, "agg_mode_exact", _MODE_SQL)
 
 
 # --- binary-segmentation changepoint detection ---------------------------------
@@ -541,6 +522,7 @@ ORDER BY level, t
 """
 
 
+# Kept port (keep-rule 2b, worse plan): the text adds four single-partition exchanges.
 @_q("events_changepoint_binseg", _BINSEG_SQL)
 def events_changepoint_binseg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-segmentation changepoint detection on the daily revenue
@@ -1366,53 +1348,7 @@ FROM n, med, medx
 """
 
 
-@_q("agg_hodges_lehmann", _HL_SQL)
-def agg_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hodges-Lehmann estimator of the daily event volume: lower median
-    of all Walsh sums x_i + x_j (i <= j), reported as the pairwise-mean
-    in micros (x500000 = sum/2 x 1e6), next to the plain lower median.
-
-    Scale: the quadratic pair join runs on the DAY-GRAIN table (one
-    map-side-combinable collapse first), so the pair count is bounded by
-    the day span squared — ~66k pairs for a year of data regardless of
-    raw row count; the median windows run on that bounded table (the
-    module's standing post-collapse contract)."""
-    ev = load_table(spark, sf_dir, "events")
-    s = ev.groupBy(F.to_date("ts").alias("d")).agg(
-        F.count("*").cast("long").alias("x")
-    )
-    a, b = s.alias("a"), s.alias("b")
-    walsh = a.join(b, F.col("a.d") <= F.col("b.d")).select(
-        (F.col("a.x") + F.col("b.x")).alias("ws")
-    )
-    rw = walsh.select(
-        "ws",
-        F.row_number().over(W.orderBy("ws")).alias("rn"),
-        F.count("*").over(W.partitionBy()).alias("nw"),
-    )
-    med = rw.filter(F.col("rn") * 2 >= F.col("nw")).agg(
-        F.min("ws").alias("med_ws"), F.max("nw").alias("n_walsh")
-    )
-    rx = s.select(
-        "x",
-        F.row_number().over(W.orderBy("x")).alias("rn"),
-        F.count("*").over(W.partitionBy()).alias("nx"),
-    )
-    medx = rx.filter(F.col("rn") * 2 >= F.col("nx")).agg(
-        F.min("x").alias("med_x")
-    )
-    n = s.agg(F.count("*").cast("long").alias("n_days"))
-    return (
-        n.crossJoin(F.broadcast(med))
-        .crossJoin(F.broadcast(medx))
-        .select(
-            "n_days",
-            "n_walsh",
-            (F.col("med_x") * 1000000).cast("long")
-            .alias("median_daily_micros"),
-            (F.col("med_ws") * 500000).cast("long").alias("hl_micros"),
-        )
-    )
+sql_entry(_q, "agg_hodges_lehmann", _HL_SQL)
 
 
 # --- seasonal strength (Hyndman F_s on the STL decomposition, r13) -----------
@@ -1574,82 +1510,7 @@ FROM dl ORDER BY event_type
 """
 
 
-@_q("events_pacf_yw", _PACF_SQL)
-def events_pacf_yw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partial autocorrelations at lags 1..3 of each type's daily-revenue
-    series by the Durbin-Levinson recursion unrolled to closed form:
-    pacf1 = r1, pacf2 = (r2-r1^2)/(1-r1^2), pacf3 from the order-2
-    coefficients.  C_k are exact DECIMAL(38,0) integers; the rational
-    algebra runs in doubles with one shared expression tree.
-
-    Scale: day-grain collapse first (the module contract), a bounded
-    4-lag range self-join per series, then a per-series single-row
-    aggregate — the lagged pair count is 4x the day span regardless of
-    raw rows."""
-    ev = load_table(spark, sf_dir, "events")
-    s = ev.groupBy("event_type", F.to_date("ts").alias("d")).agg(
-        F.sum(F.round(F.col("value") * 100)).cast("long").alias("x")
-    )
-    wp = W.partitionBy("event_type")
-    m = s.select(
-        "event_type", "d",
-        (F.count("*").over(wp) * F.col("x") - F.sum("x").over(wp))
-        .alias("dev"),
-        F.count("*").over(wp).alias("n"),
-    )
-    a, b = m.alias("a"), m.alias("b")
-    ck = (
-        a.join(
-            b,
-            (F.col("b.event_type") == F.col("a.event_type"))
-            & (F.col("b.d") >= F.col("a.d"))
-            & (F.col("b.d") <= F.date_add(F.col("a.d"), 3)),
-        )
-        .select(
-            F.col("a.event_type").alias("event_type"),
-            F.col("a.n").alias("n"),
-            F.datediff(F.col("b.d"), F.col("a.d")).alias("lag"),
-            F.expr("CAST(a.dev AS DECIMAL(38,0)) * b.dev").alias("prod"),
-        )
-        .groupBy("event_type")
-        .agg(
-            F.max("n").alias("n"),
-            F.sum(F.when(F.col("lag") == 0, F.col("prod"))).alias("c0"),
-            F.sum(F.when(F.col("lag") == 1, F.col("prod"))).alias("c1"),
-            F.sum(F.when(F.col("lag") == 2, F.col("prod"))).alias("c2"),
-            F.sum(F.when(F.col("lag") == 3, F.col("prod"))).alias("c3"),
-        )
-    )
-    r = ck.select(
-        "event_type", "n",
-        (F.col("c1").cast("double") / F.col("c0").cast("double")).alias("r1"),
-        (F.col("c2").cast("double") / F.col("c0").cast("double")).alias("r2"),
-        (F.col("c3").cast("double") / F.col("c0").cast("double")).alias("r3"),
-    )
-    dl = r.withColumn(
-        "p22",
-        (F.col("r2") - F.col("r1") * F.col("r1"))
-        / (F.lit(1.0) - F.col("r1") * F.col("r1")),
-    )
-    return dl.select(
-        "event_type",
-        F.col("n").cast("long").alias("n_days"),
-        F.round(F.col("r1") * 1000000).cast("long").alias("pacf1_e6"),
-        F.round(F.col("p22") * 1000000).cast("long").alias("pacf2_e6"),
-        F.round(
-            (
-                F.col("r3")
-                - (F.col("r1") * (F.lit(1.0) - F.col("p22"))) * F.col("r2")
-                - F.col("p22") * F.col("r1")
-            )
-            / (
-                F.lit(1.0)
-                - (F.col("r1") * (F.lit(1.0) - F.col("p22"))) * F.col("r1")
-                - F.col("p22") * F.col("r2")
-            )
-            * 1000000
-        ).cast("long").alias("pacf3_e6"),
-    ).orderBy("event_type")
+sql_entry(_q, "events_pacf_yw", _PACF_SQL)
 
 
 # --- DiD parallel-trends pre-test (r13) --------------------------------------
@@ -1700,62 +1561,7 @@ FROM (SELECT * FROM b WHERE treated) t, (SELECT * FROM b WHERE NOT treated) c
 """
 
 
-@_q("events_did_parallel_trends", _PTREND_SQL)
-def events_did_parallel_trends(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Parallel-trends pre-test for the DiD design events_diff_in_diff
-    uses (treatment = even user ids, pre = days 1..15): per-group OLS
-    slope of daily purchase revenue on the day index, the slope
-    difference, its combined SE, the z statistic, and the verdict at
-    the fixed 1.96 literal.
-
-    Scale: one (group, day) collapse + a 2-row six-sum aggregate; the
-    regression algebra never sees a row — exact integer sums into one
-    shared double tree, single-row output."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    )
-    s = (
-        ev.filter(F.dayofmonth(F.to_date("ts")) <= 15)
-        .groupBy(
-            (F.col("user_id") % 2 == 0).alias("treated"),
-            F.dayofmonth(F.to_date("ts")).alias("t"),
-        )
-        .agg(F.sum(F.round(F.col("value") * 100)).cast("long").alias("y"))
-    )
-    m = s.groupBy("treated").agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("t").cast("long").alias("st"),
-        F.sum(F.col("t") * F.col("t")).cast("long").alias("stt"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
-        F.sum(F.col("t") * F.col("y")).cast("long").alias("sty"),
-    )
-    b = m.selectExpr(
-        "treated", "n",
-        "CAST(stt AS DOUBLE) - CAST(st AS DOUBLE) * st / n AS sxx",
-        "CAST(sty AS DOUBLE) - CAST(st AS DOUBLE) * sy / n AS sxy",
-        "CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * sy / n AS syy_c",
-    ).selectExpr(
-        "treated", "n", "sxy / sxx AS slope",
-        "((syy_c - (sxy / sxx) * sxy) / (n - 2)) / sxx AS se2",
-    )
-    t = b.filter(F.col("treated")).select(
-        F.col("n").alias("tn"), F.col("slope").alias("ts"),
-        F.col("se2").alias("tse2"),
-    )
-    c = b.filter(~F.col("treated")).select(
-        F.col("slope").alias("cs"), F.col("se2").alias("cse2")
-    )
-    return t.crossJoin(F.broadcast(c)).selectExpr(
-        "CAST(tn AS BIGINT) AS n_days_pre",
-        "CAST(round(ts * 1000000) AS BIGINT) AS slope_treated_e6",
-        "CAST(round(cs * 1000000) AS BIGINT) AS slope_control_e6",
-        "CAST(round((ts - cs) * 1000000) AS BIGINT) AS diff_e6",
-        "CAST(round(sqrt(tse2 + cse2) * 1000000) AS BIGINT) AS se_e6",
-        "CAST(round((ts - cs) / sqrt(tse2 + cse2) * 1000000) AS BIGINT)"
-        " AS z_e6",
-        f"abs((ts - cs) / sqrt(tse2 + cse2)) < {_PT_Z} AS parallel_ok",
-    )
+sql_entry(_q, "events_did_parallel_trends", _PTREND_SQL)
 
 
 # --- Mann-Kendall trend test (r13) -------------------------------------------
@@ -1894,6 +1700,7 @@ ORDER BY c.event_type
 """
 
 
+# Kept port (keep-rule 2b, worse plan): the text adds a nested-loop join and a sort-merge join.
 @_q("events_runs_test", _RUNS_SQL)
 def events_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wald-Wolfowitz runs test on the up/down pattern of day-over-day

@@ -19,6 +19,11 @@
 * **Decimal arithmetic** — ``DecimalType(p,s)`` semantics (SURVEY §1.2,
   ``UnscaledDecimal128Arithmetic.java``): exact sums/products at scale 2,
   no float drift; built from exact cents so both engines agree bit-for-bit.
+
+An entry whose oracle text runs on Spark with the oracle's rows is that
+text, registered by ``engine.sql_entry``, unless a ``Kept port`` comment
+above its port names the keep-rule that holds; an unmarked port holds a
+text that does not (keep-rule 1, see :mod:`presto_db_spark.registry`).
 """
 
 from __future__ import annotations
@@ -27,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_tables
+from ..engine import sql_entry
 from ..registry import family
 
 QUERIES, ORACLE, _q = family()
@@ -168,6 +174,7 @@ def sketch_quantile_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Kept port (keep-rule 2d, helper coverage): sketch_histogram.
 @_q(
     "sketch_quantile_at_value",
     f"""
@@ -197,6 +204,7 @@ def sketch_quantile_at_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Kept port (keep-rule 2c, text skips the function): it expands the decimal functions by hand.
 @_q(
     "func_decimal",
     """
@@ -275,6 +283,7 @@ def adaptive_boundaries(df: DataFrame, value_col, order_cols: list[str]) -> Data
     return b.select("nt", "lo", F.lead("lo").over(w_nt).alias("hi"))
 
 
+# Kept port (keep-rule 2d, helper coverage): adaptive_boundaries.
 @_q(
     "sketch_adaptive_quantiles",
     f"""
@@ -766,50 +775,7 @@ ORDER BY o_orderpriority
 """
 
 
-@_q("agg_mad", _MAD_SQL)
-def agg_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Median absolute deviation per order priority — the robust
-    dispersion statistic (the outlier-resistant stddev) the reference's
-    users build from two chained median aggregations over
-    ``approx_percentile``'s EXACT sibling.  Everything stays integral:
-    prices become cents, the median doubles to HALF-cents (the 0.5-step
-    linear interpolation at even counts is then exact), deviations are
-    half-cent integers and the MAD doubles again to quarter-cents — no
-    float ever reaches the output, so Spark's ``percentile`` and
-    DuckDB's ``median`` must agree bit-for-bit or the hash breaks.
-
-    Scale shape: two grouped EXACT percentiles (each buffers one
-    group's values — bounded by group size, the documented exact-median
-    contract; the unbounded-cardinality path is the mergeable t-digest
-    twin in `operators/tdigest.py`) + one broadcast join of the
-    |groups|-row median table back onto the cents.  Reference anchor:
-    presto-main/.../aggregation/QuantileDigestAggregationFunction.java
-    serves the approximate form; the exact form users compose is this
-    plan."""
-    orders = load_tables(spark, sf_dir, "orders")[0]
-    cents = orders.select(
-        "o_orderpriority",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("c"),
-    )
-    med = cents.groupBy("o_orderpriority").agg(
-        (2 * F.expr("percentile(c, 0.5)")).cast("long").alias("med_halfcents"),
-        F.count("*").alias("n"),
-    )
-    dev = cents.join(F.broadcast(med), "o_orderpriority").select(
-        "o_orderpriority",
-        "med_halfcents",
-        "n",
-        F.abs(2 * F.col("c") - F.col("med_halfcents")).alias("d"),
-    )
-    return (
-        dev.groupBy("o_orderpriority")
-        .agg(
-            F.max("med_halfcents").cast("long").alias("med_halfcents"),
-            (2 * F.expr("percentile(d, 0.5)")).cast("long").alias("mad_quartercents"),
-            F.max("n").cast("long").alias("n"),
-        )
-        .orderBy("o_orderpriority")
-    )
+sql_entry(_q, "agg_mad", _MAD_SQL)
 
 
 # --- bottom-k (KMV) sample + distinct estimate --------------------------------

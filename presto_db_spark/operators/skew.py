@@ -71,6 +71,7 @@ def salted_join(
     return out
 
 
+# Kept port (keep-rule 2d, helper coverage): salted_agg.
 @_q(
     "skew_salted_agg",
     """
@@ -102,6 +103,7 @@ def skew_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Kept port (keep-rule 2d, helper coverage): salted_join.
 @_q(
     "skew_salted_join",
     """

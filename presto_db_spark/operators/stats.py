@@ -25,6 +25,11 @@ Scale shape notes (100 TB):
   via ``distrank.global_index`` (range-partition + prefix-offset running
   sum — never a single-partition window), so the ordered pass touches
   |distinct values| ≤ |users| rows, already aggregated.
+
+An entry whose oracle text runs on Spark with the oracle's rows is that
+text, registered by ``engine.sql_entry``, unless a ``Kept port`` comment
+above its port names the keep-rule that holds; an unmarked port holds a
+text that does not (keep-rule 1, see :mod:`presto_db_spark.registry`).
 """
 
 from __future__ import annotations
@@ -33,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, small_df
+from ..engine import sql_entry
 from ..registry import family
 from .events import CHI2_CRIT_E6
 
@@ -967,59 +973,4 @@ FROM c ORDER BY d
 """
 
 
-@_q("events_ab_sequential_sprt", _SPRT_SQL)
-def events_ab_sequential_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wald SPRT trace over the treatment stream's daily conversion
-    counts: per day the log-likelihood-ratio increment, the running
-    total, and the sequential decision against the ±ln 19 boundaries.
-
-    Scale: one (day) collapse of the filtered stream (map-side
-    combinable); the cumulative window runs on the bounded day grain —
-    the module's standing contract. The LLR constants are 1-row
-    broadcast arithmetic."""
-    from pyspark.sql.window import Window as W
-
-    ev = load_table(spark, sf_dir, "events")
-    k = spark.range(1).select(
-        F.round(
-            (F.log(F.lit(float(SPRT_P1_NUM))) - F.log(F.lit(float(SPRT_P0_NUM))))
-            * 1000000
-        ).cast("long").alias("l1_e6"),
-        F.round(
-            (F.log(F.lit(float(SPRT_DEN - SPRT_P1_NUM)))
-             - F.log(F.lit(float(SPRT_DEN - SPRT_P0_NUM)))) * 1000000
-        ).cast("long").alias("l0_e6"),
-        F.round(F.log(F.lit(float(SPRT_ALPHA_INV))) * 1000000)
-        .cast("long").alias("bound_e6"),
-    )
-    daily = (
-        ev.filter(F.col("user_id") % 2 == 1)
-        .groupBy(F.to_date("ts").alias("d"))
-        .agg(
-            F.count("*").cast("long").alias("n_trials"),
-            F.sum(
-                F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-            ).cast("long").alias("n_success"),
-        )
-    )
-    llr = daily.crossJoin(F.broadcast(k)).select(
-        "d", "n_trials", "n_success", "bound_e6",
-        (
-            F.col("n_success") * F.col("l1_e6")
-            + (F.col("n_trials") - F.col("n_success")) * F.col("l0_e6")
-        ).alias("day_llr_e6"),
-    )
-    w = W.orderBy("d").rowsBetween(W.unboundedPreceding, W.currentRow)
-    return (
-        llr.withColumn("cum_llr_e6", F.sum("day_llr_e6").over(w))
-        .select(
-            "d", "n_trials", "n_success",
-            F.col("day_llr_e6").cast("long"),
-            F.col("cum_llr_e6").cast("long"),
-            F.when(F.col("cum_llr_e6") >= F.col("bound_e6"), "accept_h1")
-            .when(F.col("cum_llr_e6") <= -F.col("bound_e6"), "accept_h0")
-            .otherwise("continue")
-            .alias("decision"),
-        )
-        .orderBy("d")
-    )
+sql_entry(_q, "events_ab_sequential_sprt", _SPRT_SQL)

@@ -7,6 +7,11 @@ path) over the ``documents`` table, designed to scan 100 TB of text with
 nothing but a projection (no shuffle at all except final aggregation).
 The one CPU-heavy explode over the raw text (``text_ngram_novelty``)
 reads the corpus through ``catalog.fanout``.
+
+An entry whose oracle text runs on Spark with the oracle's rows is that
+text, registered by ``engine.sql_entry``, unless a ``Kept port`` comment
+above its port names the keep-rule that holds; an unmarked port holds a
+text that does not (keep-rule 1, see :mod:`presto_db_spark.registry`).
 """
 
 from __future__ import annotations
@@ -18,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..catalog import fanout, load_table
+from ..engine import sql_entry
 from ..registry import family
 
 QUERIES, ORACLE, _q = family()
@@ -270,8 +276,8 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- deterministic train/val split -----------------------------------------
 
-@_q(
-    "text_train_val_split",
+sql_entry(
+    _q, "text_train_val_split",
     """
 WITH split AS (
   SELECT lang,
@@ -284,26 +290,6 @@ SELECT part, lang, CAST(count(*) AS BIGINT) AS n_docs
 FROM split GROUP BY part, lang ORDER BY part, lang
 """,
 )
-def text_train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic ~90/10 train/val split: the first md5 byte of the doc
-    key thresholded at 230/256 — stable across runs, machines, and
-    engines (md5 hex is identical everywhere), no RNG state to manage,
-    and a pure projection at 100 TB (the split column never shuffles;
-    only the per-(split, lang) count rollup does)."""
-    docs = load_table(spark, sf_dir, "documents")
-    hexd = "0123456789abcdef"
-    h = F.md5(F.col("doc_id").cast("string"))
-    byte0 = (
-        (F.instr(F.lit(hexd), F.substring(h, 1, 1)) - 1) * 16
-        + (F.instr(F.lit(hexd), F.substring(h, 2, 1)) - 1)
-    )
-    part = F.when(byte0 < 230, "train").otherwise("val").alias("part")
-    return (
-        docs.select(part, "lang")
-        .groupBy("part", "lang")
-        .agg(F.count("*").cast("bigint").alias("n_docs"))
-        .orderBy("part", "lang")
-    )
 
 
 # --- repetition-ratio quality filter ---------------------------------------
@@ -1268,34 +1254,7 @@ FROM r
 """
 
 
-@_q("text_domain_cap", _DOMCAP_SQL)
-def text_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-domain document cap — the C4/RefinedWeb-style curation rule
-    that bounds any single domain's contribution to the corpus so crawl
-    skew (one forum dumping millions of pages) cannot dominate training.
-
-    Priority inside a domain is ``md5(doc_id)`` — a deterministic
-    pseudo-random order, so the kept subset is an unbiased sample that is
-    REPRODUCIBLE across engines and runs (no RNG state), and adding new
-    documents never reshuffles the survivors' relative order.
-
-    100 TB: one hash-partitioned window per domain — the shuffle key is
-    the domain, exactly the key the data is naturally skewed ON, but the
-    window needs only (doc_id, hash) narrow rows, and AQE's skew split
-    handles a mega-domain's sort spill. In production the cap is applied
-    as a TopNRowNumber (WindowGroupLimit) when only survivors are needed;
-    here every doc is emitted with its verdict for auditability."""
-    docs = load_table(spark, sf_dir, "documents")
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("source").orderBy(
-        F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
-    )
-    return docs.select(
-        "doc_id",
-        "source",
-        F.row_number().over(w).cast("bigint").alias("domain_rank"),
-    ).withColumn("kept", F.col("domain_rank") <= _DOMAIN_CAP)
+sql_entry(_q, "text_domain_cap", _DOMCAP_SQL)
 
 
 # --- Unicode NFC normalization ----------------------------------------------

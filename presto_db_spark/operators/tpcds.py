@@ -21,7 +21,7 @@ warehouse              l_suppkey
 =====================  =====================================================
 
 Each query is its SQL text, the same text the DuckDB oracle runs,
-registered by ``_sql(name, text)`` and built into a registry entry by
+registered by :func:`presto_db_spark.engine.sql_entry` and run through
 :func:`presto_db_spark.engine.sql_query` (the engine's SQL front end and
 Catalyst do the planning). A DataFrame port stays only where its comment
 names the keep-rule that holds for it: the text does not run on Spark or
@@ -39,17 +39,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_tables
-from ..engine import sql_query
+from ..engine import sql_entry
 from ..registry import family
 from .stagecache import materialize_stage
 from .tpch import _csum, _csum_sql, _msum, _msum_sql
 
 QUERIES, ORACLE, _q = family()
-
-
-def _sql(name: str, text: str) -> None:
-    """Register ``name`` as SQL ``text``: the entry runs the oracle's text."""
-    _q(name, text)(sql_query(text))
 
 
 def _rev():
@@ -68,8 +63,8 @@ _REV_SQL = "l_extendedprice * (1 - l_discount)"
 
 # --- q3: year x brand revenue for one manufacturer, November ---------------
 
-_sql(
-    "tpcds_q03",
+sql_entry(
+    _q, "tpcds_q03",
     f"""
 SELECT year(o.o_orderdate) AS d_year, p.p_brand AS brand,
        {_msum_sql(_REV_SQL)} AS sum_agg
@@ -86,8 +81,8 @@ LIMIT 100
 
 # --- q7: demographic-filtered per-item averages ----------------------------
 
-_sql(
-    "tpcds_q07",
+sql_entry(
+    _q, "tpcds_q07",
     f"""
 SELECT p.p_brand AS i_brand,
        round(avg(l.l_quantity), 6) AS agg1,
@@ -110,8 +105,8 @@ LIMIT 100
 
 # --- q19: brand revenue where buyer and supplier geographies differ --------
 
-_sql(
-    "tpcds_q19",
+sql_entry(
+    _q, "tpcds_q19",
     f"""
 SELECT p.p_brand AS brand, p.p_type AS i_manufact,
        {_msum_sql(_REV_SQL)} AS ext_price
@@ -131,8 +126,8 @@ LIMIT 100
 
 # --- q42 / q52: year x category / year x brand November rollups ------------
 
-_sql(
-    "tpcds_q42",
+sql_entry(
+    _q, "tpcds_q42",
     f"""
 SELECT year(o.o_orderdate) AS d_year, p.p_type AS i_category,
        {_msum_sql(_REV_SQL)} AS sum_sales
@@ -147,8 +142,8 @@ LIMIT 100
 )
 
 
-_sql(
-    "tpcds_q52",
+sql_entry(
+    _q, "tpcds_q52",
     f"""
 SELECT year(o.o_orderdate) AS d_year, p.p_brand AS brand,
        {_msum_sql(_REV_SQL)} AS ext_price
@@ -165,8 +160,8 @@ LIMIT 100
 
 # --- q95: CTE re-used in two IN-subqueries (multi-supplier orders) ---------
 
-_sql(
-    "tpcds_q95",
+sql_entry(
+    _q, "tpcds_q95",
     f"""
 WITH multi_supp AS (
   SELECT DISTINCT l1.l_orderkey
@@ -302,8 +297,8 @@ def tpcds_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- q88: eight time-slot scans of one fact, single-row cross join ---------
 
-_sql(
-    "tpcds_q88",
+sql_entry(
+    _q, "tpcds_q88",
     """
 SELECT * FROM
  (SELECT CAST(count(*) AS BIGINT) AS h1 FROM lineitem l JOIN orders o
@@ -328,8 +323,8 @@ SELECT * FROM
 
 # --- q67: rollup + per-category window rank --------------------------------
 
-_sql(
-    "tpcds_q67",
+sql_entry(
+    _q, "tpcds_q67",
     f"""
 WITH results AS (
   SELECT p.p_type AS i_category, p.p_brand AS i_brand,
@@ -357,8 +352,8 @@ ORDER BY i_category NULLS FIRST, rk, i_brand NULLS FIRST, d_year NULLS FIRST
 
 # --- q34: trips with 5-7 items, joined back to the customer ----------------
 
-_sql(
-    "tpcds_q34",
+sql_entry(
+    _q, "tpcds_q34",
     """
 WITH trips AS (
   SELECT l_orderkey, CAST(count(*) AS BIGINT) AS cnt
@@ -376,8 +371,8 @@ ORDER BY c.c_name, c.c_custkey, ticket
 
 # --- q48: sum over three OR'd demographic/quantity/discount bands ----------
 
-_sql(
-    "tpcds_q48",
+sql_entry(
+    _q, "tpcds_q48",
     """
 SELECT CAST(sum(CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS total_qty
 FROM lineitem l
@@ -410,8 +405,8 @@ def _channel_cust_dates_sql(flag: str) -> str:
   WHERE l.l_returnflag = '{flag}' AND year(o.o_orderdate) = 1997"""
 
 
-_sql(
-    "tpcds_q38",
+sql_entry(
+    _q, "tpcds_q38",
     f"""
 SELECT CAST(count(*) AS BIGINT) AS cnt FROM (
   {_channel_cust_dates_sql('N')}
@@ -424,8 +419,8 @@ SELECT CAST(count(*) AS BIGINT) AS cnt FROM (
 )
 
 
-_sql(
-    "tpcds_q87",
+sql_entry(
+    _q, "tpcds_q87",
     f"""
 SELECT CAST(count(*) AS BIGINT) AS cnt FROM (
   ({_channel_cust_dates_sql('N')})
@@ -545,8 +540,8 @@ _Q05_WSR_SQL = f"""
          {_csum_sql("CASE WHEN l_returnflag = 'A' THEN l_extendedprice * (1 - l_discount) ELSE 0 END")} AS profit
   FROM lineitem WHERE l_returnflag = 'A' GROUP BY id"""
 
-_sql(
-    "tpcds_q05",
+sql_entry(
+    _q, "tpcds_q05",
     f"""
 WITH ssr AS ({_Q05_SSR_SQL}), csr AS ({_Q05_CSR_SQL}), wsr AS ({_Q05_WSR_SQL}),
 unioned AS (
@@ -639,8 +634,8 @@ def _channel_exists_sql(flag: str, year: int) -> str:
       AND year(o.o_orderdate) = {year})"""
 
 
-_sql(
-    "tpcds_q10",
+sql_entry(
+    _q, "tpcds_q10",
     f"""
 SELECT c.c_mktsegment AS cd_segment,
        CAST(count(*) AS BIGINT) AS cnt1,
@@ -656,8 +651,8 @@ ORDER BY cd_segment ASC
 )
 
 
-_sql(
-    "tpcds_q35",
+sql_entry(
+    _q, "tpcds_q35",
     f"""
 SELECT n.n_name AS ca_state, c.c_mktsegment AS cd_segment,
        CAST(count(*) AS BIGINT) AS cnt,
@@ -702,8 +697,8 @@ LIMIT 100
 """
 
 
-_sql(
-    "tpcds_q36",
+sql_entry(
+    _q, "tpcds_q36",
     _rollup_rank_sql(
         flag_pred="l.l_returnflag = 'N'",
         measure_sql=(
@@ -716,8 +711,8 @@ _sql(
 )
 
 
-_sql(
-    "tpcds_q86",
+sql_entry(
+    _q, "tpcds_q86",
     _rollup_rank_sql(
         flag_pred="l.l_returnflag = 'R'",
         measure_sql=_msum_sql("l.l_extendedprice * (1 - l.l_discount)"),
@@ -729,8 +724,8 @@ _sql(
 
 # --- q1: correlated per-store average return threshold ---------------------
 
-_sql(
-    "tpcds_q01",
+sql_entry(
+    _q, "tpcds_q01",
     """
 WITH ctr AS (
   SELECT o.o_custkey AS ctr_customer_sk, l.l_suppkey % 10 AS ctr_store_sk,
@@ -841,8 +836,8 @@ def _q49_channel_sql(ch: str) -> str:
    WHERE return_rank <= 10 OR currency_rank <= 10"""
 
 
-_sql(
-    "tpcds_q49",
+sql_entry(
+    _q, "tpcds_q49",
     f"""
 SELECT * FROM (
   {_q49_channel_sql('web')}
@@ -869,8 +864,8 @@ def _q51_channel_sql(flag: str) -> str:
    GROUP BY l_partkey % 50, date_trunc('month', l_shipdate)"""
 
 
-_sql(
-    "tpcds_q51",
+sql_entry(
+    _q, "tpcds_q51",
     f"""
 WITH web_v1 AS ({_q51_channel_sql('N')}),
      store_v1 AS ({_q51_channel_sql('A')})
@@ -898,8 +893,8 @@ LIMIT 100
 
 # --- q65: store-item revenue below a tenth of the store average ------------
 
-_sql(
-    "tpcds_q65",
+sql_entry(
+    _q, "tpcds_q65",
     """
 WITH sa AS (
   SELECT l_suppkey AS store_sk, l_partkey AS item_sk,
@@ -940,8 +935,8 @@ def _q78_channel_sql(mod: int, pre: str) -> str:
    GROUP BY year(l.l_shipdate), l.l_partkey % 50, o.o_custkey"""
 
 
-_sql(
-    "tpcds_q78",
+sql_entry(
+    _q, "tpcds_q78",
     f"""
 WITH ss AS ({_q78_channel_sql(0, 'ss')}),
      ws AS ({_q78_channel_sql(1, 'ws')}),
@@ -966,8 +961,8 @@ LIMIT 100
 
 # --- q93: returns-adjusted actual sales per customer -----------------------
 
-_sql(
-    "tpcds_q93",
+sql_entry(
+    _q, "tpcds_q93",
     """
 SELECT o_custkey AS ss_customer_sk, CAST(sum(act_sales) AS BIGINT) AS sumsales
 FROM (
@@ -1002,8 +997,8 @@ def _q97_channel_sql(flag: str) -> str:
    GROUP BY o.o_custkey, l.l_partkey"""
 
 
-_sql(
-    "tpcds_q97",
+sql_entry(
+    _q, "tpcds_q97",
     f"""
 WITH ssci AS ({_q97_channel_sql('N')}),
      csci AS ({_q97_channel_sql('A')})
@@ -1037,8 +1032,8 @@ _Q31_WS_SQL = """
    GROUP BY c.c_nationkey, quarter(o.o_orderdate), year(o.o_orderdate)"""
 
 
-_sql(
-    "tpcds_q31",
+sql_entry(
+    _q, "tpcds_q31",
     f"""
 WITH ss AS ({_Q31_SS_SQL}),
      ws AS ({_Q31_WS_SQL})
@@ -1075,8 +1070,8 @@ _Q44_BASE_SQL = """
    FROM lineitem WHERE l_suppkey % 10 = 4 AND l_returnflag = 'R'"""
 
 
-_sql(
-    "tpcds_q44",
+sql_entry(
+    _q, "tpcds_q44",
     f"""
 WITH item_avg AS ({_Q44_ITEM_AVG_SQL}),
      base AS ({_Q44_BASE_SQL}),
@@ -1107,8 +1102,8 @@ ORDER BY a.rnk
 
 # --- q50: sale-to-return latency buckets per store -------------------------
 
-_sql(
-    "tpcds_q50",
+sql_entry(
+    _q, "tpcds_q50",
     """
 SELECT s.s_name, s.s_nationkey,
        CAST(sum(CASE WHEN date_diff('day', o.o_orderdate, l.l_shipdate) <= 30
@@ -1137,8 +1132,8 @@ LIMIT 100
 
 # --- q6: states buying above-category-average-priced items -----------------
 
-_sql(
-    "tpcds_q06",
+sql_entry(
+    _q, "tpcds_q06",
     """
 SELECT c.c_nationkey AS state, CAST(count(*) AS BIGINT) AS cnt
 FROM lineitem l
@@ -1160,8 +1155,8 @@ LIMIT 100
 
 # --- q23: frequent items x best customers CTE chain ------------------------
 
-_sql(
-    "tpcds_q23",
+sql_entry(
+    _q, "tpcds_q23",
     """
 WITH frequent_items AS (
   SELECT l.l_partkey AS item_sk
@@ -1213,8 +1208,8 @@ def _q66_arm_sql(status: str) -> str:
    GROUP BY l.l_suppkey, year(l.l_shipdate)"""
 
 
-_sql(
-    "tpcds_q66",
+sql_entry(
+    _q, "tpcds_q66",
     f"""
 WITH both_arms AS (
   {_q66_arm_sql('O')}
@@ -1236,8 +1231,8 @@ LIMIT 100
 
 # --- q61: promotional-sales share, two single-row star aggregates ----------
 
-_sql(
-    "tpcds_q61",
+sql_entry(
+    _q, "tpcds_q61",
     """
 SELECT promotions, total,
        CAST(promotions AS DOUBLE) / total * 100 AS promo_pct
@@ -1344,8 +1339,8 @@ def _q14_channel_items_sql(flag: str) -> str:
       WHERE l.l_returnflag = '{flag}' AND year(o.o_orderdate) BETWEEN 1996 AND 1998"""
 
 
-_sql(
-    "tpcds_q14",
+sql_entry(
+    _q, "tpcds_q14",
     f"""
 WITH cross_items AS (
   {_q14_channel_items_sql('N')}
@@ -1443,8 +1438,8 @@ def _q58_channel_sql(flag: str, name: str) -> str:
    GROUP BY l.l_partkey"""
 
 
-_sql(
-    "tpcds_q58",
+sql_entry(
+    _q, "tpcds_q58",
     f"""
 WITH ss_items AS ({_q58_channel_sql('N', 'ss')}),
      cs_items AS ({_q58_channel_sql('A', 'cs')}),
@@ -1536,8 +1531,8 @@ def _q33_channel_sql(flag: str) -> str:
    GROUP BY p.p_size"""
 
 
-_sql(
-    "tpcds_q33",
+sql_entry(
+    _q, "tpcds_q33",
     f"""
 WITH ss AS ({_q33_channel_sql('N')}),
      cs AS ({_q33_channel_sql('A')}),
@@ -1684,8 +1679,8 @@ def _q76_arm_sql(channel: str, col_name: str, flag: str, pred: str) -> str:
    WHERE l.l_returnflag = '{flag}' AND {pred}"""
 
 
-_sql(
-    "tpcds_q76",
+sql_entry(
+    _q, "tpcds_q76",
     f"""
 SELECT channel, col_name, d_year, d_qoy, i_category,
        CAST(count(*) AS BIGINT) AS sales_cnt,
@@ -1702,8 +1697,8 @@ LIMIT 100
 
 # --- q12: item revenue share within class (windowed share) -----------------
 
-_sql(
-    "tpcds_q12",
+sql_entry(
+    _q, "tpcds_q12",
     """
 SELECT p.p_name AS i_item_id, p.p_type AS i_category, p.p_brand AS i_class,
        p.p_retailprice AS i_current_price,
@@ -1725,8 +1720,8 @@ LIMIT 100
 
 # --- q90: am/pm activity ratio (events table) ------------------------------
 
-_sql(
-    "tpcds_q90",
+sql_entry(
+    _q, "tpcds_q90",
     """
 SELECT CAST(amc AS DOUBLE) / pmc AS am_pm_ratio
 FROM (
@@ -1742,8 +1737,8 @@ FROM (
 
 # --- q92: excess-discount amount (correlated 1.3x avg) ---------------------
 
-_sql(
-    "tpcds_q92",
+sql_entry(
+    _q, "tpcds_q92",
     """
 SELECT CAST(sum(disc_cents) AS BIGINT) AS excess_discount_cents
 FROM (
@@ -1895,8 +1890,8 @@ def _exact_stats_sql(q: str) -> str:
     )
 
 
-_sql(
-    "tpcds_q17",
+sql_entry(
+    _q, "tpcds_q17",
     f"""
 WITH s AS (
   SELECT o.o_custkey AS ck, l.l_partkey % 10 AS pk, CAST(l.l_quantity AS BIGINT) AS qty_s,
@@ -1930,8 +1925,8 @@ LIMIT 100
 
 # --- q55: brand revenue for one month (minimal star rollup) ----------------
 
-_sql(
-    "tpcds_q55",
+sql_entry(
+    _q, "tpcds_q55",
     f"""
 SELECT p.p_brand AS brand, {_msum_sql("l.l_extendedprice * (1 - l.l_discount)")} AS ext_price
 FROM lineitem l
@@ -1947,8 +1942,8 @@ LIMIT 100
 
 # --- q96: filtered count through three broadcast dims ----------------------
 
-_sql(
-    "tpcds_q96",
+sql_entry(
+    _q, "tpcds_q96",
     """
 SELECT CAST(count(*) AS BIGINT) AS cnt
 FROM lineitem l
@@ -1972,8 +1967,8 @@ _Q18_MEASURES = [
 ]
 
 
-_sql(
-    "tpcds_q18",
+sql_entry(
+    _q, "tpcds_q18",
     f"""
 SELECT p.p_brand AS i_item_id, n.n_name AS ca_country, c.c_mktsegment AS ca_state,
        {", ".join(f"CAST(sum({e}) AS DOUBLE) / count(*) AS {n}" for n, e in _Q18_MEASURES)}
@@ -1992,8 +1987,8 @@ ORDER BY ca_country, ca_state, i_item_id
 
 # --- q45: disjunctive gate across two dimensions ---------------------------
 
-_sql(
-    "tpcds_q45",
+sql_entry(
+    _q, "tpcds_q45",
     """
 SELECT c.c_nationkey AS ca_zip, c.c_mktsegment AS ca_city,
        CAST(sum(round(l.l_extendedprice * 100)) AS BIGINT) AS sum_cents
@@ -2023,8 +2018,8 @@ _Q13_BANDS_SQL = """(
 )"""
 
 
-_sql(
-    "tpcds_q13",
+sql_entry(
+    _q, "tpcds_q13",
     f"""
 SELECT CAST(sum(CAST(l.l_quantity AS BIGINT)) AS DOUBLE) / count(*) AS avg_qty,
        CAST(sum(CAST(round(l.l_extendedprice * 100) AS BIGINT)) AS DOUBLE) / count(*) AS avg_price_cents,
@@ -2041,8 +2036,8 @@ WHERE s.s_nationkey < 15 AND year(o.o_orderdate) = 1996 AND {_Q13_BANDS_SQL}
 
 # --- q47: monthly deviation from yearly average, with lag/lead neighbors ---
 
-_sql(
-    "tpcds_q47",
+sql_entry(
+    _q, "tpcds_q47",
     """
 WITH v1 AS (
   SELECT p.p_type AS i_category, p.p_brand AS i_brand,

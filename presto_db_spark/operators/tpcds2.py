@@ -19,7 +19,7 @@ re-targeted onto the driver's TPC-H-ish tables:
 * every LIMIT query carries a deterministic total ORDER BY in BOTH
   engines.
 
-As there, each query is its SQL text registered by ``_sql(name, text)``,
+As there, each query is its SQL text registered by ``sql_entry``,
 and a DataFrame port stays only where its comment names its keep-rule.
 """
 
@@ -29,18 +29,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_tables
-from ..engine import sql_query
+from ..engine import sql_entry
 from ..registry import family
 from .stagecache import materialize_stage
 from .tpcds import CTE_MATERIALIZE, CTE_STAGE
 from .tpch import _csum, _csum_sql, _msum, _msum_sql
 
 QUERIES, ORACLE, _q = family()
-
-
-def _sql(name: str, text: str) -> None:
-    """Register ``name`` as SQL ``text``: the entry runs the oracle's text."""
-    _q(name, text)(sql_query(text))
 
 
 def _rev():
@@ -52,8 +47,8 @@ _REV_SQL = "l_extendedprice * (1 - l_discount)"
 
 # --- q15: customer catalog revenue under an OR'd geography/amount gate -----
 
-_sql(
-    "tpcds_q15",
+sql_entry(
+    _q, "tpcds_q15",
     f"""
 SELECT n.n_name AS ca_zip, {_msum_sql("l.l_extendedprice")} AS sum_sales
 FROM lineitem l
@@ -95,10 +90,10 @@ ORDER BY i_category ASC, i_class ASC, i_item_id ASC, i_item_desc ASC, revenuerat
 _Q98_CATS = ("STANDARD", "SMALL", "ECONOMY")
 
 
-_sql("tpcds_q98", _revenue_share_sql(_REV_SQL, _Q98_CATS, "1996-02-22", "1996-03-23", 0))
+sql_entry(_q, "tpcds_q98", _revenue_share_sql(_REV_SQL, _Q98_CATS, "1996-02-22", "1996-03-23", 0))
 
 
-_sql("tpcds_q20", _revenue_share_sql("l_extendedprice", _Q20_CATS := (
+sql_entry(_q, "tpcds_q20", _revenue_share_sql("l_extendedprice", _Q20_CATS := (
     "STANDARD", "LARGE", "PROMO"),
     "1997-02-22", "1997-03-23", 100))
 
@@ -137,15 +132,15 @@ WHERE key_sum_c > 0 AND 10 * abs(c * key_cnt - key_sum_c) > key_sum_c
 """
 
 
-_sql(
-    "tpcds_q53",
+sql_entry(
+    _q, "tpcds_q53",
     _deviation_sql("p.p_size", "i_manufact_id", "quarter(o.o_orderdate)")
     + "ORDER BY avg_sales ASC, sum_sales ASC, i_manufact_id ASC, period ASC LIMIT 100",
 )
 
 
-_sql(
-    "tpcds_q63",
+sql_entry(
+    _q, "tpcds_q63",
     _deviation_sql("p.p_partkey % 100", "i_manager_id", "month(o.o_orderdate)")
     + "ORDER BY i_manager_id ASC, avg_sales ASC, sum_sales ASC, period ASC LIMIT 100",
 )
@@ -222,8 +217,8 @@ def tpcds_q99(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- q32: excess discount vs 1.3x the item's windowed average --------------
 
-_sql(
-    "tpcds_q32",
+sql_entry(
+    _q, "tpcds_q32",
     """
 SELECT CAST(sum(disc_cents) AS BIGINT) AS excess_discount_cents
 FROM (
@@ -266,8 +261,8 @@ _CTR_HOT_SQL = """
 """
 
 
-_sql(
-    "tpcds_q30",
+sql_entry(
+    _q, "tpcds_q30",
     f"""
 WITH ctr AS ({_ctr_sql(1996, "l.l_extendedprice")}),
 hot AS ({_CTR_HOT_SQL})
@@ -283,8 +278,8 @@ LIMIT 100
 )
 
 
-_sql(
-    "tpcds_q81",
+sql_entry(
+    _q, "tpcds_q81",
     f"""
 WITH ctr AS ({_ctr_sql(1997, "l.l_extendedprice * (1 + l.l_tax)")}),
 hot AS ({_CTR_HOT_SQL})
@@ -326,8 +321,8 @@ LIMIT 100
 """
 
 
-_sql(
-    "tpcds_q25",
+sql_entry(
+    _q, "tpcds_q25",
     _three_fact_sql(
         1996, 4,
         f"{_msum_sql('l1.l_extendedprice * (1 - l1.l_discount)')} AS store_sales_profit, "
@@ -338,8 +333,8 @@ _sql(
 )
 
 
-_sql(
-    "tpcds_q29",
+sql_entry(
+    _q, "tpcds_q29",
     _three_fact_sql(
         1996, 9,
         "CAST(sum(l1.l_quantity) AS BIGINT) AS store_sales_quantity, "
@@ -444,8 +439,8 @@ def tpcds_q46(spark: SparkSession, sf_dir: str) -> DataFrame:
                           order_cols, (1, 2, 3, 4, 5))
 
 
-_sql(
-    "tpcds_q68",
+sql_entry(
+    _q, "tpcds_q68",
     _trip_mismatch_sql(
         "(l.l_quantity = 4 OR l.l_linenumber = 3) AND year(o.o_orderdate) IN (1996, 1997, 1998)"
         " AND day(o.o_orderdate) BETWEEN 1 AND 2",
@@ -462,8 +457,8 @@ _sql(
 
 # --- q57: monthly deviation with lag/lead neighbors, per call center -------
 
-_sql(
-    "tpcds_q57",
+sql_entry(
+    _q, "tpcds_q57",
     f"""
 WITH v1 AS (
   SELECT p.p_type AS i_category, p.p_brand AS i_brand, n.n_name AS cc_name,
@@ -599,8 +594,8 @@ def tpcds_q74(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q77_WIN = ("1996-08-23", "1996-09-22")
 
 
-_sql(
-    "tpcds_q77",
+sql_entry(
+    _q, "tpcds_q77",
     f"""
 WITH ss AS (
   SELECT l.l_suppkey AS sk, {_csum_sql("l.l_extendedprice")} AS sales,
@@ -663,8 +658,8 @@ LIMIT 100
 
 # --- q80: row-level sale-return left joins per channel, rollup -------------
 
-_sql(
-    "tpcds_q80",
+sql_entry(
+    _q, "tpcds_q80",
     f"""
 WITH base AS (
   SELECT l.*, o.o_orderpriority, o.o_orderdate FROM lineitem l
@@ -719,8 +714,8 @@ LIMIT 100
 
 # --- q83: three return channels joined per item over shared weeks ----------
 
-_sql(
-    "tpcds_q83",
+sql_entry(
+    _q, "tpcds_q83",
     """
 WITH weeks AS (
   SELECT DISTINCT weekofyear(d) AS wk FROM (
@@ -764,8 +759,8 @@ LIMIT 100
 
 # --- q72: fact-to-fact inventory join on (item, week) ----------------------
 
-_sql(
-    "tpcds_q72",
+sql_entry(
+    _q, "tpcds_q72",
     """
 SELECT p.p_name AS i_item_desc, s.s_name AS w_warehouse_name,
        weekofyear(o1.o_orderdate) AS d_week_seq,
@@ -998,16 +993,16 @@ WHERE l1.l_shipdate BETWEEN '{date_lo}' AND '{date_hi}'
 """
 
 
-_sql("tpcds_q16", _ship_orders_sql("1996-02-01", "1996-04-01", (1, 2, 3), "2-HIGH"))
+sql_entry(_q, "tpcds_q16", _ship_orders_sql("1996-02-01", "1996-04-01", (1, 2, 3), "2-HIGH"))
 
 
-_sql("tpcds_q94", _ship_orders_sql("1997-02-01", "1997-04-01", (5, 7, 9), "5-LOW"))
+sql_entry(_q, "tpcds_q94", _ship_orders_sql("1997-02-01", "1997-04-01", (5, 7, 9), "5-LOW"))
 
 
 # --- q21: inventory before/after a pivot date ------------------------------
 
-_sql(
-    "tpcds_q21",
+sql_entry(
+    _q, "tpcds_q21",
     """
 SELECT * FROM (
   SELECT s.s_name AS w_warehouse_name, p.p_partkey AS i_item_id,
@@ -1050,16 +1045,16 @@ LIMIT 100
 """
 
 
-_sql("tpcds_q37", _instock_sql("1996-02-01", "1996-04-01", (7, 14, 21, 28), "O"))
+sql_entry(_q, "tpcds_q37", _instock_sql("1996-02-01", "1996-04-01", (7, 14, 21, 28), "O"))
 
 
-_sql("tpcds_q82", _instock_sql("1997-05-25", "1997-07-24", (5, 10, 15, 20), "F"))
+sql_entry(_q, "tpcds_q82", _instock_sql("1997-05-25", "1997-07-24", (5, 10, 15, 20), "F"))
 
 
 # --- q26: demographic-gated catalog item averages --------------------------
 
-_sql(
-    "tpcds_q26",
+sql_entry(
+    _q, "tpcds_q26",
     """
 SELECT p.p_partkey AS i_item_id,
        round(avg(l.l_quantity), 6) AS agg1,
@@ -1082,8 +1077,8 @@ LIMIT 100
 
 # --- q27: rollup with GROUPING() over item x state -------------------------
 
-_sql(
-    "tpcds_q27",
+sql_entry(
+    _q, "tpcds_q27",
     """
 SELECT p.p_brand AS i_item_id, n.n_name AS s_state,
        CAST(grouping(n.n_name) AS INTEGER) AS g_state,
@@ -1121,8 +1116,8 @@ def _q28_cond_sql(lo, hi, plo, phi):
             f"OR round(l_extendedprice * l_tax * 100) BETWEEN 100 AND 4100)")
 
 
-_sql(
-    "tpcds_q28",
+sql_entry(
+    _q, "tpcds_q28",
     "SELECT "
     + ", ".join(
         f"round(avg(CASE WHEN {_q28_cond_sql(lo, hi, plo, phi)} THEN round(l_extendedprice * 100) END), 6) AS b{b}_lp, "
@@ -1185,8 +1180,8 @@ def tpcds_q43(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- q89: monthly deviation from the (item, store) mean --------------------
 
-_sql(
-    "tpcds_q89",
+sql_entry(
+    _q, "tpcds_q89",
     f"""
 WITH g AS (
   SELECT p.p_type AS i_category, p.p_brand AS i_brand, s.s_name AS s_store_name,
@@ -1217,8 +1212,8 @@ LIMIT 100
 
 # --- q22: four-level rollup of average on-hand quantity --------------------
 
-_sql(
-    "tpcds_q22",
+sql_entry(
+    _q, "tpcds_q22",
     """
 SELECT p.p_name AS i_product_name, p.p_brand AS i_brand, p.p_type AS i_class,
        CAST(p.p_size AS INTEGER) AS i_category,
@@ -1271,16 +1266,16 @@ LIMIT 100
 """
 
 
-_sql("tpcds_q39", _q39_sql(None))
+sql_entry(_q, "tpcds_q39", _q39_sql(None))
 
 
-_sql("tpcds_q39_2", _q39_sql(0.65))
+sql_entry(_q, "tpcds_q39_2", _q39_sql(0.65))
 
 
 # --- q40: net catalog sales before/after a pivot, returns subtracted -------
 
-_sql(
-    "tpcds_q40",
+sql_entry(
+    _q, "tpcds_q40",
     """
 SELECT n.n_name AS w_state, p.p_partkey AS i_item_id,
        CAST(sum(CASE WHEN o.o_orderdate < '1996-03-11'
@@ -1318,8 +1313,8 @@ _Q41_BATTERY_SQL = (
 )
 
 
-_sql(
-    "tpcds_q41",
+sql_entry(
+    _q, "tpcds_q41",
     f"""
 SELECT DISTINCT i1.p_name AS i_product_name
 FROM part i1
@@ -1334,8 +1329,8 @@ LIMIT 100
 
 # --- q73: trip party-size counts between 1 and 5 ---------------------------
 
-_sql(
-    "tpcds_q73",
+sql_entry(
+    _q, "tpcds_q73",
     """
 WITH dj AS (
   SELECT o.o_orderkey AS ss_ticket_number, o.o_custkey AS ss_customer_sk,
@@ -1360,8 +1355,8 @@ ORDER BY dj.cnt DESC, c.c_name ASC, dj.ss_ticket_number ASC
 
 # --- q84: income-band customers with a recorded return ---------------------
 
-_sql(
-    "tpcds_q84",
+sql_entry(
+    _q, "tpcds_q84",
     """
 SELECT c.c_custkey AS customer_id,
        c.c_name || ', ' || c.c_mktsegment AS customername
@@ -1379,8 +1374,8 @@ LIMIT 100
 
 # --- q91: call-center return losses under demographic bands ----------------
 
-_sql(
-    "tpcds_q91",
+sql_entry(
+    _q, "tpcds_q91",
     f"""
 SELECT o.o_orderpriority AS call_center, c.c_mktsegment AS cd_marital_status,
        {_csum_sql("l.l_extendedprice")} AS returns_loss
@@ -1420,15 +1415,15 @@ GROUP BY i_item_id
 """
 
 
-_sql(
-    "tpcds_q56",
+sql_entry(
+    _q, "tpcds_q56",
     _chan3_sql("p_brand IN ('Brand#11', 'Brand#21', 'Brand#31')", 1996, 2, 13)
     + "ORDER BY total_sales ASC, i_item_id ASC LIMIT 100",
 )
 
 
-_sql(
-    "tpcds_q60",
+sql_entry(
+    _q, "tpcds_q60",
     _chan3_sql("p_type = 'ECONOMY'", 1997, 9, 11)
     + "ORDER BY i_item_id ASC, total_sales ASC LIMIT 100",
 )
@@ -1436,8 +1431,8 @@ _sql(
 
 # --- q69: store-only customers' demographic profile ------------------------
 
-_sql(
-    "tpcds_q69",
+sql_entry(
+    _q, "tpcds_q69",
     """
 SELECT c.c_mktsegment AS cd_gender,
        CAST(floor(c.c_acctbal / 1000) * 1000 AS BIGINT) AS cd_purchase_estimate,
@@ -1466,8 +1461,8 @@ LIMIT 100
 
 # --- q70: state/county profit rollup with rank-within-parent ---------------
 
-_sql(
-    "tpcds_q70",
+sql_entry(
+    _q, "tpcds_q70",
     f"""
 WITH agg AS (
   SELECT n.n_name AS s_state, s.s_name AS s_county,
@@ -1511,8 +1506,8 @@ LIMIT 100
 
 # --- q71: brand revenue by hour across three unioned channels --------------
 
-_sql(
-    "tpcds_q71",
+sql_entry(
+    _q, "tpcds_q71",
     f"""
 WITH tmp AS (
   SELECT round(l.l_extendedprice * 100) AS ext_price, l.l_partkey AS sold_item_sk,
@@ -1544,8 +1539,8 @@ ORDER BY ext_price DESC, brand ASC, t_hour ASC
 
 # --- q85: returns under paired-demographic and address band ORs ------------
 
-_sql(
-    "tpcds_q85",
+sql_entry(
+    _q, "tpcds_q85",
     """
 SELECT concat('reason_', CAST(l.l_linenumber % 5 AS STRING)) AS r_reason_desc,
        round(avg(l.l_quantity), 6) AS avg_quantity,
@@ -1694,8 +1689,8 @@ def _q14_2_year_arm_sql(year: int) -> str:
           > (SELECT average_cents FROM avg_sales)"""
 
 
-_sql(
-    "tpcds_q14_2",
+sql_entry(
+    _q, "tpcds_q14_2",
     f"""
 WITH cross_items AS (
   {_q14_2_items_sql('N')}
@@ -1721,8 +1716,8 @@ LIMIT 100
 
 # --- q23_2: best-customer frequent-item sales per customer name ------------
 
-_sql(
-    "tpcds_q23_2",
+sql_entry(
+    _q, "tpcds_q23_2",
     """
 WITH frequent_items AS (
   SELECT l.l_partkey AS item_sk

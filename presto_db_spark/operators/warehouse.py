@@ -17,6 +17,11 @@ Extension operators past the reference's surface (no counterpart in
 
 Both are pure JVM expression pipelines (whole-stage codegen; no Python)
 with exact integer math, so the DuckDB oracles reproduce them bit-for-bit.
+
+An entry whose oracle text runs on Spark with the oracle's rows is that
+text, registered by ``engine.sql_entry``, unless a ``Kept port`` comment
+above its port names the keep-rule that holds; an unmarked port holds a
+text that does not (keep-rule 1, see :mod:`presto_db_spark.registry`).
 """
 
 from __future__ import annotations
@@ -28,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..catalog import load_table
+from ..engine import sql_entry
 from ..registry import family
 
 QUERIES, ORACLE, _q = family()
@@ -188,6 +194,7 @@ WHERE o_custkey BETWEEN {_ZREAD_CUST_LO} AND {_ZREAD_CUST_HI}
 """
 
 
+# Kept port (keep-rule 2d, helper coverage): sources.io.write_zordered.
 @_q("layout_zorder_pruned_read", _ZORDER_READ_SQL)
 def layout_zorder_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end Z-order layout: WRITE the orders table clustered on the
@@ -243,29 +250,7 @@ WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
 """
 
 
-@_q("scd2_order_history", _SCD2_SQL)
-def scd2_order_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Slowly-changing-dimension type-2 intervals: each key's ordered
-    versions get [valid_from, valid_to) ranges via one lead() window —
-    the standard dimension-history materialization (valid_to NULL marks
-    the current version; the as-of read side is ``rangejoin.asof_join``).
-
-    100 TB: one hash exchange on the key, then a per-key sort window over
-    that key's rows only; tie-break (date, orderkey) is total so version
-    numbers are deterministic. The custkey filter keeps the fixture
-    output review-sized; the plan is identical without it."""
-    orders = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_custkey") % 100) == 0
-    )
-    w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    return orders.select(
-        "o_custkey",
-        "o_orderkey",
-        F.col("o_orderdate").alias("valid_from"),
-        F.lead("o_orderdate").over(w).alias("valid_to"),
-        F.row_number().over(w).cast("bigint").alias("version"),
-        F.lead("o_orderdate").over(w).isNull().alias("is_current"),
-    )
+sql_entry(_q, "scd2_order_history", _SCD2_SQL)
 
 
 # --- SCD2 incremental merge-apply -------------------------------------------
@@ -279,6 +264,7 @@ _SCD2_SPLIT = "2000-01-01"  # fixture orders span 1995-2001
 _SCD2_MERGE_SQL = _SCD2_SQL
 
 
+# Kept port (keep-rule 2b, worse plan): the text fails test_scd2_merge_apply_broadcasts_affected_keys.
 @_q("scd2_merge_apply", _SCD2_MERGE_SQL)
 def scd2_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental SCD type-2 maintenance (the MERGE INTO every warehouse
@@ -675,6 +661,7 @@ ORDER BY price_cents, p_partkey
 """
 
 
+# Kept port (keep-rule 2b, worse plan): the text is a nested-loop NOT EXISTS; the port sweeps a prefix max.
 @_q("part_skyline_pareto", _SKYLINE_SQL)
 def part_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-D skyline (Pareto front) over ``part``: the parts no other part
@@ -836,6 +823,7 @@ WHERE year(o_orderdate) = {_DPP_YEAR}
 """
 
 
+# Kept port (keep-rule 2b, worse plan): the text fails test_dpp_read_plan_shape.
 @_q("layout_dpp_read", _DPP_SQL)
 def layout_dpp_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dynamic partition pruning end to end — THE device that makes
@@ -1077,52 +1065,7 @@ FROM j GROUP BY category ORDER BY category
 """
 
 
-@_q("warehouse_snapshot_diff", _SNAPDIFF_SQL)
-def warehouse_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Snapshot data-diff (the Datafold/table-diff primitive a warehouse
-    runs after every backfill): two deterministic snapshot views of
-    orders — A missing the %7 keys with a simulated price update on the
-    %5 keys, B missing the %11 keys — FULL-OUTER joined on the key and
-    bucketed into added / removed / changed / unchanged with per-bucket
-    row counts, exact cents delta, and a modular key checksum.
-
-    Scale: ONE full-outer hash join on the snapshot key + one bucket
-    groupBy (map-side combinable) — the canonical diff shape; at 100 TB
-    both sides shuffle once on the key (or zero times if the snapshots
-    are bucketed on it), and the output is 4 rows regardless of data."""
-    o = load_table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
-    a = o.filter(F.col("o_orderkey") % 7 != 0).select(
-        F.col("o_orderkey").cast("long").alias("k"),
-        (cents - F.when(F.col("o_orderkey") % 5 == 0, 100).otherwise(0))
-        .cast("long")
-        .alias("ac"),
-    )
-    b = o.filter(F.col("o_orderkey") % 11 != 0).select(
-        F.col("o_orderkey").cast("long").alias("k"),
-        cents.alias("bc"),
-    )
-    j = a.join(b, "k", "full_outer").select(
-        "k",
-        "ac",
-        "bc",
-        F.when(F.col("ac").isNull(), "added")
-        .when(F.col("bc").isNull(), "removed")
-        .when(F.col("ac") != F.col("bc"), "changed")
-        .otherwise("unchanged")
-        .alias("category"),
-    )
-    return (
-        j.groupBy("category")
-        .agg(
-            F.count("*").cast("long").alias("n_rows"),
-            F.sum(F.coalesce(F.col("bc"), F.lit(0)) - F.coalesce(F.col("ac"), F.lit(0)))
-            .cast("long")
-            .alias("cents_delta"),
-            F.sum(F.col("k") % 1000000007).cast("long").alias("key_checksum"),
-        )
-        .orderBy("category")
-    )
+sql_entry(_q, "warehouse_snapshot_diff", _SNAPDIFF_SQL)
 
 
 # --- clustering depth (r13) ------------------------------------------------------

@@ -648,6 +648,7 @@ def geo_wkt_accessors(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KDB_RADIUS = 3.0
 
 
+# Kept port (keep-rule 2b, worse plan): the text's pair join is a nested loop.
 @_q(
     "geo_kdb_radius_join",
     f"""

@@ -84,6 +84,7 @@ def _sql_gcd(lat1: str, lon1: str, lat2: str, lon2: str) -> str:
     )
 
 
+# Kept port (keep-rule 2c, text skips the function): it expands the great-circle distance by hand.
 @_q(
     "geo_spherical_distance",
     f"""
@@ -170,6 +171,7 @@ _SQL_EXCESS = " + ".join(
 )
 
 
+# Kept port (keep-rule 2c, text skips the function): it expands the spherical area by hand.
 @_q(
     "geo_spherical_area",
     f"""

@@ -5,6 +5,25 @@ listed in ``_MODULES`` contributes its QUERIES/ORACLE dicts, built with
 ``QUERIES, ORACLE, _q = family()``; a missing oracle entry means the
 driver records a weaker rows-only check (reserved for genuinely
 non-SQL-expressible operators).
+
+An entry with oracle text is that text, registered by
+:func:`presto_db_spark.engine.sql_entry` and run through the engine's SQL
+front end, unless a ``Kept port`` comment above its DataFrame port names
+the keep-rule that holds for it:
+
+1. the text does not run on Spark, or returns other rows there;
+2. the port does what the text cannot:
+   (a) it exercises a surface SQL does not reach (Structured Streaming,
+   pandas UDFs); (b) the text plans worse or fails a ``tests/test_plans.py``
+   gate; (c) the text pins, asserts or re-derives the value instead of
+   calling the function under test; (d) the entry is the registry coverage
+   of an engine helper;
+3. the port is faster, by an interleaved A/B.
+
+An entry marked ``deferred`` waits for its A/B or for a planned helper.
+Outside ``tpch``/``tpcds``/``tpcds2``, rule-1 ports carry no comment: an
+unmarked port there is one whose text does not run on Spark or returns
+other rows there.
 """
 
 from __future__ import annotations

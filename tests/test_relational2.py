@@ -4,6 +4,7 @@ import pytest
 
 from presto_db_spark.operators import rangejoin as rj
 from presto_db_spark.operators import relational2 as r2
+from presto_db_spark.registry import all_queries
 
 from .oracle_utils import check_query
 
@@ -20,7 +21,7 @@ def test_relational2_vs_duckdb(spark, sf_dir, name):
 
 def test_multi_distinct_single_scan(spark, sf_dir):
     """The MarkDistinct shape must plan as ONE scan (Expand), not N."""
-    df = r2.agg_multi_distinct(spark, sf_dir)
+    df = all_queries()["agg_multi_distinct"](spark, sf_dir)
     plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "simple")
     assert plan.count("Scan parquet") == 1, plan
     assert "Expand" in plan

@@ -35,23 +35,33 @@ def test_oracle_gate_catches_mismatches(spark, sf_dir):
 
 
 def test_sql_entries_bind_tables_privately(spark, sf_dir):
-    """An entry built from its SQL text reads the tables it loads itself,
-    not the session's temp views of the same names, and leaves those views
-    as it found them: no decoy replaced, no binding view left behind."""
-    from presto_db_spark.operators import tpcds
+    """An entry reads the tables it loads itself, not the session's temp
+    views of the same names, and leaves those views as it found them: no
+    decoy replaced, no binding view left behind. ``func_data_size`` binds a
+    filtered frame through ``ddl.spark_sql``; the others are SQL text."""
+    from presto_db_spark.registry import all_oracle_sql, all_queries
 
-    names = ("customer", "nation")
+    queries, oracle = all_queries(), all_oracle_sql()
+    names = ("customer", "nation", "orders", "lineitem")
+    entries = (
+        "tpch_q05", "tpcds_q03", "grouping_sets", "subq_lateral_topn",
+        "join_existence_flag", "agg_filter_clause", "subq_not_in_null", "func_data_size",
+    )
     saved = {n: spark.table(n) for n in names if spark.catalog.tableExists(n)}
+
+    def temp_views():
+        return sorted(t.name for t in spark.catalog.listTables() if t.isTemporary)
+
     try:
         for n in names:
             spark.sql(f"SELECT '{n}' AS decoy").createOrReplaceTempView(n)
-        for mod, name in ((tpch, "tpch_q05"), (tpcds, "tpcds_q03")):
-            problems = check_query(spark, name, mod.QUERIES[name], mod.ORACLE[name], sf_dir)
+        before = temp_views()
+        for name in entries:
+            problems = check_query(spark, name, queries[name], oracle[name], sf_dir)
             assert not problems, f"{name}: {problems}"
         for n in names:
             assert spark.table(n).collect() == [(n,)], n
-        leftover = [t.name for t in spark.catalog.listTables() if t.name.startswith("_pyspark_")]
-        assert not leftover, leftover
+        assert temp_views() == before
     finally:
         for n in names:
             if n in saved:

@@ -62,15 +62,12 @@ HEADLINE = [
     "text_fingerprint",
     "tpcds_q64",
     "tpcds_q72",
-    # r09 (VERDICT r08 directive #5): the CTE-materialization path under
-    # timing (q04's triple year_total reuse) and the deployable ANN shape.
-    # q04 A/B at sf0.1 (r09, same session, 4 runs each): materialize=false
-    # 1.5-2.1 s vs materialize=true 2.2-3.8 s — the MEMORY_AND_DISK persist
-    # of the grouped year_total costs more than the re-derivation it saves
-    # at this scale (AQE already reuses the broadcast exchanges), so the
-    # bench times the default-off path, matching the reference's own
-    # cte_materialization_enabled=false default. The property flips per
-    # session for the workloads where the CTE is genuinely expensive.
+    # r09 (VERDICT r08 directive #5): q04's year_total CTE, read six
+    # times, under timing, and the deployable ANN shape. q04 is its SQL
+    # text, and Catalyst inlines the CTE into each reader as the reference
+    # does. Persisting year_total once measured slower at sf0.1 (r09, 4
+    # runs each: 2.2-3.8 s against 1.5-2.1 s inlined), so no entry
+    # materializes a CTE.
     "tpcds_q04",
     "sim_ivfpq",
     # r09: the reference ships a dedicated distributed-sort benchto suite

@@ -4,6 +4,14 @@ Also the scan helpers every operator family shares: ``load_tables``
 (several tables at once), ``fanout`` (spread a narrow scan before
 CPU-heavy work) and ``small_df`` (a small literal table as one partition).
 
+Shared stages follow one rule, written here because it needs no helper: a
+frame that several consumers read, where Catalyst cannot reuse an
+exchange for it, is cut by a lazy ``df.localCheckpoint(eager=False)``,
+never by ``persist()``/``cache()``. The stage computes once, when its
+first consumer runs; there is no columnar cache to build and no handle to
+release, since Spark's ContextCleaner reclaims the blocks once the frame
+is gone.
+
 Mirrors the reference's connector metadata layer
 (``presto-main/.../metadata/MetadataManager.java``,
 ``presto-tpch/.../TpchMetadata.java:92``) — but in Spark the catalog IS the

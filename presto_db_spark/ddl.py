@@ -41,7 +41,6 @@ _SESSION_PROPERTY_CONFS: dict[str, list[str]] = {
     "hash_partition_count": ["spark.sql.shuffle.partitions"],
     "join_distribution_type": ["spark.sql.autoBroadcastJoinThreshold"],
     "join_reordering_strategy": ["spark.sql.cbo.joinReorder.enabled"],
-    "cte_materialization_enabled": ["spark.presto_db.cte.materialize"],
 }
 _SESSION_PROPERTY_MAP = {
     # hash_partition_count (SystemSessionProperties.java:66)
@@ -60,13 +59,6 @@ _SESSION_PROPERTY_MAP = {
     ),
     # spill_enabled (:111) — Spark always spills; accepted as a no-op.
     "spill_enabled": lambda s, v: None,
-    # Extension: materialize multiply-referenced CTEs (persist MEMORY_AND_DISK
-    # before an N-way self-join) — the cluster-mode behavior documented in
-    # operators/tpcds.py q11. Off by default so local bench plans match the
-    # reference's inlined-WITH execution.
-    "cte_materialization_enabled": lambda s, v: s.conf.set(
-        "spark.presto_db.cte.materialize", str(bool(v)).lower()
-    ),
     # task_concurrency (:79) — local parallelism is Spark's scheduler's job.
     "task_concurrency": lambda s, v: None,
     # distributed_sort (:127) — Spark ORDER BY is always distributed.

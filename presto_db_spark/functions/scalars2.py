@@ -46,8 +46,6 @@ from pyspark.sql import types as T
 
 from .compat import python_udf, sql_functions
 
-_B = bytes  # UDF binary params arrive as bytearray; normalize with bytes()
-
 SQL_FUNCTIONS_2 = [
     # BitwiseFunctions.java (two's-complement 64-bit, like Java longs).
     "CREATE OR REPLACE TEMPORARY FUNCTION bitwise_and(x BIGINT, y BIGINT) "

@@ -373,7 +373,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stage re-executes per consumer (measured 4× in the r04 executed
     # plan). A lazy localCheckpoint cuts the lineage ONCE: the UDF runs a
     # single time when the blocks materialize, every consumer reads the
-    # stored narrow rows (measured cheaper than a columnar .persist() for
+    # stored narrow rows (measured cheaper than a columnar persist for
     # this row-shape), and the blocks are reclaimed by ContextCleaner when
     # the frame is released. ~140 B/doc means even 10^10 docs store ~1.4 TB
     # across a 1000-executor cluster — MEMORY_AND_DISK-safe.
@@ -1183,7 +1183,7 @@ ORDER BY name_a, name_b
 """
 
 
-# Kept port (deferred): headline entry; its rule-3 A/B waits for per-session table binding.
+# Kept port (keep-rule 2b, worse plan): the text's levenshtein pair join is a nested loop.
 @_q("dedup_fuzzy_del1", _FUZZY_SQL)
 def dedup_fuzzy_del1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Typo-tolerant entity matching: all distinct name pairs at edit
@@ -1251,7 +1251,6 @@ def dedup_fuzzy_del1(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Bloom-filter ingestion prefilter (incremental dedup membership) ---------
 
-_BLOOM_WORDS = 64          # 32-bit words → 2048 bits
 _BLOOM_OFFSETS = (1, 7, 13)  # md5 hex offsets → 3 independent 24-bit probes
 
 
@@ -1268,6 +1267,51 @@ def bloom_positions(df: DataFrame) -> DataFrame:
         )
     ).alias("pos")
     return df.select("doc_id", pos)
+
+
+def bloom_probe(docs: DataFrame, bitmap: DataFrame) -> DataFrame:
+    """The new batch of ``docs`` (``doc_id % 5 = 0``) probed against the
+    history's ``(word, bits)`` bitmap: ``bloom_hit`` when all 3 probe bits
+    are set, ``is_dup`` from the exact text match against the history
+    (``doc_id % 5 <> 0``), and ``false_positive`` for a hit that is no
+    dup. Shared by the batch op and its streaming twin."""
+    hist = docs.filter(F.col("doc_id") % 5 != 0).select("doc_id", "text")
+    newb = docs.filter(F.col("doc_id") % 5 == 0).select("doc_id", "text")
+    probed = (
+        bloom_positions(newb)
+        .withColumn("word", (F.col("pos") / 32).cast("long"))
+        .join(F.broadcast(bitmap), "word", "left")
+        .withColumn(
+            "hit",
+            F.when(
+                F.col("bits").isNotNull()
+                & (
+                    F.col("bits").bitwiseAND(
+                        F.expr(
+                            "shiftleft(CAST(1 AS BIGINT), CAST(pos % 32 AS INT))"
+                        )
+                    )
+                    != 0
+                ),
+                1,
+            ).otherwise(0),
+        )
+    )
+    flags = probed.groupBy("doc_id").agg((F.sum("hit") == 3).alias("bloom_hit"))
+    dup_ids = newb.join(hist, "text", "left_semi").select("doc_id").distinct()
+    return (
+        flags.join(dup_ids.withColumn("is_dup", F.lit(True)), "doc_id", "left")
+        .select(
+            "doc_id",
+            "bloom_hit",
+            F.coalesce("is_dup", F.lit(False)).alias("is_dup"),
+            (F.col("bloom_hit") & ~F.coalesce("is_dup", F.lit(False))).alias(
+                "false_positive"
+            ),
+        )
+        .orderBy("doc_id")
+    )
+
 
 _BLOOM_SQL = """
 WITH hist AS (
@@ -1332,11 +1376,9 @@ def dedup_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     SAME word-table shape to ~10⁸ rows, still join-not-broadcast
     friendly."""
     docs = load_table(spark, sf_dir, "documents")
-    hist = docs.filter(F.col("doc_id") % 5 != 0).select("doc_id", "text")
-    newb = docs.filter(F.col("doc_id") % 5 == 0).select("doc_id", "text")
-    positions = bloom_positions
+    hist = docs.filter(F.col("doc_id") % 5 != 0)
     bitmap = (
-        positions(hist)
+        bloom_positions(hist)
         .groupBy((F.col("pos") / 32).cast("long").alias("word"))
         .agg(
             F.expr("bit_or(shiftleft(CAST(1 AS BIGINT), CAST(pos % 32 AS INT)))")
@@ -1344,40 +1386,7 @@ def dedup_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("bits")
         )
     )
-    probed = (
-        positions(newb)
-        .withColumn("word", (F.col("pos") / 32).cast("long"))
-        .join(F.broadcast(bitmap), "word", "left")
-        .withColumn(
-            "hit",
-            F.when(
-                F.col("bits").isNotNull()
-                & (
-                    F.col("bits").bitwiseAND(
-                        F.expr(
-                            "shiftleft(CAST(1 AS BIGINT), CAST(pos % 32 AS INT))"
-                        )
-                    )
-                    != 0
-                ),
-                1,
-            ).otherwise(0),
-        )
-    )
-    flags = probed.groupBy("doc_id").agg((F.sum("hit") == 3).alias("bloom_hit"))
-    dup_ids = newb.join(hist, "text", "left_semi").select("doc_id").distinct()
-    return (
-        flags.join(dup_ids.withColumn("is_dup", F.lit(True)), "doc_id", "left")
-        .select(
-            "doc_id",
-            "bloom_hit",
-            F.coalesce("is_dup", F.lit(False)).alias("is_dup"),
-            (F.col("bloom_hit") & ~F.coalesce("is_dup", F.lit(False))).alias(
-                "false_positive"
-            ),
-        )
-        .orderBy("doc_id")
-    )
+    return bloom_probe(docs, bitmap)
 
 
 # --- URL canonicalization dedup ----------------------------------------------

@@ -44,7 +44,7 @@ GROUP BY date_trunc('hour', ts), event_type
 
 # --- sessionization (30-min inactivity gap) --------------------------------
 
-# Kept port (deferred): headline entry; its rule-3 A/B waits for per-session table binding.
+# Kept port (keep-rule 3, faster): it drops the text's running-sum window pass.
 @_q(
     "events_sessionize",
     """
@@ -582,7 +582,7 @@ FROM base
 sql_entry(_q, "events_rfm_scores", _RFM_SQL)
 
 
-# Kept port (deferred): headline entry; its rule-3 A/B waits for per-session table binding.
+# Kept port (keep-rule 2b, worse plan): the text's ntile window runs on one partition.
 @_q("events_rfm_scores_scalable", _RFM_SQL)
 def events_rfm_scores_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The at-scale twin of ``events_rfm_scores`` (VERDICT r09 #3: the

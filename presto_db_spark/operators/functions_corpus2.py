@@ -662,7 +662,7 @@ def agg_map_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Kept port (deferred): headline entry; its rule-3 A/B waits for per-session table binding.
+# Kept port (keep-rule 2c, text skips the function): it pins TRUE instead of merging sketches.
 @_q(
     "agg_hll_sketch",
     """

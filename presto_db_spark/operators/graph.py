@@ -832,7 +832,7 @@ ORDER BY d.community
 )
 
 
-# Kept port (deferred): headline entry; its rule-3 A/B waits for per-session table binding.
+# Kept port (keep-rule 2b, worse plan): the text unrolls the loop to 126 exchanges, the port plans 11.
 @_q("graph_modularity", _MODULARITY_SQL)
 def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Modularity decomposition of the LPA communities (Newman-Girvan

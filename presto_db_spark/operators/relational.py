@@ -31,7 +31,7 @@ text that does not (keep-rule 1, see :mod:`presto_db_spark.registry`).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_tables
@@ -100,9 +100,8 @@ FROM orders
 
 # --- top-N per group (TopNRowNumberOperator / WindowGroupLimit) ------------
 
-# Kept port (deferred): headline entry; its rule-3 A/B waits for per-session table binding.
-@_q(
-    "win_topn_per_group",
+sql_entry(
+    _q, "win_topn_per_group",
     """
 SELECT nat, c_custkey, c_acctbal
 FROM (
@@ -113,19 +112,6 @@ FROM (
 ) t WHERE rn <= 3
 """,
 )
-def win_topn_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (cust,) = load_tables(spark, sf_dir, "customer")
-    w = W.partitionBy("c_nationkey").orderBy(F.desc("c_acctbal"), "c_custkey")
-    return (
-        cust.select(
-            F.col("c_nationkey").alias("nat"),
-            "c_custkey",
-            "c_acctbal",
-            F.row_number().over(w).alias("rn"),
-        )
-        .filter(F.col("rn") <= 3)
-        .drop("rn")
-    )
 
 
 # --- grouping sets / rollup / cube -----------------------------------------

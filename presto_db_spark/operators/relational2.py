@@ -340,7 +340,7 @@ FROM ranked WHERE rn % 1000 = 1 ORDER BY rn
 """
 
 
-# Kept port (deferred): headline entry; its rule-3 A/B waits for per-session table binding.
+# Kept port (keep-rule 2b, worse plan): the text's row_number window runs on one partition.
 @_q("sort_distributed_sample", _SORT_SQL)
 def sort_distributed_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed full-table sort acceptance (the reference ships a

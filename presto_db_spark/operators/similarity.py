@@ -1042,9 +1042,6 @@ def _l2_pd():
     return _L2_UDF
 
 
-_PQ_ENCODE_UDF = None
-
-
 def _pq_encode_impl_factory(cb):
     """cb: nested list [m][k][d] of float64 codewords."""
     import numpy as np

@@ -41,21 +41,13 @@ from pyspark.sql import functions as F
 from ..catalog import load_tables
 from ..engine import sql_entry
 from ..registry import family
-from .stagecache import materialize_stage
-from .tpch import _csum, _csum_sql, _msum, _msum_sql
+from .tpch import _csum_sql, _msum, _msum_sql
 
 QUERIES, ORACLE, _q = family()
 
 
 def _rev():
     return F.col("l_extendedprice") * (1 - F.col("l_discount"))
-
-
-# cte_materialization_enabled (ddl.py) persists a kept port's multiply-read
-# CTE frame. All such ports share one stage name, so a long-lived session
-# holds at most ONE such frame: each materialization releases the last.
-CTE_MATERIALIZE = "spark.presto_db.cte.materialize"
-CTE_STAGE = "tpcds_cte"
 
 
 _REV_SQL = "l_extendedprice * (1 - l_discount)"
@@ -189,9 +181,8 @@ WHERE o.o_orderdate >= TIMESTAMP '1997-03-01'
 
 # --- q11: year-over-year growth, CTE referenced four times -----------------
 
-# Kept port (keep-rule 2): cte_materialization_enabled persists year_total.
-@_q(
-    "tpcds_q11",
+sql_entry(
+    _q, "tpcds_q11",
     f"""
 WITH year_total AS (
   SELECT c.c_custkey AS customer_id, c.c_name AS customer_name,
@@ -225,74 +216,6 @@ ORDER BY s2.customer_id ASC
 LIMIT 100
 """,
 )
-def tpcds_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q11 shape (tpcds/q11.sql: the year_total CTE — UNION ALL of
-    two sales channels — self-joined FOUR times to compare year-over-year
-    growth across channels). Totals are exact cents (integers), so the
-    growth-ratio comparison is bit-identical across engines.
-
-    The reference inlines WITH bodies (Presto 0.236 — no CTE
-    materialization), so by default the two aggregations run once per
-    reference and the measured plan matches the reference's execution.
-    With the ``cte_materialization_enabled`` session property on
-    (``Engine.set_session``), year_total is persisted MEMORY_AND_DISK
-    before the 4-way self-join — the documented cluster-mode behavior:
-    at 100× the two heaviest aggregations are paid once, not four times."""
-    customer, orders, lineitem = load_tables(spark, sf_dir, "customer", "orders", "lineitem")
-    store = (
-        customer.join(orders, F.col("o_custkey") == F.col("c_custkey"))
-        .join(lineitem, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy(
-            F.col("c_custkey").alias("customer_id"),
-            F.col("c_name").alias("customer_name"),
-            F.year("o_orderdate").alias("dyear"),
-        )
-        .agg(_csum(_rev()).alias("year_total"))
-        .withColumn("sale_type", F.lit("s"))
-    )
-    web = (
-        customer.join(orders, F.col("o_custkey") == F.col("c_custkey"))
-        .groupBy(
-            F.col("c_custkey").alias("customer_id"),
-            F.col("c_name").alias("customer_name"),
-            F.year("o_orderdate").alias("dyear"),
-        )
-        .agg(_csum(F.col("o_totalprice")).alias("year_total"))
-        .withColumn("sale_type", F.lit("w"))
-    )
-    year_total = store.unionByName(web)
-    if spark.conf.get(CTE_MATERIALIZE, "false") == "true":
-        year_total = materialize_stage(CTE_STAGE, year_total)
-
-    def leg(alias: str, sale_type: str, dyear: int) -> DataFrame:
-        return (
-            year_total.filter(
-                (F.col("sale_type") == sale_type) & (F.col("dyear") == dyear)
-            )
-            .select("customer_id", "customer_name", "year_total")
-            .alias(alias)
-        )
-
-    s1, s2 = leg("s1", "s", 1999), leg("s2", "s", 2000)
-    w1, w2 = leg("w1", "w", 1999), leg("w2", "w", 2000)
-    joined = (
-        s1.join(s2, F.col("s2.customer_id") == F.col("s1.customer_id"))
-        .join(w1, F.col("w1.customer_id") == F.col("s1.customer_id"))
-        .join(w2, F.col("w2.customer_id") == F.col("s1.customer_id"))
-        .filter((F.col("s1.year_total") > 0) & (F.col("w1.year_total") > 0))
-        .filter(
-            F.col("w2.year_total").cast("double") / F.col("w1.year_total")
-            > F.col("s2.year_total").cast("double") / F.col("s1.year_total")
-        )
-    )
-    return (
-        joined.select(
-            F.col("s2.customer_id").alias("customer_id"),
-            F.col("s2.customer_name").alias("customer_name"),
-        )
-        .orderBy(F.asc("customer_id"))
-        .limit(100)
-    )
 
 
 # --- q88: eight time-slot scans of one fact, single-row cross join ---------
@@ -1780,9 +1703,8 @@ _Q04_CHANNELS_SQL = f"""
   GROUP BY 1, 2, 3"""
 
 
-# Kept port (keep-rule 2): cte_materialization_enabled persists year_total.
-@_q(
-    "tpcds_q04",
+sql_entry(
+    _q, "tpcds_q04",
     f"""
 WITH year_total AS ({_Q04_CHANNELS_SQL})
 SELECT s2.customer_id, s2.customer_name
@@ -1805,74 +1727,6 @@ ORDER BY s2.customer_id
 LIMIT 100
 """,
 )
-def tpcds_q04(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q04 shape (tpcds/q04.sql: q11's year_total CTE extended to
-    THREE channels, self-joined SIX times — customers whose catalog AND
-    web growth both beat store growth). Growth comparisons are
-    cross-multiplied exact integers. The third channel is the R-rows tax
-    total (a distinct measure, as the reference's catalog channel is).
-    Scale: same materialization story as q11 (cte_materialization_enabled
-    persists the grouped frame before the six slices)."""
-    customer, orders, lineitem = load_tables(spark, sf_dir, "customer", "orders", "lineitem")
-    co = customer.join(orders, F.col("o_custkey") == F.col("c_custkey"))
-    keys = [
-        F.col("c_custkey").alias("customer_id"),
-        F.col("c_name").alias("customer_name"),
-        F.year("o_orderdate").alias("dyear"),
-    ]
-    store = (
-        co.join(lineitem, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy(*keys).agg(_csum(_rev()).alias("year_total"))
-        .withColumn("sale_type", F.lit("s"))
-    )
-    web = (
-        co.groupBy(*keys).agg(_csum(F.col("o_totalprice")).alias("year_total"))
-        .withColumn("sale_type", F.lit("w"))
-    )
-    catalog = (
-        co.join(lineitem.filter(F.col("l_returnflag") == "R"),
-                F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy(*keys)
-        .agg(_csum(F.col("l_extendedprice") * F.col("l_tax")).alias("year_total"))
-        .withColumn("sale_type", F.lit("c"))
-    )
-    year_total = store.unionByName(web).unionByName(catalog)
-    if spark.conf.get(CTE_MATERIALIZE, "false") == "true":
-        year_total = materialize_stage(CTE_STAGE, year_total)
-
-    def leg(alias: str, st: str, dyear: int) -> DataFrame:
-        return (
-            year_total.filter((F.col("sale_type") == st) & (F.col("dyear") == dyear))
-            .select("customer_id", "customer_name", "year_total")
-            .alias(alias)
-        )
-
-    s1, s2 = leg("s1", "s", 1999), leg("s2", "s", 2000)
-    c1, c2 = leg("c1", "c", 1999), leg("c2", "c", 2000)
-    w1, w2 = leg("w1", "w", 1999), leg("w2", "w", 2000)
-    j = (
-        s1.join(s2, F.col("s2.customer_id") == F.col("s1.customer_id"))
-        .join(c1, F.col("c1.customer_id") == F.col("s1.customer_id"))
-        .join(c2, F.col("c2.customer_id") == F.col("s1.customer_id"))
-        .join(w1, F.col("w1.customer_id") == F.col("s1.customer_id"))
-        .join(w2, F.col("w2.customer_id") == F.col("s1.customer_id"))
-        .filter(
-            (F.col("s1.year_total") > 0) & (F.col("c1.year_total") > 0)
-            & (F.col("w1.year_total") > 0)
-            & (F.col("c2.year_total") * F.col("s1.year_total")
-               > F.col("s2.year_total") * F.col("c1.year_total"))
-            & (F.col("w2.year_total") * F.col("s1.year_total")
-               > F.col("s2.year_total") * F.col("w1.year_total"))
-        )
-    )
-    return (
-        j.select(
-            F.col("s2.customer_id").alias("customer_id"),
-            F.col("s2.customer_name").alias("customer_name"),
-        )
-        .orderBy("customer_id")
-        .limit(100)
-    )
 
 
 # --- q17: sale -> return -> repurchase three-fact chain --------------------

@@ -9,7 +9,7 @@ predicates — cited per query from
 ``presto-benchto-benchmarks/src/main/resources/sql/presto/tpcds/qNN.sql``)
 re-targeted onto the driver's TPC-H-ish tables:
 
-* store_sales → lineitem ⋈ orders (revenue ``_rev()``); catalog/web
+* store_sales → lineitem ⋈ orders (revenue ``_REV_SQL``); catalog/web
   channels → tax/totalprice expressions (as q04/q11 established);
 * returns → ``l_returnflag = 'R'`` rows;
 * item → part, store/warehouse → supplier, address state/city → nation,
@@ -31,15 +31,9 @@ from pyspark.sql import functions as F
 from ..catalog import load_tables
 from ..engine import sql_entry
 from ..registry import family
-from .stagecache import materialize_stage
-from .tpcds import CTE_MATERIALIZE, CTE_STAGE
 from .tpch import _csum, _csum_sql, _msum, _msum_sql
 
 QUERIES, ORACLE, _q = family()
-
-
-def _rev():
-    return F.col("l_extendedprice") * (1 - F.col("l_discount"))
 
 
 _REV_SQL = "l_extendedprice * (1 - l_discount)"
@@ -497,9 +491,8 @@ LIMIT 100
 
 # --- q74: two-channel year-over-year growth (q11's lean twin) --------------
 
-# Kept port (keep-rule 2): cte_materialization_enabled persists year_total.
-@_q(
-    "tpcds_q74",
+sql_entry(
+    _q, "tpcds_q74",
     f"""
 WITH year_total AS (
   SELECT c.c_custkey AS customer_id, c.c_name AS customer_name,
@@ -535,58 +528,6 @@ ORDER BY s2.customer_id ASC
 LIMIT 100
 """,
 )
-def tpcds_q74(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q74 shape (tpcds/q74.sql: the two-year, two-channel lean
-    variant of q11 — year_total over net-paid (undiscounted price here,
-    distinguishing it from q11's revenue), 4-way self-join comparing
-    web vs store growth ratios). Ratios divide exact cents → identical
-    doubles. Scale: same materialization story as q11 (the CTE feeds four
-    consumers; cte_materialization_enabled persists it)."""
-    customer, orders, lineitem = load_tables(spark, sf_dir, "customer", "orders", "lineitem")
-    o96 = orders.filter(F.year("o_orderdate").isin(1996, 1997))
-    store = (
-        customer.join(o96, F.col("o_custkey") == F.col("c_custkey"))
-        .join(lineitem, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy(F.col("c_custkey").alias("customer_id"),
-                 F.col("c_name").alias("customer_name"),
-                 F.year("o_orderdate").alias("dyear"))
-        .agg(_csum(F.col("l_extendedprice")).alias("year_total"))
-        .withColumn("sale_type", F.lit("s"))
-    )
-    web = (
-        customer.join(o96, F.col("o_custkey") == F.col("c_custkey"))
-        .groupBy(F.col("c_custkey").alias("customer_id"),
-                 F.col("c_name").alias("customer_name"),
-                 F.year("o_orderdate").alias("dyear"))
-        .agg(_csum(F.col("o_totalprice")).alias("year_total"))
-        .withColumn("sale_type", F.lit("w"))
-    )
-    year_total = store.unionByName(web)
-    if spark.conf.get(CTE_MATERIALIZE, "false") == "true":
-        year_total = materialize_stage(CTE_STAGE, year_total)
-
-    def leg(alias, st, yr):
-        return (
-            year_total.filter((F.col("sale_type") == st) & (F.col("dyear") == yr))
-            .select("customer_id", "customer_name", "year_total")
-            .alias(alias)
-        )
-
-    s1, s2, w1, w2 = leg("s1", "s", 1996), leg("s2", "s", 1997), leg("w1", "w", 1996), leg("w2", "w", 1997)
-    joined = (
-        s1.join(s2, F.col("s2.customer_id") == F.col("s1.customer_id"))
-        .join(w1, F.col("w1.customer_id") == F.col("s1.customer_id"))
-        .join(w2, F.col("w2.customer_id") == F.col("s1.customer_id"))
-        .filter((F.col("s1.year_total") > 0) & (F.col("w1.year_total") > 0))
-        .filter(F.col("w2.year_total").cast("double") / F.col("w1.year_total")
-                > F.col("s2.year_total").cast("double") / F.col("s1.year_total"))
-    )
-    return (
-        joined.select(F.col("s2.customer_id").alias("customer_id"),
-                      F.col("s2.customer_name").alias("customer_name"))
-        .orderBy(F.asc("customer_id"))
-        .limit(100)
-    )
 
 
 # --- q77: per-channel sales/returns profit rollup --------------------------
@@ -1573,9 +1514,14 @@ _Q24_BRANDS_2 = ("Brand#21", "Brand#22", "Brand#23", "Brand#24", "Brand#25")
 
 
 def _q24_sql(brands: tuple[str, ...]) -> str:
-    """Shared q24 oracle text — q24_1 and q24_2 differ ONLY in the color
-    band (the reference files are byte-identical apart from
-    'pale' vs 'chiffon': tpcds/q24_1.sql vs q24_2.sql)."""
+    """Shared q24 text — q24_1 and q24_2 differ ONLY in the color band
+    (the reference files are byte-identical apart from 'pale' vs
+    'chiffon': tpcds/q24_1.sql vs q24_2.sql). Store purchases in returned
+    orders, net paid per (customer, store, color), kept where a band's
+    total beats 5% of the all-color average: the ssales CTE has two
+    readers. Color analog: brand; country match: supplier region =
+    customer region (nation-level equality is vacuous in the synthetic
+    data)."""
     blist = ", ".join(f"'{b}'" for b in brands)
     return f"""
 WITH ssales AS (
@@ -1601,68 +1547,10 @@ ORDER BY c_last_name ASC, s_store_name ASC
 """
 
 
-# Kept port (keep-rule 2): cte_materialization_enabled persists ssales.
-@_q("tpcds_q24", _q24_sql(_Q24_BRANDS_1))
-def tpcds_q24(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q24 shape (tpcds/q24_1.sql: store purchases in RETURNED
-    orders (ticket-level return match — the per-(ticket, item) pair is
-    vacuous in the synthetic data) where
-    the customer's birth country matches the store's address, net paid
-    grouped per (customer, store, color, ...); the outer query keeps one
-    color band and reports (customer, store) totals exceeding 5% of the
-    ALL-color average — a scalar subquery over the same CTE, so the CTE
-    has TWO consumers and the cte-materialization property applies).
-    Color analog: brand; country-match: supplier region = customer
-    region (nation-level equality is vacuous in the synthetic data). Scale: sale-return join co-partitions on (order, item); the
-    global average is a broadcast scalar."""
-    return _q24_paid(spark, sf_dir, _Q24_BRANDS_1)
+sql_entry(_q, "tpcds_q24", _q24_sql(_Q24_BRANDS_1))
 
 
-# Kept port (keep-rule 2): cte_materialization_enabled persists ssales.
-@_q("tpcds_q24_2", _q24_sql(_Q24_BRANDS_2))
-def tpcds_q24_2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS q24 SECOND benchto variant (tpcds/q24_2.sql — VERDICT r09
-    #5: the reference ships both color bands as separate benchmark
-    files; 'pale' vs 'chiffon' is the only diff). Same ssales CTE, the
-    Brand#21-25 band instead of Brand#11-15; everything else — the
-    two-consumer CTE, the 5%-of-average scalar threshold, the exact
-    cents — is ``tpcds_q24``'s."""
-    return _q24_paid(spark, sf_dir, _Q24_BRANDS_2)
-
-
-def _q24_paid(
-    spark: SparkSession, sf_dir: str, brands: tuple[str, ...]
-) -> DataFrame:
-    li, orders, cust, supp, part = load_tables(
-        spark, sf_dir, "lineitem", "orders", "customer", "supplier", "part")
-    r = (li.filter(F.col("l_returnflag") == "R")
-         .select(F.col("l_orderkey").alias("r_orderkey")).distinct())
-    ssales = (
-        li.filter(F.col("l_returnflag") != "R")
-        .join(r, F.col("l_orderkey") == F.col("r_orderkey"))
-        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .filter(F.col("s_nationkey") % 5 == F.col("c_nationkey") % 5)
-        .join(part, F.col("l_partkey") == F.col("p_partkey"))
-        .groupBy(F.col("c_name").alias("c_last_name"),
-                 F.col("s_name").alias("s_store_name"),
-                 F.col("p_brand").alias("i_color"))
-        .agg(_csum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("netpaid"))
-    )
-    if spark.conf.get(CTE_MATERIALIZE, "false") == "true":
-        ssales = materialize_stage(CTE_STAGE, ssales)
-    threshold = ssales.agg((F.avg("netpaid") * 0.05).alias("thr"))
-    out = (
-        ssales.filter(F.col("i_color").isin(*brands))
-        .groupBy("c_last_name", "s_store_name")
-        .agg(F.sum("netpaid").cast("bigint").alias("paid"))
-        .crossJoin(F.broadcast(threshold))
-        .filter(F.col("paid") > F.col("thr"))
-        .select("c_last_name", "s_store_name", "paid")
-        .orderBy(F.asc("c_last_name"), F.asc("s_store_name"))
-    )
-    return out
+sql_entry(_q, "tpcds_q24_2", _q24_sql(_Q24_BRANDS_2))
 
 
 # --- q14_2: same-week year-over-year cross-channel comparison --------------

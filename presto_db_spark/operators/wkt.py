@@ -605,13 +605,6 @@ def geo_wkt_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
 # reaches t·total, and interpolate within it — identical IEEE ops, so the
 # rounded coordinates hash-match.
 
-_LI_SPARK = """
-CASE WHEN size(lxs) < 2 THEN named_struct('px', element_at(lxs, 1), 'py', element_at(lys, 1)) ELSE
-  named_struct('px', element_at(lxs, _k) + CASE WHEN _lk = 0 THEN 0.0 ELSE _t / _lk END * (element_at(lxs, _k + 1) - element_at(lxs, _k)),
-               'py', element_at(lys, _k) + CASE WHEN _lk = 0 THEN 0.0 ELSE _t / _lk END * (element_at(lys, _k + 1) - element_at(lys, _k)))
-END
-"""
-
 
 @_q(
     "geo_wkt_line_interpolate",

@@ -20,7 +20,7 @@ the keep-rule that holds for it:
    of an engine helper;
 3. the port is faster, by an interleaved A/B.
 
-An entry marked ``deferred`` waits for its A/B or for a planned helper.
+An entry marked ``deferred`` waits for a planned helper.
 Outside ``tpch``/``tpcds``/``tpcds2``, rule-1 ports carry no comment: an
 unmarked port there is one whose text does not run on Spark or returns
 other rows there.

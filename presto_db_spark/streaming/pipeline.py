@@ -99,6 +99,11 @@ def tumbling_counts(stream: DataFrame) -> DataFrame:
     )
 
 
+# State-store partitions per stream: enough for the tens of keys the
+# stateful streams here hold (see _run_to_completion).
+_STATE_PARTITIONS = 8
+
+
 def _run_to_completion(result: DataFrame, sink_prefix: str, output_mode: str) -> DataFrame:
     """availableNow trigger + memory sink: run the stream until the source
     drains, return the materialized table (driver checks vs batch oracle).
@@ -111,12 +116,10 @@ def _run_to_completion(result: DataFrame, sink_prefix: str, output_mode: str) ->
     a Python round trip even when empty — measured 3x on streaming_topk at
     local[32] (6.9 -> 2.3 s: 32 state partitions for ~5 keys). The count is
     pinned at stream start from spark.sql.shuffle.partitions (each stream
-    here starts on a fresh checkpoint), so it is set for the stream clone
-    only and restored immediately; $SPARK_GRAFT_STREAM_STATE_PARTITIONS
-    overrides for deployments whose stateful keys are high-cardinality.
-    Results are partitioning-independent (state ops group per key)."""
-    import os
-
+    here starts on a fresh checkpoint), so it is set to
+    ``min(shuffle.partitions, _STATE_PARTITIONS)`` for the stream clone
+    only and restored immediately. Results are partitioning-independent
+    (state ops group per key)."""
     spark = result.sparkSession
     sink = f"{sink_prefix}_{uuid.uuid4().hex[:8]}"
     writer = (
@@ -126,9 +129,8 @@ def _run_to_completion(result: DataFrame, sink_prefix: str, output_mode: str) ->
         .trigger(availableNow=True)
         .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_", dir=_tmp_root()))
     )
-    cap = int(os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8"))
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    target = min(int(old), cap) if str(old).isdigit() else cap
+    target = min(int(old), _STATE_PARTITIONS) if str(old).isdigit() else _STATE_PARTITIONS
     spark.conf.set("spark.sql.shuffle.partitions", str(target))
     try:
         # StreamExecution clones the session (and its conf) at start(), so
@@ -497,9 +499,6 @@ def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(stage)
     )
-
-
-_STREAM_MINHASH_SQL = None
 
 
 def _stream_minhash_oracle() -> str:
@@ -1311,7 +1310,7 @@ def streaming_sequence_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- streaming Bloom membership (per-word bitmap as GroupState) --------------
 
 from ..operators.dedup import _BLOOM_SQL as _BATCH_BLOOM_SQL  # noqa: E402
-from ..operators.dedup import bloom_positions  # noqa: E402
+from ..operators.dedup import bloom_positions, bloom_probe  # noqa: E402
 
 
 # Kept port (keep-rule 2a, surface SQL does not reach): a Structured Streaming query with state.
@@ -1367,43 +1366,7 @@ def streaming_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bits are OR-monotone per word: the final bitmap is each key's max
     bitmap = raw.groupBy("word").agg(F.max("bits").cast("long").alias("bits"))
 
-    docs = load_table(spark, sf_dir, "documents")
-    hist = docs.filter(F.col("doc_id") % 5 != 0).select("doc_id", "text")
-    newb = docs.filter(F.col("doc_id") % 5 == 0).select("doc_id", "text")
-    probed = (
-        bloom_positions(newb)
-        .withColumn("word", (F.col("pos") / 32).cast("long"))
-        .join(F.broadcast(bitmap), "word", "left")
-        .withColumn(
-            "hit",
-            F.when(
-                F.col("bits").isNotNull()
-                & (
-                    F.col("bits").bitwiseAND(
-                        F.expr(
-                            "shiftleft(CAST(1 AS BIGINT), CAST(pos % 32 AS INT))"
-                        )
-                    )
-                    != 0
-                ),
-                1,
-            ).otherwise(0),
-        )
-    )
-    flags = probed.groupBy("doc_id").agg((F.sum("hit") == 3).alias("bloom_hit"))
-    dup_ids = newb.join(hist, "text", "left_semi").select("doc_id").distinct()
-    return (
-        flags.join(dup_ids.withColumn("is_dup", F.lit(True)), "doc_id", "left")
-        .select(
-            "doc_id",
-            "bloom_hit",
-            F.coalesce("is_dup", F.lit(False)).alias("is_dup"),
-            (F.col("bloom_hit") & ~F.coalesce("is_dup", F.lit(False))).alias(
-                "false_positive"
-            ),
-        )
-        .orderBy("doc_id")
-    )
+    return bloom_probe(load_table(spark, sf_dir, "documents"), bitmap)
 
 
 # --- streaming time-decayed engagement (day-bucketed GroupState) -------------

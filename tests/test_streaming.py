@@ -1,5 +1,9 @@
 from __future__ import annotations
 
+import glob
+import json
+import os
+
 import pytest
 
 from presto_db_spark.streaming import pipeline as sp
@@ -64,3 +68,25 @@ def test_streaming_dedup_deterministic_survivor(spark, sf_dir):
     for r in rows:
         kid, n = agg[(r.user_id, r.event_type)]
         assert (r.keep_event_id, r.n_seen, r.is_unique) == (kid, n, n == 1)
+
+
+@pytest.mark.parametrize("partitions, used", [("3", "3"), ("13", "8")])
+def test_state_partitions_either_side_of_the_cap(spark, sf_dir, partitions, used):
+    """A stream runs with ``min(shuffle.partitions, 8)`` state partitions,
+    read back from its checkpoint's offset log: 3 is below the cap and 13
+    above it. Both give the oracle's rows, and the caller's
+    ``spark.sql.shuffle.partitions`` is restored."""
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    spark.conf.set(key, partitions)
+    try:
+        name = "streaming_tumbling"
+        problems = check_query(spark, name, sp.QUERIES[name], sp.ORACLE[name], sf_dir)
+        assert not problems, f"{name} at {partitions}: {problems}"
+        assert spark.conf.get(key) == partitions
+        ckpt = max(glob.glob(os.path.join(sp._tmp_root(), "ckpt_*")), key=os.path.getmtime)
+        with open(os.path.join(ckpt, "offsets", "0")) as f:
+            meta = json.loads(f.read().splitlines()[1])
+        assert meta["conf"][key] == used
+    finally:
+        spark.conf.set(key, before)

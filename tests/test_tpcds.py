@@ -34,37 +34,3 @@ def test_tpcds_nonempty_at_any_sf(spark, sf_dir):
                  "tpcds_q75", "tpcds_q76"]:
         assert tpcds.QUERIES[name](spark, sf_dir).count() > 0, name
 
-
-def test_tpcds_q11_cte_materialization_prop(spark, sf_dir):
-    """cte_materialization_enabled persists year_total: the 4-way self-join
-    reads an InMemoryTableScan instead of recomputing the two channel
-    aggregations four times — and the result is unchanged."""
-    from presto_db_spark.engine import Engine
-
-    baseline = sorted(map(tuple, tpcds.QUERIES["tpcds_q11"](spark, sf_dir).collect()))
-    eng = Engine(spark, sf_dir=sf_dir)
-    eng.set_session("cte_materialization_enabled", True)
-    try:
-        df = tpcds.QUERIES["tpcds_q11"](spark, sf_dir)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "InMemoryTableScan" in plan, plan
-        assert sorted(map(tuple, df.collect())) == baseline
-        # repeated invocation in a long-lived session must not accumulate
-        # cached blocks: each materialization releases the previous handle
-        # (ADVICE r04), so at most ONE CTE frame is ever persisted.
-        # Start from a clean slate — other tests in the shared session may
-        # hold their own (legitimate) persisted stages.
-        from presto_db_spark.operators.stagecache import release_stages
-
-        release_stages()
-        spark.catalog.clearCache()
-        jsc = spark.sparkContext._jsc.sc()
-        base = jsc.getPersistentRDDs().size()
-        tpcds.QUERIES["tpcds_q11"](spark, sf_dir)
-        tpcds.QUERIES["tpcds_q04"](spark, sf_dir)
-        assert jsc.getPersistentRDDs().size() <= base + 1
-        release_stages()
-        assert jsc.getPersistentRDDs().size() <= base
-    finally:
-        eng.set_session("cte_materialization_enabled", False)
-        spark.catalog.clearCache()

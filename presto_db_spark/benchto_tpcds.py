@@ -32,6 +32,8 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from .benchto import _case_mod
+
 _CATEGORIES = ["Books", "Home", "Electronics", "Jewelry", "Music",
                "Men", "Shoes", "Sports", "Women", "Children"]
 _CLASSES = ["personal", "portable", "reference", "self-help", "accessories",
@@ -61,11 +63,6 @@ _UNITS = ["Ounce", "Oz", "Bunch", "Ton", "N/A", "Dozen", "Box", "Pound",
 _DAY_NAMES = ["Thursday", "Friday", "Saturday", "Sunday",
               "Monday", "Tuesday", "Wednesday"]
 _SIZES = ["medium", "extra large", "N/A", "small", "petite", "large", "economy"]
-
-
-def _case_mod(expr: str, values: list[str]) -> str:
-    whens = " ".join(f"WHEN {i} THEN '{v}'" for i, v in enumerate(values))
-    return f"CASE mod({expr}, {len(values)}) {whens} END"
 
 
 def view_definitions(raw, s, dd, idiv, ser, dser) -> dict[str, str]:

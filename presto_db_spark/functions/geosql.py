@@ -1,7 +1,7 @@
 """SQL-callable ST_* geometry functions over the WKT-string model.
 
-The operator modules (``operators/geo.py``, ``wkt*.py``) implement the
-geospatial plans; this module makes the scalar surface PASTE-COMPATIBLE:
+The operator module ``operators/geo.py`` implements the geospatial
+plans; this module makes the scalar surface PASTE-COMPATIBLE:
 a user of the reference can run ``SELECT ST_AsText(ST_Point(1, 2))`` or
 ``ST_Area(ST_GeometryFromText('POLYGON ((...))'))`` through
 :meth:`Engine.sql` directly (``presto-geospatial/.../GeoFunctions.java``
@@ -23,7 +23,8 @@ Documented deviations (same model as the operator modules):
 * ``ST_Centroid`` is the signed-area centroid for polygons (the
   reference formula), the vertex mean for linestrings/multipoints (the
   reference weights linestrings by segment length);
-* single-ring polygons (holes/MULTI* live in the wkt2 operator slice).
+* single-ring polygons (holes/MULTI* are the operator module's
+  multi-part section).
 """
 
 from __future__ import annotations
@@ -306,7 +307,7 @@ _GEO_FUNCTIONS += [
 # ARBITRARY doubles: Arrow-batched pandas UDFs over ``struct`` — a
 # serialization codec (the same exception class as the BMP/WAV multimodal
 # codecs), never a relational hot path. The exact-integer pure-SQL encoding
-# lives in ``operators/wkt6.py``.
+# lives in ``operators/geo.py``.
 _WKB_TYPES = {"POINT": 1, "LINESTRING": 2}
 
 

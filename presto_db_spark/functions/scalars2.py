@@ -293,7 +293,7 @@ def _inverse_normal_cdf(mean, sd, p):
 
 
 # --- ip prefix family (IpPrefixFunctions.java; address-as-string model,
-# consistent with the ipaddress rows in functions_corpus3) -------------------
+# consistent with the ipaddress rows in functions_corpus) --------------------
 
 def _ip_prefix(ip, bits):
     if ip is None or bits is None:

@@ -20,7 +20,7 @@ The ONLY single-partition work anywhere is the prefix-offset window over
 the ``#partitions``-row counts table (32 rows here, ~10^3 on a real
 cluster) — the same driver-scale state a range-partitioned sort already
 keeps for its sampled boundaries. ``sort_distributed_sample``
-(relational2.py) proved this shape under the bench; this module factors
+(relational.py) proved this shape under the bench; this module factors
 it for reuse by the scalable ntile / cumulative-share operators
 (events_rfm_scores_scalable, part_abc_scalable — VERDICT r09 #3).
 """

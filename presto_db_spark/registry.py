@@ -21,7 +21,7 @@ the keep-rule that holds for it:
 3. the port is faster, by an interleaved A/B.
 
 An entry marked ``deferred`` waits for a planned helper.
-Outside ``tpch``/``tpcds``/``tpcds2``, rule-1 ports carry no comment: an
+Outside ``tpch``/``tpcds``, rule-1 ports carry no comment: an
 unmarked port there is one whose text does not run on Spark or returns
 other rows there.
 """
@@ -60,9 +60,7 @@ def family() -> tuple[dict[str, QueryFn], dict[str, str], Callable]:
 _MODULES: list[str] = [
     "presto_db_spark.operators.tpch",
     "presto_db_spark.operators.tpcds",
-    "presto_db_spark.operators.tpcds2",
     "presto_db_spark.operators.relational",
-    "presto_db_spark.operators.relational2",
     "presto_db_spark.operators.rangejoin",
     "presto_db_spark.operators.indexjoin",
     "presto_db_spark.operators.skew",
@@ -70,16 +68,8 @@ _MODULES: list[str] = [
     "presto_db_spark.operators.sketch",
     "presto_db_spark.operators.tdigest",
     "presto_db_spark.operators.geo",
-    "presto_db_spark.operators.wkt",
-    "presto_db_spark.operators.wkt2",
-    "presto_db_spark.operators.wkt3",
-    "presto_db_spark.operators.wkt4",
-    "presto_db_spark.operators.wkt5",
-    "presto_db_spark.operators.wkt6",
     "presto_db_spark.operators.pandas_surface",
     "presto_db_spark.operators.functions_corpus",
-    "presto_db_spark.operators.functions_corpus2",
-    "presto_db_spark.operators.functions_corpus3",
     "presto_db_spark.operators.events",
     "presto_db_spark.operators.stats",
     "presto_db_spark.operators.series",

@@ -28,7 +28,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table  # noqa: F401  (used by events_stream schema path)
+from ..catalog import load_table
 
 from ..operators.events import _CDC_SQL as _BATCH_CDC_SQL
 from ..registry import family
@@ -405,7 +405,6 @@ def streaming_tdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructType,
     )
 
-    from ..catalog import load_table
     from ..operators.tdigest import EPS, build_digest, digest_quantile
 
     stream = events_stream(spark, sf_dir).select(
@@ -1193,15 +1192,12 @@ def streaming_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     raw = _run_to_completion(res, "stream_cms", "update")
     cells = raw.groupBy("j", "bucket").agg(F.max("cell").cast("long").alias("cell"))
-    from ..catalog import load_table
-
     return cms_estimate_report(load_table(spark, sf_dir, "documents"), cells)
 
 
 # --- streaming row-pattern matching (DFA GroupState) -------------------------
 
 from ..operators.events import _SEQMATCH_SQL as _BATCH_SEQMATCH_SQL  # noqa: E402
-from ..operators.events import _SEQ_PATTERN as _BATCH_SEQ_PATTERN  # noqa: E402
 
 
 # Kept port (keep-rule 2a, surface SQL does not reach): a Structured Streaming query with state.
@@ -1331,8 +1327,6 @@ def streaming_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd  # noqa: F401
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql.types import LongType, StructField, StructType
-
-    from ..catalog import load_table
 
     stream = documents_stream(spark, sf_dir).filter(F.col("doc_id") % 5 != 0)
     pos = bloom_positions(stream).select(
@@ -1515,8 +1509,6 @@ def streaming_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd  # noqa: F401
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
-    from ..catalog import load_table
 
     stream = events_stream(spark, sf_dir)
     signed = stream.select(

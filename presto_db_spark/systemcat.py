@@ -32,7 +32,7 @@ import time
 import uuid
 from datetime import datetime
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 # (schema, table) -> [(column, presto_type), ...] — transcribed from the
 # reference's own golden listing (selectInformationSchemaColumns.result),

@@ -168,3 +168,15 @@ def check_query(spark, name: str, fn, sql: str | None, sf_dir: str) -> list[str]
         return []
     ora_cols, ora_rows = run_oracle(sql, sf_dir)
     return compare(s_cols, s_rows, ora_cols, ora_rows)
+
+
+def names_between(
+    queries: dict, first: str | None = None, stop: str | None = None
+) -> list[str]:
+    """Sorted names of ``queries`` registered from ``first`` up to, not
+    including, ``stop``. Splits one family module's entries over several
+    parametrized tests, each entry checked once."""
+    names = list(queries)
+    lo = names.index(first) if first else 0
+    hi = names.index(stop) if stop else len(names)
+    return sorted(names[lo:hi])

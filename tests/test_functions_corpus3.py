@@ -2,12 +2,12 @@ from __future__ import annotations
 
 import pytest
 
-from presto_db_spark.operators import functions_corpus3 as fc3
+from presto_db_spark.operators import functions_corpus as fc3
 
-from .oracle_utils import check_query
+from .oracle_utils import check_query, names_between
 
 
-@pytest.mark.parametrize("name", sorted(fc3.QUERIES))
+@pytest.mark.parametrize("name", names_between(fc3.QUERIES, first="agg_reduce"))
 def test_functions3_vs_duckdb(spark, sf_dir, name):
     problems = check_query(spark, name, fc3.QUERIES[name], fc3.ORACLE.get(name), sf_dir)
     assert not problems, f"{name}: {problems}"

@@ -188,9 +188,9 @@ def test_tpcds_q72_fact_to_fact_no_cartesian(spark, sf_dir):
     """q72 (the fact-to-fact inventory join): the only safe plan is the
     equi-join on (partkey, week-bucket) with the quantity inequality as a
     residual — never a cartesian/nested-loop between the two fact sides."""
-    from presto_db_spark.operators import tpcds2
+    from presto_db_spark.operators import tpcds
 
-    df = tpcds2.QUERIES["tpcds_q72"](spark, sf_dir)
+    df = tpcds.QUERIES["tpcds_q72"](spark, sf_dir)
     plan = _plan(df, "simple")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -204,13 +204,13 @@ def test_tpcds_q64_dims_broadcast(spark, sf_dir):
     aggregate subplan executes once, never once per self-join side — so
     the final plan reads the checkpoint (Scan ExistingRDD) and contains
     ZERO parquet scans of its own."""
-    from presto_db_spark.operators import tpcds2
+    from presto_db_spark.operators import tpcds
 
-    spine = _plan(tpcds2._q64_cross_sales(spark, sf_dir), "simple")
+    spine = _plan(tpcds._q64_cross_sales(spark, sf_dir), "simple")
     assert spine.count("BroadcastHashJoin") >= 3, spine
     assert "CartesianProduct" not in spine
 
-    final = _plan(tpcds2.QUERIES["tpcds_q64"](spark, sf_dir), "simple")
+    final = _plan(tpcds.QUERIES["tpcds_q64"](spark, sf_dir), "simple")
     assert "Scan ExistingRDD" in final, final  # the pin is present
     assert "Scan parquet" not in final, final  # no re-execution per side
     assert "CartesianProduct" not in final, final
@@ -220,9 +220,9 @@ def test_ship_orders_semi_anti_shape(spark, sf_dir):
     """q16/q94: the multi-warehouse EXISTS must plan as a semi join and
     the never-returned NOT EXISTS as an anti join — not subquery
     re-execution."""
-    from presto_db_spark.operators import tpcds2
+    from presto_db_spark.operators import tpcds
 
-    df = tpcds2.QUERIES["tpcds_q16"](spark, sf_dir)
+    df = tpcds.QUERIES["tpcds_q16"](spark, sf_dir)
     plan = _plan(df, "simple")
     assert "LeftSemi" in plan or "Semi" in plan
     assert "LeftAnti" in plan or "Anti" in plan
@@ -270,10 +270,10 @@ def test_no_cartesian_across_tpc_corpus(spark, sf_dir):
     whose CROSS JOIN of the catalog sales/returns CTEs is the reference's
     own query text (tpcds/q77.sql) — and there both sides must be grouped
     aggregates (bounded by channel-key cardinality), never raw scans."""
-    from presto_db_spark.operators import tpcds, tpcds2, tpch
+    from presto_db_spark.operators import tpcds, tpch
 
     offenders = []
-    for mod in (tpch, tpcds, tpcds2):
+    for mod in (tpch, tpcds):
         for name, fn in mod.QUERIES.items():
             plan = fn(spark, sf_dir)._jdf.queryExecution().sparkPlan().toString()
             if "CartesianProduct" not in plan:

@@ -257,8 +257,8 @@ def test_polygon_clip_invariants_random(spark, a_raw, b_raw):
     from hypothesis import assume
     from pyspark.sql import functions as F
 
-    from presto_db_spark.operators.wkt4 import (
-        st_area_ring, st_intersection_pts,
+    from presto_db_spark.operators.geo import (
+        st_area_pts, st_intersection_pts,
     )
 
     a, b = _hull(a_raw), _hull(b_raw)
@@ -278,11 +278,11 @@ def test_polygon_clip_invariants_random(spark, a_raw, b_raw):
         lit_ring(a).alias("pa"), lit_ring(b).alias("pb")
     )
     row = df.select(
-        st_area_ring(F.col("pa")).alias("aa"),
-        st_area_ring(F.col("pb")).alias("ab"),
-        st_area_ring(st_intersection_pts(F.col("pa"), F.col("pb"))).alias("iab"),
-        st_area_ring(st_intersection_pts(F.col("pb"), F.col("pa"))).alias("iba"),
-        st_area_ring(st_intersection_pts(F.col("pa"), F.col("pa"))).alias("iaa"),
+        st_area_pts(F.col("pa")).alias("aa"),
+        st_area_pts(F.col("pb")).alias("ab"),
+        st_area_pts(st_intersection_pts(F.col("pa"), F.col("pb"))).alias("iab"),
+        st_area_pts(st_intersection_pts(F.col("pb"), F.col("pa"))).alias("iba"),
+        st_area_pts(st_intersection_pts(F.col("pa"), F.col("pa"))).alias("iaa"),
         st_intersection_pts(F.col("pa"), F.col("pb")).alias("cpts"),
     ).collect()[0]
     eps = 1e-7
@@ -309,13 +309,13 @@ def test_polygon_clip_invariants_random(spark, a_raw, b_raw):
 )
 @settings(max_examples=60, deadline=None)
 def test_wkb_integer_bits_match_struct_pack(spark, vals):
-    """The pure-SQL exact-integer IEEE-754 encode (operators/wkt6.py
+    """The pure-SQL exact-integer IEEE-754 encode (operators/geo.py
     _SPARK_F64LE) equals struct.pack('<d') for ANY non-negative int
     < 2^31, not just the fixture values — the formula's documented
     domain."""
     import struct
 
-    from presto_db_spark.operators.wkt6 import _SPARK_F64LE
+    from presto_db_spark.operators.geo import _SPARK_F64LE
 
     rows = spark.createDataFrame([(v,) for v in vals], "v bigint").selectExpr(
         "v", _SPARK_F64LE.format(v="v") + " AS h"

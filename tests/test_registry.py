@@ -1,8 +1,11 @@
 """The registry's guards: duplicate names, oracle entries without a query,
-and family modules left out of ``registry._MODULES``."""
+family modules left out of ``registry._MODULES``, and the pinned keys,
+order and oracle texts."""
 
 from __future__ import annotations
 
+import hashlib
+import json
 import pathlib
 import sys
 import types
@@ -56,3 +59,15 @@ def test_every_family_module_is_registered():
     }
     assert "presto_db_spark.streaming.pipeline" in found
     assert found <= set(registry._MODULES), sorted(found - set(registry._MODULES))
+
+
+# sha256 of every registry key, in order, with its oracle text. A change to
+# a key, the order or an oracle text fails here; a deliberate one updates
+# the constant (and says so in CHANGES.md).
+_REGISTRY_FINGERPRINT = "b61baad9843373fe7a237ead9dc7f275e2c9150e6b0ce250ed8f616e8a570e99"
+
+
+def test_registry_keys_order_and_oracle_texts_are_pinned():
+    oracle = registry.all_oracle_sql()
+    dump = json.dumps([[name, oracle.get(name)] for name in registry.all_queries()])
+    assert hashlib.sha256(dump.encode()).hexdigest() == _REGISTRY_FINGERPRINT

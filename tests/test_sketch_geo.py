@@ -4,10 +4,11 @@ import pytest
 
 from presto_db_spark.operators import geo, sketch
 
-from .oracle_utils import check_query
+from .oracle_utils import check_query, names_between
 
 ALL = {**{n: (sketch.QUERIES[n], sketch.ORACLE.get(n)) for n in sketch.QUERIES},
-       **{n: (geo.QUERIES[n], geo.ORACLE.get(n)) for n in geo.QUERIES}}
+       **{n: (geo.QUERIES[n], geo.ORACLE.get(n))
+          for n in names_between(geo.QUERIES, stop="geo_wkt_roundtrip")}}
 
 
 @pytest.mark.parametrize("name", sorted(ALL))
@@ -106,18 +107,18 @@ def test_sketch_weighted_matches_expanded(spark, sf_dir):
      "geo_wkt_envelope", "geo_wkt_line_interpolate"],
 )
 def test_wkt_vs_duckdb(spark, sf_dir, name):
-    from presto_db_spark.operators import wkt
+    from presto_db_spark.operators import geo
 
-    problems = check_query(spark, name, wkt.QUERIES[name], wkt.ORACLE.get(name), sf_dir)
+    problems = check_query(spark, name, geo.QUERIES[name], geo.ORACLE.get(name), sf_dir)
     assert not problems, f"{name}: {problems}"
 
 
 def test_wkt_roundtrip_is_nonvacuous(spark, sf_dir):
     """The roundtrip flag must actually be TRUE (text → parse → render
     identity) and the closed flag must split the rows."""
-    from presto_db_spark.operators import wkt
+    from presto_db_spark.operators import geo
 
-    df = wkt.QUERIES["geo_wkt_roundtrip"](spark, sf_dir)
+    df = geo.QUERIES["geo_wkt_roundtrip"](spark, sf_dir)
     rows = df.collect()
     assert rows and all(r.roundtrip for r in rows)
     assert 0 < sum(1 for r in rows if r.closed) < len(rows)
@@ -126,9 +127,9 @@ def test_wkt_roundtrip_is_nonvacuous(spark, sf_dir):
 def test_wkt_intersects_join_no_cross_join(spark, sf_dir):
     """The WKT intersects join must meet candidates in the grid-cell
     equi-join — same contract as geo_polygon_join."""
-    from presto_db_spark.operators import wkt
+    from presto_db_spark.operators import geo
 
-    df = wkt.QUERIES["geo_wkt_intersects_join"](spark, sf_dir)
+    df = geo.QUERIES["geo_wkt_intersects_join"](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
@@ -186,9 +187,9 @@ def test_adaptive_digest_accuracy_bound_on_skew(spark, sf_dir):
      "geo_union_envelope_area", "geo_simplify", "geo_wkt_accessors"],
 )
 def test_wkt2_vs_duckdb(spark, sf_dir, name):
-    from presto_db_spark.operators import wkt2
+    from presto_db_spark.operators import geo
 
-    problems = check_query(spark, name, wkt2.QUERIES[name], wkt2.ORACLE.get(name), sf_dir)
+    problems = check_query(spark, name, geo.QUERIES[name], geo.ORACLE.get(name), sf_dir)
     assert not problems, f"{name}: {problems}"
 
 
@@ -198,15 +199,15 @@ def test_union_envelope_dissolves_overlap(spark, sf_dir):
     dissolves, it doesn't just add."""
     from pyspark.sql import functions as F
 
-    from presto_db_spark.operators import wkt2
+    from presto_db_spark.operators import geo
 
     union = {
         r.grp: r.union_area
-        for r in wkt2.QUERIES["geo_union_envelope_area"](spark, sf_dir).collect()
+        for r in geo.QUERIES["geo_union_envelope_area"](spark, sf_dir).collect()
     }
     # independent per-rect sum over the same fixture
     from presto_db_spark.catalog import load_table
-    from presto_db_spark.operators.wkt import _wkt_pentagon, st_xs, st_ys
+    from presto_db_spark.operators.geo import _wkt_pentagon, st_xs, st_ys
 
     nation = load_table(spark, sf_dir, "nation")
     g = nation.selectExpr(
@@ -232,15 +233,15 @@ def test_kdb_radius_join_partitioned_no_cartesian(spark, sf_dir):
     the leaf-cell equi-join — no CartesianProduct (the scalar-median
     broadcast attaches are 1-row BroadcastNestedLoops, which is the
     intended scalar pattern)."""
-    from presto_db_spark.operators import wkt2
+    from presto_db_spark.operators import geo
 
-    df = wkt2.QUERIES["geo_kdb_radius_join"](spark, sf_dir)
+    df = geo.QUERIES["geo_kdb_radius_join"](spark, sf_dir)
     df.count()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     problems = check_query(
-        spark, "geo_kdb_radius_join", wkt2.QUERIES["geo_kdb_radius_join"],
-        wkt2.ORACLE.get("geo_kdb_radius_join"), sf_dir)
+        spark, "geo_kdb_radius_join", geo.QUERIES["geo_kdb_radius_join"],
+        geo.ORACLE.get("geo_kdb_radius_join"), sf_dir)
     assert not problems, problems
 
 
@@ -248,9 +249,9 @@ def test_kdb_radius_join_partitioned_no_cartesian(spark, sf_dir):
     "name", ["geo_spherical_distance", "geo_spherical_area", "geo_buffer"]
 )
 def test_wkt3_vs_duckdb(spark, sf_dir, name):
-    from presto_db_spark.operators import wkt3
+    from presto_db_spark.operators import geo
 
-    problems = check_query(spark, name, wkt3.QUERIES[name], wkt3.ORACLE.get(name), sf_dir)
+    problems = check_query(spark, name, geo.QUERIES[name], geo.ORACLE.get(name), sf_dir)
     assert not problems, f"{name}: {problems}"
 
 
@@ -258,12 +259,12 @@ def test_spherical_distance_properties(spark, sf_dir):
     """great_circle_distance contracts: symmetric, bounded by half the
     Earth's circumference, zero iff the points coincide; the spherical
     meters column is exactly km × 1000 before rounding."""
-    from presto_db_spark.operators import wkt3
+    from presto_db_spark.operators import geo
 
-    rows = wkt3.QUERIES["geo_spherical_distance"](spark, sf_dir).collect()
+    rows = geo.QUERIES["geo_spherical_distance"](spark, sf_dir).collect()
     assert rows
     import math
-    half = wkt3.EARTH_RADIUS_KM * math.pi
+    half = geo.EARTH_RADIUS_KM * math.pi
     for r in rows:
         assert 0.0 <= r.gc_km <= half + 1e-6
         assert r.within_half_earth
@@ -275,15 +276,15 @@ def test_buffer_ring_closed_and_area(spark, sf_dir):
     area is sin(2π/N)·N/(2π) of the disk area (≈ 0.974 at N=16)."""
     import math
 
-    from presto_db_spark.operators import wkt3
+    from presto_db_spark.operators import geo
 
-    rows = wkt3.QUERIES["geo_buffer"](spark, sf_dir).collect()
+    rows = geo.QUERIES["geo_buffer"](spark, sf_dir).collect()
     assert rows
-    ratio = math.sin(2 * math.pi / wkt3.N_BUFFER_SEGMENTS) * wkt3.N_BUFFER_SEGMENTS / (2 * math.pi)
+    ratio = math.sin(2 * math.pi / geo.N_BUFFER_SEGMENTS) * geo.N_BUFFER_SEGMENTS / (2 * math.pi)
     for r in rows[:50]:
         body = r.buffer_wkt.removeprefix("POLYGON ((").removesuffix("))")
         pts = body.split(", ")
-        assert len(pts) == wkt3.N_BUFFER_SEGMENTS + 1 == r.num_points
+        assert len(pts) == geo.N_BUFFER_SEGMENTS + 1 == r.num_points
         assert pts[0] == pts[-1], "ring must close on the first vertex"
         assert abs(r.buffer_area / r.disk_area - ratio) < 1e-3
 
@@ -322,10 +323,10 @@ def test_khll_distribution_properties(spark, sf_dir):
 
 @pytest.mark.parametrize("name", ["geo_polygon_clip_ops", "geo_convex_hull"])
 def test_wkt4_vs_duckdb(spark, sf_dir, name):
-    from presto_db_spark.operators import wkt4
+    from presto_db_spark.operators import geo
 
     problems = check_query(
-        spark, name, wkt4.QUERIES[name], wkt4.ORACLE.get(name), sf_dir
+        spark, name, geo.QUERIES[name], geo.ORACLE.get(name), sf_dir
     )
     assert not problems, f"{name}: {problems}"
 
@@ -334,12 +335,12 @@ def test_polygon_clip_invariants(spark, sf_dir):
     """Geometry sanity independent of the oracle: 0 < inter <= min(aA,aB),
     union = aA + aB - inter < envelope union, symdiff = union - inter,
     and the convex hull area dominates the pairwise union area."""
-    from presto_db_spark.operators import wkt4
+    from presto_db_spark.operators import geo
 
     clip = {r.gid: r for r in
-            wkt4.QUERIES["geo_polygon_clip_ops"](spark, sf_dir).collect()}
+            geo.QUERIES["geo_polygon_clip_ops"](spark, sf_dir).collect()}
     hull = {r.gid: r for r in
-            wkt4.QUERIES["geo_convex_hull"](spark, sf_dir).collect()}
+            geo.QUERIES["geo_convex_hull"](spark, sf_dir).collect()}
     assert clip and set(clip) == set(hull)
     for gid, r in clip.items():
         assert 0 < r.inter_area <= min(r.area_a, r.area_b) + 1e-9, r
@@ -354,10 +355,10 @@ def test_polygon_clip_invariants(spark, sf_dir):
 
 @pytest.mark.parametrize("name", ["geo_predicates2", "geo_line_locate"])
 def test_wkt5_vs_duckdb(spark, sf_dir, name):
-    from presto_db_spark.operators import wkt5
+    from presto_db_spark.operators import geo
 
     problems = check_query(
-        spark, name, wkt5.QUERIES[name], wkt5.ORACLE.get(name), sf_dir
+        spark, name, geo.QUERIES[name], geo.ORACLE.get(name), sf_dir
     )
     assert not problems, f"{name}: {problems}"
 
@@ -366,9 +367,9 @@ def test_spatial_predicates_cover_all_relations(spark, sf_dir):
     """The cycling fixture must exercise every relationship class —
     touching, disjoint and overlapping all occur, and they partition the
     rows (exactly one true per row)."""
-    from presto_db_spark.operators import wkt5
+    from presto_db_spark.operators import geo
 
-    rows = wkt5.QUERIES["geo_predicates2"](spark, sf_dir).collect()
+    rows = geo.QUERIES["geo_predicates2"](spark, sf_dir).collect()
     assert rows
     seen = set()
     for r in rows:
@@ -382,9 +383,9 @@ def test_spatial_predicates_cover_all_relations(spark, sf_dir):
 def test_line_locate_interp_bounds(spark, sf_dir):
     """locate_frac ∈ [0,1]; the interpolated point sits inside the
     polyline's bounding box; endpoints match the coordinate formulas."""
-    from presto_db_spark.operators import wkt5
+    from presto_db_spark.operators import geo
 
-    for r in wkt5.QUERIES["geo_line_locate"](spark, sf_dir).limit(200).collect():
+    for r in geo.QUERIES["geo_line_locate"](spark, sf_dir).limit(200).collect():
         assert 0.0 <= r.locate_frac <= 1.0, r
         assert r.num_points == 4
         if r.total_len > 0:
@@ -392,15 +393,15 @@ def test_line_locate_interp_bounds(spark, sf_dir):
 
 
 def test_geo_crosses_both_values(spark, sf_dir):
-    from presto_db_spark.operators import wkt5
+    from presto_db_spark.operators import geo
 
     problems = check_query(
-        spark, "geo_crosses", wkt5.QUERIES["geo_crosses"],
-        wkt5.ORACLE.get("geo_crosses"), sf_dir,
+        spark, "geo_crosses", geo.QUERIES["geo_crosses"],
+        geo.ORACLE.get("geo_crosses"), sf_dir,
     )
     assert not problems, problems
     vals = {r.st_crosses for r in
-            wkt5.QUERIES["geo_crosses"](spark, sf_dir).collect()}
+            geo.QUERIES["geo_crosses"](spark, sf_dir).collect()}
     assert vals == {True, False}
 
 
@@ -408,10 +409,10 @@ def test_geo_crosses_both_values(spark, sf_dir):
     "name", ["geo_wkb_roundtrip", "geo_accessor_arrays", "geo_relate_de9im"]
 )
 def test_wkt6_vs_duckdb(spark, sf_dir, name):
-    from presto_db_spark.operators import wkt6
+    from presto_db_spark.operators import geo
 
     problems = check_query(
-        spark, name, wkt6.QUERIES[name], wkt6.ORACLE.get(name), sf_dir
+        spark, name, geo.QUERIES[name], geo.ORACLE.get(name), sf_dir
     )
     assert not problems, f"{name}: {problems}"
 
@@ -422,9 +423,9 @@ def test_wkb_hex_matches_struct_pack(spark, sf_dir):
     header bytes are in place."""
     import struct
 
-    from presto_db_spark.operators import wkt6
+    from presto_db_spark.operators import geo
 
-    for r in wkt6.QUERIES["geo_wkb_roundtrip"](spark, sf_dir).collect():
+    for r in geo.QUERIES["geo_wkb_roundtrip"](spark, sf_dir).collect():
         x, y = (r.gid * 37) % 100, (r.gid * 73) % 100
         exp = (
             "0101000000"
@@ -441,10 +442,10 @@ def test_de9im_canonical_matrices(spark, sf_dir):
     """The derived DE-9IM strings are exactly the OGC canonical matrices
     for the three fixture configurations, and each row satisfies exactly
     one of disjoint/touches/overlaps."""
-    from presto_db_spark.operators import wkt6
+    from presto_db_spark.operators import geo
 
     seen = set()
-    for r in wkt6.QUERIES["geo_relate_de9im"](spark, sf_dir).collect():
+    for r in geo.QUERIES["geo_relate_de9im"](spark, sf_dir).collect():
         assert r.de9im in {"FF2F01212", "FF2FF1212", "212101212"}, r
         flags = (r.relate_disjoint, r.relate_touches, r.relate_overlaps)
         assert sum(flags) == 1, r
@@ -462,7 +463,7 @@ def test_de9im_containment_matrices():
     sides."""
     import duckdb
 
-    from presto_db_spark.operators.wkt6 import _DE9IM
+    from presto_db_spark.operators.geo import _DE9IM
 
     con = duckdb.connect()
 
@@ -496,7 +497,7 @@ def test_clip_kernel_concave_subject_analytic(spark):
     (area 12 — the kernel must not destroy the notch)."""
     from pyspark.sql import functions as F
 
-    from presto_db_spark.operators.wkt4 import st_area_ring, st_intersection_pts
+    from presto_db_spark.operators.geo import st_area_pts, st_intersection_pts
 
     def pts(coords):
         body = ", ".join(
@@ -505,13 +506,13 @@ def test_clip_kernel_concave_subject_analytic(spark):
         return F.expr(f"array({body})")
 
     df = spark.range(1).select(
-        st_area_ring(
+        st_area_pts(
             st_intersection_pts(
                 pts([(0, 0), (4, 0), (4, 2), (2, 2), (2, 4), (0, 4)]),
                 pts([(1, 1), (5, 1), (5, 5), (1, 5)]),
             )
         ).alias("l_clip"),
-        st_area_ring(
+        st_area_pts(
             st_intersection_pts(
                 pts([(0, 0), (4, 0), (2, 2), (4, 4), (0, 4)]),
                 pts([(-1, -1), (5, -1), (5, 5), (-1, 5)]),

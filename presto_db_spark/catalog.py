@@ -10,7 +10,12 @@ exchange for it, is cut by a lazy ``df.localCheckpoint(eager=False)``,
 never by ``persist()``/``cache()``. The stage computes once, when its
 first consumer runs; there is no columnar cache to build and no handle to
 release, since Spark's ContextCleaner reclaims the blocks once the frame
-is gone.
+is gone. An ORDER BY over two or more partitions is such a consumer pair
+on its own: its range exchange runs a sampling job over the child stage
+before the shuffle runs that stage again. So a Python stage (a pandas or
+Python UDF, ``mapInPandas``, ``applyInPandas``) in the child stage of a
+presentation sort is cut the same way, between it and the sort
+(``tests/oracle_utils.sampled_python_nodes`` flags any that is not).
 
 Mirrors the reference's connector metadata layer
 (``presto-main/.../metadata/MetadataManager.java``,

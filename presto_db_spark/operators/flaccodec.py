@@ -292,19 +292,23 @@ def _rice_bits_np(res, param: int, bw: "_BitWriter") -> None:
     """Append the Rice(param) coding of ``res`` (zigzag + unary quotient +
     param-bit remainder, the spec layout) to ``bw`` as one vectorized
     bit-array + np.packbits pass — byte-identical to the per-residual
-    write_unary/write loop it replaces (r13 opt). The packed bytes are
-    spliced through bw.write in one 8-bit stream so an arbitrary
-    starting bit offset is preserved."""
+    write_unary/write loop it replaces (r13 opt). The writer's pending
+    bits (fewer than 8) go in front of the array, so the whole packed
+    bytes append to ``bw.out`` in bulk at any starting bit offset and the
+    leftover bits become the new pending ones."""
     import numpy as np
 
     r = np.asarray(res, dtype=np.int64)
     u = np.where(r >= 0, r << 1, ((-r) << 1) - 1)
     q = u >> param
     lens = q + 1 + param
-    ends = np.cumsum(lens)
+    lead = bw._n
+    ends = np.cumsum(lens) + lead
     total = int(ends[-1])
     starts = ends - lens
     bits = np.zeros(total, dtype=np.uint8)
+    if lead:
+        bits[:lead] = (bw._acc >> np.arange(lead - 1, -1, -1)) & 1
     bits[starts + q] = 1  # unary terminator after q zeros
     if param:
         shifts = np.arange(param - 1, -1, -1, dtype=np.int64)
@@ -314,10 +318,9 @@ def _rice_bits_np(res, param: int, bw: "_BitWriter") -> None:
         ).ravel()
     packed = np.packbits(bits)  # zero-padded to a byte boundary
     whole, tail_bits = divmod(total, 8)
-    for byte in packed[:whole].tobytes():
-        bw.write(byte, 8)
-    if tail_bits:
-        bw.write(int(packed[whole]) >> (8 - tail_bits), tail_bits)
+    bw.out += packed[:whole].tobytes()
+    bw._acc = int(packed[whole]) >> (8 - tail_bits) if tail_bits else 0
+    bw._n = tail_bits
 
 
 def _rice_read_np(br: "_BitReader", cnt: int, param: int):

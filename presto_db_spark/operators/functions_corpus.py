@@ -1592,7 +1592,7 @@ def func_data_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     mismatch class as the r06 HUGEINT bug (the DECIMAL return type itself
     is covered by the golden-pair scalar tests)."""
     (cust,) = load_tables(spark, sf_dir, "customer")
-    return spark_sql(spark, """
+    sized = spark_sql(spark, """
         SELECT c_custkey AS id,
                CONCAT(CAST(c_custkey % 900 + 1 AS STRING), '.',
                       CAST(c_custkey % 10 AS STRING),
@@ -1605,8 +1605,11 @@ def func_data_size(spark: SparkSession, sf_dir: str) -> DataFrame:
                         CASE CAST(c_custkey % 5 AS INT) WHEN 0 THEN 'B'
                           WHEN 1 THEN 'kB' WHEN 2 THEN 'MB'
                           WHEN 3 THEN 'GB' ELSE 'TB' END)) AS BIGINT) AS bytes
-        FROM {cust} ORDER BY id
+        FROM {cust}
     """, cust=cust.filter(F.col("c_custkey") < 2000))
+    # cut before the ORDER BY, whose range sampler would run the Python
+    # UDF stage a second time (the shared-stage rule in ``catalog``)
+    return sized.localCheckpoint(eager=False).orderBy("id")
 
 
 # --- differential_entropy ----------------------------------------------------

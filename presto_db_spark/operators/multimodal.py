@@ -318,15 +318,20 @@ def multimodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- REAL codec round-trips (stdlib codecs — no external libraries) --------
-# The container has no Pillow/libvips/soundfile. BMP and WAV are fully
-# decodable with the standard library (struct / wave); PNG joined in r11
-# (stdlib zlib) and JPEG in r12 (from-scratch baseline DCT+Huffman codec,
-# operators/jpegcodec.py) — only FLAC remains gated (decode_image above).
+# No Pillow/libvips/soundfile is assumed: every format has an in-repo
+# codec, so no format is gated. BMP and WAV are decodable with the standard
+# library (struct / wave), PNG with stdlib zlib, JPEG with the from-scratch
+# baseline DCT+Huffman codec (operators/jpegcodec.py) and FLAC with
+# operators/flaccodec.py.
 # Each pipeline is a REAL encode → opaque bytes → decode → feature path:
 # generation and decode are SEPARATE mapInPandas stages that communicate
 # only through the serialized payload bytes, and the DuckDB oracle
 # predicts the decoded features CLOSED-FORM from the generation formulas —
 # a bug in either the encoder or the parser breaks the value hash.
+# The features are cut by a lazy localCheckpoint before the presentation
+# ORDER BY: its range sampler reads its input stage once before the
+# shuffle does, and without the cut both Arrow stages would run twice
+# (the shared-stage rule in the ``catalog`` docstring).
 
 _BMP_SCHEMA = T.StructType(
     [
@@ -455,7 +460,7 @@ def multimodal_bmp_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
     media = docs.select("doc_id").mapInPandas(_bmp_encode_batches, _BMP_SCHEMA)
     feats = media.mapInPandas(_bmp_decode_batches, _BMP_FEAT_SCHEMA)
-    return feats.orderBy("doc_id")
+    return feats.localCheckpoint(eager=False).orderBy("doc_id")
 
 
 _WAV_FEAT_SCHEMA = T.StructType(
@@ -551,7 +556,7 @@ def multimodal_wav_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
     media = docs.select("doc_id").mapInPandas(_wav_encode_batches, _BMP_SCHEMA)
     feats = media.mapInPandas(_wav_decode_batches, _WAV_FEAT_SCHEMA)
-    return feats.orderBy("doc_id")
+    return feats.localCheckpoint(eager=False).orderBy("doc_id")
 
 
 # --- PPM (P6) codec round-trip + integer box downsample ---------------------
@@ -705,7 +710,7 @@ def multimodal_ppm_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
     media = docs.select("doc_id").mapInPandas(_ppm_encode_batches, _BMP_SCHEMA)
     feats = media.mapInPandas(_ppm_decode_batches, _PPM_FEAT_SCHEMA)
-    return feats.orderBy("doc_id")
+    return feats.localCheckpoint(eager=False).orderBy("doc_id")
 
 
 # --- REAL PNG codec (stdlib zlib) -------------------------------------------
@@ -923,7 +928,7 @@ def multimodal_png_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
     media = docs.select("doc_id").mapInPandas(_png_encode_batches, _BMP_SCHEMA)
     feats = media.mapInPandas(_png_decode_batches, _PNG_FEAT_SCHEMA)
-    return feats.orderBy("doc_id")
+    return feats.localCheckpoint(eager=False).orderBy("doc_id")
 
 
 # --- Perceptual average-hash (aHash) over the real BMP payloads -------------
@@ -1065,9 +1070,8 @@ def multimodal_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup joins group on the hash exactly like ``dedup_simhash``."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
     media = docs.select("doc_id").mapInPandas(_bmp_encode_batches, _BMP_SCHEMA)
-    return media.mapInPandas(_phash_decode_batches, _PHASH_FEAT_SCHEMA).orderBy(
-        "doc_id"
-    )
+    feats = media.mapInPandas(_phash_decode_batches, _PHASH_FEAT_SCHEMA)
+    return feats.localCheckpoint(eager=False).orderBy("doc_id")
 
 
 # --- Hamming near-dup join over the perceptual hashes (multi-index hashing) -
@@ -1267,7 +1271,8 @@ def multimodal_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     count); dedup joins group on (n_frames, afp) buckets downstream."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
     media = docs.select("doc_id").mapInPandas(_wav_encode_batches, _BMP_SCHEMA)
-    return media.mapInPandas(_afp_decode_batches, _AFP_FEAT_SCHEMA).orderBy("doc_id")
+    feats = media.mapInPandas(_afp_decode_batches, _AFP_FEAT_SCHEMA)
+    return feats.localCheckpoint(eager=False).orderBy("doc_id")
 
 
 # --- ViT-style patch tokenization over the real BMP payloads ----------------
@@ -1376,9 +1381,8 @@ def multimodal_patchify(spark: SparkSession, sf_dir: str) -> DataFrame:
     `text_sequence_packing`-style batching downstream.""".format(p=PATCH)
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
     media = docs.select("doc_id").mapInPandas(_bmp_encode_batches, _BMP_SCHEMA)
-    return media.mapInPandas(_patchify_batches, _PATCH_SCHEMA).orderBy(
-        "doc_id", "py", "px"
-    )
+    tiles = media.mapInPandas(_patchify_batches, _PATCH_SCHEMA)
+    return tiles.localCheckpoint(eager=False).orderBy("doc_id", "py", "px")
 
 
 # --- energy-gate voice-activity detection over the real WAV payloads ---------
@@ -1478,7 +1482,8 @@ def multimodal_audio_vad(spark: SparkSession, sf_dir: str) -> DataFrame:
     value) is the relational formulation of the same run detection."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
     media = docs.select("doc_id").mapInPandas(_wav_encode_batches, _BMP_SCHEMA)
-    return media.mapInPandas(_vad_batches, _VAD_SCHEMA).orderBy("doc_id")
+    feats = media.mapInPandas(_vad_batches, _VAD_SCHEMA)
+    return feats.localCheckpoint(eager=False).orderBy("doc_id")
 
 
 # --- REAL GIF codec (hand-written LZW) ---------------------------------------
@@ -1747,7 +1752,7 @@ def multimodal_gif_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
     media = docs.select("doc_id").mapInPandas(_gif_encode_batches, _BMP_SCHEMA)
     feats = media.mapInPandas(_gif_decode_batches, _GIF_FEAT_SCHEMA)
-    return feats.orderBy("doc_id")
+    return feats.localCheckpoint(eager=False).orderBy("doc_id")
 
 
 # --- video-shaped payloads: frame container + scene-change detection ---------
@@ -1895,7 +1900,7 @@ def multimodal_video_scenes(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     media = docs.select("doc_id").mapInPandas(_video_encode_batches, _BMP_SCHEMA)
     feats = media.mapInPandas(_video_decode_batches, _VIDEO_FEAT_SCHEMA)
-    return feats.orderBy("doc_id")
+    return feats.localCheckpoint(eager=False).orderBy("doc_id")
 
 
 # --- content-defined chunking (storage dedup) --------------------------------
@@ -2156,7 +2161,7 @@ def multimodal_transcode_lossless(spark: SparkSession, sf_dir: str) -> DataFrame
     ppm = docs.select("doc_id").mapInPandas(_ppm_encode_batches, _BMP_SCHEMA)
     png = ppm.mapInPandas(_ppm_to_png_batches, _BMP_SCHEMA)
     feats = png.mapInPandas(_png_decode_batches, _PNG_FEAT_SCHEMA)
-    return feats.orderBy("doc_id")
+    return feats.localCheckpoint(eager=False).orderBy("doc_id")
 
 
 # --- REAL baseline JPEG codec (r12, VERDICT r11 directive #7) -----------------
@@ -2268,7 +2273,7 @@ def multimodal_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     media = docs.select("doc_id").mapInPandas(_jpeg_encode_batches, _BMP_SCHEMA)
     feats = media.mapInPandas(_jpeg_decode_batches, _JPEG_FEAT_SCHEMA)
-    return feats.orderBy("doc_id")
+    return feats.localCheckpoint(eager=False).orderBy("doc_id")
 
 
 # --- JPEG header audit (SOF/DQT/DHT parse, no entropy decode) -----------------
@@ -2369,7 +2374,7 @@ def multimodal_jpeg_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         _jpeg_meta_encode_batches, _BMP_SCHEMA
     )
     feats = media.mapInPandas(_jpeg_meta_parse_batches, _JPEG_META_SCHEMA)
-    return feats.orderBy("doc_id")
+    return feats.localCheckpoint(eager=False).orderBy("doc_id")
 
 
 # --- REAL FLAC codec (r12) — the codec gate is now EMPTY ----------------------
@@ -2477,4 +2482,4 @@ def multimodal_flac_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids = fanout(docs.select("doc_id"))
     media = ids.mapInPandas(_flac_encode_batches, _BMP_SCHEMA)
     feats = media.mapInPandas(_flac_decode_batches, _FLAC_FEAT_SCHEMA)
-    return feats.orderBy("doc_id")
+    return feats.localCheckpoint(eager=False).orderBy("doc_id")

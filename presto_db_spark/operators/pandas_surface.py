@@ -270,4 +270,6 @@ def udf_cogrouped_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cogroup(purch.groupBy("user_id"))
         .applyInPandas(merge, schema)
     )
-    return res.orderBy("user_id")
+    # cut before the ORDER BY, whose range sampler would run the merge
+    # stage a second time (the shared-stage rule in ``catalog``)
+    return res.localCheckpoint(eager=False).orderBy("user_id")

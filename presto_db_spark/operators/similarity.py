@@ -2060,9 +2060,10 @@ def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("sim_micros"),
         )
     )
-    return scored.filter(
-        F.col("sim_micros") >= RANGE_TAU_MICROS
-    ).orderBy("qid", "vec_id")
+    # cut before the ORDER BY, whose range sampler would run the cosine
+    # UDF stage a second time (the shared-stage rule in ``catalog``)
+    hits = scored.filter(F.col("sim_micros") >= RANGE_TAU_MICROS)
+    return hits.localCheckpoint(eager=False).orderBy("qid", "vec_id")
 
 
 # --- cluster-balanced training-corpus sampling --------------------------------

@@ -178,11 +178,14 @@ def sketch_tdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i, c in enumerate(est_cols)
     ]
     out_names = ["ok_p25", "ok_p50", "ok_p75", "ok_p90", "ok_p99"]
+    # cut the join before the ORDER BY, whose range sampler would run the
+    # digest merge stage a second time (the shared-stage rule in ``catalog``)
     return (
         joined.select(
             "o_orderpriority",
             "n",
             *[c.alias(nm) for c, nm in zip(checks, out_names)],
         )
+        .localCheckpoint(eager=False)
         .orderBy("o_orderpriority")
     )

@@ -156,8 +156,62 @@ def compare(
     return problems
 
 
+_PYTHON_NODE_MARKS = ("Python", "InPandas", "InArrow")
+
+
+def sampled_python_nodes(spark, df) -> list[str]:
+    """Python nodes that an ORDER BY's range sampler runs a second time.
+
+    A ``rangepartitioning`` exchange first runs a sampling job over its
+    child stage, then runs that stage again for the shuffle, so a Python
+    node in that stage computes twice. The walk stays within the stage: it
+    stops at every exchange and at ``ExistingRDD`` (a ``localCheckpoint``
+    cut). ``df`` is planned again with AQE off, so nothing executes and the
+    static plan shows every exchange AQE would otherwise re-plan at run
+    time."""
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        plan = df.select("*")._jdf.queryExecution().executedPlan()
+    finally:
+        spark.conf.set(key, prev)
+
+    def children(node):
+        seq = node.children()
+        return [seq.apply(i) for i in range(seq.size())]
+
+    def stage_python(node) -> list[str]:
+        found = []
+        for child in children(node):
+            name = child.nodeName()
+            if "Exchange" in name or "ExistingRDD" in name:
+                continue
+            if any(m in name for m in _PYTHON_NODE_MARKS):
+                found.append(name)
+            found += stage_python(child)
+        return found
+
+    out: list[str] = []
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "Exchange" and str(
+            node.outputPartitioning()
+        ).startswith("rangepartitioning"):
+            out += stage_python(node)
+        stack += children(node)
+    return out
+
+
 def check_query(spark, name: str, fn, sql: str | None, sf_dir: str) -> list[str]:
     df = fn(spark, sf_dir)
+    sampled = sampled_python_nodes(spark, df)
+    if sampled:
+        return [
+            f"python nodes {sampled} run twice: below a range exchange whose "
+            "sampler re-runs their stage; cut with localCheckpoint(eager=False)"
+        ]
     s_cols, s_rows = spark_rows(df)
     if sql is None:
         # rows-only check, but still enforce a driver-canonicalizable shape

@@ -230,16 +230,16 @@ def test_rice_writer_matches_scalar_loop():
     rng = np.random.RandomState(13)
     res = [int(v) for v in rng.randint(-4000, 4000, 700)]
     for param in (0, 1, 5, 11, 14):
-        for lead_bits in (0, 3):  # unaligned start positions too
+        for lead_bits in range(8):  # every unaligned start position too
             a, b = _BitWriter(), _BitWriter()
-            if lead_bits:
-                a.write(0b101, lead_bits)
-                b.write(0b101, lead_bits)
+            a.write(0b1011001, lead_bits)
+            b.write(0b1011001, lead_bits)
             for r in res:
                 u = _zigzag(r)
                 a.write_unary(u >> param)
                 a.write(u, param)
             _rice_bits_np(res, param, b)
+            assert (a._acc, a._n) == (b._acc, b._n), (param, lead_bits)
             a.align()
             b.align()
             assert bytes(a.out) == bytes(b.out), (param, lead_bits)

@@ -13,6 +13,25 @@ def test_multimodal_vs_duckdb(spark, sf_dir, name):
     assert not problems, f"{name}: {problems}"
 
 
+@pytest.mark.parametrize("name", ["multimodal_flac_roundtrip", "multimodal_patchify"])
+def test_sort_width_legs(spark, sf_dir, name):
+    """The ORDER BY's range sampler runs only when the sort has two or
+    more partitions, so each entry is checked at one sort partition and at
+    three: both widths are oracle-equal and give the same ordered rows."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    ordered = {}
+    try:
+        for width in (1, 3):
+            spark.conf.set(key, str(width))
+            problems = check_query(spark, name, mm.QUERIES[name], mm.ORACLE[name], sf_dir)
+            assert not problems, f"{name} at width {width}: {problems}"
+            ordered[width] = mm.QUERIES[name](spark, sf_dir).collect()
+    finally:
+        spark.conf.set(key, prev)
+    assert ordered[1] == ordered[3], name
+
+
 def test_decode_image_dispatch():
     """r12: the codec gate is retired — decode_image really decodes JPEG
     via the in-repo baseline codec, and rejects unknown magic with

@@ -623,7 +623,7 @@ def test_segment_dedup_plan_shape(spark, sf_dir):
     assert "partial_count(1), partial_sum(dup" in plan, plan
 
 
-def test_attribution_dau_cusum_patchify_plan_shape(spark, sf_dir):
+def test_attribution_dau_cusum_patchify_plan_shape(spark, sf_dir, monkeypatch):
     """Round-10b event/multimodal ops — pin each scale claim:
 
     * events_attribution: the touch↔conversion pairing is the bucketized
@@ -637,7 +637,9 @@ def test_attribution_dau_cusum_patchify_plan_shape(spark, sf_dir):
       the contribution explode + broadcast date-dim semi-joins; every
       exchange key is a date or (date, user) footprint; no Python.
     * multimodal_patchify: exactly two Arrow stages (encode, patchify)
-      and the only exchange is the presentation orderBy.
+      and no exchange in the frame cut before the presentation orderBy;
+      after the cut no Arrow stage is live (the sort's range sampler
+      would run it twice) and the only exchange is that orderBy.
     """
     plans = {
         n: _plan(all_queries()[n](spark, sf_dir), "simple")
@@ -645,9 +647,19 @@ def test_attribution_dau_cusum_patchify_plan_shape(spark, sf_dir):
             "events_attribution",
             "events_cusum_changepoint",
             "events_dau_mau",
-            "multimodal_patchify",
         ]
     }
+    cut = []
+    frame_cls = type(spark.range(1))
+    checkpoint = frame_cls.localCheckpoint
+    monkeypatch.setattr(
+        frame_cls,
+        "localCheckpoint",
+        lambda self, *a, **k: cut.append(self) or checkpoint(self, *a, **k),
+    )
+    plans["multimodal_patchify"] = _plan(
+        all_queries()["multimodal_patchify"](spark, sf_dir), "simple"
+    )
     for n, p in plans.items():
         assert "CartesianProduct" not in p, (n, p)
         assert "BroadcastNestedLoopJoin" not in p, (n, p)
@@ -672,8 +684,12 @@ def test_attribution_dau_cusum_patchify_plan_shape(spark, sf_dir):
     assert "EvalPython" not in p, p
     assert plans["events_dau_mau"].count("BroadcastHashJoin") >= 2, p
 
-    p = plans["multimodal_patchify"]
+    (before,) = cut
+    p = _plan(before, "simple")
     assert p.count("MapInPandas") == 2, p
+    assert "Exchange" not in p, p
+    p = plans["multimodal_patchify"]
+    assert p.count("MapInPandas") == 0, p
     assert len(re.findall(r"Exchange (?!rangepartitioning)", p)) == 0, p
 
 
@@ -1882,13 +1898,27 @@ def test_unique_key_plan_shape(spark, sf_dir):
     assert "CartesianProduct" not in plan, plan
 
 
-def test_transcode_plan_shape(spark, sf_dir):
-    """multimodal_transcode_lossless (r11ab): three chained mapInPandas
-    stages — media bytes never shuffle (zero exchanges above the scan
-    besides the final presentation sort)."""
+def test_transcode_plan_shape(spark, sf_dir, monkeypatch):
+    """multimodal_transcode_lossless: three chained mapInPandas stages in
+    the frame cut before the presentation sort, with no join and no hash
+    exchange between them, so media bytes never shuffle. After the cut no
+    Arrow stage is live (the sort's range sampler would run it twice)."""
+    cut = []
+    frame_cls = type(spark.range(1))
+    checkpoint = frame_cls.localCheckpoint
+    monkeypatch.setattr(
+        frame_cls,
+        "localCheckpoint",
+        lambda self, *a, **k: cut.append(self) or checkpoint(self, *a, **k),
+    )
     plan = _plan(all_queries()["multimodal_transcode_lossless"](spark, sf_dir), "simple")
-    assert "Join" not in plan, plan
-    assert "windowspecdefinition" not in plan, plan
+    (before,) = cut
+    p = _plan(before, "simple")
+    assert p.count("MapInPandas") == 3, p
+    assert "Join" not in p, p
+    assert "windowspecdefinition" not in p, p
+    assert p.count("Exchange hashpartitioning") == 0, p
+    assert plan.count("MapInPandas") == 0, plan
     assert plan.count("Exchange hashpartitioning") == 0, plan
 
 

@@ -1,5 +1,22 @@
 """Catalog bootstrap: register the driver's parquet tables as temp views.
 
+Tables are bound by one rule, in ``load_table``, the name every caller
+uses (``engine.sql_query``, ``Engine.attach``, the benchto runners, every
+operator): a session reads each table file once and returns that one frame
+on every later call, while the file's ``st_mtime_ns`` is unchanged. A
+rewritten file is read again; a path that cannot be stat'ed (object
+storage) is read on every call. A read is a file listing plus a one-task
+parquet schema job (~0.1 s), a fixed cost small-scale queries otherwise
+pay per table per call. Sharing the frame is safe because it is an
+immutable plan over one file version, not data: nothing a caller does to
+it changes it, and every action scans the file afresh. Two calls of one
+table return the same plan, so a DataFrame self-join aliases both sides
+(a SQL text's table references are told apart by the analyzer). The two
+``events`` timestamp conf guards run on every call, hits included, so
+each call leaves the session's confs as a first read would, whatever was
+set in between: a session the caller built (the driver builds its own)
+still reads ``events`` correctly.
+
 Also the scan helpers every operator family shares: ``load_tables``
 (several tables at once), ``fanout`` (spread a narrow scan before
 CPU-heavy work) and ``small_df`` (a small literal table as one partition).
@@ -30,7 +47,9 @@ nothing here assumes single-file tables.
 from __future__ import annotations
 
 import os
+import weakref
 
+from py4j.java_gateway import JavaObject
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
@@ -50,8 +69,17 @@ TABLES = (
 # (region=5, nation=25 rows regardless of SF — like TPC-H).
 BROADCAST_TABLES = frozenset({"region", "nation"})
 
+# session -> table path -> (file mtime_ns, the bound frame's JVM Dataset).
+# The value is the JVM handle, not the DataFrame: a DataFrame holds its
+# session, which would keep the weak key, and so every frame, alive.
+_BOUND: weakref.WeakKeyDictionary[SparkSession, dict[str, tuple[int, JavaObject]]] = (
+    weakref.WeakKeyDictionary()
+)
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The driver table ``name`` under ``sf_dir``, bound by the rule in the
+    module docstring: read once per session and file version."""
     if name == "events":
         # Defensive: the conf is runtime-settable and the read below fails
         # with PARQUET_TYPE_ILLEGAL without it. get_spark() sets it at build
@@ -62,7 +90,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # must read as TIMESTAMP, not TIMESTAMP_NTZ (session tz is UTC, so the
     # wall-clock values are identical and DuckDB oracles agree).
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    try:
+        version = os.stat(path).st_mtime_ns
+    except OSError:
+        return _read_table(spark, path, name)  # object storage: read every call
+    bound = _BOUND.setdefault(spark, {})
+    hit = bound.get(path)
+    if hit is None or hit[0] != version:
+        hit = bound[path] = (version, _read_table(spark, path, name)._jdf)
+    return DataFrame(hit[1], spark)
+
+
+def _read_table(spark: SparkSession, path: str, name: str) -> DataFrame:
+    df = spark.read.parquet(path)
     if name == "events":
         # events.ts is parquet TIMESTAMP(NANOS); Spark has no nanos timestamp
         # type, so the session reads it as nanos-since-epoch LONG

@@ -57,10 +57,11 @@ _LEADING_WITH = re.compile(r"(?is)^(?:\s|--[^\n]*|/\*.*?\*/)*WITH\b")
 def sql_query(text: str) -> QueryFn:
     """A registry query built from SQL ``text``: each call runs the text as
     :meth:`Engine.sql` does, without an ``Engine`` or session views. It
-    loads only the driver tables the text names and binds them through
-    ``spark.sql``'s frame arguments, which become uniquely named views
-    dropped after analysis, so the session's own temp views of the same
-    names are neither read nor replaced."""
+    binds only the driver tables the text names, each the session's one
+    frame for that table (:func:`catalog.load_table`, read on first use),
+    through ``spark.sql``'s frame arguments, which become uniquely named
+    views dropped after analysis, so the session's own temp views of the
+    same names are neither read nor replaced."""
 
     def query(spark: SparkSession, sf_dir: str) -> DataFrame:
         template, tables = _bound_template(text)
@@ -124,7 +125,10 @@ class Engine(DdlMixin):
             self.attach(sf_dir)
 
     def attach(self, sf_dir: str) -> None:
-        """Register the driver tables under their bare names."""
+        """Register the driver tables under their bare names, as views of
+        the session's one frame per table (:func:`catalog.load_table`:
+        read once per session and file version, so a second ``Engine``
+        or ``attach`` on the same session reads nothing again)."""
         self.tables = register_tables(self.spark, sf_dir)
 
     def sql(self, query: str, *, dialect: bool = True) -> DataFrame:

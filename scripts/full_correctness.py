@@ -22,11 +22,15 @@ plus a ``_meta`` record (round, sf_dir, totals, wall time).
 
 Usage::
 
-    python scripts/full_correctness.py [round_number]   # default 7
+    python scripts/full_correctness.py <round_number>
+
+The round number is required: it names the artifact written, and the
+committed ones must not be overwritten by accident.
 
 Env: SPARK_GRAFT_SF_DIR_CORRECT (default ``SF_DIR`` below, sf0.01). The
 session is the engine's own (``session.get_spark``: SPARK_GRAFT_CPUS,
-default 32), so the sweep checks the plans the engine runs.
+default ``session.DEFAULT_CPUS``, the process's CPU affinity count), so
+the sweep checks the plans the engine runs.
 """
 
 from __future__ import annotations
@@ -53,7 +57,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_CORRECT", "/root/testdata/sf0.01")
 
 
 def main() -> int:
-    rnd = int(sys.argv[1]) if len(sys.argv) > 1 else 7
+    if len(sys.argv) != 2:
+        sys.exit(f"usage: python {sys.argv[0]} <round_number>")
+    rnd = int(sys.argv[1])
     out_path = os.path.join(REPO, f"CORRECTNESS_FULL_r{rnd:02d}.json")
     spark = get_spark("full-correctness-sweep")
     queries = all_queries()
